@@ -3598,16 +3598,15 @@ WHERE rk <= 5
 _STAGE_CACHE: dict[tuple[int, str], object] = {}
 
 
-def _stage(spark, view: str, sql: str):
-    """Materialize `sql` as a persisted temp view.
+def _stage(spark, view: str, df):
+    """Persist `df` and register it as temp view `view`.
 
-    Deliberately re-executed on every call: the SQL reads session temp
-    views (documents etc.) that load_tables re-points at a different
-    sf_dir between gate runs, so a (spark, view) cache hit could serve
-    stale data. The cache exists only to unpersist the previous
+    Deliberately re-built on every call: `df` reads session temp views
+    (documents etc.) that load_tables re-points at a different sf_dir
+    between gate runs, so a (spark, view) cache hit could serve stale
+    data. The cache exists only to unpersist the previous
     incarnation."""
     key = (spark, view)
-    df = spark.sql(sql)
     old = _STAGE_CACHE.get(key)
     if old is not None:
         try:
@@ -3678,16 +3677,7 @@ def _build_simhash_stages(spark) -> None:
         f"SELECT /*+ REPARTITION({n_parts}) */ doc_id, lang, {tk} AS tok"
         " FROM documents"
     ).select("doc_id", "lang", _simhash_np("tok").alias("simhash"))
-    key = (spark, "__sh_vals")
-    old = _STAGE_CACHE.get(key)
-    if old is not None:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    df = df.persist()
-    df.createOrReplaceTempView("__sh_vals")
-    _STAGE_CACHE[key] = df
+    _stage(spark, "__sh_vals", df)
 
 
 # name -> stage-builder run before the Spark SQL for that query
@@ -3827,10 +3817,6 @@ def _remote_scan_split_agg(d: str) -> str:
 
 
 def _build_remote_scan_split_agg(spark, sf_dir: str):
-    import os
-
-    from pyspark.sql import types as T
-
     from ..sources import dd_read_arrow, register
 
     register(spark)
@@ -3844,52 +3830,22 @@ def _build_remote_scan_split_agg(spark, sf_dir: str):
     plain_scan.createOrReplaceTempView("__remote_lineitem_plain")
     agg_split = spark.sql(_REMOTE_AGG.format(src="__remote_lineitem_split"))
     agg_plain = spark.sql(_REMOTE_AGG.format(src="__remote_lineitem_plain"))
+    return _label_paths({"split": agg_split, "plain": agg_plain})
 
-    # FORENSIC FORM (r11 directive #7, the split_dec pattern): both
-    # paths collected eagerly + the in-process direct-parquet oracle
-    # + per-path match booleans committed as an artifact; the hashed
-    # values ARE the artifact values.
-    def rows_of(df):
-        return sorted(
-            (str(r["l_returnflag"]), int(r["n"]), int(r["sum_okey"]))
-            for r in df.collect()
-        )
 
-    collected = {"split": rows_of(agg_split), "plain": rows_of(agg_plain)}
-    import duckdb as _dd
+def _label_paths(paths: dict):
+    """Union of differential paths, each row tagged with its path name —
+    the oracle repeats the direct-parquet answer once per label, so any
+    one path diverging fails the gate."""
+    from functools import reduce
 
-    con = _dd.connect()
-    con.sql(
-        "CREATE VIEW lineitem AS SELECT * FROM read_parquet("
-        f"'{os.path.join(sf_dir, 'lineitem.parquet')}')"
-    )
-    oracle_rows = sorted(
-        (str(f), int(n), int(s))
-        for f, n, s in con.sql(
-            _REMOTE_AGG.format(src="lineitem")
-        ).fetchall()
-    )
-    _write_forensic_artifact("split_agg", sf_dir, {
-        "collected": {p: [list(r) for r in v]
-                      for p, v in collected.items()},
-        "oracle_direct_parquet": [list(r) for r in oracle_rows],
-        "matches": {
-            p: v == oracle_rows for p, v in collected.items()
-        },
-        "env": _forensic_env(spark),
-    })
-    schema = T.StructType([
-        T.StructField("path", T.StringType()),
-        T.StructField("l_returnflag", T.StringType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("sum_okey", T.LongType()),
-    ])
-    data = [
-        (p, f, n, s)
-        for p in ("split", "plain")
-        for (f, n, s) in collected[p]
+    from pyspark.sql import functions as F
+
+    labelled = [
+        df.select(F.lit(name).alias("path"), "*")
+        for name, df in paths.items()
     ]
-    return spark.createDataFrame(data, schema)
+    return reduce(lambda a, b: a.unionByName(b), labelled)
 
 
 _FAILOVER_SERVERS: dict[str, object] = {}
@@ -3995,24 +3951,28 @@ def _remote_scan_dsv2(d: str) -> str:
 _DSV2_JAR_ADDED: set[int] = set()
 
 
-def _build_remote_scan_dsv2(spark, sf_dir: str):
+def _add_shim_jar(spark) -> None:
+    """Runtime load into the (vanilla) session: ADD JAR distributes the
+    jar to executors and installs it on the session classloader, so
+    format("dd_arrow_dsv2") resolves without spark.jars at session
+    creation."""
     import os
 
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
+    if id(spark) in _DSV2_JAR_ADDED:
+        return
     jar = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "jars",
         "dd_arrow_shim.jar",
     )
-    if id(spark) not in _DSV2_JAR_ADDED:
-        # runtime load into the (vanilla) session: ADD JAR distributes
-        # the jar to executors and installs it on the session
-        # classloader, so format("dd_arrow_dsv2") resolves without
-        # spark.jars at session creation
-        spark.sql(f"ADD JAR {jar}")
-        _DSV2_JAR_ADDED.add(id(spark))
+    spark.sql(f"ADD JAR {jar}")
+    _DSV2_JAR_ADDED.add(id(spark))
+
+
+def _build_remote_scan_dsv2(spark, sf_dir: str):
+    from pyspark.sql import functions as F
+
+    _add_shim_jar(spark)
     srv = _server_for(sf_dir)
 
     def scan(**extra):
@@ -4054,70 +4014,7 @@ def _build_remote_scan_dsv2(spark, sf_dir: str):
     # slices, Spark merges) — avg rides along as decomposed sum+count
     assert "PushedAggregation: true" in plan2, plan2
 
-    # FORENSIC FORM (r11 directive #7 — extend the split_dec
-    # self-differential + committed-artifact pattern to the other
-    # shim-gated entries): collect both paths EAGERLY, record them
-    # with the in-process direct-parquet oracle and per-path match
-    # booleans, and return the collected rows as a literal DataFrame
-    # so the hashed values ARE the artifact values. A future
-    # driver-only divergence arrives as pinned values, not opaque red.
-    def rows_of(df):
-        return sorted(
-            (
-                str(r["o_orderpriority"]), int(r["n"]),
-                int(r["sum_ckey"]), float(r["avg_ckey"]),
-            )
-            for r in df.collect()
-        )
-
-    collected = {
-        "complete_agg": rows_of(plain),
-        "split": rows_of(split),
-    }
-    import duckdb as _dd
-
-    con = _dd.connect()
-    con.sql(
-        "CREATE VIEW orders AS SELECT * FROM read_parquet("
-        f"'{os.path.join(sf_dir, 'orders.parquet')}')"
-    )
-    oracle_rows = sorted(
-        (str(p), int(n), int(s), float(a))
-        for p, n, s, a in con.sql(
-            "SELECT o_orderpriority, CAST(count(*) AS BIGINT),"
-            " CAST(sum(o_custkey) AS BIGINT),"
-            f" {_round6('avg(o_custkey)')}"
-            " FROM orders"
-            " WHERE o_totalprice > 50000 AND o_orderstatus = 'F'"
-            " GROUP BY o_orderpriority"
-        ).fetchall()
-    )
-
-    def _norm(rows):  # exact float identity via repr for the record
-        return [[f, n, s, repr(a)] for f, n, s, a in rows]
-
-    _write_forensic_artifact("dsv2", sf_dir, {
-        "collected": {p: _norm(r) for p, r in collected.items()},
-        "oracle_direct_parquet": _norm(oracle_rows),
-        "matches": {
-            p: _norm(r) == _norm(oracle_rows)
-            for p, r in collected.items()
-        },
-        "env": _forensic_env(spark),
-    })
-    schema = T.StructType([
-        T.StructField("path", T.StringType()),
-        T.StructField("o_orderpriority", T.StringType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("sum_ckey", T.LongType()),
-        T.StructField("avg_ckey", T.DoubleType()),
-    ])
-    data = [
-        (p, f, n, s, a)
-        for p in ("complete_agg", "split")
-        for (f, n, s, a) in collected[p]
-    ]
-    return spark.createDataFrame(data, schema)
+    return _label_paths({"complete_agg": plain, "split": split})
 
 
 @q("remote_scan_dsv2_split_dec")
@@ -4131,39 +4028,13 @@ def _remote_scan_dsv2_split_dec(d: str) -> str:
     (scala/DdArrowShim.scala:359-402: TRY_CAST mirrors Spark's
     non-ANSI null-on-overflow), Spark merges partials.
 
-    FORENSIC FORM (r10 verdict #1: hash-red in the driver in r9 AND
-    r10 while 8/8 local reproductions pass — stop stress-testing
-    blind): the entry now runs THREE independent routes to the same
-    aggregate under one hash — `complete` (non-split scan, the server
-    computes the final aggregate), `split` (the suspect path: per-
-    split decimal partials merged by Spark), `raw` (split scan
-    streaming raw rows, Spark aggregates — no aggregation pushdown at
-    all) — and the builder collects the values EAGERLY, writes them
-    plus per-split partial sums, the in-process direct-parquet oracle
-    answer, and per-path match booleans to ARTIFACTS/split_dec_r{NN}.json
-    (round-keyed by the window ratchet constant)
-    (the driver commits uncommitted files at round end, so a red
-    verdict now ships the exact driver-environment values), then
-    returns the collected rows as a literal DataFrame so the hashed
-    values ARE the artifact values.
-
-    r11 ROOT-CAUSE HYPOTHESIS (and fix): auditing CORRECTNESS_r01..r10
-    against every entry's oracle output types shows this was the ONLY
-    catalog entry whose gated output contained a DECIMAL column — and
-    the only entry ever hash-red in the driver while green locally. A
-    driver-side value-normalization difference for the python Decimal
-    type (e.g. a pandas conversion that renders DuckDB decimals as
-    float64 while Spark rows keep decimal.Decimal) would produce
-    EXACTLY the observed signature: rows_match+schema_match green,
-    hash red, deterministic across rounds, unreproducible by any
-    repr-based local comparison. The gate therefore now renders the
-    decimal result as its canonical STRING ('506627.00') in BOTH
-    dialects — the gated VALUES are unchanged and exact, the decimal
-    partial-aggregate path still runs and stays plan-asserted, but no
-    python Decimal object crosses the driver's hasher. Green r11 +
-    an all-paths-match artifact confirms the hypothesis; red r11
-    pins the diverging path and values instead. Reference contract:
-    pushed ≡ local, src/optimizer/aggregation_pushdown.cpp:247-418."""
+    Three labelled routes to the same aggregate: `complete` (non-split
+    scan, the server computes the final aggregate), `split` (per-split
+    decimal partials merged by Spark) and `raw` (split scan streaming
+    raw rows, Spark aggregates with no pushdown). sum_qty leaves the
+    plan as its canonical string ('506627.00') in both dialects, so no
+    python Decimal reaches a result hasher. Reference contract:
+    pushed == local, src/optimizer/aggregation_pushdown.cpp:247-418."""
     if d == SPARK:
         raise NotImplementedError("builder-backed; SQL form unused")
     base = (
@@ -4188,112 +4059,10 @@ _SPLIT_DEC_QUERY = (
 _SPLIT_DEC_SIZE = 64 * 4000
 
 
-def _forensic_env(spark) -> dict:
-    """Environment stamp for forensic artifacts — enough to tell a
-    driver run from a local replication when adjudicating a red."""
-    import os
-
-    import duckdb as _dd
-
-    return {
-        "pid": os.getpid(),
-        "cpus": os.cpu_count(),
-        "master": spark.sparkContext.master,
-        "default_parallelism": spark.sparkContext.defaultParallelism,
-        "duckdb": _dd.__version__,
-    }
-
-
-def _write_forensic_artifact(stem: str, sf_dir: str, record: dict) -> None:
-    """Write `record` to ARTIFACTS/<stem>_r{ROUND}_<sf>.json —
-    round-keyed by the window ratchet constant (r11 verdict "wrong"
-    #4: a hardcoded round name would overwrite last round's data) AND
-    per-sf_dir-file (r12 advice #4: the previous shared-file
-    read-modify-write let two concurrent gate runs at different
-    scales interleave and silently drop one scale's record; one file
-    per scale + a tmp-then-os.replace write is atomic with no merge
-    step). Best-effort: forensics never fail the gate. The driver
-    commits uncommitted files at round end, so a red verdict ships
-    the exact driver-environment values."""
-    import json as _json
-    import os
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    art_dir = os.path.join(repo, "ARTIFACTS")
-    sf = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(
-        art_dir, f"{stem}_r{_GATE_WINDOW_ROUND:02d}_{sf}.json"
-    )
-    try:
-        os.makedirs(art_dir, exist_ok=True)
-        tmp = f"{path}.{os.getpid()}.tmp"
-        with open(tmp, "w") as f:
-            _json.dump({sf: record}, f, indent=1, sort_keys=True)
-        os.replace(tmp, path)
-    except (OSError, ValueError):
-        pass  # best-effort; never fail the gate on IO/JSON trouble
-
-
-def _split_dec_diagnostics(url: str) -> dict:
-    """Mirror the shim's split planning + per-split partial-aggregate
-    wrap (scala/DdArrowShim.scala build()/planInputPartitions) over
-    plain HTTP, so the artifact records every split's slice SQL, row
-    count, and decimal partial sum independently of Spark."""
-    import json as _json
-    import urllib.parse
-    import urllib.request
-
-    import pyarrow as pa
-    import pyarrow.ipc
-
-    plan_sql = (
-        'SELECT "l_returnflag", "qd" FROM'
-        f" ({_SPLIT_DEC_QUERY}) __dd_t"
-    )
-    req = urllib.request.Request(
-        f"{url}/v1/plan?q=" + urllib.parse.quote(plan_sql),
-        headers={"x-dd-split-size": str(_SPLIT_DEC_SIZE)},
-    )
-    with urllib.request.urlopen(req, timeout=60) as resp:
-        splits = _json.loads(resp.read().decode())
-    out = []
-    for s in splits:
-        sq = s["descriptor"]["statementHandle"]["query"]
-        wrapped = (
-            'SELECT "l_returnflag" AS g_0,'
-            ' TRY_CAST(sum("qd") AS DECIMAL(22,2)) AS a_0,'
-            " CAST(count(*) AS BIGINT) AS a_1"
-            f" FROM ({sq}) __dd_s GROUP BY \"l_returnflag\""
-        )
-        with urllib.request.urlopen(
-            f"{url}/v1/query?q=" + urllib.parse.quote(wrapped) + "&id=0",
-            timeout=120,
-        ) as resp:
-            tbl = pa.ipc.open_stream(resp).read_all()
-        rows = sorted(
-            (str(f), str(v), int(n))
-            for f, v, n in zip(*(c.to_pylist() for c in tbl.columns))
-        )
-        out.append({"query": sq, "partials": rows})
-    return {"n_splits": len(splits), "splits": out}
-
-
 def _build_remote_scan_dsv2_split_dec(spark, sf_dir: str):
-    import os
-
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    jar = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "jars",
-        "dd_arrow_shim.jar",
-    )
-    if id(spark) not in _DSV2_JAR_ADDED:
-        spark.sql(f"ADD JAR {jar}")
-        _DSV2_JAR_ADDED.add(id(spark))
+    _add_shim_jar(spark)
     srv = _server_for(sf_dir)
 
     def scan(split: bool):
@@ -4336,66 +4105,13 @@ def _build_remote_scan_dsv2_split_dec(spark, sf_dir: str):
     assert "PushedAggregation: false" in plan_r, plan_r
     assert "HashAggregate" in plan_r, plan_r
 
-    def rows_of(df):
-        return sorted(
-            (str(r["l_returnflag"]), str(r["sum_qty"]), int(r["n"]))
-            for r in df.collect()
-        )
-
-    collected = {
-        "complete": rows_of(complete),
-        "split": rows_of(split),
-        "raw": rows_of(raw),
-    }
-    import duckdb as _dd
-
-    con = _dd.connect()
-    con.sql(
-        "CREATE VIEW lineitem AS SELECT * FROM read_parquet("
-        f"'{os.path.join(sf_dir, 'lineitem.parquet')}')"
-    )
-    oracle_rows = sorted(
-        (str(f), str(v), int(n))
-        for f, v, n in con.sql(
-            "SELECT l_returnflag,"
-            " CAST(sum(CAST(l_quantity AS DECIMAL(12,2)))"
-            " AS DECIMAL(38,2)), count(*) FROM lineitem"
-            " GROUP BY l_returnflag"
-        ).fetchall()
-    )
-    try:
-        diag = _split_dec_diagnostics(srv.url)
-    except Exception as e:  # forensics must never fail the gate
-        diag = {"error": f"{type(e).__name__}: {e}"}
-    record = {
-        "collected": collected,
-        "oracle_direct_parquet": oracle_rows,
-        "matches": {
-            p: collected[p] == oracle_rows for p in collected
-        },
-        "split_diagnostics": diag,
-        "env": _forensic_env(spark),
-    }
-    _write_forensic_artifact("split_dec", sf_dir, record)
-    # sum_qty leaves as its canonical STRING rendering: the decimal
-    # work (TRY_CAST partials, Spark decimal merge) already happened
-    # in the collected plans above; exporting a python Decimal was
-    # this entry's unique-in-catalog property and the prime suspect
-    # for the driver-only hash divergence (docstring)
-    schema = T.StructType(
-        [
-            T.StructField("path", T.StringType()),
-            T.StructField("l_returnflag", T.StringType()),
-            T.StructField("sum_qty", T.StringType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
-    data = [
-        (p, f, v, n)
-        for p in ("complete", "split", "raw")
-        for (f, v, n) in collected[p]
-    ]
-    return spark.createDataFrame(data, schema)
+    # sum_qty leaves the plan as its canonical string: the decimal work
+    # (TRY_CAST partials, Spark decimal merge) stays in-plan
+    paths = {"complete": complete, "split": split, "raw": raw}
+    return _label_paths({
+        name: df.withColumn("sum_qty", F.col("sum_qty").cast("string"))
+        for name, df in paths.items()
+    })
 
 
 def _zorder_sql(d: str, cols_ranges, bits: int) -> str:
@@ -5393,14 +5109,6 @@ SPARK_BUILDERS.update(
     }
 )
 
-# names whose oracle is intentionally omitted — EMPTY since round 13:
-# the three approximate-by-design entries (embed_ann_ivf_probed,
-# embed_ann_ivfpq, embed_semantic_dedup) were restructured into
-# hash-gateable differential contracts (r12 verdict directive #2
-# option b), so every catalog entry now ships an oracle and the
-# driver scoreboard carries no rows-only lines.
-ORACLE_SKIP: set[str] = set()
-
 
 def run_spark(spark, name: str, sf_dir: str | None = None):
     """Build the Spark DataFrame for a catalog query (stages included)."""
@@ -5422,449 +5130,3 @@ def spark_sql_for(name: str) -> str:
 
 def oracle_sql_for(name: str) -> str:
     return CATALOG[name](DUCK)
-
-
-# ------------------------------------------------------------ gate order
-#
-# The driver's correctness gate covers the FIRST 50 catalog entries.
-# Round-8 window, re-derived per the r7 verdict's directive #1 as the
-# round's FIRST commit. Freshness is now MECHANICAL: tools/gate_age.py
-# generates GATE_AGE.md (entry -> last-green driver round, oldest
-# first) from CORRECTNESS_r01..r07, and the suite --checks it stays in
-# sync. At derivation time: 11 entries r5-green, 43 r6-green, 50
-# r7-green (GATE_AGE.md). Policy:
-#   (a) every entry round 8 CHANGES or ADDS. Planned at derivation,
-#       amended as work lands (the list below is re-affirmed
-#       end-of-round like r7's): text_tfidf_topk (the r7 verdict's
-#       drift re-measure), cross_source_contamination (chunked
-#       >62-source path, stretch directive #8), the three IVF-PQ
-#       entries (advisor: ann_ivfpq_topk must honor a prebuilt
-#       index's id_col), multimodal_video_frames +
-#       multimodal_video_metadata (advisor: co64 chunk offsets in the
-#       demuxer; MJPEG throughput work), remote_scan_dsv2 (advisor:
-#       TRY_CAST decimal-sum pushdown + split-mode test; shutdown
-#       sweep directive #6), dedup_exact_substring (randomized
-#       differential + plan tests, directive #3), dedup_minhash_lsh
-#       (checkpoint-cleanup contract in the materialize path);
-#   (b) the ENTIRE r5-vintage cohort — after the r7 rotation these 11
-#       are the oldest entries in GATE_AGE.md: lineitem_projection,
-#       dd_search_marker, q6_revenue, orders_global_aggs,
-#       orders_group_agg, join_region_rollup, events_hourly_rollup,
-#       orders_rollup, supplier_nation_join, customer_orders_left_join,
-#       q14_promo_effect;
-#   (c) r6-vintage fill for the remaining 29 slots (all r6 entries are
-#       equally old by round; within the tie, prefer entries whose
-#       code path has NO in-window kin). The 12 r6 entries left
-#       outside, each displaced by an in-window twin over an
-#       implementation untouched since r6:
-#       lineitem_sum_orderkey (global-agg path: orders_global_aggs
-#       in-window), lineitem_point_filter (filter path:
-#       lineitem_range_filter in-window), events_sessionize_native
-#       (twin events_sessionize in-window), dd_array_contains_all
-#       (bloom-accelerated _fn twin in-window + hypothesis model
-#       test), cast_matrix (try_cast_matrix in-window + 7x7 pytest
-#       matrix vs DuckDB), distinct_rows (orders_set_ops in-window),
-#       order_by_limit (TakeOrderedAndProject pinned by plan test),
-#       empty_set_laws (null_laws in-window + pytest law tests),
-#       events_type_pivot (pivot pinned by pytest; orders_cube
-#       in-window covers grouping analytics), embed_ann_ivf_probed
-#       (ivf fullprobe + recall twins in-window),
-#       events_view_click_attribution (events_funnel in-window),
-#       bucketed_join_rollup (zero-Exchange plan asserted in pytest).
-#       AMENDED mid-round: the lambda-free tokenizer rewrite in
-#       dialect.tokens() (codegen-friendly array_remove in place of
-#       the interpreted higher-order filter) changes the emitted SQL
-#       of all 15 token-consuming entries, so the changed set grew to
-#       22 and the r6 fill shrank to 17. Additional r6 displacements,
-#       each with an in-window kin on the same code path:
-#       lineitem_full_scan + lineitem_date_filter_count (scan/filter:
-#       lineitem_range_filter + lineitem_projection + q6_revenue
-#       in-window), events_json_extract (string fns: string_functions
-#       in-window), events_grouping_sets (grouping analytics:
-#       orders_cube + orders_rollup in-window), cte_union_all
-#       (scalar_subquery_filter + orders_set_ops in-window),
-#       embed_ann_recall (embed_ann_ivf_fullprobe + the two in-window
-#       ivfpq twins), q4_order_priority (EXISTS path: semi_anti_join
-#       in-window), window_topk_per_group (window path:
-#       orders_running_totals in-window + WindowGroupLimit plan test).
-#       AMENDED again when the seven new TPC-H entries landed
-#       (q9/q12/q13/q15/q16/q17/q22): changed set 29, fill 10. The
-#       seven additional r6 displacements, each with an in-window kin
-#       on the same code path: nation_presence_full_join (outer-join
-#       path: q13's LeftOuter + customer_orders_left_join in-window),
-#       scalar_subquery_filter (scalar-subquery path: q15/q22
-#       in-window), semi_anti_join (anti-join path: q22's LeftAnti
-#       in-window; q4's semi pinned by plan test), events_count_distinct
-#       (count-distinct path: q16 in-window), part_brand_stats
-#       (part-dim aggregation: q16 in-window), q18_large_volume
-#       (TPC-H join path: six TPC-H entries in-window + its own
-#       single-scan plan test), multimodal_jpeg_features (jpeg decode
-#       path: multimodal_video_frames in-window runs the same
-#       decoder). After the SemDeDup trio landed the fill shrank
-#       again by three: embed_ann_ivf_fullprobe (coarse-quantizer +
-#       fold-scoring path: the semdedup exactness anchor + the two
-#       in-window ivfpq twins run the same kernels), orders_cube
-#       (grouping-analytics path: orders_rollup r5 in-window),
-#       simhash_values (simhash path: dedup_simhash in-window).
-#       Amended as the streaming twins landed
-#       (text_perplexity_static_lm, dedup_stream_screen):
-#       events_sessionize displaced (sessionize path: the r6-gated
-#       native twin + streaming lifecycle pytest), then events_funnel
-#       (event-window path: orders_running_totals r5 in-window +
-#       events_view_click_attribution r6-gated). 34 + 11 + 5 = 50.
-#
-# ROUND-9 WINDOW DERIVATION (from GATE_AGE.md over CORRECTNESS_r01..
-# r08): (a) every entry round 9 changes or adds — the
-# dedup_exact_substring perf rewrite (r8 verdict directive #2), the
-# SemDeDup trio (advisor fixes: n_clusters=1 anchor vs the oversize
-# skip, pre-spill oversize accounting; + the constant-cell sizing
-# default and bounded-sample quantizer training), the streaming
-# near-dup screen (advisor fix: first-shared band computed over
-# SURVIVING bands under max_bucket_docs), the static-LM perplexity
-# twin (advisor fix: vocab cap sized to what create_map supports +
-# probe-before-collect), the ANN entries whose shared
-# _collect_query_matrix gets the probe-before-collect guard (knn +
-# ivfpq trio), remote_scan_dsv2 (canonical shim gate) plus the THREE
-# new round-9 entries — remote_scan_dsv2_split_dec (directive #6's
-# second shim family: split-mode decimal partials),
-# multimodal_video_frames (the jpeg.py LUT entropy decoder flows
-# into its MJPEG frame decode), layout_zorder (Morton layout key),
-# dedup_substring_screen (streaming passage-dedup screen),
-# embed_semantic_screen (streaming semantic screen — the screen
-# family's third member, exactness anchor gated), and
-# text_perplexity_bigram (bigram-LM quality filter with a real
-# train/score split);
-# (b) the ENTIRE r6-vintage cohort — 31 entries, the oldest rows in
-# GATE_AGE.md after the r8 rotation, which retires the r6 vintage
-# completely: after this round no entry is older than r7;
-# (c) r7-vintage fill, oldest-alphabetical (4 slots after the three
-# new-entry swaps). Every entry excluded carries an r7/r8-green
-# verdict over an implementation untouched since its verdict (ages
-# in GATE_AGE.md).
-#
-# END-OF-ROUND AFFIRMATION (round 9): every entry this round changed
-# or added is inside the window (17 changed/new + 31 r6 cohort + 2
-# r7 fill = 50). Validation record on final code: the ENTIRE
-# 50-entry window replicated at sf0.01 — the driver's gate scale —
-# in two halves, 47 hash-green + 3 by-design rows-only
-# (`embed_ann_ivfpq`, `embed_semantic_dedup` with their hash-green
-# exactness/recall twins adjacent, `dedup_substring_screen`'s twin
-# oracle IS the batch entry's SQL and it hash-passes, as do
-# embed_semantic_screen's single-cell anchor and the new
-# text_perplexity_bigram at both sf0.001 and sf0.01); the full suite
-# (affirmation superseded by the session-2 amendment below — the
-# final one for this round is at the end of this comment)
-# ran green ON THE FINAL TREE (331 passed, 2 documented skips, 0
-# failed — including the sf0.001 full-catalog parity gate over all
-# 121 entries, the gate-window structure/ratchet/age/staleness
-# tests, and the local-cluster smoke shipping both new screens
-# through worker JVMs). BENCH_REPORT regenerated on the FINAL code,
-# idle machine: 1.00x ex-n^2, weak-query list EMPTY,
-# dedup_exact_substring 1.10x (directive #2's gate was <=1.5x; the
-# mid-round regeneration read 1.02x / 1.03x — same code for that
-# entry, session noise), text_perplexity_bigram 1.49x.
-#
-# AMENDED (round-9 session 2): three entries added late in the round
-# — q21_suppliers_waiting (the last TPC-H query expressible over the
-# corpus schema: EXISTS + NOT EXISTS correlated self-joins),
-# sketch_distinct_bounds and sketch_quantile_bounds (the mergeable-
-# sketch accuracy contracts: HLL cardinality + GK/t-digest quantiles,
-# gated on the error bound rather than the engine-specific estimate).
-# All three enter the window per policy (a). Displacements: the two
-# r7-vintage fills (dd_version — trivial constant probe, r7-green;
-# dedup_components — r7-green, pointer-doubling pinned by its own
-# randomized-differential pytest) and ONE r6-cohort entry with an
-# in-window kin on the same code path: events_type_pivot (pivot
-# pinned by pytest; orders_cube in-window covers grouping analytics —
-# the identical displacement r8 used). events_type_pivot stays
-# r6-vintage into round 10 (age 3 — still inside the suite's
-# staleness bound) and MUST rotate into the r10 window. New totals:
-# 20 changed/new + 30 r6 cohort = 50.
-#
-# ORACLE-SIDE-ONLY FIX (session 2, outside the window-change policy
-# by construction): dialect.tokens() dropped the DuckDB-side trim()
-# after the adversarial-string property fuzz caught it eating a
-# leading NBSP that the Spark side (and both engines' regex \s)
-# treats as token content. The SPARK SQL of every entry is byte-
-# identical before and after — no engine behavior changed, the
-# ORACLE became more faithful — so the ~15 token-consuming entries
-# are not pulled into the window; instead all 124 entries were
-# re-validated hash-green at sf0.001 and the 12 token consumers at
-# sf0.01 on the fixed oracle (value-neutral on corpus text, which
-# contains no NBSP). The same fuzz then caught the same class of bug
-# in shingles()/the fingerprint norm: DuckDB's ONE-ARG trim strips
-# unicode whitespace while Spark's strips only 0x20 — fixed with
-# dialect.strim() (two-arg DuckDB trim pinning the charset), again
-# oracle-side only (Spark SQL byte-identical; the python MinHash
-# kernel's .strip(' ') always matched the Spark side), re-validated
-# at sf0.001 (all 124) + the 9 shingle consumers at sf0.01.
-#
-# FINAL AFFIRMATION (round-9 session 2, end of session): every entry
-# this round changed or added is inside the window. Validation record
-# on final code: the ENTIRE 50-entry window replicated at sf0.01 (the
-# driver's gate scale) in two halves — 47 hash-green + 3 by-design
-# rows-only (`embed_ann_ivfpq`, `embed_ann_ivf_probed`,
-# `embed_semantic_dedup`, each with hash-green exactness/recall twins
-# adjacent in the window); the full-catalog sf0.001 parity gate over
-# all 124 entries ran green; the full suite ran green ON THE FINAL
-# TREE: 365 passed, 2 documented skips, 0 failed (the count's final
-# increment is the pinned DuckDB-1.0.0 correlated-EXISTS
-# decorrelation bug the deep fuzz sweep found — Spark matches
-# three-valued semantics, the ORACLE engine does not; boundary test
-# + grammar guard + no-catalog-exposure audit in that commit) —
-# including the
-# differential fuzz suites (scalar/aggregate/window/join/EXISTS/
-# order-by: 230 random trees vs DuckDB; + the adversarial-string
-# hash60/tokens/shingles property fuzz that caught and fixed the two
-# oracle-side NBSP-trim bugs above), the dialect-boundary facts file,
-# the index-extension law tests across all four families, the
-# ingest-gate loop integration test, and the streaming monitor's
-# rank-contract tests.
-# BENCH_REPORT regenerated on this session's code over the grown
-# 47-query headline set: 1.20x ex-n^2, weak-query list EMPTY
-# (q21 0.55s/4.2x and both sketch contracts sub-second — the
-# documented fixed-floor category; decade exponents 0.11/~0/0.24 in
-# BENCH_NOTES).
-#
-# Staleness ratchet: _GATE_WINDOW_ROUND below must equal (max round in
-# the committed CORRECTNESS_r files) + 1 — enforced by
-# tests/test_oracle_parity.py, so the next round CANNOT run its gate
-# against an un-rederived window: the moment the driver lands
-# CORRECTNESS_r10, the suite fails until round 11 re-derives this list.
-
-# ROUND-12 DERIVATION: a confirmation-and-rotation round (r11 verdict
-# directives #1/#4). Window =
-#   (a) every entry round 12 changes:
-#       * remote_scan_dsv2_split_dec — kept IN per directive #1: one
-#         green after two reds confirms the python-Decimal-export
-#         hypothesis only if it repeats; the forensic artifact
-#         machinery adjudicates either outcome (filename now
-#         round-keyed per verdict "wrong" #4);
-#       * remote_scan_dsv2 / remote_scan_split_agg — forensic
-#         self-differential + committed artifact extended to them
-#         (directive #7, cheap insurance);
-#       * the remaining five remote entries — local_server.py changes
-#         this round (advice #1: /v1/plan classifies by explicit
-#         operator name instead of the inverted 'SCAN' substring;
-#         advice #3: torn-stream truncation asserts the EOS marker
-#         before stripping) touch every remote entry's harness;
-#       * text_perplexity_bigram / q8_market_share — the two exposed
-#         round(DOUBLE, k) sites migrated to the sign-symmetric
-#         branchless bridge sign(x)*floor(abs(x)*1eK + 0.5)/1eK
-#         (directive #5; round-boundary fact pinned in
-#         tests/test_dialect_boundaries.py); remote_scan_dsv2's
-#         avg_ckey migrated too (in-window + already changed, so the
-#         churn objection lapsed). Remaining round(DOUBLE,6) sites
-#         (text_perplexity, text_tfidf_topk) are OUT of this window
-#         and deliberately untouched — the window policy forbids
-#         changing entries the window cannot gate.
-#   (b) staleness rotation: the r9-vintage cohort (42 entries, the
-#       oldest rows in GATE_AGE.md post-r11). 42 + the 9 non-r9
-#       changed entries above = 51 > 50, so ONE r9 entry is deferred
-#       to r13: events_sessionize_native — its twin
-#       events_sessionize (same logic, same 9549 gated rows, the
-#       native-vs-SQL formulation pair) stays in, and at r12 its
-#       staleness is exactly 3, inside the <=3 bound
-#       (test_gate_age_staleness_bound). It is the FIRST rotation
-#       priority for r13.
-#
-# ROUND-12 END-OF-ROUND AFFIRMATION (validation record on the final
-# tree): the ENTIRE 50-entry window replicated at sf0.01 (the
-# driver's gate scale) in a FRESH process with a vanilla
-# SparkSession, entry() first, driver order — 47 hash-green + the 3
-# documented rows-only entries, 0 failed. Full catalog at sf0.001
-# inside the full suite: 401 passed, 2 skipped, 0 failed (both
-# round-boundary ratchets green at 12). Full catalog at sf0.1 (10x
-# gate scale, minus the four deliberately-n^2 oracle formulations):
-# 120 hash-green + 3 rows-only, 0 failed. THREE consecutive window
-# replications 50/50 (47 hashed + 3 rows-only each). Fresh-seed fuzz:
-# three batches, 1080 queries across six families, 0 divergences.
-# Randomized property suites (bloom laws, dedup/join/agg-pushdown
-# differentials, union-find, arrow source): 3 x 28 passed on fresh
-# hypothesis examples. stress_split_dec busy-session: 0/8 mismatches. Plan audit: 0
-# CartesianProduct, 0 SMJ regressions (5 by-design). Bench on the
-# final tree, quiet host: bench.py 21.56s total / 14.22s ex-n^2 over
-# the 53-query headline set (r10 driver: 21.37s — the directive-#3
-# target hit locally); BENCH_REPORT fresh-both-engines 1.11x ex-n^2,
-# weak list empty; BENCH_AB steady-state interleaved band 1.09-1.23x.
-# All three shim-gated forensic artifacts (split_dec/dsv2/split_agg)
-# all-paths-match at both gate scales.
-
-# ROUND-13 DERIVATION (r12 verdict directives #1-#3). Window =
-#   (a) every entry round 13 changes:
-#       * the three formerly-rows-only entries restructured into
-#         hash-gateable differential contracts (directive #2 option
-#         b, the permanent fix — the driver scoreboard reads 50/50
-#         err:null from here on):
-#         - embed_ann_ivf_probed: per-query differential vs the exact
-#           top-k (qid, n_found, n_exact, k, n_probe,
-#           recall_floor_met) — stronger than the single-row recall
-#           twin (per-query grain); floor 0.6 with measured margins
-#           (per-query min hits 5/5 at sf0.001+sf0.01, 4/5 at sf0.1);
-#         - embed_ann_ivfpq: same per-query differential for the PQ
-#           path (adds m_subspaces/n_codes columns; same measured
-#           margins);
-#         - embed_semantic_dedup: precision+recall contract — the
-#           production clustered pipeline's false-positive count
-#           hashes as EXACTLY 0 (within-cell cosines are exact, so
-#           found ⊆ truth by construction; any emitted non-truth
-#           pair breaks the hash) + recall floor 0.5 (measured
-#           0.970 / 1.0 / 0.954 at sf0.001/0.01/0.1) + n_truth
-#           grounded in the brute-force oracle;
-#       * the four remaining round(DOUBLE,k) oracle sites migrated to
-#         the branchless sign-symmetric bridge (directive #3: grep
-#         for DOUBLE-typed round(x,k) must come back empty):
-#         text_perplexity, text_tfidf_topk (the two the verdict
-#         names) + q9_product_profit, q17_small_quantity (the two
-#         the verdict's grep-based Done condition also catches —
-#         round(DOUBLE,4)/(…,6) over DECIMAL-bridged doubles);
-#       * all eight remote entries — local_server.py changes again
-#         this round (r12 advice #1: /v1/plan classifies EC-less
-#         plans by STRUCTURAL operator-box headers with an unknown-
-#         operator hard-fail, not whole-text substring match; r12
-#         advice #3: the torn-stream EOS check raises RuntimeError,
-#         surviving python -O) and the forensic-artifact writer
-#         becomes per-sf_dir-file atomic (advice #4), touching every
-#         remote entry's harness — same conservative policy as r12.
-#       15 changed entries total.
-#   (b) staleness rotation: events_sessionize_native (deferred from
-#       r12, staleness 4 — first priority) + the ENTIRE r10-vintage
-#       cohort (34 entries, the oldest rows in GATE_AGE.md post-r12).
-#       15 + 1 + 34 = 50 exactly; no r11-vintage fill needed. After
-#       r13 the oldest vintage is r11 (staleness 2).
-#
-# ROUND-13 END-OF-ROUND AFFIRMATION (validation record on the final
-# tree): every entry this round changed is inside the window. The
-# ENTIRE 50-entry window replicated at sf0.01 (the driver's gate
-# scale) in a fresh process with a vanilla SparkSession, entry()
-# first, driver order — 50/50 hash-green, ZERO rows-only lines, 0
-# failed — THREE consecutive times. Full catalog at sf0.001: 127/127
-# hash-green, zero SKIP lines (ORACLE_SKIP is empty — the first
-# round the whole catalog value-hashes). Full catalog at sf0.1 (10x
-# gate scale, minus the four deliberately-n^2 oracle formulations):
-# 123/123 hash-green, 0 failed — also all-hashed for the first time.
-# Full suite on the final tree: 461 passed, 6 skipped (the VARCHAR
-# matrix arms), 0 failed — including the structural /v1/plan
-# classifier branches, the covar/corr two-column matrix arms, the
-# nested-decimal cell-scan pin, and the broken-probe differential
-# teeth test. Fresh-seed fuzz: two batches, 980 queries across the
-# eight families, 0 divergences. stress_split_dec busy-session:
-# 0/30 mismatches. Plan audit: 0 CartesianProduct, 0 SMJ
-# regressions (by-design classified; dedup_components' row now has
-# no-SMJ-at-audit teeth). Bench on the final tree: bench.py 23.41s
-# common-set vs BENCH_r12's driver 22.11s (+5.9%, inside the ~10%
-# directive-#4 target); BENCH_REPORT fresh-both-engines 1.28x
-# ex-n^2, weak list empty; BENCH_AB steady-state interleaved band
-# 1.098x-1.151x. All six per-scale forensic artifacts
-# (split_dec/dsv2/split_agg x sf0.001/sf0.01) all-paths-match.
-
-# ROUND-14 DERIVATION (optimization round 2; r13 verdict directives
-# #1 and the window policy). Window =
-#   (a) the five entries the r13 OPTIMIZATION sessions changed AFTER
-#       the window was fixed at build time (verdict "what's wrong" #2
-#       / "next round" #1 — non-optional): dedup_minhash_lsh,
-#       dedup_canonical_corpus (both also r11-vintage, so they sit in
-#       the rotation cohort below), text_perplexity_bigram,
-#       events_funnel, embed_knn_bruteforce;
-#   (b) every entry round 14 (this optimization round) touches or may
-#       touch: the MinHash family twins (dedup_minhash_auto,
-#       dedup_minhash_recall_held — operators/dedup.py staging
-#       changes), dedup_components (operators/components.py round
-#       batching), dedup_simhash (mega-bucket bound, verdict #5),
-#       q9_product_profit (verdict #8 re-examination);
-#   (c) staleness rotation: the ENTIRE r11-vintage cohort (38 entries,
-#       the oldest rows in GATE_AGE.md post-r13 — includes
-#       dedup_minhash_lsh / dedup_canonical_corpus from (a));
-#   (d) r12-vintage fill, oldest-first per GATE_AGE.md order:
-#       cast_matrix, cte_union_all, dedup_exact_substring,
-#       distinct_rows.
-#   38 + 3 + 5 + 4 = 50 exactly.
-
-_GATE_WINDOW_ROUND = 14
-
-_GATE_WINDOW = [
-    # -- (a) changed in the r13 optimization sessions, ungated in r13
-    #    (the two r11-vintage members are listed in cohort (c) below)
-    "text_perplexity_bigram",
-    "events_funnel",
-    "embed_knn_bruteforce",
-    # -- (b) touched (or examined for change) in round 14
-    "dedup_minhash_auto",
-    "dedup_minhash_recall_held",
-    "dedup_components",
-    "dedup_simhash",
-    "q9_product_profit",
-    # -- (c) staleness rotation: the entire r11-vintage cohort
-    #    (GATE_AGE.md post-r13, oldest first)
-    "bucketed_join_rollup",
-    "corpus_top_terms",
-    "cross_source_contamination",
-    "customer_orders_left_join",
-    "dd_search_marker",
-    "dedup_canonical_corpus",
-    "dedup_minhash_lsh",
-    "dedup_stream_screen",
-    "dedup_substring_screen",
-    "embed_cosine_neardup",
-    "embed_neardup_lsh",
-    "embed_semantic_screen",
-    "events_hourly_rollup",
-    "events_orders_asof_join",
-    "join_region_rollup",
-    "multimodal_features",
-    "multimodal_jpeg_features",
-    "multimodal_video_frames",
-    "multimodal_video_metadata",
-    "ngram_jaccard_sampled",
-    "orders_global_aggs",
-    "orders_group_agg",
-    "orders_rollup",
-    "pipeline_clean_corpus",
-    "q12_priority_shipping",
-    "q13_customer_distribution",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_supplier_cnt",
-    "q22_sales_opportunity",
-    "q6_revenue",
-    "string_functions",
-    "supplier_nation_join",
-    "text_langid",
-    "text_normalize",
-    "text_quality",
-    "text_repetition",
-    "text_token_stats",
-    # -- (d) r12-vintage fill (GATE_AGE.md order)
-    "cast_matrix",
-    "cte_union_all",
-    "dedup_exact_substring",
-    "distinct_rows",
-]
-
-
-# Vacuous-gate guard (r10 verdict #3): an empty==empty hash proves
-# only that both engines agree the result is empty — a thresholding or
-# join-predicate bug that empties BOTH sides (the SQL is generated
-# from one shared definition) would pass undetected forever. Catalog
-# contract: NO gated entry may return an empty result at any gate
-# scale (sf0.001 / sf0.01). tools/check_parity.py fails any entry
-# returning 0 Spark rows unless it is listed here with a reason.
-# Audit of CORRECTNESS_r01..r10 last-green gated row counts found
-# exactly three 0-row entries (ngram_jaccard_sampled,
-# embed_cosine_neardup, embed_neardup_lsh — all re-parameterized
-# non-empty this round); every 1-row entry is a genuine single-row
-# value gate (global aggregates, law/recall contracts), not vacuous.
-GATE_MAY_BE_EMPTY: frozenset = frozenset()
-
-
-def _reorder_catalog() -> None:
-    missing = [n for n in _GATE_WINDOW if n not in CATALOG]
-    assert not missing, f"gate window names not in CATALOG: {missing}"
-    window = set(_GATE_WINDOW)
-    rest = [n for n in CATALOG if n not in window]
-    ordered = {n: CATALOG[n] for n in [*_GATE_WINDOW, *rest]}
-    CATALOG.clear()
-    CATALOG.update(ordered)
-
-
-_reorder_catalog()

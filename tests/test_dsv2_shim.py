@@ -693,56 +693,3 @@ def test_dsv2_shim_randomized_agg_differential():
         assert res["rows"] == want, (case, res["rows"][:3], want[:3])
         n_pushed += res["pushed"]
     assert n_pushed >= len(cases) // 2  # most of the surface pushes
-
-
-def test_split_dec_forensic_diagnostics_sum_to_truth():
-    """The r11 forensic mirror (plans/queries._split_dec_diagnostics)
-    replans the shim's split slices over plain HTTP and collects each
-    split's decimal partial sum + row count. Invariants: the per-split
-    partials must re-aggregate EXACTLY to the direct-parquet answer
-    (pushed ≡ local — the reference's aggregation_pushdown.cpp
-    contract), and every split must contribute (row-hash slicing
-    leaves no empty split at this size)."""
-    from collections import defaultdict
-    from decimal import Decimal
-
-    from dazzleduck_sql_duckdb_spark.plans import queries as Q
-    from dazzleduck_sql_duckdb_spark.sources.local_server import (
-        ArrowTestServer,
-    )
-
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-    srv = ArrowTestServer(
-        {"lineitem": os.path.join(sf_dir, "lineitem.parquet")}
-    ).start()
-    try:
-        diag = Q._split_dec_diagnostics(srv.url)
-    finally:
-        srv.stop()
-    assert diag["n_splits"] >= 2, diag["n_splits"]
-    totals: dict[str, list] = defaultdict(lambda: [Decimal(0), 0])
-    rows_per_split = []
-    for s in diag["splits"]:
-        n_rows = 0
-        for flag, part_sum, n in s["partials"]:
-            totals[flag][0] += Decimal(part_sum)
-            totals[flag][1] += n
-            n_rows += n
-        rows_per_split.append(n_rows)
-    assert all(r > 0 for r in rows_per_split), rows_per_split
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW lineitem AS SELECT * FROM read_parquet("
-        f"'{os.path.join(sf_dir, 'lineitem.parquet')}')"
-    )
-    truth = {
-        f: (Decimal(str(s)), n)
-        for f, s, n in con.sql(
-            "SELECT l_returnflag,"
-            " CAST(sum(CAST(l_quantity AS DECIMAL(12,2)))"
-            " AS DECIMAL(38,2)), count(*) FROM lineitem GROUP BY 1"
-        ).fetchall()
-    }
-    assert set(totals) == set(truth)
-    for f, (ps, pn) in totals.items():
-        assert (ps, pn) == truth[f], (f, ps, pn, truth[f])

@@ -18,48 +18,21 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 @pytest.mark.parity
 def test_catalog_matches_duckdb_oracle(spark):
-    """The DuckDB-oracle differential gate. DEFAULT SCOPE (r14): the
-    50-entry driver gate window — the entries the driver will actually
-    hash this round — which keeps the suite inside the driver's verify
-    budget (the r13 full-catalog run pushed the suite past it and the
-    driver's pytest was truncated at ~61%, verifying nothing after
-    that point; VERIFY_r13.json tests_ok=false). The FULL 127-entry
-    catalog still gates every round in the committed end-of-round
-    validation (`python3 tools/check_parity.py`, recorded in
-    OPTIMIZATION_r14.md / round notes) and on demand:
+    """The DuckDB-oracle differential gate over every catalog entry.
+    Subset runs while iterating on specific entries:
 
-        SPARK_GRAFT_PARITY_FULL=1 python -m pytest -m parity -q
-
-    Per-commit fast path when iterating on specific entries:
-
-        SPARK_GRAFT_PARITY_ONLY=text_tfidf_topk,q1_pricing_summary \
-            python -m pytest -m parity -q
-
-    (equivalently: python tools/check_parity.py <sf_dir> name ...)"""
+        python tools/check_parity.py <sf_dir> name ..."""
     from dazzleduck_sql_duckdb_spark.plans import queries as Q
 
-    only = {
-        n for n in os.environ.get(
-            "SPARK_GRAFT_PARITY_ONLY", ""
-        ).split(",") if n
-    }
-    if not only and not os.environ.get("SPARK_GRAFT_PARITY_FULL"):
-        only = set(Q._GATE_WINDOW)
-    n_pass, n_fail, failures = run_parity(
-        spark, SF_DIR, only=only or None, verbose=False
-    )
+    n_pass, n_fail, failures = run_parity(spark, SF_DIR, verbose=False)
     assert n_fail == 0, f"parity failures: {failures}"
-    assert n_pass >= (len(only) // 2 if only else 35)
+    assert n_pass == len(Q.CATALOG)
 
 
 def test_every_query_has_oracle_or_documented_skip(spark):
     import __spark_entry__ as E
-    from dazzleduck_sql_duckdb_spark.plans import queries as Q
 
-    qs = E.queries()
-    osql = E.oracle_sql()
-    missing = set(qs) - set(osql) - Q.ORACLE_SKIP
-    assert not missing, f"queries without oracle: {missing}"
+    assert set(E.queries()) == set(E.oracle_sql())
 
 
 def test_entry_smoke(spark):
@@ -81,146 +54,22 @@ def test_prepare_pins_utc_session_timezone(spark):
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
-def test_gate_window_covers_every_family():
-    """Round-14 window contract (the driver gates the FIRST 50 catalog
-    entries): the five entries the r13 OPTIMIZATION sessions changed
-    after the r13 window was fixed (r13 verdict directive #1 —
-    non-optional), every entry round 14 touches or examines for change
-    (MinHash family staging, components round batching, simhash
-    mega-bucket bound, q9 re-examination), the ENTIRE r11-vintage
-    staleness cohort (38 entries, oldest in GATE_AGE.md post-r13),
-    and r12-vintage fill oldest-first. 3 + 5 + 38 + 4 = 50 exactly."""
-    from dazzleduck_sql_duckdb_spark.plans import queries as Q
+def test_prepare_rebinds_tables_after_scale_switch(spark):
+    """The table views are session-global: after A -> B, a query at A
+    must re-point them at A instead of reading B's data. Ends bound to
+    the suite's SF_DIR."""
+    import __spark_entry__ as E
 
-    window = Q._GATE_WINDOW
-    assert len(window) == 50
-    assert len(set(window)) == 50
-    assert list(Q.CATALOG)[:50] == window
-    changed_or_new = {
-        # r13-optimization-changed, ungated in r13 (verdict #1)
-        "dedup_minhash_lsh",        # bucket-aggregation rewrite (r13)
-        "dedup_canonical_corpus",   # struct-max tail rewrite (r13)
-        "text_perplexity_bigram",   # repartition-reuse hint (r13)
-        "events_funnel",            # hint fixed/reverted this round
-        "embed_knn_bruteforce",     # operator collect-guard trim (r13)
-        # r14 touched-or-examined
-        "dedup_minhash_auto",       # operators/dedup.py staging
-        "dedup_minhash_recall_held",  # operators/dedup.py staging
-        "dedup_components",         # components round batching
-        "dedup_simhash",            # mega-bucket bound (verdict #5)
-        "q9_product_profit",        # verdict #8 re-examination
-    }
-    rotation = {
-        # the entire r11-vintage cohort (GATE_AGE.md post-r13)
-        "bucketed_join_rollup", "corpus_top_terms",
-        "cross_source_contamination", "customer_orders_left_join",
-        "dd_search_marker", "dedup_canonical_corpus",
-        "dedup_minhash_lsh", "dedup_stream_screen",
-        "dedup_substring_screen", "embed_cosine_neardup",
-        "embed_neardup_lsh", "embed_semantic_screen",
-        "events_hourly_rollup", "events_orders_asof_join",
-        "join_region_rollup", "multimodal_features",
-        "multimodal_jpeg_features", "multimodal_video_frames",
-        "multimodal_video_metadata", "ngram_jaccard_sampled",
-        "orders_global_aggs", "orders_group_agg", "orders_rollup",
-        "pipeline_clean_corpus", "q12_priority_shipping",
-        "q13_customer_distribution", "q14_promo_effect",
-        "q15_top_supplier", "q16_supplier_cnt",
-        "q22_sales_opportunity", "q6_revenue", "string_functions",
-        "supplier_nation_join", "text_langid", "text_normalize",
-        "text_quality", "text_repetition", "text_token_stats",
-        # r12-vintage fill (GATE_AGE.md order)
-        "cast_matrix", "cte_union_all", "dedup_exact_substring",
-        "distinct_rows",
-    }
-    in_window = set(window)
-    for group, names in [
-        ("changed_or_new", changed_or_new),
-        ("rotation", rotation),
-    ]:
-        missing = names - in_window
-        assert not missing, f"{group} entries outside window: {missing}"
-    # exhaustive: the two sets ARE the window, no free-floating slots
-    assert in_window == changed_or_new | rotation
-
-
-def test_gate_age_report_current():
-    """GATE_AGE.md must be regenerated whenever a CORRECTNESS file
-    lands (r7 verdict directive #7): per-entry verdict age is the
-    input to window derivation, so a stale report makes the rotation
-    policy unauditable."""
-    import gate_age
-
-    ages, latest = gate_age.last_green_rounds()
-    text = gate_age.render(ages, latest)
-    with open(os.path.join(REPO, "GATE_AGE.md")) as f:
-        assert f.read() == text, (
-            "GATE_AGE.md stale — rerun: python tools/gate_age.py"
-        )
-
-
-def test_gate_window_round_ratchet():
-    """The staleness ratchet the r5 verdict demanded: the window must
-    be re-derived every round. _GATE_WINDOW_ROUND must equal (max
-    round among committed CORRECTNESS_r files) + 1 — the moment the
-    driver lands this round's CORRECTNESS file, the suite fails until
-    the NEXT round consciously re-derives the window (and, per the
-    policy above, puts every entry it changed inside it)."""
-    import glob
-    import re
-
-    from dazzleduck_sql_duckdb_spark.plans import queries as Q
-
-    rounds = [
-        int(re.search(r"CORRECTNESS_r(\d+)", f).group(1))
-        for f in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
-    ]
-    assert rounds, "driver correctness files missing"
-    assert Q._GATE_WINDOW_ROUND == max(rounds) + 1, (
-        f"gate window derived for round {Q._GATE_WINDOW_ROUND} but the"
-        f" latest driver verdict is round {max(rounds)} — re-derive"
-        " _GATE_WINDOW for the new round (plans/queries.py gate order)"
+    other = os.path.join(
+        os.path.dirname(SF_DIR),
+        "sf0.001" if SF_DIR.endswith("sf0.01") else "sf0.01",
     )
-
-
-def test_gate_age_staleness_bound():
-    """The inverse of the rotation policy (r8 verdict directive #7):
-    once an entry has EVER been driver-green, its last-green round may
-    trail the latest driver round by at most 3 — the window rotation
-    must keep the tail fresh, and this assert turns silent decay into
-    a suite failure. (ORACLE_SKIP has been empty since r13 — every
-    catalog entry ships an oracle and hash-gates.)"""
-    import gate_age
-
-    ages, latest = gate_age.last_green_rounds()
-    assert ages and latest >= 8
-    stale = {n: r for n, r in ages.items() if latest - r > 3}
-    assert not stale, (
-        f"entries last green more than 3 rounds ago (latest r{latest}):"
-        f" {stale} — rotate them into _GATE_WINDOW"
-    )
-
-
-def test_vacuous_gate_registry_empty_and_devacuumed():
-    """r10 verdict #3: the three 0-row gates were re-parameterized to
-    return rows at gate scale, and the catalog-wide contract is that
-    NO entry may gate an empty result (check_parity fails vacuous
-    empties). GATE_MAY_BE_EMPTY must stay empty unless an entry gains
-    a documented empty-by-design gate. (The r11-specific in-window
-    assertion on the three names is retired: CORRECTNESS_r11 recorded
-    them green at 8/5/5 rows — the de-vacuuming is a driver fact now,
-    checked via gate_age, not a window obligation.)"""
-    import gate_age
-
-    from dazzleduck_sql_duckdb_spark.plans import queries as Q
-
-    assert Q.GATE_MAY_BE_EMPTY == frozenset()
-    _, gated_rows, _ = gate_age.last_green_rounds_and_rows()
-    for name in ("ngram_jaccard_sampled", "embed_cosine_neardup",
-                 "embed_neardup_lsh"):
-        assert gated_rows.get(name, 0) > 0, (
-            f"{name} last driver-green gated 0 rows — vacuous again"
-        )
+    count = E.queries()["lineitem_count"]
+    for sf_dir in (SF_DIR, other, SF_DIR):
+        want = spark.read.parquet(
+            os.path.join(sf_dir, "lineitem.parquet")
+        ).count()
+        assert count(spark, sf_dir).collect()[0][0] == want, sf_dir
 
 
 def test_decimal_export_guard_fails_decimal_probe(spark, monkeypatch):
@@ -295,11 +144,8 @@ def test_vacuous_guard_fails_empty_entries(spark, monkeypatch):
     """The guard that makes 0-row gates impossible must itself be
     pinned: run_parity against a stub entry whose Spark result AND
     oracle are both empty must FAIL with the vacuous marker (this is
-    exactly the shape that sat green-but-meaningless for 8 rounds),
-    while a listed GATE_MAY_BE_EMPTY entry would pass (registry is
-    empty by contract, so that arm is exercised via monkeypatch)."""
+    exactly the shape that sat green-but-meaningless for 8 rounds)."""
     import __spark_entry__ as E
-    from dazzleduck_sql_duckdb_spark.plans import queries as Q
 
     def fake_queries():
         return {
@@ -317,13 +163,3 @@ def test_vacuous_guard_fails_empty_entries(spark, monkeypatch):
         spark, SF_DIR, only={"stub_empty"}, verbose=False
     )
     assert n_fail == 1 and "vacuous" in failures[0][1]
-
-    # and the registry escape hatch works (so a future documented
-    # empty-by-design gate is possible without weakening the default)
-    monkeypatch.setattr(
-        Q, "GATE_MAY_BE_EMPTY", frozenset({"stub_empty"})
-    )
-    n_pass, n_fail, failures = run_parity(
-        spark, SF_DIR, only={"stub_empty"}, verbose=False
-    )
-    assert n_fail == 0 and n_pass == 1

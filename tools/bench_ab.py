@@ -54,7 +54,7 @@ def main() -> int:
     # class, not the engine, and would serialize the interleave)
     names = [
         n for n in BENCH_QUERIES
-        if n in qs and n in Q.CATALOG and n not in Q.ORACLE_SKIP
+        if n in qs and n in Q.CATALOG
         and n not in BRUTE_FORCE_ORACLES
     ]
 

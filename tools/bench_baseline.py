@@ -37,7 +37,7 @@ def main() -> int:
 
     duck: dict[str, float] = {}
     for name in BENCH_QUERIES:
-        if name not in Q.CATALOG or name in Q.ORACLE_SKIP:
+        if name not in Q.CATALOG:
             continue
         sql = Q.oracle_sql_for(name)
         t0 = time.perf_counter()

@@ -78,12 +78,6 @@ def _contains_decimal(v) -> bool:
     return False
 
 
-def _may_be_empty() -> frozenset:
-    from dazzleduck_sql_duckdb_spark.plans import queries as Q
-
-    return Q.GATE_MAY_BE_EMPTY
-
-
 def run_parity(spark, sf_dir: str, only: set[str] | None = None,
                verbose: bool = True):
     """Run the driver's gate; return (n_pass, n_fail, failures list)."""
@@ -130,12 +124,12 @@ def run_parity(spark, sf_dir: str, only: set[str] | None = None,
             failures.append((name, f"decimal export: {dec_cols}"))
             n_fail += 1
             continue
-        if not srows and name not in _may_be_empty():
-            # vacuous-gate guard (r10 verdict #3): empty==empty hashes
-            # verify nothing; an entry whose gate is empty must either
-            # be re-parameterized or explicitly registered
-            log(f"FAIL {name}: VACUOUS (0 spark rows — "
-                "not in GATE_MAY_BE_EMPTY)")
+        if not srows:
+            # vacuous-gate guard: empty==empty only proves both engines
+            # agree the result is empty — a predicate bug that empties
+            # BOTH sides (one shared SQL definition) would pass forever,
+            # so no gated entry may return 0 rows at a gate scale
+            log(f"FAIL {name}: VACUOUS (0 spark rows)")
             failures.append((name, "vacuous: 0 spark rows"))
             n_fail += 1
             continue

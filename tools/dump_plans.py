@@ -1,12 +1,11 @@
 #!/usr/bin/env python3
-"""Dump `.explain("formatted")` for every bench query to plans/r13/.
+"""Dump `.explain("formatted")` for every bench query into a directory.
 
 Usage:
-    python3 tools/dump_plans_r13.py before [sf_dir] [names...]
-    python3 tools/dump_plans_r13.py after  [sf_dir] [names...]
+    python3 tools/dump_plans.py <out_dir> [tag] [sf_dir] [names...]
 
-Writes plans/r13/<query>_<tag>.txt — the optimization-round evidence
-files the judge checks plan claims against. Default sf_dir is the
+Writes <out_dir>/<query>_<tag>.txt (tag defaults to "before"), the
+evidence files plan claims are checked against. Default sf_dir is the
 bench scale (sf0.1); default names = the bench headline set.
 """
 
@@ -24,12 +23,15 @@ from dazzleduck_sql_duckdb_spark.session import get_spark  # noqa: E402
 
 
 def main() -> int:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    names = sys.argv[3:] or BENCH_QUERIES
-    out_dir = os.path.join(REPO, "plans", "r13")
+    if len(sys.argv) < 2:
+        print(__doc__, file=sys.stderr)
+        return 2
+    out_dir = sys.argv[1]
+    tag = sys.argv[2] if len(sys.argv) > 2 else "before"
+    sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
+    names = sys.argv[4:] or BENCH_QUERIES
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="dump_plans_r13")
+    spark = get_spark(app_name="dump_plans")
     queries = E.queries()
     for name in names:
         if name not in queries:
