@@ -40,8 +40,6 @@ def _prepare(spark: SparkSession, sf_dir: str) -> None:
     # oracle's epoch_us() is UTC-naive, so a non-UTC driver JVM would
     # shift every event/date epoch. Pin it (runtime-settable).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # dd_read_arrow's pushFilters requires this (runtime-settable)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     # driver sessions come vanilla (200 shuffle partitions): size to cores
     spark.conf.set(
         "spark.sql.shuffle.partitions",

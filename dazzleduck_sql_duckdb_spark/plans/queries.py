@@ -747,10 +747,8 @@ def _remote_agg_pushdown(d: str) -> str:
 
 
 def _build_remote_agg_pushdown(spark, sf_dir: str):
-    from ..sources import dd_read_arrow, register
-    from ..sources.arrow_http import dd_read_arrow_agg
+    from ..sources import dd_read_arrow, dd_read_arrow_agg
 
-    register(spark)
     srv = _server_for(sf_dir)
     remote_sql = (
         "SELECT count(*) AS n, sum(CAST(l_quantity AS BIGINT)) AS sum_qty,"
@@ -3817,9 +3815,8 @@ def _remote_scan_split_agg(d: str) -> str:
 
 
 def _build_remote_scan_split_agg(spark, sf_dir: str):
-    from ..sources import dd_read_arrow, register
+    from ..sources import dd_read_arrow
 
-    register(spark)
     srv = _server_for(sf_dir)
     split_scan = dd_read_arrow(
         spark, srv.url, source_table="lineitem", split=True,
@@ -3879,17 +3876,16 @@ def _remote_scan_failover(d: str) -> str:
     pytest-only, test_arrow_source.py dead-then-live): every split of
     a split-mode remote scan advertises a dead endpoint first, so
     half the splits exercise the rotate-with-fresh-query-id path
-    (sources/arrow_http.py read(); abandoned ids best-effort
-    cancelled). The gate pins that failover yields the COMPLETE
+    (scala/DdArrowShim.scala DdColumnarReader; abandoned ids
+    best-effort cancelled). The gate pins that failover yields the COMPLETE
     answer — a dropped or double-read split changes the counts/sums.
     Reference: read_arrow_dd.cpp endpoints rotation."""
     return _REMOTE_AGG.format(src="lineitem")
 
 
 def _build_remote_scan_failover(spark, sf_dir: str):
-    from ..sources import dd_read_arrow, register
+    from ..sources import dd_read_arrow
 
-    register(spark)
     srv = _failover_server_for(sf_dir)
     scan = dd_read_arrow(
         spark, srv.url, source_table="lineitem", split=True,
@@ -3911,9 +3907,8 @@ def _remote_scan_filter(d: str) -> str:
 
 
 def _build_remote_scan_filter(spark, sf_dir: str):
-    from ..sources import dd_read_arrow, register
+    from ..sources import dd_read_arrow
 
-    register(spark)
     srv = _server_for(sf_dir)
     scan = dd_read_arrow(spark, srv.url, source_table="orders")
     scan.createOrReplaceTempView("__remote_orders")
@@ -3948,31 +3943,12 @@ def _remote_scan_dsv2(d: str) -> str:
     )
 
 
-_DSV2_JAR_ADDED: set[int] = set()
-
-
-def _add_shim_jar(spark) -> None:
-    """Runtime load into the (vanilla) session: ADD JAR distributes the
-    jar to executors and installs it on the session classloader, so
-    format("dd_arrow_dsv2") resolves without spark.jars at session
-    creation."""
-    import os
-
-    if id(spark) in _DSV2_JAR_ADDED:
-        return
-    jar = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "jars",
-        "dd_arrow_shim.jar",
-    )
-    spark.sql(f"ADD JAR {jar}")
-    _DSV2_JAR_ADDED.add(id(spark))
-
-
 def _build_remote_scan_dsv2(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
-    _add_shim_jar(spark)
+    from ..sources import register
+
+    register(spark)
     srv = _server_for(sf_dir)
 
     def scan(**extra):
@@ -4062,7 +4038,9 @@ _SPLIT_DEC_SIZE = 64 * 4000
 def _build_remote_scan_dsv2_split_dec(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
-    _add_shim_jar(spark)
+    from ..sources import register
+
+    register(spark)
     srv = _server_for(sf_dir)
 
     def scan(split: bool):
@@ -4278,9 +4256,8 @@ def _build_remote_login_scan(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from ..functions.misc import login
-    from ..sources import dd_read_arrow, register
+    from ..sources import dd_read_arrow
 
-    register(spark)
     srv = _auth_server_for(sf_dir)
     token = login(srv.url, "sparky", "hunter2")
     scan = dd_read_arrow(
@@ -4317,9 +4294,8 @@ FROM p, unnest(range(0, CAST(n AS BIGINT))) AS u(i)
 
 
 def _build_remote_splits(spark, sf_dir: str):
-    from ..sources import dd_splits, register
+    from ..sources import dd_splits
 
-    register(spark)
     srv = _server_for(sf_dir)
     return dd_splits(
         spark, srv.url, source_table="lineitem", split_size=64 * 4000

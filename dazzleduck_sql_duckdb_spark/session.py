@@ -49,7 +49,6 @@ def get_spark(
         # on a real cluster keep this cache hot; size it so the local
         # bench does too.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

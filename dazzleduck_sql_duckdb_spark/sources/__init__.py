@@ -1,10 +1,14 @@
 """Remote-source surface (SURVEY.md §2.1): the Arrow-IPC-over-HTTP scan
 (`dd_read_arrow`), server-side aggregation (`dd_read_arrow_agg`), split
 introspection (`dd_splits`), the in-memory Arrow IPC buffer scan
-(`dd_scan_arrow_ipc`), and a local wire-protocol server for tests."""
+(`dd_scan_arrow_ipc`), and a local wire-protocol server for tests.
+
+Remote scans run in one reader, the JVM DSv2 source in
+`scala/DdArrowShim.scala` (`jars/dd_arrow_shim.jar`, format
+``dd_arrow_dsv2``). `register(spark)` loads the jar into the session;
+the builders call it themselves."""
 
 from .arrow_http import (
-    ArrowHttpDataSource,
     dd_read_arrow,
     dd_read_arrow_agg,
     dd_read_arrow_narrow,
@@ -14,7 +18,6 @@ from .arrow_http import (
 from .ipc import dd_scan_arrow_ipc, to_arrow_ipc
 
 __all__ = [
-    "ArrowHttpDataSource",
     "dd_read_arrow",
     "dd_read_arrow_agg",
     "dd_read_arrow_narrow",

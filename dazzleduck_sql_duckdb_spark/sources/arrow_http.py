@@ -1,761 +1,124 @@
-"""`dd_read_arrow` — Arrow-IPC-over-HTTP scan as a Spark Python DataSource.
+"""`dd_read_arrow` — Arrow-IPC-over-HTTP scans served by the JVM DSv2
+reader (`scala/DdArrowShim.scala`, format ``dd_arrow_dsv2``).
 
-Behavioral parity with the reference's table function
-(/root/reference/src/scanner/read_arrow_dd.cpp:880-898) re-expressed in
-Spark's native execution model:
+The builders here only shape remote SQL and reader options; the schema
+probe, split planning, HTTP, IPC decoding and pushdown all run in the
+JVM, so no Python worker starts for a remote scan. Behavioral parity
+with the reference's table function
+(src/scanner/read_arrow_dd.cpp:880-898):
 
 ==============================  =========================================
-Reference mechanism             This implementation
+Reference mechanism             This implementation (DdArrowShim.scala)
 ==============================  =========================================
-Bind() full-fetch for schema    ``schema()`` probes with ``LIMIT 0``
-  (read_arrow_dd.cpp:299-391,     (cheap; the reference's full fetch is a
-  buffers whole body)             documented inefficiency, SURVEY §3.1)
-split plan fetch + atomic       ``partitions()`` returns one
-  work-stealing threads           ``InputPartition`` per split; Spark's
-  (:158-190, :84-92)              task scheduler replaces the atomic
-                                  claim counter
-filter pushdown -> SQL WHERE    ``pushFilters`` serializes supported
-  (FilterToSQL :198-238;          filters to a WHERE clause, returns the
-  unsupported stay local :234)    rest to Spark for local re-apply —
-                                  identical partial-pushdown contract
-per-split HTTP fetch, whole     ``read()`` streams ``pyarrow.ipc``
-  body buffered in memory         record batches off the socket (bounded
-  (http_stream_factory.cpp:20)    memory at any scale)
+Bind() full-fetch for schema    ``inferSchema`` probes with ``LIMIT 0``
+  (read_arrow_dd.cpp:299-391,     on the driver JVM (only the schema
+  buffers whole body)             message crosses the wire)
+split plan fetch + atomic       ``planInputPartitions`` fetches /v1/plan;
+  work-stealing threads           one ``InputPartition`` per split, Spark's
+  (:158-190, :84-92)              task scheduler replaces the claim counter
+projection pushdown             ``pruneColumns``: the remote SELECT list
+  (:246-262, :296)                names only the columns Catalyst needs
+filter pushdown -> SQL WHERE    ``pushFilters`` / ``DdWire.filterToSql``;
+  (FilterToSQL :198-238;          unsupported filters stay post-scan —
+  unsupported stay local :234)    the same partial-pushdown contract
+aggregation pushdown            ``pushAggregation`` (complete, or split
+  (aggregation_pushdown.cpp)      partials merged by Spark); the
+                                  ``agg_select`` template for
+                                  ``dd_read_arrow_agg(split=True)``
+per-split HTTP fetch, whole     ``DdColumnarReader`` streams Arrow batches
+  body buffered in memory         into ``ColumnarBatch``es (bounded memory;
+  (http_stream_factory.cpp:20)    zstd/lz4 bodies decoded by arrow-java)
+httpfs retry defaults           ``HttpRetries``/``HttpBackoffMs``: 5xx and
+                                  failed connections retry with backoff,
+                                  4xx never; data opens use a fresh query
+                                  id per attempt and rotate replicas
 query-id per query/split        random int63 ids, same role
   (:347-351, :457-466)
-cancel monitor thread firing    two-channel: (1) event-driven GET
-  GET /v1/cancel (:103-157)       /v1/cancel — generator close, SIGTERM
-                                  handler, atexit drain an in-flight
-                                  registry (graceful teardown paths);
-                                  (2) for JVM-killed tasks the pyspark
-                                  daemon SIGKILLs the worker — no hook
-                                  can run — so the closed TCP socket is
-                                  the cancel signal, and servers must
-                                  treat the connection as the query
-                                  lease (local_server does; bounded by
-                                  the server's write cadence)
+cancel monitor thread firing    close() mid-stream fires GET /v1/cancel on
+  GET /v1/cancel (:103-157)       top of the connection drop; a JVM
+                                  shutdown hook sweeps in-flight readers
 ==============================  =========================================
 
-Aggregation pushdown (aggregation_pushdown.cpp) is intentionally NOT
-re-implemented: Spark's partial+final aggregation already minimizes what
-crosses the exchange, and the Python DS API exposes no aggregate hook.
-The reference itself falls back to exactly this local execution whenever
-any aggregate is unsupported — our plan equals its fallback plan, with
-Spark's strictly-stronger split-safe partials (SURVEY §2.3 A3).
+A stream that ends without the Arrow EOS marker (a torn response) and a
+replica answering in another column order both fail the task instead of
+yielding short or swapped results.
 
 Usage::
 
-    spark.dataSource.register(ArrowHttpDataSource)
-    df = (spark.read.format("dd_read_arrow")
-          .option("url", "http://host:8080")
-          .option("sql", "SELECT * FROM lineitem")   # or source_table
-          .option("split", "true")
-          .option("split_size", 1 << 20)
-          .option("auth_token", token)               # from functions.misc.login
-          .load())
+    sources.register(spark)      # ADD JAR, once per SparkContext
+    df = dd_read_arrow(spark, "http://host:8080", source_table="lineitem",
+                       split=True, auth_token=token)
 """
 
 from __future__ import annotations
 
-import atexit
 import json
-import random
+import os
 import re
-import threading
-import time
-import urllib.error
-import urllib.parse
-import urllib.request
-from dataclasses import dataclass, field
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    InputPartition,
-    IsNotNull,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
-    StringContains,
-    StringEndsWith,
-    StringStartsWith,
+_JAR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "jars",
+    "dd_arrow_shim.jar",
 )
-from pyspark.sql.types import StructType
-
-ARROW_MIME = "application/vnd.apache.arrow.stream"
-HTTP_TIMEOUT_S = 30
 
 
-def _new_query_id() -> int:
-    """Random positive int63 (read_arrow_dd.cpp:347-351 uses random int64)."""
-    return random.randrange(1, 2**62)
+def register(spark) -> None:
+    """Make ``format("dd_arrow_dsv2")`` resolve in this session.
 
-
-def _headers(token: str | None) -> dict[str, str]:
-    h = {"Accept": ARROW_MIME}
-    if token:
-        h["Authorization"] = f"Bearer {token}"
-    return h
-
-
-def _query_url(base: str, sql: str, query_id: int) -> str:
-    q = urllib.parse.quote_plus(sql)
-    return f"{base.rstrip('/')}/v1/query?q={q}&id={query_id}"
-
-
-HTTP_RETRIES = 3
-HTTP_BACKOFF_S = 0.2
-
-
-class TransientHTTPError(RuntimeError):
-    """5xx / connection failure — safe to retry the open."""
-
-
-_EOS_MARKER = b"\xff\xff\xff\xff\x00\x00\x00\x00"
-
-
-class _EosTrackingStream:
-    """File-like wrapper recording the trailing 8 bytes of the body.
-
-    Arrow's IPC stream readers (pyarrow and arrow-java alike) treat a
-    BARE EOF at a message boundary as a normal end of stream, so an
-    HTTP response truncated between batches decodes as a silently
-    SHORT result — which a split-mode aggregate merge then under-sums
-    with no error anywhere. Every well-formed stream ends with the
-    explicit EOS marker (continuation 0xFFFFFFFF + length 0); the read
-    loop checks `saw_eos_marker` after exhaustion and raises on a
-    truncated stream so Spark's task retry re-runs the split."""
-
-    def __init__(self, raw):
-        self._raw = raw
-        self._tail = b""
-        self.bytes_seen = 0
-
-    def _record(self, data) -> None:
-        self.bytes_seen += len(data)
-        d = bytes(data)
-        self._tail = d[-8:] if len(d) >= 8 else (self._tail + d)[-8:]
-
-    def read(self, n=-1):
-        data = self._raw.read(n)
-        if data:
-            self._record(data)
-        return data
-
-    def readable(self) -> bool:
-        return True
-
-    def seekable(self) -> bool:
-        return False
-
-    @property
-    def closed(self) -> bool:
-        # pyarrow's PythonFile wrapper requires this attribute
-        return bool(getattr(self._raw, "closed", False))
-
-    def close(self) -> None:
-        self._raw.close()
-
-    @property
-    def saw_eos_marker(self) -> bool:
-        return self._tail == _EOS_MARKER
-
-
-def _open_stream(
-    url: str,
-    token: str | None,
-    extra: dict | None = None,
-    retries: int = HTTP_RETRIES,
-):
-    """Open the HTTP stream with bounded retry on transient failures.
-
-    The reference inherits httpfs's retry defaults (3 attempts with
-    backoff) for every fetch because it buffers whole bodies; we stream,
-    so only the OPEN retries here — a connection dying mid-stream
-    surfaces to Spark, whose task retry is the correct distributed
-    retry unit (the replacement task re-runs the whole split). 4xx is a
-    client error and never retried (the reference's InvalidInput vs
-    IOException distinction, arrow_http_client.cpp:82-89). /v1/query
-    opens pass retries=1 and retry in read() with a FRESH query id per
-    attempt (re-issuing one id could double-execute server-side with no
-    way to cancel the orphan); /v1/plan and schema probes are idempotent
-    and retry the same URL here."""
-    import time
-
-    req = urllib.request.Request(url, headers={**_headers(token), **(extra or {})})
-    last: Exception | None = None
-    for attempt in range(retries):
-        try:
-            return urllib.request.urlopen(req, timeout=HTTP_TIMEOUT_S)
-        except urllib.error.HTTPError as e:
-            if e.code < 500:
-                raise RuntimeError(
-                    f"dd_read_arrow: HTTP {e.code} from server:"
-                    f" {e.read()[:200]!r}"
-                ) from e
-            last = TransientHTTPError(
-                f"dd_read_arrow: HTTP {e.code} from server:"
-                f" {e.read()[:200]!r}"
-            )
-        except urllib.error.URLError as e:
-            last = TransientHTTPError(f"dd_read_arrow: connection failed: {e}")
-        if attempt < retries - 1:
-            time.sleep(HTTP_BACKOFF_S * (2**attempt))
-    raise last
-
-
-def _fetch_plan(
-    base: str, sql: str, split_size: int | None, token: str | None
-) -> list[dict]:
-    """GET /v1/plan — split planning (arrow_http_client.cpp:108-167 wire
-    behavior: q param + x-dd-split-size header; JSON list of splits)."""
-    url = f"{base.rstrip('/')}/v1/plan?q={urllib.parse.quote_plus(sql)}"
-    extra = {"Accept": "application/json"}
-    if split_size:
-        extra["x-dd-split-size"] = str(split_size)
-    with _open_stream(url, token, extra) as resp:
-        payload = json.loads(resp.read().decode("utf-8"))
-    splits = []
-    for entry in payload:
-        sh = entry.get("descriptor", {}).get("statementHandle", {})
-        splits.append(
-            {
-                "endpoints": entry.get("endpoints", []),
-                "query": sh.get("query", ""),
-                "query_id": int(sh.get("queryId", 0)),
-                "producer_id": str(sh.get("producerId", "")),
-                "split_size": int(sh.get("splitSize", 0)),
-                "query_checksum": str(sh.get("queryChecksum", "")),
-            }
+    The jar is added with ``ADD JAR`` once per SparkContext: the check
+    reads the context's own jar list, so a restarted session loads it
+    again. ``ADD JAR`` installs the session's jar class loader only on
+    the JVM thread that ran it, and py4j serves each Python thread from
+    its own JVM thread, so later calls install it on the caller's."""
+    jars = spark.sparkContext._jsc.sc().listJars().mkString("\n")
+    name = os.path.basename(_JAR)
+    if any(j.rsplit("/", 1)[-1] == name for j in jars.split("\n")):
+        spark._jvm.java.lang.Thread.currentThread().setContextClassLoader(
+            spark._jsparkSession.sharedState().jarClassLoader()
         )
-    if not splits:  # 0 splits is a plan error (read_arrow_dd.cpp:453-455)
-        raise RuntimeError("dd_read_arrow: server returned no splits")
-    return splits
-
-
-def _cancel(
-    base: str, query_id: int, token: str | None, timeout: float = 5.0
-) -> None:
-    """Best-effort GET /v1/cancel (cancel_monitor.cpp semantics: failures
-    are swallowed, arrow_http_client.cpp:194-199)."""
-    try:
-        url = f"{base.rstrip('/')}/v1/cancel?id={query_id}"
-        req = urllib.request.Request(url, headers=_headers(token))
-        urllib.request.urlopen(req, timeout=timeout).close()
-    except Exception:
-        pass
-
-
-# ------------------------------------------------------ cancel lifecycle
-#
-# The reference runs a monitor thread polling the host's `interrupted`
-# flag every 50 ms and firing /v1/cancel server-side
-# (src/http/cancel_monitor.cpp:103-157). A Spark Python worker exposes no
-# pollable interruption flag, so the same guarantee — a killed task
-# cancels its server-side query within a bounded interval — is provided
-# event-driven instead:
-#
-# 1. generator close  — Spark tears down the task's read() generator
-#    (GeneratorExit) -> finally fires _cancel immediately;
-# 2. SIGTERM          — the worker process being terminated mid-read
-#    (e.g. blocked on a slow socket, so the generator cannot unwind)
-#    fires _cancel for every in-flight query from the signal handler;
-# 3. interpreter exit — atexit sweeps whatever remains.
-#
-# All three paths drain the module-level in-flight registry, so a cancel
-# is sent at most once per query id.
-
-_INFLIGHT: dict[int, tuple[str, str | None]] = {}
-# RLock: the SIGTERM handler runs on the main thread between bytecodes
-# and may interrupt _inflight_add/_inflight_pop while the lock is held
-# BY THE SAME THREAD — a plain Lock would deadlock the dying worker
-_INFLIGHT_LOCK = threading.RLock()
-_SIGTERM_HOOKED = False
-
-
-def _inflight_add(query_id: int, endpoint: str, token: str | None) -> None:
-    with _INFLIGHT_LOCK:
-        _INFLIGHT[query_id] = (endpoint, token)
-
-
-def _inflight_pop(query_id: int) -> tuple[str, str | None] | None:
-    with _INFLIGHT_LOCK:
-        return _INFLIGHT.pop(query_id, None)
-
-
-# A dying worker must not stall on an unresponsive server: the whole
-# teardown sweep (SIGTERM handler / atexit) gets one shared deadline,
-# not 5s per query.
-_SWEEP_DEADLINE_S = 5.0
-
-
-def _cancel_all_inflight() -> None:
-    with _INFLIGHT_LOCK:
-        items = list(_INFLIGHT.items())
-        _INFLIGHT.clear()
-    deadline = time.monotonic() + _SWEEP_DEADLINE_S
-    for qid, (endpoint, token) in items:
-        remaining = deadline - time.monotonic()
-        if remaining <= 0:
-            break  # out of budget — the server's connection-drop-as-
-            # cancel lease covers whatever we could not reach
-        _cancel(endpoint, qid, token, timeout=min(2.0, remaining))
-
-
-def _hook_sigterm() -> None:
-    """Chain a SIGTERM handler that cancels in-flight queries before the
-    process dies (signal handlers only install from the main thread —
-    which is where Spark Python workers run read()). Safe to call often."""
-    global _SIGTERM_HOOKED
-    if _SIGTERM_HOOKED:
-        return
-    import signal
-
-    if threading.current_thread() is not threading.main_thread():
-        return
-    try:
-        prev = signal.getsignal(signal.SIGTERM)
-
-        def handler(signum, frame):
-            _cancel_all_inflight()
-            if callable(prev):
-                prev(signum, frame)
-            elif prev is signal.SIG_IGN:
-                return  # the host opted to ignore SIGTERM — respect it
-            else:
-                signal.signal(signal.SIGTERM, signal.SIG_DFL)
-                signal.raise_signal(signal.SIGTERM)
-
-        signal.signal(signal.SIGTERM, handler)
-        _SIGTERM_HOOKED = True
-    except (ValueError, OSError):
-        pass
-
-
-atexit.register(_cancel_all_inflight)
-
-
-# ------------------------------------------------------------ filter -> SQL
-
-
-def _sql_literal(v) -> str | None:
-    import datetime
-    import decimal
-
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, float):
-        # inf/nan have no portable SQL literal -> keep the filter local
-        import math
-
-        return str(v) if math.isfinite(v) else None
-    if isinstance(v, (int, decimal.Decimal)):
-        return str(v)
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    if isinstance(v, datetime.datetime):
-        return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
-    if isinstance(v, datetime.date):
-        return f"DATE '{v.isoformat()}'"
-    return None  # unsupported literal type -> do not push
-
-
-def _quote_ident(path: tuple) -> str | None:
-    if len(path) != 1:  # nested fields not pushed
-        return None
-    return '"' + path[0].replace('"', '""') + '"'
-
-
-def filter_to_sql(f: Filter) -> str | None:
-    """Serialize one Spark DS filter to remote SQL, or None if not
-    pushable (the reference pushes constant comparisons + IS [NOT] NULL,
-    FilterToSQL read_arrow_dd.cpp:198-238; we add IN and string
-    prefix/suffix/contains, which its servers also understand as plain
-    SQL). Unsupported filters stay local — correctness is preserved
-    because Spark re-applies every filter above the scan."""
-    binops = {
-        EqualTo: "=",
-        GreaterThan: ">",
-        GreaterThanOrEqual: ">=",
-        LessThan: "<",
-        LessThanOrEqual: "<=",
-    }
-    for cls, op in binops.items():
-        if isinstance(f, cls):
-            col = _quote_ident(f.attribute)
-            lit = _sql_literal(f.value)
-            if col is None or lit is None:
-                return None
-            return f"{col} {op} {lit}"
-    if isinstance(f, IsNull):
-        col = _quote_ident(f.attribute)
-        return f"{col} IS NULL" if col else None
-    if isinstance(f, IsNotNull):
-        col = _quote_ident(f.attribute)
-        return f"{col} IS NOT NULL" if col else None
-    if isinstance(f, In):
-        col = _quote_ident(f.attribute)
-        lits = [_sql_literal(v) for v in f.value]
-        if col is None or any(x is None for x in lits) or not lits:
-            return None
-        return f"{col} IN ({', '.join(lits)})"
-    if isinstance(f, StringStartsWith):
-        return _like(f.attribute, _like_escape(f.value) + "%")
-    if isinstance(f, StringEndsWith):
-        return _like(f.attribute, "%" + _like_escape(f.value))
-    if isinstance(f, StringContains):
-        return _like(f.attribute, "%" + _like_escape(f.value) + "%")
-    return None
-
-
-def _like_escape(value: str) -> str:
-    """Escape LIKE metacharacters in a literal fragment. These filters are
-    CONSUMED by pushFilters (Spark does not re-apply them), so a value
-    containing % or _ must not act as a wildcard remotely — e.g.
-    startswith('user_') must not match 'userX...'."""
-    return (
-        value.replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_")
-    )
-
-
-def _like(attribute: tuple, pattern: str) -> str | None:
-    col = _quote_ident(attribute)
-    lit = _sql_literal(pattern)
-    if col is None or lit is None:
-        return None
-    return f"{col} LIKE {lit} ESCAPE '\\'"
-
-
-# ------------------------------------------------------------ the source
+    else:
+        spark.sql(f"ADD JAR {_JAR}")
 
 
 def _quote_key(k: str) -> str:
     return '"' + k.strip().replace('"', '""') + '"'
 
 
-def _agg_wrap(
-    rel: str, select: str, where: str | None, group_by: list[str]
+def _base_query(
+    sql: str | None, source_table: str | None, columns: list[str] | None
 ) -> str:
-    """The reference's aggregation-pushdown rewrite template
-    (aggregation_pushdown.cpp:247-418): ``SELECT <aggs> FROM (<rel>)
-    AS _subq [WHERE ..] [GROUP BY ..]``. Applied per split in split
-    mode; the WHERE is idempotent there (the split plan is already
-    taken over the filtered relation)."""
-    out = f"SELECT {select} FROM ({rel}) AS _subq"
-    if where:
-        out += f" WHERE {where}"
-    if group_by:
-        out += " GROUP BY " + ", ".join(_quote_key(k) for k in group_by)
-    return out
-
-
-@dataclass
-class ArrowSplit(InputPartition):
-    endpoint: str
-    query: str
-    query_id: int
-    producer_id: str = ""
-    split_size: int = 0
-    query_checksum: str = ""
-    value: int = field(default=0)
-    # all replicas that can serve this split (split_info.hpp:20-37 —
-    # a reference split carries endpoints[], not a single address);
-    # read() fails over across them. Empty -> (endpoint,).
-    endpoints: tuple = ()
-
-
-class ArrowHttpDataSource(DataSource):
-    """Spark registration entry: ``spark.dataSource.register(ArrowHttpDataSource)``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "dd_read_arrow"
-
-    def _base_query(self) -> str:
-        sql = self.options.get("sql")
-        table = self.options.get("source_table")
-        # exactly one of sql/source_table (read_arrow_dd.cpp:327-335);
-        # source_table wraps as SELECT * (:339-345)
-        if bool(sql) == bool(table):
-            raise ValueError(
-                "dd_read_arrow: exactly one of `sql` or `source_table` required"
-            )
-        base = sql if sql else f"SELECT * FROM {table}"
-        # Projection pushdown: the Python DS API has no column-pruning
-        # hook, so the `columns` option rebuilds the remote SELECT list
-        # explicitly — the same quoted-identifier template the reference
-        # emits when DuckDB prunes (read_arrow_dd.cpp:246-262, :296).
-        cols = self.options.get("columns")
-        if cols:
-            quoted = ", ".join(
-                '"' + c.strip().replace('"', '""') + '"'
-                for c in cols.split(",")
-            )
-            base = f"SELECT {quoted} FROM ({base}) AS _subq"
-        return base
-
-    def _url(self) -> str:
-        url = self.options.get("url")
-        if not url:
-            raise ValueError("dd_read_arrow: `url` option is required")
-        return url
-
-    def _agg_options(self) -> tuple[str, str | None, list[str]] | None:
-        """Split-mode aggregation pushdown options (set by
-        dd_read_arrow_agg): the partial-aggregate SELECT list, optional
-        WHERE, and GROUP BY keys. None when this is a plain scan."""
-        select = self.options.get("agg_select")
-        if not select:
-            return None
-        gb = self.options.get("agg_group_by")
-        return (
-            select,
-            self.options.get("agg_where") or None,
-            [k.strip() for k in gb.split(",")] if gb else [],
+    # exactly one of sql/source_table (read_arrow_dd.cpp:327-335);
+    # source_table wraps as SELECT * (:339-345)
+    if bool(sql) == bool(source_table):
+        raise ValueError(
+            "dd_read_arrow: exactly one of `sql` or `source_table` required"
         )
-
-    def schema(self) -> StructType:
-        """Cheap schema probe: LIMIT 0 wrapper, read only the Arrow schema
-        message (vs the reference's full-result fetch at Bind,
-        read_arrow_dd.cpp:353-378). In split-agg mode the probe wraps
-        the aggregate over the WHOLE base relation — the identical
-        template every split runs over its slice, so one round trip
-        yields the schema shared by all N split partials."""
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        base = self._base_query()
-        agg = self._agg_options()
-        if agg is not None:
-            base = _agg_wrap(base, *agg)
-        probe = f"SELECT * FROM ({base}) AS _subq LIMIT 0"
-        token = self.options.get("auth_token")
-        with _open_stream(
-            _query_url(self._url(), probe, _new_query_id()), token
-        ) as resp:
-            reader = pa.ipc.open_stream(resp)
-            arrow_schema = reader.schema
-        if not arrow_schema.names:  # empty schema is an error (:381-383)
-            raise RuntimeError("dd_read_arrow: server returned empty schema")
-        return from_arrow_schema(arrow_schema)
-
-    def reader(self, schema: StructType) -> "ArrowHttpReader":
-        return ArrowHttpReader(
-            url=self._url(),
-            base_query=self._base_query(),
-            token=self.options.get("auth_token"),
-            split=str(self.options.get("split", "false")).lower() == "true",
-            split_size=int(self.options.get("split_size", 0)) or None,
-            agg=self._agg_options(),
-            expected_names=[f.name for f in schema.fields],
-        )
+    base = sql if sql else f"SELECT * FROM {source_table}"
+    if columns:
+        # the quoted-identifier template the reference emits when DuckDB
+        # prunes (read_arrow_dd.cpp:246-262, :296)
+        quoted = ", ".join(_quote_key(c) for c in columns)
+        base = f"SELECT {quoted} FROM ({base}) AS _subq"
+    return base
 
 
-class ArrowHttpReader(DataSourceReader):
-    def __init__(self, url, base_query, token, split, split_size, agg=None,
-                 expected_names=None):
-        self.url = url
-        self.base_query = base_query
-        self.token = token
-        self.split = split
-        self.split_size = split_size
-        # split-agg mode: (select_list, where, group_keys) — each
-        # partition's query wraps its split in the aggregate template
-        self.agg = agg
-        # declared result column names: Spark binds arrow batches to
-        # the declared schema BY POSITION, so a replica answering with
-        # a different column order (fleet inconsistency — what the
-        # reference's queryChecksum exists to catch) or a stale
-        # `schema=` override would silently SWAP columns; read()
-        # checks each stream's schema against these and fails loudly
-        self.expected_names = expected_names
-        self.where: list[str] = []
-
-    # -- pushdown ----------------------------------------------------
-    def pushFilters(self, filters):  # noqa: N802 (Spark API name)
-        if self.agg is not None:
-            # split-agg mode: this scan yields PARTIAL aggregates that
-            # Spark still has to merge — a filter applied per split
-            # pre-merge would be wrong for any predicate over an
-            # aggregate output, so nothing is consumed here. (The
-            # caller's WHERE travels inside the agg template instead.)
-            yield from filters
-            return
-        for f in filters:
-            frag = filter_to_sql(f)
-            if frag is None:
-                yield f  # stays local (partial pushdown, :234-236)
-            else:
-                self.where.append(frag)
-
-    def _effective_query(self) -> str:
-        if not self.where:
-            return self.base_query
-        conj = " AND ".join(self.where)
-        # same template as the reference's rewritten remote SQL (:296)
-        return f"SELECT * FROM ({self.base_query}) AS _subq WHERE {conj}"
-
-    # -- planning ----------------------------------------------------
-    def partitions(self):
-        if self.agg is not None:
-            return self._agg_partitions()
-        sql = self._effective_query()
-        if not self.split:
-            return [
-                ArrowSplit(
-                    endpoint=self.url, query=sql, query_id=_new_query_id()
-                )
-            ]
-        plan = _fetch_plan(self.url, sql, self.split_size, self.token)
-        return [
-            ArrowSplit(
-                endpoint=(s["endpoints"][0] if s["endpoints"] else self.url),
-                query=s["query"],
-                # fresh id per split (read_arrow_dd.cpp:457-466)
-                query_id=_new_query_id(),
-                producer_id=s["producer_id"],
-                split_size=s["split_size"],
-                query_checksum=s["query_checksum"],
-                value=i,
-                endpoints=tuple(s["endpoints"]) or (self.url,),
-            )
-            for i, s in enumerate(plan)
-        ]
-
-    def _agg_partitions(self):
-        """Split-mode aggregation pushdown: ONE scan relation whose
-        partitions each carry their split's rewritten aggregate SQL —
-        the exact mechanism the plain split scan uses, so the driver
-        plan holds a single source node regardless of split count
-        (1000 splits = 1000 InputPartitions, not 1000 unioned scans).
-
-        The split plan is taken over the FILTERED relation (base +
-        WHERE): a selective predicate shrinks the split count the same
-        way it shrinks the non-agg split path, instead of planning the
-        unfiltered base into many near-empty per-split queries.
-        Re-applying the WHERE inside the agg template per split stays
-        correct because the predicate is idempotent."""
-        select, where, group_by = self.agg
-        filtered = self.base_query
-        if where:
-            filtered = f"SELECT * FROM ({filtered}) AS _subq WHERE {where}"
-        plan = _fetch_plan(self.url, filtered, self.split_size, self.token)
-        return [
-            ArrowSplit(
-                endpoint=(s["endpoints"][0] if s["endpoints"] else self.url),
-                query=_agg_wrap(s["query"], select, where, group_by),
-                query_id=_new_query_id(),
-                producer_id=s["producer_id"],
-                split_size=s["split_size"],
-                query_checksum=s["query_checksum"],
-                value=i,
-                endpoints=tuple(s["endpoints"]) or (self.url,),
-            )
-            for i, s in enumerate(plan)
-        ]
-
-    # -- execution ---------------------------------------------------
-    def read(self, partition: ArrowSplit):
-        """Stream Arrow record batches for one split. Memory stays bounded
-        at one in-flight batch (the reference buffers the whole body —
-        http_stream_factory.cpp:20-25 — which we deliberately do not).
-
-        Cancellation: the query id is tracked in the in-flight registry
-        for the SIGTERM/atexit sweeps (see the cancel-lifecycle block),
-        and an early generator close fires /v1/cancel directly.
-
-        Endpoint failover + load spreading: a split planned by the
-        server may carry several replica endpoints (split_info.hpp:
-        20-37). Split i STARTS at replica i % n — N splits spread
-        evenly across the fleet instead of all hammering replica 0 —
-        and attempts then rotate: a dead or 5xx replica costs one
-        attempt and the next replica is tried immediately (no backoff
-        while untried replicas remain); each attempt uses a FRESH
-        query id and best-effort-cancels the abandoned one on the
-        endpoint that saw it."""
-        import time
-
-        import pyarrow as pa
-
-        _hook_sigterm()
-        eps = [e for e in partition.endpoints if e] or [partition.endpoint]
-        attempts = max(HTTP_RETRIES, len(eps))
-        # retry the OPEN here rather than in _open_stream: each attempt
-        # gets a FRESH query id (re-issuing one id could double-execute
-        # server-side) and the failed attempt's id is cancelled
-        # best-effort in case the server started executing it
-        query_id = partition.query_id
-        start = partition.value % len(eps)  # deterministic, retry-stable
-        endpoint = eps[start]
-        resp = None
-        last: Exception | None = None
-        for attempt in range(attempts):
-            endpoint = eps[(start + attempt) % len(eps)]
-            url = _query_url(endpoint, partition.query, query_id)
-            try:
-                resp = _open_stream(url, self.token, retries=1)
-                break
-            except TransientHTTPError as e:
-                last = e
-                _cancel(endpoint, query_id, self.token, timeout=2.0)
-                query_id = _new_query_id()
-                if attempt + 1 < len(eps):
-                    continue  # untried replica next — fail over now
-                if attempt < attempts - 1:
-                    time.sleep(HTTP_BACKOFF_S * (2 ** (attempt // len(eps))))
-        if resp is None:
-            raise last
-        _inflight_add(query_id, endpoint, self.token)
-        done = False
-        try:
-            tracked = _EosTrackingStream(resp)
-            reader = pa.ipc.open_stream(tracked)
-            if self.expected_names is not None:
-                got = [f.name for f in reader.schema]
-                if [n.lower() for n in got] != [
-                    n.lower() for n in self.expected_names
-                ]:
-                    # positional binding would silently swap columns —
-                    # the queryChecksum class of failure; fail the task
-                    raise RuntimeError(
-                        f"dd_read_arrow: replica {endpoint} returned"
-                        f" schema {got}, expected"
-                        f" {self.expected_names} — inconsistent replica"
-                        " or stale schema= override"
-                    )
-            rows = 0
-            for batch in reader:
-                rows += batch.num_rows
-                yield batch
-            if not tracked.saw_eos_marker:
-                # torn response truncated at a batch boundary — fail
-                # loudly so the task retries instead of yielding a
-                # silently-short split partial
-                raise RuntimeError(
-                    f"dd_read_arrow: stream from {endpoint} (query id"
-                    f" {query_id}) ended without the Arrow EOS marker"
-                    f" after {rows} rows/{tracked.bytes_seen} bytes —"
-                    " truncated split response"
-                )
-            done = True
-        finally:
-            still_inflight = _inflight_pop(query_id) is not None
-            resp.close()
-            if not done and still_inflight:
-                # task killed/errored mid-stream -> best-effort cancel
-                _cancel(endpoint, query_id, self.token)
-
-
-# ------------------------------------------------------------ helpers
-
-
-def register(spark) -> None:
-    spark.dataSource.register(ArrowHttpDataSource)
+def _reader(spark, url: str, query: str, auth_token, split, split_size):
+    if not url:
+        raise ValueError("dd_read_arrow: `url` is required")
+    register(spark)
+    r = (
+        spark.read.format("dd_arrow_dsv2")
+        .option("url", url)
+        .option("query", query)
+    )
+    if auth_token:
+        r = r.option("token", auth_token)
+    if split:
+        r = r.option("split", "true")
+    if split_size:
+        r = r.option("split_size", str(split_size))
+    return r
 
 
 def dd_read_arrow(
@@ -774,108 +137,35 @@ def dd_read_arrow(
     """DataFrame builder mirroring the table-function signature
     (read_arrow_dd.cpp:880-891).
 
-    `select` (alias: `columns`) pushes an explicit projection to the
-    server, mirroring the reference's transparent column pruning
-    (read_arrow_dd.cpp:246-262): the remote SELECT list carries only the
-    named columns, so the wire payload shrinks with the projection. The
-    Python DataSource API (Spark 4.1) exposes no column-pruning hook, so
-    downstream ``.select(...)`` cannot derive this automatically — a
-    narrow query over a wide remote table should always pass `select`.
+    Downstream ``.select``/``.filter``/``.agg`` push into the remote SQL
+    on their own. `select` (alias: `columns`) still fixes the remote
+    SELECT list explicitly — the frame then has exactly those columns.
 
-    `schema` (a StructType) skips the LIMIT-0 probe entirely — used when
-    the caller already knows the result schema (e.g. the split-mode
-    aggregation builder probes once and reuses it for every split).
+    `schema` (a StructType) skips the LIMIT-0 probe. The reader asks the
+    server for every declared column BY NAME, so a stale override in
+    another column order still reads correct values.
     """
     if columns and select:
         raise ValueError("dd_read_arrow: pass `select` or `columns`, not both")
-    columns = select or columns
-    r = spark.read.format("dd_read_arrow").option("url", url)
+    r = _reader(
+        spark, url, _base_query(sql, source_table, select or columns),
+        auth_token, split, split_size,
+    )
     if schema is not None:
         r = r.schema(schema)
-    if sql is not None:
-        r = r.option("sql", sql)
-    if source_table is not None:
-        r = r.option("source_table", source_table)
-    if auth_token is not None:
-        r = r.option("auth_token", auth_token)
-    if split:
-        r = r.option("split", "true")
-    if split_size is not None:
-        r = r.option("split_size", str(split_size))
-    if columns:
-        r = r.option("columns", ",".join(columns))
     return r.load()
 
 
-def dd_read_arrow_narrow(
-    spark,
-    url: str,
-    plan_fn,
-    **options,
-):
-    """Automatic projection pruning for the remote source: the caller
-    writes a plain downstream query and the helper derives the pruned
-    server-side SELECT — no hand-maintained `columns=` list.
+def dd_read_arrow_narrow(spark, url: str, plan_fn, **options):
+    """``plan_fn(dd_read_arrow(spark, url, **options))``.
 
-    The reference prunes transparently inside DuckDB's optimizer
-    (read_arrow_dd.cpp:246-262,296); Spark 4.1's Python DataSource API
-    exposes no column-pruning hook (DataSourceReader has only
-    partitions/pushFilters/read, and the physical BatchScan over a
-    Python source keeps the full ReadSchema — verified empirically), so
-    this helper recovers the same wire saving one level up:
-
-    1. build the wide remote DataFrame and apply ``plan_fn`` to it;
-    2. collect, from Catalyst's *optimized* logical plan, every scan
-       column any downstream operator references (optimized, so columns
-       a later select/drop discards are already gone);
-    3. rebuild the source with ``select=<referenced columns>`` — the
-       remote SELECT list shrinks, so the wire payload does — and
-       re-apply ``plan_fn``.
-
-    ``plan_fn`` must be a pure DataFrame -> DataFrame function (it runs
-    twice). Costs one extra LIMIT-0 schema probe for the rebuilt
-    source; nothing is executed. Falls back to the unpruned plan when
-    every column is referenced — silently, since nothing was lost — or
-    when the JVM plan is unreachable (e.g. Spark Connect), LOUDLY via
-    ``warnings.warn``: a Connect caller would otherwise believe the
-    projection was pushed while full-width rows cross the wire; they
-    should pass ``select=`` explicitly there."""
-    if options.get("select") or options.get("columns"):
-        # caller already prunes by hand — nothing to derive
-        return plan_fn(dd_read_arrow(spark, url, **options))
-    wide = dd_read_arrow(spark, url, **options)
-    downstream = plan_fn(wide)
-    try:
-        plan = downstream._jdf.queryExecution().optimizedPlan()
-        needed: set[str] = set()
-
-        def walk(node) -> None:
-            if "DataSourceV2ScanRelation" not in node.nodeName():
-                refs = node.references().toSeq()
-                for i in range(refs.size()):
-                    needed.add(refs.apply(i).name())
-            ch = node.children()
-            for i in range(ch.size()):
-                walk(ch.apply(i))
-
-        walk(plan)
-    except Exception as e:
-        import warnings
-
-        warnings.warn(
-            "dd_read_arrow_narrow: cannot reach the optimized plan "
-            f"({type(e).__name__}: {e}) — likely Spark Connect, where "
-            "_jdf is unavailable. Serving the UNPRUNED remote scan; "
-            "pass select=[...] to dd_read_arrow to prune the wire "
-            "payload explicitly.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return downstream  # no py4j plan access — serve unpruned
-    pruned = [c for c in wide.columns if c in needed]
-    if not pruned or len(pruned) == len(wide.columns):
-        return downstream
-    return plan_fn(dd_read_arrow(spark, url, select=pruned, **options))
+    The reference prunes remote columns transparently inside DuckDB's
+    optimizer (read_arrow_dd.cpp:246-262,296); the DSv2 reader does the
+    same through Catalyst's column pruning, so the remote SELECT list of
+    the returned plan already names only the columns ``plan_fn`` reads.
+    Kept so callers written against the explicit spelling keep working.
+    """
+    return plan_fn(dd_read_arrow(spark, url, **options))
 
 
 _SPLIT_SAFE_FNS = ("count", "sum", "min", "max")  # IsSplitSafe set
@@ -981,10 +271,11 @@ def dd_read_arrow_agg(
     The reference rewrites a host-side aggregate over a remote scan into
     ``SELECT <aggs> FROM (<orig>) AS _subq [WHERE ..] [GROUP BY ..]``
     transparently (src/optimizer/aggregation_pushdown.cpp:247-418); the
-    Python DataSource API has no aggregate hook, so this helper emits
-    the same rewrite explicitly. A plain ``dd_read_arrow(...).agg(...)``
-    still works but ships raw rows — at scale, always use this for
-    remote aggregation.
+    reader's ``agg_select``/``agg_where``/``agg_group_by`` options carry
+    that template (``AggTemplate`` in scala/DdArrowShim.scala). A
+    plain ``dd_read_arrow(...).agg(...)`` gets the same pushdown from
+    the DSv2 reader when Spark can translate the aggregate; this builder
+    sends server-dialect aggregate SQL as written.
 
     `aggs` maps output alias -> SQL aggregate expression (server
     dialect), e.g. ``{"n": "count(*)", "sum_qty": "sum(l_quantity)"}``.
@@ -998,49 +289,35 @@ def dd_read_arrow_agg(
     itself distributes across the server fleet instead of running in
     one stream. The partials arrive through ONE scan relation whose
     InputPartitions each carry their split's rewritten aggregate SQL
-    (the same mechanism the plain split scan uses), so the driver-side
+    (splits planned over base + WHERE), so the driver-side
     plan is O(1) in split count — a 1000-split fleet costs 1000 tasks,
     not a 1000-ary union of scan nodes. Only split-safe aggregates are
     accepted; ``avg`` and ``DISTINCT`` (and any compound expression)
     raise, directing the caller to ``split=False`` (the reference's
     fallback contract, expressed explicitly).
     """
-    if bool(sql) == bool(source_table):
-        raise ValueError(
-            "dd_read_arrow_agg: exactly one of `sql` or `source_table`"
-        )
     if not aggs:
         raise ValueError("dd_read_arrow_agg: `aggs` must not be empty")
-    base = sql if sql else f"SELECT * FROM {source_table}"
+    base = _base_query(sql, source_table, None)
     keys = list(group_by or [])
     select = ", ".join(
         [_quote_key(k) for k in keys]
         + [f"{expr} AS {alias}" for alias, expr in aggs.items()]
     )
 
-    if not split:
-        return dd_read_arrow(
-            spark, url, sql=_agg_wrap(base, select, where, keys),
-            auth_token=auth_token,
-        )
-
-    merges = {a: _split_safe_merge(a, e) for a, e in aggs.items()}
-    r = (
-        spark.read.format("dd_read_arrow")
-        .option("url", url)
-        .option("sql", base)
-        .option("split", "true")
-        .option("agg_select", select)
+    merges = (
+        {a: _split_safe_merge(a, e) for a, e in aggs.items()} if split else {}
+    )
+    r = _reader(spark, url, base, auth_token, split, split_size).option(
+        "agg_select", select
     )
     if where:
         r = r.option("agg_where", where)
     if keys:
         r = r.option("agg_group_by", ",".join(keys))
-    if auth_token:
-        r = r.option("auth_token", auth_token)
-    if split_size:
-        r = r.option("split_size", str(split_size))
     partials = r.load()
+    if not split:
+        return partials  # the server computed the final aggregate
     grouped = partials.groupBy(*keys) if keys else partials.groupBy()
     return grouped.agg(
         *[m(alias).alias(alias) for alias, m in merges.items()]
@@ -1057,26 +334,41 @@ def dd_splits(
     split_size: int | None = None,
 ):
     """Split introspection: one row per split the server would plan
-    (dd_splits.cpp:74-91 column contract)."""
+    (dd_splits.cpp:74-91 column contract). The plan is fetched by the
+    JVM reader's client (same retry) and returned as a local relation
+    built from a pyarrow table, so collecting it starts no Python
+    worker."""
+    import pyarrow as pa
+
     if bool(sql) == bool(source_table):
         raise ValueError("dd_splits: exactly one of `sql` or `source_table`")
-    q = sql if sql else f"SELECT * FROM {source_table}"
-    plan = _fetch_plan(url, q, split_size, auth_token)
-    rows = [
-        (
-            s["endpoints"],
-            s["query_id"],
-            s["query"],
-            s["producer_id"],
-            s["split_size"],
-            s["query_checksum"],
-        )
-        for s in plan
-    ]
-    return spark.createDataFrame(
-        rows,
-        schema=(
-            "endpoints ARRAY<STRING>, query_id BIGINT, query STRING,"
-            " producer_id STRING, split_size BIGINT, query_checksum STRING"
-        ),
+    register(spark)
+    wire = spark._jvm.org.apache.spark.sql.dazzleduck.DdWire
+    plan = json.loads(
+        wire.planJson(url, sql or f"SELECT * FROM {source_table}",
+                      split_size or 0, auth_token or "")
     )
+    if not plan:  # 0 splits is a plan error (read_arrow_dd.cpp:453-455)
+        raise RuntimeError("dd_splits: server returned no splits")
+    handles = [e.get("descriptor", {}).get("statementHandle", {}) for e in plan]
+    table = pa.table(
+        {
+            "endpoints": pa.array(
+                [e.get("endpoints", []) for e in plan], pa.list_(pa.string())
+            ),
+            "query_id": pa.array(
+                [int(h.get("queryId", 0)) for h in handles], pa.int64()
+            ),
+            "query": pa.array([h.get("query", "") for h in handles], pa.string()),
+            "producer_id": pa.array(
+                [str(h.get("producerId", "")) for h in handles], pa.string()
+            ),
+            "split_size": pa.array(
+                [int(h.get("splitSize", 0)) for h in handles], pa.int64()
+            ),
+            "query_checksum": pa.array(
+                [str(h.get("queryChecksum", "")) for h in handles], pa.string()
+            ),
+        }
+    )
+    return spark.createDataFrame(table)

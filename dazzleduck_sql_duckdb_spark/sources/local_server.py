@@ -14,11 +14,11 @@ src/scalar_function/dd_login.cpp), so `dd_read_arrow` / `dd_splits` /
 - ``GET /v1/cancel?id=<qid>`` -> records the cancellation
 
 Cancellation is recorded into ``server.cancelled`` from BOTH channels a
-real fleet needs: the explicit /v1/cancel endpoint (fired by the client
-on generator close / SIGTERM / atexit), and a mid-stream connection
-drop (the only signal a SIGKILLed Spark worker can emit — the pyspark
-daemon kills interrupted task workers with SIGKILL, so the TCP close is
-the cancellation; the connection is the query lease).
+real fleet needs: the explicit /v1/cancel endpoint (fired by the reader
+on mid-stream close and by its JVM shutdown sweep), and a mid-stream
+connection drop (the only signal a process that dies without running its
+teardown can emit, so the TCP close is the cancellation; the connection
+is the query lease).
 
 Test/demo use only — the point of the engine is that Spark executors
 fetch from *real* fleets of such servers; this one simply speaks the
@@ -144,6 +144,9 @@ class _Handler(BaseHTTPRequestHandler):
     def do_GET(self):  # noqa: N802
         parsed = urllib.parse.urlparse(self.path)
         qs = urllib.parse.parse_qs(parsed.query)
+        self.server.requests.append(parsed.path)
+        if parsed.path in ("/v1/query", "/v1/plan") and self._inject_failure():
+            return None
         if parsed.path == "/v1/query":
             return self._handle_query(qs)
         if parsed.path == "/v1/plan":
@@ -153,6 +156,14 @@ class _Handler(BaseHTTPRequestHandler):
             self.server.cancelled.append(int(qid))
             return self._deny(200, "cancelled")
         return self._deny(404, "not found")
+
+    def _inject_failure(self) -> bool:
+        with self.server._fail_lock:
+            if self.server.fail_first <= 0:
+                return False
+            self.server.fail_first -= 1
+        self._deny(self.server.fail_status, "injected failure")
+        return True
 
     def _handle_query(self, qs) -> None:
         if not self._authed():
@@ -261,10 +272,9 @@ class _Handler(BaseHTTPRequestHandler):
             self.wfile.write(b"0\r\n\r\n")
         except (BrokenPipeError, ConnectionResetError):
             # Wire-level cancellation: the client connection dropped
-            # mid-stream, which is how a SIGKILLed Spark worker (pyspark
-            # daemon kills interrupted tasks with SIGKILL — no Python
-            # hook can run) signals abandonment. The connection IS the
-            # query lease; treat the drop as a cancel of this query id.
+            # mid-stream, which is how a killed client process (no
+            # teardown hook can run) signals abandonment. The connection
+            # IS the query lease; treat the drop as a cancel of this id.
             self.server.cancelled.append(query_id)
             self.close_connection = True
 
@@ -390,6 +400,8 @@ class ArrowTestServer(ThreadingHTTPServer):
         compression: str | None = None,
         extra_endpoints: list[str] | None = None,
         truncate_after_batches: int | None = None,
+        fail_first: int = 0,
+        fail_status: int = 503,
     ):
         super().__init__(("127.0.0.1", port), _Handler)
         self.tables = dict(tables)
@@ -407,6 +419,15 @@ class ArrowTestServer(ThreadingHTTPServer):
         # endpoints[] — lets tests plant dead/unreachable replicas to
         # exercise client-side failover
         self.extra_endpoints = list(extra_endpoints or [])
+        # fault injection: answer the next N /v1/query or /v1/plan
+        # requests with `fail_status` before running anything (503: a
+        # transient failure clients retry; 4xx: one they must not).
+        # Tests may re-arm it between phases.
+        self.fail_first = fail_first
+        self.fail_status = fail_status
+        self._fail_lock = threading.Lock()
+        # path of every GET, injected failures included
+        self.requests: list[str] = []
         self.queries: list[str] = []
         self.cancelled: list[int] = []
         self._thread: threading.Thread | None = None

@@ -1,26 +1,29 @@
 /*
- * DSv2 shim for the dazzleduck Arrow-over-HTTP wire protocol.
+ * DSv2 reader for the dazzleduck Arrow-over-HTTP wire protocol — the
+ * engine's only remote reader. `sources.dd_read_arrow`,
+ * `dd_read_arrow_agg` and `dd_read_arrow_narrow` build their frames on
+ * it; `format("dd_arrow_dsv2")` reaches it directly.
  *
- * Closes the two "inherent to pure PySpark" gaps (OPERATORS.md memo):
- * the Python DataSource API (pyspark.sql.datasource) exposes
- * pushFilters (4.1+) but has NO hook for required-column pruning or
- * aggregate pushdown, so a plain .select()/.agg() over dd_read_arrow
- * ships wide/raw rows unless the caller uses the explicit
- * dd_read_arrow_narrow / dd_read_arrow_agg spellings. This ~350-line
- * Scala class implements SupportsPushDownRequiredColumns,
- * SupportsPushDownFilters and SupportsPushDownAggregates, delegating
- * all heavy lifting to the SAME server-side SQL rewrite contract the
- * Python source uses (reference behavior:
- * src/scanner/read_arrow_dd.cpp:246-296 for projection,
- * src/optimizer/aggregation_pushdown.cpp:247-418 for aggregation).
+ * Implements SupportsPushDownRequiredColumns, SupportsPushDownFilters
+ * and SupportsPushDownAggregates, so a plain .select()/.filter()/.agg()
+ * prunes, filters and aggregates server-side through the reference's
+ * SQL rewrite templates (src/scanner/read_arrow_dd.cpp:246-296 for
+ * projection, src/optimizer/aggregation_pushdown.cpp:247-418 for
+ * aggregation). The `agg_select`/`agg_where`/`agg_group_by` options
+ * carry a server-dialect aggregate instead (dd_read_arrow_agg): in
+ * split mode every split runs it over its slice and Spark merges the
+ * partials above the scan.
+ *
+ * Schema probe, split planning and reads all run in the JVM: no Python
+ * worker starts for a remote scan.
  *
  * Packaged under org.apache.spark.sql.* deliberately: the shim reuses
  * Spark's private[sql] ArrowUtils for Arrow->Catalyst schema
  * conversion instead of duplicating the type table.
  *
  * Build: tools/build_shim.sh (bundled scalac, no network). Load:
- * spark.jars=<repo>/dazzleduck_sql_duckdb_spark/jars/dd_arrow_shim.jar
- * then spark.read.format("dd_arrow_dsv2").option("url", ...).
+ * `sources.register(spark)` (runtime ADD JAR), then
+ * spark.read.format("dd_arrow_dsv2").option("url", ...).
  */
 package org.apache.spark.sql.dazzleduck
 
@@ -44,11 +47,32 @@ import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnarBatch, Column
 // ----------------------------------------------------------- wire client
 
 object DdWire {
+  /** Attempts per request on a transient failure (HTTP 5xx or a failed
+   *  connection). 4xx is a client error and never retried — the
+   *  reference's InvalidInput vs IOException split,
+   *  arrow_http_client.cpp:82-89. */
+  val HttpRetries = 3
+  /** Backoff before retry k (0-based) is HttpBackoffMs * 2^k. */
+  val HttpBackoffMs = 200L
+
+  class TransientHttpException(msg: String, cause: Throwable = null)
+    extends java.io.IOException(msg, cause)
+
+  /** Random positive int63 (read_arrow_dd.cpp:347-351 uses a random
+   *  int64 per query). */
+  def newQueryId(): Long =
+    java.util.concurrent.ThreadLocalRandom.current().nextLong(1L, 1L << 62)
+
   def queryUrl(base: String, sql: String, qid: Long): String =
     base.stripSuffix("/") + "/v1/query?q=" +
       URLEncoder.encode(sql, "UTF-8") + "&id=" + qid
 
-  def open(url: String, token: String): InputStream = {
+  /** One GET. 200 -> the body; 5xx or a failed connection ->
+   *  TransientHttpException; any other status -> RuntimeException. */
+  def open(
+      url: String,
+      token: String,
+      headers: Map[String, String] = Map.empty): InputStream = {
     val conn =
       new URL(url).openConnection().asInstanceOf[HttpURLConnection]
     conn.setRequestMethod("GET")
@@ -57,36 +81,86 @@ object DdWire {
     if (token != null && token.nonEmpty) {
       conn.setRequestProperty("Authorization", "Bearer " + token)
     }
-    val code = conn.getResponseCode
-    if (code != 200) {
-      val err = conn.getErrorStream
-      val msg =
-        if (err == null) "" else new String(err.readAllBytes(), "UTF-8")
-      throw new RuntimeException(
-        s"dd_arrow_dsv2: HTTP $code from $url: $msg")
+    headers.foreach { case (k, v) => conn.setRequestProperty(k, v) }
+    val code =
+      try conn.getResponseCode
+      catch {
+        case e: java.io.IOException =>
+          throw new TransientHttpException(
+            s"dd_arrow_dsv2: connection to $url failed: $e", e)
+      }
+    if (code == 200) return conn.getInputStream
+    val err = conn.getErrorStream
+    val msg =
+      if (err == null) "" else new String(err.readAllBytes(), "UTF-8")
+    val text = s"dd_arrow_dsv2: HTTP $code from $url: $msg"
+    if (code >= 500) throw new TransientHttpException(text)
+    throw new RuntimeException(text)
+  }
+
+  def backoff(retry: Int): Unit = Thread.sleep(HttpBackoffMs << retry)
+
+  /** Idempotent requests (/v1/plan, the LIMIT-0 probe) retry the same
+   *  URL. /v1/query data opens retry in DdColumnarReader instead, with
+   *  a fresh query id per attempt. */
+  def withRetry[T](body: => T): T = {
+    var retry = 0
+    while (true) {
+      try return body
+      catch {
+        case _: TransientHttpException if retry + 1 < HttpRetries =>
+          backoff(retry)
+          retry += 1
+      }
     }
-    conn.getInputStream
+    throw new IllegalStateException("unreachable")
   }
 
   /** Best-effort GET /v1/cancel (cancel_monitor.cpp semantics:
    *  failures are swallowed — the connection drop is the backstop
-   *  lease-based cancel channel). */
-  def cancelQuiet(base: String, qid: Long, token: String): Unit = try {
-    val conn = new URL(base.stripSuffix("/") + "/v1/cancel?id=" + qid)
-      .openConnection().asInstanceOf[HttpURLConnection]
-    conn.setRequestMethod("GET")
-    conn.setConnectTimeout(2000)
-    conn.setReadTimeout(2000)
-    if (token != null && token.nonEmpty) {
-      conn.setRequestProperty("Authorization", "Bearer " + token)
+   *  lease-based cancel channel). A killed task reaches this with its
+   *  thread's interrupt flag set, which makes the request fail at once,
+   *  so the flag is cleared for the request and restored after. */
+  def cancelQuiet(base: String, qid: Long, token: String): Unit = {
+    val interrupted = Thread.interrupted()
+    try {
+      val conn = new URL(base.stripSuffix("/") + "/v1/cancel?id=" + qid)
+        .openConnection().asInstanceOf[HttpURLConnection]
+      conn.setRequestMethod("GET")
+      conn.setConnectTimeout(2000)
+      conn.setReadTimeout(2000)
+      if (token != null && token.nonEmpty) {
+        conn.setRequestProperty("Authorization", "Bearer " + token)
+      }
+      conn.getResponseCode
+      conn.disconnect()
+    } catch {
+      case _: Exception => ()
+    } finally {
+      if (interrupted) Thread.currentThread().interrupt()
     }
-    conn.getResponseCode
-    conn.disconnect()
-  } catch { case _: Exception => () }
+  }
 
-  /** GET /v1/plan — split planning over `sql` (the PRUNED+FILTERED
-   *  relation, so a selective pushdown shrinks the split count the
-   *  same way it does on the Python source). Returns (endpoints,
+  /** The raw JSON body of GET /v1/plan (arrow_http_client.cpp:108-167:
+   *  q param + x-dd-split-size header). dd_splits reads it through
+   *  py4j, so split introspection and scans share one HTTP client. */
+  def planJson(
+      base: String,
+      sql: String,
+      splitSize: Long,
+      token: String): String = {
+    val url = base.stripSuffix("/") + "/v1/plan?q=" +
+      URLEncoder.encode(sql, "UTF-8")
+    val headers = Map("Accept" -> "application/json") ++
+      (if (splitSize > 0) Map("x-dd-split-size" -> splitSize.toString)
+       else Map.empty)
+    withRetry {
+      val in = open(url, token, headers)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+  }
+
+  /** Split planning over `sql`. Returns (endpoints,
    *  splitQuery) pairs carrying EVERY advertised replica endpoint
    *  (split_info.hpp:20-37); the reader load-spreads starts i %% n
    *  and rotates through the rest on failure. */
@@ -95,25 +169,8 @@ object DdWire {
       sql: String,
       splitSize: Long,
       token: String): Array[(Array[String], String)] = {
-    val url = base.stripSuffix("/") + "/v1/plan?q=" +
-      URLEncoder.encode(sql, "UTF-8")
-    val conn =
-      new URL(url).openConnection().asInstanceOf[HttpURLConnection]
-    conn.setRequestMethod("GET")
-    conn.setRequestProperty("Accept", "application/json")
-    if (splitSize > 0) {
-      conn.setRequestProperty("x-dd-split-size", splitSize.toString)
-    }
-    if (token != null && token.nonEmpty) {
-      conn.setRequestProperty("Authorization", "Bearer " + token)
-    }
-    if (conn.getResponseCode != 200) {
-      throw new RuntimeException(
-        s"dd_arrow_dsv2: plan HTTP ${conn.getResponseCode} from $url")
-    }
-    val body = conn.getInputStream.readAllBytes()
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(body)
+    val root = mapper.readTree(planJson(base, sql, splitSize, token))
     val out = scala.collection.mutable.ArrayBuffer[(Array[String], String)]()
     root.forEach { entry =>
       val q = entry.path("descriptor").path("statementHandle")
@@ -125,26 +182,33 @@ object DdWire {
         } else Array(base)
       out += ((arr, q))
     }
-    if (out.isEmpty) {
+    if (out.isEmpty) { // 0 splits is a plan error (read_arrow_dd.cpp:453-455)
       throw new RuntimeException("dd_arrow_dsv2: server returned no splits")
     }
     out.toArray
   }
 
-  /** Arrow schema of `sql` via a LIMIT-0 probe (the reference's own
-   *  schema-discovery pattern). */
+  /** Arrow schema of `sql` via a LIMIT-0 probe: only the schema message
+   *  crosses the wire (the reference fetches the whole result at Bind,
+   *  read_arrow_dd.cpp:353-378). */
   def probeSchema(base: String, sql: String, token: String): StructType = {
-    val alloc = new RootAllocator(Long.MaxValue)
-    val in = open(queryUrl(base, s"SELECT * FROM ($sql) __dd_p LIMIT 0",
-      System.nanoTime()), token)
-    try {
-      val reader = new ArrowStreamReader(in, alloc)
-      try ArrowUtils.fromArrowSchema(reader.getVectorSchemaRoot.getSchema)
-      finally reader.close()
-    } finally {
-      in.close()
-      alloc.close()
+    val schema = withRetry {
+      val in = open(queryUrl(base, s"SELECT * FROM ($sql) __dd_p LIMIT 0",
+        newQueryId()), token)
+      val alloc = new RootAllocator(Long.MaxValue)
+      try {
+        val reader = new ArrowStreamReader(in, alloc)
+        try ArrowUtils.fromArrowSchema(reader.getVectorSchemaRoot.getSchema)
+        finally reader.close()
+      } finally {
+        in.close()
+        alloc.close()
+      }
     }
+    if (schema.fields.isEmpty) { // an error in the reference (:381-383)
+      throw new RuntimeException("dd_arrow_dsv2: server returned empty schema")
+    }
+    schema
   }
 
   def quoteIdent(name: String): String = "\"" + name.replace("\"", "\"\"") + "\""
@@ -174,8 +238,9 @@ object DdWire {
   }
 
   /** v1 Filter -> server SQL predicate; None = not pushable (stays a
-   *  post-scan filter — the partial-pushdown contract). Mirrors
-   *  sources/arrow_http.py filter_to_sql. */
+   *  post-scan filter — the partial-pushdown contract of FilterToSQL,
+   *  read_arrow_dd.cpp:198-238, plus IN, LIKE and boolean
+   *  connectives). */
   def filterToSql(f: Filter): Option[String] = f match {
     case EqualTo(a, v) =>
       for (r <- ref(a); l <- sqlLiteral(v)) yield s"$r = $l"
@@ -219,6 +284,40 @@ object DdWire {
   }
 }
 
+/** The reference's aggregation-pushdown rewrite template
+ *  (aggregation_pushdown.cpp:247-418) in server dialect, as
+ *  dd_read_arrow_agg sends it: `select` is the aggregate list (group
+ *  keys first), `where` an optional predicate, `groupBy` the unquoted
+ *  key names. Without splits the server computes the final aggregate;
+ *  with splits each split computes a partial. */
+case class AggTemplate(select: String, where: String, groupBy: Seq[String]) {
+  private def whereClause: String =
+    if (where == null || where.isEmpty) "" else s" WHERE $where"
+
+  def wrap(rel: String): String = {
+    val gb =
+      if (groupBy.isEmpty) ""
+      else " GROUP BY " + groupBy.map(DdWire.quoteIdent).mkString(", ")
+    s"SELECT $select FROM ($rel) AS _subq$whereClause$gb"
+  }
+
+  /** The relation splits are planned over: base + WHERE, so a selective
+   *  predicate shrinks the split count. wrap() re-applies the WHERE per
+   *  split, which is idempotent. */
+  def filtered(base: String): String =
+    if (whereClause.isEmpty) base
+    else s"SELECT * FROM ($base) AS _subq$whereClause"
+}
+
+object AggTemplate {
+  def fromOptions(opts: CaseInsensitiveStringMap): Option[AggTemplate] =
+    Option(opts.get("agg_select")).filter(_.nonEmpty).map { sel =>
+      val keys = Option(opts.get("agg_group_by")).filter(_.nonEmpty)
+        .map(_.split(",").map(_.trim).toSeq).getOrElse(Seq.empty)
+      AggTemplate(sel, opts.get("agg_where"), keys)
+    }
+}
+
 // ------------------------------------------------------------ provider
 
 class DdArrowDataSource extends TableProvider
@@ -234,9 +333,14 @@ class DdArrowDataSource extends TableProvider
       "dd_arrow_dsv2 needs option 'query' or 'path'")
   }
 
-  override def inferSchema(opts: CaseInsensitiveStringMap): StructType =
-    DdWire.probeSchema(
-      opts.get("url"), baseQuery(opts), opts.getOrDefault("token", ""))
+  // With an aggregate template the probe wraps the WHOLE base relation
+  // in it: one round trip yields the schema every split partial shares.
+  override def inferSchema(opts: CaseInsensitiveStringMap): StructType = {
+    val base = baseQuery(opts)
+    DdWire.probeSchema(opts.get("url"),
+      AggTemplate.fromOptions(opts).fold(base)(_.wrap(base)),
+      opts.getOrDefault("token", ""))
+  }
 
   override def getTable(
       schema: StructType,
@@ -246,7 +350,8 @@ class DdArrowDataSource extends TableProvider
     new DdTable(schema, opts.get("url"), baseQuery(opts),
       opts.getOrDefault("token", ""),
       opts.getBoolean("split", false),
-      opts.getLong("split_size", 0L))
+      opts.getLong("split_size", 0L),
+      AggTemplate.fromOptions(opts))
   }
 
   override def supportsExternalMetadata(): Boolean = true
@@ -258,14 +363,16 @@ class DdTable(
     base: String,
     token: String,
     split: Boolean,
-    splitSize: Long) extends Table with SupportsRead {
+    splitSize: Long,
+    template: Option[AggTemplate]) extends Table with SupportsRead {
   override def name(): String = s"dd_arrow($base)"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(
       opts: CaseInsensitiveStringMap): ScanBuilder =
-    new DdScanBuilder(tableSchema, url, base, token, split, splitSize)
+    new DdScanBuilder(tableSchema, url, base, token, split, splitSize,
+      template)
 }
 
 // --------------------------------------------------------- scan builder
@@ -276,7 +383,8 @@ class DdScanBuilder(
     base: String,
     token: String,
     split: Boolean,
-    splitSize: Long)
+    splitSize: Long,
+    template: Option[AggTemplate])
   extends ScanBuilder
   with SupportsPushDownRequiredColumns
   with SupportsPushDownFilters
@@ -291,8 +399,12 @@ class DdScanBuilder(
   private var aggInputCols: Seq[String] = Seq.empty
 
   // ---- filters (partial-pushdown contract: unsupported filters are
-  // returned and re-evaluated by Spark above the scan)
+  // returned and re-evaluated by Spark above the scan). Under an
+  // aggregate template the scan yields aggregate rows — in split mode,
+  // partials Spark still has to merge — so nothing is consumed; the
+  // template carries its own WHERE.
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    if (template.isDefined) return filters
     val (ok, rest) =
       filters.partition(f => DdWire.filterToSql(f).isDefined)
     pushed = ok
@@ -302,8 +414,9 @@ class DdScanBuilder(
   override def pushedFilters(): Array[Filter] = pushed
 
   // ---- projection
+  // (an aggregate template's output stays whole: it is a few rows)
   override def pruneColumns(requiredSchema: StructType): Unit = {
-    required = requiredSchema
+    if (template.isEmpty) required = requiredSchema
   }
 
   // ---- aggregation (complete pushdown only: the server computes the
@@ -405,7 +518,7 @@ class DdScanBuilder(
   // and Spark merges the partials, the reference's split-mode
   // pushdown (aggregation_pushdown.cpp IsSplitSafe contract).
   override def supportCompletePushDown(agg: Aggregation): Boolean =
-    !split && translatable(agg)
+    !split && template.isEmpty && translatable(agg)
 
   private def translatable(agg: Aggregation): Boolean = {
     agg.groupByExpressions().forall(e => col(e).isDefined) &&
@@ -426,7 +539,7 @@ class DdScanBuilder(
     }
 
   override def pushAggregation(agg: Aggregation): Boolean = {
-    if (!translatable(agg)) return false
+    if (template.isDefined || !translatable(agg)) return false
     if (split && !splitSafe(agg)) return false
     val gb = agg.groupByExpressions().toSeq.flatMap(col)
     val gbFields = agg.groupByExpressions().toSeq.flatMap(fieldOf)
@@ -479,7 +592,16 @@ class DdScanBuilder(
     }
   }
 
-  override def build(): Scan = {
+  override def build(): Scan = template match {
+    case Some(t) =>
+      new DdScan(fullSchema, url, t.wrap(base), token, pushed,
+        aggPushed = false, emptyProjection = false,
+        split = split, splitSize = splitSize,
+        splitPlanSql = t.filtered(base), wrapSplit = t.wrap)
+    case None => buildPushed()
+  }
+
+  private def buildPushed(): Scan = {
     val schema = aggSchema.getOrElse(required)
     // Split planning runs over the PRUNED+FILTERED base relation;
     // with a (partial) aggregate pushed, each split's rewritten slice
@@ -499,13 +621,16 @@ class DdScanBuilder(
     val gbClause =
       if (aggGroupBy.isEmpty) ""
       else " GROUP BY " + aggGroupBy.mkString(", ")
-    val splitAggWrap = aggSelect.map(sel =>
-      (s"SELECT ${sel.mkString(", ")} FROM (", s") __dd_s$gbClause"))
+    val wrapSplit: String => String = aggSelect match {
+      case Some(sel) =>
+        q => s"SELECT ${sel.mkString(", ")} FROM ($q) __dd_s$gbClause"
+      case None => identity
+    }
     new DdScan(schema, url, buildSql(), token, pushed,
       aggSelect.isDefined, emptyProjection = required.fields.isEmpty
         && aggSelect.isEmpty,
       split = split, splitSize = splitSize,
-      splitPlanSql = splitPlanSql, splitAggWrap = splitAggWrap)
+      splitPlanSql = splitPlanSql, wrapSplit = wrapSplit)
   }
 }
 
@@ -522,7 +647,7 @@ class DdScan(
     split: Boolean = false,
     splitSize: Long = 0L,
     splitPlanSql: String = "",
-    splitAggWrap: Option[(String, String)] = None) extends Scan with Batch {
+    wrapSplit: String => String = identity) extends Scan with Batch {
 
   override def readSchema(): StructType = outSchema
   override def toBatch: Batch = this
@@ -532,17 +657,12 @@ class DdScan(
 
   override def planInputPartitions(): Array[InputPartition] =
     if (split) {
-      // plan over the PRUNED+FILTERED base relation: each split is
-      // the server's rewritten slice of it; with an aggregate pushed,
-      // wrap each slice with the agg template so the server computes
-      // per-split partials (Spark plans the final merge above)
+      // each split is the server's rewritten slice of splitPlanSql;
+      // with an aggregate pushed or templated, wrapSplit makes the
+      // server compute the slice's partials (Spark merges above)
       DdWire.fetchPlan(url, splitPlanSql, splitSize, token)
         .zipWithIndex.map { case ((eps, q), i) =>
-          val qq = splitAggWrap match {
-            case Some((pre, post)) => pre + q + post
-            case None => q
-          }
-          DdPartition(eps, qq, i): InputPartition
+          DdPartition(eps, wrapSplit(q), i): InputPartition
         }
     } else {
       Array(DdPartition(Array(url), sql, 0))
@@ -604,13 +724,12 @@ class EosTrackingStream(underlying: InputStream) extends InputStream {
       tail(4) == 0 && tail(5) == 0 && tail(6) == 0 && tail(7) == 0
 }
 
-/** Process-exit cancel sweep — the Python source's third cancel
- *  channel (sources/arrow_http.py SIGTERM/atexit sweep), which the
- *  shim lacked (r7 verdict, "What's missing" #3): task teardown calls
+/** Process-exit cancel sweep — the third cancel channel next to
+ *  close() and the connection drop: task teardown calls
  *  close(), covering kills/limits/errors, but a whole-JVM death
  *  (driver SIGTERM in local mode, executor decommission on a cluster)
- *  never runs close() and leaked the in-flight queries server-side
- *  until timeout. Every open mid-stream reader registers here; a JVM
+ *  never runs close(), which would leave the in-flight queries running
+ *  server-side until timeout. Every open mid-stream reader registers here; a JVM
  *  shutdown hook fires the best-effort GET /v1/cancel for each. The
  *  hook only issues the event-channel cancels (the dying process's
  *  sockets drop on their own — the lease channel); it deliberately
@@ -661,12 +780,16 @@ class DdReaderFactory(token: String, emptyProjection: Boolean,
 /** Streams the Arrow IPC response one batch at a time — bounded
  *  memory regardless of result size (the S4 contract).
  *
- *  Replica failover + load spreading (read_arrow_dd.cpp /
- *  split_info.hpp semantics, matching the Python source): split i
- *  STARTS at replica i %% n and rotates on open failure; each attempt
- *  uses a FRESH query id (re-issuing one id could double-execute
- *  server-side) and best-effort-cancels the abandoned id on the
- *  endpoint that saw it.
+ *  Replica failover + load spreading + bounded retry
+ *  (read_arrow_dd.cpp / split_info.hpp semantics): split i STARTS at
+ *  replica i %% n; a transient open failure (5xx, refused connection)
+ *  moves to the next replica at once, and once every replica has been
+ *  tried, retries back off, up to max(HttpRetries, replicas) attempts.
+ *  Each attempt uses a FRESH query id (re-issuing one id could
+ *  double-execute server-side) and best-effort-cancels the abandoned
+ *  id on the endpoint that saw it. A 4xx fails the task at once.
+ *  Only the OPEN is retried: a stream dying mid-way surfaces to Spark,
+ *  whose task retry re-runs the whole split.
  *
  *  Cancel-on-teardown: a task killed or errored mid-stream closes the
  *  connection (the lease channel) AND fires GET /v1/cancel (the event
@@ -681,26 +804,31 @@ class DdColumnarReader(p: DdPartition, token: String,
   private val in: EosTrackingStream = {
     val eps = if (p.endpoints.nonEmpty) p.endpoints else Array("")
     val start = math.floorMod(p.value, eps.length)
+    val attempts = math.max(DdWire.HttpRetries, eps.length)
     var opened: InputStream = null
-    var last: Exception = null
-    var i = 0
-    while (opened == null && i < eps.length) {
-      endpoint = eps((start + i) % eps.length)
-      queryId = System.nanoTime()
+    var attempt = 0
+    while (opened == null) {
+      endpoint = eps((start + attempt) % eps.length)
+      queryId = DdWire.newQueryId()
       try {
         opened = DdWire.open(
           DdWire.queryUrl(endpoint, p.query, queryId), token)
       } catch {
-        case e: Exception =>
-          last = e
+        case e: DdWire.TransientHttpException =>
           // the failed attempt's server may have started executing
           DdWire.cancelQuiet(endpoint, queryId, token)
-          i += 1
+          attempt += 1
+          if (attempt >= attempts) {
+            alloc.close()
+            throw new RuntimeException(
+              s"dd_arrow_dsv2: $attempts attempt(s) over ${eps.length}" +
+                " replica(s) failed", e)
+          }
+          if (attempt >= eps.length) DdWire.backoff((attempt - 1) / eps.length)
+        case e: Exception =>
+          alloc.close()
+          throw e
       }
-    }
-    if (opened == null) {
-      throw new RuntimeException(
-        s"dd_arrow_dsv2: all ${eps.length} replica(s) failed", last)
     }
     new EosTrackingStream(opened)
   }
@@ -765,11 +893,12 @@ class DdColumnarReader(p: DdPartition, token: String,
 
   override def close(): Unit = {
     DdReaderRegistry.unregister(this)
-    reader.close()
-    in.close()
-    alloc.close()
-    // torn down mid-stream (kill/limit/error): connection drop is
-    // the lease cancel; fire the explicit channel too
+    // torn down mid-stream (kill/limit/error): fire the explicit
+    // cancel first; dropping the connection below is the lease cancel
     cancelInFlight()
+    try reader.close()
+    finally {
+      try in.close() finally alloc.close()
+    }
   }
 }

@@ -1,10 +1,12 @@
-"""End-to-end tests for the dd_read_arrow DataSource against the local
-wire-protocol server (the SURVEY §5 differential pattern: remote scan
-results must equal direct-parquet results, split or not)."""
+"""End-to-end tests for dd_read_arrow (served by the DSv2 reader in
+scala/DdArrowShim.scala) against the local wire-protocol server (the
+SURVEY §5 differential pattern: remote scan results must equal
+direct-parquet results, split or not)."""
 
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,7 +17,6 @@ from dazzleduck_sql_duckdb_spark.sources import (
     dd_splits,
     register,
 )
-from dazzleduck_sql_duckdb_spark.sources.arrow_http import filter_to_sql
 from dazzleduck_sql_duckdb_spark.sources.local_server import ArrowTestServer
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -133,7 +134,7 @@ def test_exactly_one_of_sql_and_table(registered, server):
         ).count()
 
 
-def test_plan_classifies_estimate_free_vs_data_read(server):
+def test_plan_classifies_estimate_free_vs_data_read(registered, server):
     """r11 advice #1: /v1/plan classifies EC-less EXPLAIN plans by
     EXPLICIT operator name, not the 'SCAN' substring. Under DuckDB
     1.0.0 a constant projection renders DUMMY_SCAN (contains 'SCAN',
@@ -143,41 +144,34 @@ def test_plan_classifies_estimate_free_vs_data_read(server):
     silently collapsed to one split, the degradation the hard-fail
     exists to catch. Pin both sides: estimate-free plans get exactly
     one split; a real parquet scan plans from its EC estimate."""
-    from dazzleduck_sql_duckdb_spark.sources.arrow_http import _fetch_plan
+    def _plan(sql):
+        return dd_splits(
+            registered, server.url, sql=sql, split_size=64 * 500
+        ).collect()
 
     # DUMMY_SCAN (constant projection): estimate-free, one split
-    one = _fetch_plan(server.url, "SELECT 1 AS x", 64 * 500, None)
+    one = _plan("SELECT 1 AS x")
     assert len(one) == 1
     # COLUMN_DATA_SCAN (VALUES list): estimate-free, one split
-    vals = _fetch_plan(
-        server.url, "SELECT * FROM (VALUES (1), (2)) t(x)", 64 * 500, None
-    )
+    vals = _plan("SELECT * FROM (VALUES (1), (2)) t(x)")
     assert len(vals) == 1
     # EMPTY_RESULT (optimizer-proved empty): one split
-    empty = _fetch_plan(
-        server.url, "SELECT 1 AS x WHERE 1 = 0", 64 * 500, None
-    )
+    empty = _plan("SELECT 1 AS x WHERE 1 = 0")
     assert len(empty) == 1
     # READ_PARQUET: carries an EC estimate -> sized plan, many splits
-    scan = _fetch_plan(
-        server.url, "SELECT * FROM lineitem", 64 * 500, None
-    )
+    scan = _plan("SELECT * FROM lineitem")
     assert len(scan) > 1
     # r12 advice #1's exact adversarial case: a constant projection
     # whose string LITERAL spells a read operator. The structural
     # parse anchors on box-header lines, so the literal in the
     # projection content cannot trip the data-read hard-fail — one
     # split, not a 400
-    lit = _fetch_plan(
-        server.url, "SELECT 'READ_PARQUET' AS s", 64 * 500, None
-    )
+    lit = _plan("SELECT 'READ_PARQUET' AS s")
     assert len(lit) == 1
     # constant UNION ALL: the UNION header closes with '├' and the two
     # DUMMY_SCAN children render side by side — the r13 structural
     # parse must see all of them and still classify estimate-free
-    un = _fetch_plan(
-        server.url, "SELECT 1 AS x UNION ALL SELECT 2", 64 * 500, None
-    )
+    un = _plan("SELECT 1 AS x UNION ALL SELECT 2")
     assert len(un) == 1
 
 
@@ -293,44 +287,35 @@ def test_projection_pushdown_via_columns_option(registered, server):
     assert any('"l_orderkey", "l_quantity"' in q for q in server.queries)
 
 
-def test_cancel_fired_when_stream_abandoned(server):
-    """Killing a task mid-stream must issue best-effort /v1/cancel
-    (the analogue of the reference's QueryCancelGuard + monitor)."""
-    from dazzleduck_sql_duckdb_spark.sources.arrow_http import (
-        ArrowHttpReader,
-        ArrowSplit,
-    )
+def test_cancel_fired_when_stream_abandoned(registered):
+    """A reader torn down before its stream is exhausted must issue
+    best-effort /v1/cancel (the analogue of the reference's
+    QueryCancelGuard + monitor): a LIMIT stops reading after the first
+    batch and closes the reader mid-stream. A fully drained stream must
+    NOT cancel."""
+    import time
 
-    reader = ArrowHttpReader(
-        url=server.url, base_query="SELECT * FROM lineitem",
-        token=None, split=False, split_size=None,
-    )
-    [part] = reader.partitions()
-    server.cancelled.clear()
-    gen = reader.read(part)
-    next(gen)          # consume one batch, stream still open
-    gen.close()        # task killed -> GeneratorExit inside read()
-    assert part.query_id in server.cancelled
-    # a fully-drained stream must NOT cancel
-    server.cancelled.clear()
-    [part2] = reader.partitions()
-    for _ in reader.read(part2):
-        pass
-    assert server.cancelled == []
+    with ArrowTestServer({"lineitem": LINEITEM}, batch_rows=100) as srv:
+        df = dd_read_arrow(registered, srv.url, source_table="lineitem")
+        srv.requests.clear()
+        assert len(df.limit(1).collect()) == 1
+        deadline = time.time() + 5  # the handler records asynchronously
+        while "/v1/cancel" not in srv.requests and time.time() < deadline:
+            time.sleep(0.05)
+        assert "/v1/cancel" in srv.requests, srv.requests
+        srv.requests.clear()
+        assert len(df.collect()) == registered.read.parquet(LINEITEM).count()
+        time.sleep(0.2)
+        assert "/v1/cancel" not in srv.requests, srv.requests
 
 
 def test_cancel_fired_when_job_killed_mid_stream(registered):
     """The reference cancels server-side when its host query is
     interrupted mid-stream (cancel_monitor.cpp:103-157). Kill a real
     Spark job while the server is still streaming batches and assert
-    the server registers the cancellation within a bounded interval.
-
-    The signal arrives over the wire, not the /v1/cancel endpoint: the
-    pyspark daemon SIGKILLs an interrupted task's worker (daemon.py
-    os.kill(pid, SIGKILL)), so no Python-side hook can fire — the
-    worker's TCP socket closing IS the cancellation, and the server
-    aborts the query on the broken connection. /v1/cancel covers the
-    graceful paths (generator close, SIGTERM, atexit), tested above."""
+    the server receives GET /v1/cancel within a bounded interval: the
+    killed task closes its reader, which fires the explicit cancel on
+    top of dropping the connection."""
     import time
 
     from py4j.protocol import Py4JJavaError
@@ -342,6 +327,7 @@ def test_cancel_fired_when_job_killed_mid_stream(registered):
         # the DataFrame build already issued the LIMIT-0 schema probe;
         # only count /v1/query hits from the actual streaming job
         srv.queries.clear()
+        srv.requests.clear()
         sc = registered.sparkContext
         group = "dd-cancel-test"
 
@@ -376,6 +362,10 @@ def test_cancel_fired_when_job_killed_mid_stream(registered):
             f"server never saw /v1/cancel after job kill"
             f" (job finished={finished}, err={err})"
         )
+        deadline = time.time() + 5
+        while "/v1/cancel" not in srv.requests and time.time() < deadline:
+            time.sleep(0.05)
+        assert "/v1/cancel" in srv.requests, srv.requests
         assert err and isinstance(err[0], (Py4JJavaError, Exception))
         assert not finished
 
@@ -420,49 +410,54 @@ def test_select_sugar_prunes_remote_projection(registered, server):
         )
 
 
-def test_open_retries_5xx_but_not_4xx(monkeypatch):
-    """Transient (5xx / connection) failures retry with backoff on
-    stream open; 4xx client errors raise immediately."""
-    import urllib.error
+def test_open_retries_5xx_but_not_4xx(registered):
+    """Transient failures (5xx) on a data open retry with backoff, each
+    attempt under a fresh query id with the abandoned id cancelled; a
+    4xx client error fails at once, after exactly one request."""
+    with ArrowTestServer({"orders": ORDERS}) as srv:
+        df = dd_read_arrow(registered, srv.url, source_table="orders")
+        srv.requests.clear()
+        srv.fail_first = 2
+        got = sorted(map(tuple, df.collect()))
+        assert got == sorted(map(tuple, _direct(registered, ORDERS).collect()))
+        assert srv.requests.count("/v1/query") == 3, srv.requests
+        assert len(set(srv.cancelled)) == 2, srv.cancelled
 
-    from dazzleduck_sql_duckdb_spark.sources import arrow_http as ah
+        srv.requests.clear()
+        srv.fail_status, srv.fail_first = 400, 1
+        with pytest.raises(Exception, match="HTTP 400"):
+            df.collect()
+        assert srv.requests == ["/v1/query"], srv.requests
 
-    monkeypatch.setattr(ah, "HTTP_BACKOFF_S", 0.001)
-    calls = {"n": 0}
 
-    def flaky(req, timeout):
-        calls["n"] += 1
-        if calls["n"] < 3:
-            raise urllib.error.URLError("boom")
-        return "stream"
-
-    monkeypatch.setattr(ah.urllib.request, "urlopen", flaky)
-    assert ah._open_stream("http://x/v1/query?q=1", None) == "stream"
-    assert calls["n"] == 3
-
-    def always_503(req, timeout):
-        calls["n"] += 1
-        raise urllib.error.HTTPError(
-            "http://x", 503, "unavailable", {}, __import__("io").BytesIO(b"")
+def test_plan_and_schema_probe_retry_5xx(registered):
+    """The LIMIT-0 schema probe and /v1/plan are idempotent and retry the
+    same request on 5xx; the retry budget is bounded (HttpRetries = 3),
+    and a 4xx probe is not retried."""
+    with ArrowTestServer({"orders": ORDERS}) as srv:
+        srv.fail_first = 2
+        df = dd_read_arrow(
+            registered, srv.url, source_table="orders",
+            split=True, split_size=64 * 300,
         )
+        assert srv.requests == ["/v1/query"] * 3, srv.requests
+        srv.requests.clear()
+        srv.fail_first = 2
+        got = sorted(map(tuple, df.collect()))
+        assert got == sorted(map(tuple, _direct(registered, ORDERS).collect()))
+        assert srv.requests[:3] == ["/v1/plan"] * 3, srv.requests
 
-    calls["n"] = 0
-    monkeypatch.setattr(ah.urllib.request, "urlopen", always_503)
-    with pytest.raises(RuntimeError, match="HTTP 503"):
-        ah._open_stream("http://x/v1/query?q=1", None)
-    assert calls["n"] == ah.HTTP_RETRIES
+        srv.requests.clear()
+        srv.fail_first = 5
+        with pytest.raises(Exception, match="HTTP 503"):
+            dd_read_arrow(registered, srv.url, source_table="orders")
+        assert srv.requests == ["/v1/query"] * 3, srv.requests
 
-    def always_400(req, timeout):
-        calls["n"] += 1
-        raise urllib.error.HTTPError(
-            "http://x", 400, "bad", {}, __import__("io").BytesIO(b"nope")
-        )
-
-    calls["n"] = 0
-    monkeypatch.setattr(ah.urllib.request, "urlopen", always_400)
-    with pytest.raises(RuntimeError, match="HTTP 400"):
-        ah._open_stream("http://x/v1/query?q=1", None)
-    assert calls["n"] == 1  # client errors never retry
+        srv.requests.clear()
+        srv.fail_status, srv.fail_first = 404, 1
+        with pytest.raises(Exception, match="HTTP 404"):
+            dd_read_arrow(registered, srv.url, source_table="orders")
+        assert srv.requests == ["/v1/query"], srv.requests
 
 
 def test_agg_pushdown_builder_server_side(registered, server):
@@ -635,15 +630,14 @@ def test_narrow_helper_derives_pruned_remote_select(registered):
         assert got.keys() == want.keys()
         for k in got:
             assert abs(got[k] - want[k]) < 1e-9
-        # the data-serving query the server saw named only the three
-        # referenced columns, not SELECT * over the wide table
+        # the data-serving query the server saw named only the two
+        # referenced columns, not every column of the wide table
         data_queries = [q for q in srv.queries if "LIMIT 0" not in q]
         assert data_queries, "no data query reached the server"
-        # shape: SELECT * FROM (SELECT "l_quantity", "l_returnflag"
-        # FROM (...)) AS _subq WHERE ... — the outer * ranges over the
-        # pruned subquery, so the wire payload carries 2 columns
         final = data_queries[-1]
-        assert '"l_quantity", "l_returnflag"' in final
+        assert set(re.findall(r'"(l_[a-z]+)"', final)) == {
+            "l_quantity", "l_returnflag",
+        }, final
         assert "l_extendedprice" not in final
         # an identity plan stays unpruned (every column referenced...
         # nothing to derive) and still answers correctly
@@ -654,57 +648,43 @@ def test_narrow_helper_derives_pruned_remote_select(registered):
         assert ident.count() == _direct(registered, LINEITEM).count()
 
 
-def test_narrow_helper_warns_loudly_without_jvm_plan(registered):
-    """When the optimized plan is unreachable (Spark Connect: no _jdf),
-    the helper must NOT silently serve the unpruned scan — it warns so
-    the caller knows to pass select= explicitly (verdict r3 #7)."""
-    import warnings
+def test_filter_to_sql_serialization(registered):
+    """Spark v1 filters -> remote SQL through the reader's own serializer
+    (DdWire.filterToSql); None = not pushed, Spark re-applies it."""
+    jvm = registered._jvm
+    f = jvm.org.apache.spark.sql.sources
+    to_sql = jvm.org.apache.spark.sql.dazzleduck.DdWire.filterToSql
 
-    from dazzleduck_sql_duckdb_spark.sources import dd_read_arrow_narrow
+    def sql(flt):
+        out = to_sql(flt)
+        return out.get() if out.isDefined() else None
 
-    class NoJvmDF:
-        """Stands in for a Connect DataFrame: _jdf access raises."""
+    def objs(*vals):
+        arr = registered.sparkContext._gateway.new_array(
+            jvm.java.lang.Object, len(vals)
+        )
+        for i, v in enumerate(vals):
+            arr[i] = v
+        return arr
 
-        @property
-        def _jdf(self):
-            raise AttributeError("no JVM handle under Spark Connect")
-
-    sentinel = NoJvmDF()
-    with ArrowTestServer({"lineitem": LINEITEM}) as srv:
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            out = dd_read_arrow_narrow(
-                registered, srv.url, lambda df: sentinel,
-                source_table="lineitem",
-            )
-        assert out is sentinel  # unpruned plan is still served
-        msgs = [str(w.message) for w in caught
-                if issubclass(w.category, RuntimeWarning)]
-        assert any("UNPRUNED" in m and "select=" in m for m in msgs), msgs
-
-
-def test_filter_to_sql_serialization():
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        In,
-        IsNull,
-        StringStartsWith,
-    )
-
-    assert filter_to_sql(EqualTo(("a",), 5)) == '"a" = 5'
-    assert filter_to_sql(GreaterThan(("p",), 1.5)) == '"p" > 1.5'
-    assert filter_to_sql(EqualTo(("s",), "o'brien")) == "\"s\" = 'o''brien'"
-    assert filter_to_sql(IsNull(("x",))) == '"x" IS NULL'
-    assert filter_to_sql(In(("k",), (1, 2, 3))) == '"k" IN (1, 2, 3)'
-    assert (filter_to_sql(StringStartsWith(("s",), "ab"))
+    assert sql(f.EqualTo("a", 5)) == '"a" = 5'
+    assert sql(f.GreaterThan("p", 1.5)) == '"p" > 1.5'
+    assert sql(f.EqualTo("s", "o'brien")) == "\"s\" = 'o''brien'"
+    assert sql(f.IsNull("x")) == '"x" IS NULL'
+    assert sql(f.In("k", objs(1, 2, 3))) == '"k" IN (1, 2, 3)'
+    assert (sql(f.StringStartsWith("s", "ab"))
             == "\"s\" LIKE 'ab%' ESCAPE '\\'")
-    assert (filter_to_sql(StringStartsWith(("s",), "a_b"))
+    assert (sql(f.StringStartsWith("s", "a_b"))
             == "\"s\" LIKE 'a\\_b%' ESCAPE '\\'")
-    assert filter_to_sql(EqualTo(("nested", "f"), 1)) is None  # not pushed
+    assert (sql(f.Or(f.EqualTo("a", 1), f.Not(f.IsNotNull("b"))))
+            == '("a" = 1 OR (NOT "b" IS NOT NULL))')
+    assert sql(f.EqualTo("nested.f", 1)) is None  # not pushed
     # non-finite floats have no portable SQL literal -> stay local
-    assert filter_to_sql(GreaterThan(("p",), float("inf"))) is None
-    assert filter_to_sql(EqualTo(("p",), float("nan"))) is None
+    inf = jvm.java.lang.Double.POSITIVE_INFINITY
+    assert sql(f.GreaterThan("p", inf)) is None
+    assert sql(f.EqualTo("p", jvm.java.lang.Double.NaN)) is None
+    # a conjunction with one unpushable side is not pushed at all
+    assert sql(f.And(f.EqualTo("a", 1), f.EqualTo("p", inf))) is None
 
 
 def test_split_load_spreads_across_live_replicas(registered):
@@ -766,17 +746,18 @@ def test_short_but_complete_stream_still_reads(registered):
 
 
 def test_schema_mismatch_fails_loudly(registered):
-    """Spark binds arrow batches to the declared schema BY POSITION,
-    so a replica answering with a different column order (fleet
-    inconsistency — the reference's queryChecksum failure class) or a
-    stale `schema=` override would silently SWAP columns. The reader
-    must compare each stream's schema to the declared names and fail
-    the task (pre-guard behavior, empirically: l_orderkey values
-    served under the l_partkey name, no error anywhere)."""
+    """Spark binds arrow batches to the declared schema BY POSITION, so
+    a stream whose columns arrive in another order would silently SWAP
+    values. Two guards: the reader asks the server for every declared
+    column by name, so a stale `schema=` override in another order still
+    reads correct values; and a replica that answers in a different
+    column order anyway (fleet inconsistency — the reference's
+    queryChecksum failure class) fails the task."""
+    import duckdb
     from pyspark.sql import types as T
 
     with ArrowTestServer({"lineitem": LINEITEM}) as srv:
-        wrong = T.StructType(
+        stale = T.StructType(
             [
                 T.StructField("l_partkey", T.LongType()),
                 T.StructField("l_orderkey", T.LongType()),
@@ -784,11 +765,34 @@ def test_schema_mismatch_fails_loudly(registered):
         )
         df = dd_read_arrow(
             registered, srv.url,
-            sql="SELECT l_orderkey, l_partkey FROM lineitem LIMIT 3",
-            schema=wrong,
+            sql="SELECT l_orderkey, l_partkey FROM lineitem"
+                " WHERE l_orderkey < 40",
+            schema=stale,
         )
-        with pytest.raises(Exception, match="inconsistent replica"):
-            df.collect()
+        want = duckdb.sql(
+            f"SELECT l_partkey, l_orderkey FROM '{LINEITEM}'"
+            " WHERE l_orderkey < 40"
+        ).fetchall()
+        assert want and sorted(map(tuple, df.collect())) == sorted(want)
+
+        # a replica answering (l_orderkey, l_partkey) to a reader that
+        # declared (l_partkey, l_orderkey)
+        jvm = registered._jvm
+        gw = registered.sparkContext._gateway
+        pkg = jvm.org.apache.spark.sql.dazzleduck
+        eps = gw.new_array(jvm.java.lang.String, 1)
+        eps[0] = srv.url
+        names = gw.new_array(jvm.java.lang.String, 2)
+        names[0], names[1] = "l_partkey", "l_orderkey"
+        part = pkg.DdPartition(
+            eps, "SELECT l_orderkey, l_partkey FROM lineitem LIMIT 5", 0
+        )
+        rdr = pkg.DdColumnarReader(part, "", False, names)
+        try:
+            with pytest.raises(Exception, match="inconsistent replica"):
+                rdr.next()
+        finally:
+            rdr.close()
 
 
 def test_schema_matching_override_still_reads(registered):

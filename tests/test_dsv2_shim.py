@@ -1,31 +1,29 @@
 """DSv2 shim (scala/DdArrowShim.scala): TRANSPARENT pushdown parity.
 
-The Python DataSource API has no hook for required-column pruning or
-aggregate pushdown (only pushFilters, 4.1+), which left the reference's
-optimizer-level pushdowns
-(/root/reference/src/scanner/read_arrow_dd.cpp:246-296,
-/root/reference/src/optimizer/aggregation_pushdown.cpp:247-418)
-reachable only via the explicit dd_read_arrow_narrow /
-dd_read_arrow_agg spellings. The Scala shim implements
-SupportsPushDownRequiredColumns / SupportsPushDownFilters /
-SupportsPushDownAggregates, so a PLAIN .select()/.filter()/.agg() over
-the remote source prunes, filters, and aggregates server-side.
+The shim implements SupportsPushDownRequiredColumns /
+SupportsPushDownFilters / SupportsPushDownAggregates, so a PLAIN
+.select()/.filter()/.agg() over the remote source prunes, filters, and
+aggregates server-side — the reference's optimizer-level pushdowns
+(src/scanner/read_arrow_dd.cpp:246-296,
+src/optimizer/aggregation_pushdown.cpp:247-418).
 
-Runs in a subprocess: spark.jars must be set at session creation, and
-the suite session is already up. One subprocess runs ALL scenarios
-(JVM startup dominates); results print as a JSON document asserted
-here against DuckDB over the same parquet.
+Runs in the suite's session: `sources.register` loads the jar with a
+runtime ADD JAR, the path every user session takes. Results are
+asserted against DuckDB over the same parquet.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
-import sys
+import time as _t
 
 import duckdb
 import pytest
+from pyspark.sql import functions as F
+
+from dazzleduck_sql_duckdb_spark.sources import register
+from dazzleduck_sql_duckdb_spark.sources.local_server import ArrowTestServer
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 JAR = os.path.join(
@@ -33,349 +31,316 @@ JAR = os.path.join(
 )
 LINEITEM = "/root/testdata/sf0.001/lineitem.parquet"
 
-_SCRIPT = r"""
-import json, sys
-sys.path.insert(0, {repo!r})
-from dazzleduck_sql_duckdb_spark.sources.local_server import ArrowTestServer
 
-srv = ArrowTestServer(
-    {{"lineitem": {lineitem!r}}}, token="sekret"
-).start()
-from pyspark.sql import SparkSession
-
-spark = (
-    SparkSession.builder.master("local[4]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.ui.showConsoleProgress", "false")
-    .config("spark.jars", {jar!r})
-    .getOrCreate()
-)
-r = (
-    spark.read.format("dd_arrow_dsv2")
-    .option("url", srv.url)
-    .option("path", "lineitem")
-    .option("token", "sekret")
-    .load()
-)
-out = {{}}
+@pytest.fixture(scope="module")
+def shim(spark):
+    register(spark)
+    return spark
 
 
 def plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-out["n_cols"] = len(r.schema.fields)
-
-# 1) transparent projection: plain .select() prunes the remote SQL
-df = r.select("l_orderkey")
-p = plan(df)
-out["proj_remote_single_col"] = 'RemoteSql: SELECT "l_orderkey" FROM' in p
-out["proj_sum"] = df.groupBy().sum("l_orderkey").collect()[0][0]
-
-# 2) transparent filter: pushed into the remote WHERE; an
-#    unsupported predicate (expression of two columns) stays post-scan
-df = r.filter("l_quantity > 45").select("l_orderkey")
-p = plan(df)
-seg = p.split("PushedFilters: [", 1)[1].split("]", 1)[0]
-out["filter_pushed"] = "l_quantity" in seg
-out["filter_count"] = df.count()
-df = r.filter("l_quantity > 45").filter("l_partkey + l_suppkey > 50")
-p = plan(df)
-seg = p.split("PushedFilters: [", 1)[1].split("]", 1)[0]
-out["partial_keeps_unsupported_post_scan"] = (
-    "l_partkey" not in seg and "FilterExec" in p or "Filter " in p
-)
-out["partial_count"] = df.count()
-
-# 3) transparent aggregate: complete pushdown, server computes finals
-df = r.groupBy("l_returnflag").agg(
-    {{"l_quantity": "sum", "l_extendedprice": "max", "*": "count"}}
-)
-p = plan(df)
-out["agg_pushed"] = "PushedAggregation: true" in p
-out["agg_cols"] = df.columns
-out["agg_rows"] = sorted([list(x) for x in df.collect()])
-
-# filter + aggregate compose
-df = r.filter("l_quantity > 45").groupBy("l_returnflag").count()
-out["agg_filtered_rows"] = sorted([list(x) for x in df.collect()])
-
-# 4a) avg: COMPLETE pushdown via the Avg case — the server computes
-#     the final average; no partial aggregate runs above the scan
-df = r.groupBy("l_returnflag").agg({{"l_quantity": "avg"}})
-p = plan(df)
-out["avg_pushed"] = "PushedAggregation: true" in p
-out["avg_remote_complete"] = "avg(" in p and "RemoteSql" in p
-out["avg_no_partial_agg"] = "HashAggregate" not in p
-out["avg_rows"] = sorted(
-    [[x[0], round(x[1], 9)] for x in df.collect()]
-)
-
-# 4b) an untranslatable aggregate (stddev) falls back to a plain scan
-from pyspark.sql import functions as F
-
-df = r.groupBy("l_returnflag").agg(F.stddev("l_quantity"))
-out["stddev_fallback_not_pushed"] = (
-    "PushedAggregation: true" not in plan(df)
-)
-out["stddev_rows"] = sorted(
-    [[x[0], round(x[1], 6)] for x in df.collect()]
-)
-
-# 5) empty projection (bare count) still counts rows
-out["bare_count"] = r.count()
-
-# 6) split mode: /v1/plan over the PRUNED+FILTERED sql, one Spark
-#    partition per split; results identical to the non-split read
-rs = (
-    spark.read.format("dd_arrow_dsv2")
-    .option("url", srv.url)
-    .option("path", "lineitem")
-    .option("token", "sekret")
-    .option("split", "true")
-    .option("split_size", "65536")
-    .load()
-)
-df = rs.select("l_orderkey")
-out["split_n_partitions"] = df.rdd.getNumPartitions()
-out["split_proj_sum"] = df.groupBy().sum("l_orderkey").collect()[0][0]
-out["split_filter_count"] = rs.filter("l_quantity > 45").count()
-
-# 6b) split + aggregate: PARTIAL pushdown — each split's slice is
-#     aggregated server-side (the reference's split-mode pushdown),
-#     Spark merges the partials in a final HashAggregate
-df = rs.filter("l_quantity > 45").groupBy("l_returnflag").agg(
-    {{"l_quantity": "sum", "*": "count"}}
-)
-p = plan(df)
-out["split_agg_pushed"] = "PushedAggregation: true" in p
-out["split_agg_final_merge"] = "HashAggregate" in p
-out["split_agg_cols"] = df.columns
-out["split_agg_rows"] = sorted([list(x) for x in df.collect()])
-
-# avg over splits: Spark decomposes into split-safe sum+count
-# partials; count DISTINCT is NOT split-safe and falls back to a
-# raw-row split scan (values still correct)
-df = rs.groupBy("l_returnflag").agg({{"l_quantity": "avg"}})
-out["split_avg_pushed"] = "PushedAggregation: true" in plan(df)
-out["split_avg_rows"] = sorted(
-    [[x[0], round(x[1], 9)] for x in df.collect()]
-)
-df = rs.groupBy("l_returnflag").agg(
-    F.countDistinct("l_suppkey").alias("d")
-)
-out["split_cd_not_pushed"] = "PushedAggregation: true" not in plan(df)
-out["split_cd_rows"] = sorted([list(x) for x in df.collect()])
-
-# 6c) decimal sum: pushed COMPLETE with an explicit CAST to Spark's
-#     widened result type DECIMAL(p+10, s) — previously excluded
-rd = (
-    spark.read.format("dd_arrow_dsv2")
-    .option("url", srv.url)
-    .option("token", "sekret")
-    .option(
-        "query",
-        "SELECT l_returnflag,"
-        " CAST(l_quantity AS DECIMAL(12,2)) AS qd FROM lineitem",
-    )
-    .load()
-)
-df = rd.groupBy("l_returnflag").agg({{"qd": "sum"}})
-p = plan(df)
-out["dec_sum_pushed"] = "PushedAggregation: true" in p
-out["dec_sum_type"] = dict(df.dtypes)["sum(qd)"]
-out["dec_sum_rows"] = sorted([[x[0], str(x[1])] for x in df.collect()])
-
-# 6c') decimal avg: COMPLETE pushdown is deliberately declined (DuckDB
-#      decimal division degrades to DOUBLE; Spark's Average keeps the
-#      widened-decimal result) — but the decomposed sum+count partial
-#      path MUST still be PUSHED, not a raw-row scan. Plan-asserts the
-#      documented trade so it stays true under refactoring (r9 verdict
-#      directive #4; reference type reconciliation:
-#      /root/reference/src/scanner/read_arrow_dd.cpp:568-696).
-df = rd.groupBy("l_returnflag").agg({{"qd": "avg"}})
-p = plan(df)
-out["dec_avg_pushed"] = "PushedAggregation: true" in p
-out["dec_avg_remote_decomposed"] = (
-    "sum(" in p and "count(" in p and "RemoteSql" in p
-    and "avg(" not in p.split("RemoteSql", 1)[1].split("\n", 1)[0]
-)
-# non-split: the decomposed sum+count is pushed COMPLETE — the server
-# runs the one GROUP BY, Spark only divides in a Project (no re-agg)
-out["dec_avg_no_reagg"] = "HashAggregate" not in p
-out["dec_avg_type"] = dict(df.dtypes)["avg(qd)"]
-out["dec_avg_rows"] = sorted([[x[0], str(x[1])] for x in df.collect()])
-
-# 7) replica failover: a second server advertises a DEAD endpoint
-#    first in every split's endpoints[] — split 0 (and every even
-#    split) STARTS there, fails to connect, rotates to the live
-#    replica; results must be complete. The dead endpoint costs one
-#    refused connect per even split.
-srv2 = ArrowTestServer(
-    {{"lineitem": {lineitem!r}}},
-    extra_endpoints=["http://127.0.0.1:9"],
-).start()
-rf = (
-    spark.read.format("dd_arrow_dsv2")
-    .option("url", srv2.url)
-    .option("path", "lineitem")
-    .option("split", "true")
-    .option("split_size", "65536")
-    .load()
-)
-out["failover_sum"] = rf.select("l_orderkey").groupBy().sum(
-    "l_orderkey"
-).collect()[0][0]
-
-# 8) cancel-on-teardown: a LIMIT over the full scan tears the stream
-#    down before exhaustion -> close() fires GET /v1/cancel (event
-#    channel) on top of the connection drop (lease channel)
-n_cancel_before = len(srv2.cancelled)
-spark.read.format("dd_arrow_dsv2").option("url", srv2.url).option(
-    "path", "lineitem"
-).load().limit(1).collect()
-import time as _t
-
-for _ in range(50):  # the handler records asynchronously
-    if len(srv2.cancelled) > n_cancel_before:
-        break
-    _t.sleep(0.1)
-out["cancel_recorded"] = len(srv2.cancelled) > n_cancel_before
-
-# 6d) split-mode decimal sum: split-safe partial pushdown with the
-#     same TRY_CAST'd widened type as the complete path (advisor
-#     finding r7: only the non-split case was covered)
-rds = (
-    spark.read.format("dd_arrow_dsv2")
-    .option("url", srv.url)
-    .option("token", "sekret")
-    .option(
-        "query",
-        "SELECT l_returnflag,"
-        " CAST(l_quantity AS DECIMAL(12,2)) AS qd FROM lineitem",
-    )
-    .option("split", "true")
-    .option("split_size", "65536")
-    .load()
-)
-df = rds.groupBy("l_returnflag").agg({{"qd": "sum"}})
-p = plan(df)
-out["split_dec_sum_pushed"] = "PushedAggregation: true" in p
-out["split_dec_sum_final_merge"] = "HashAggregate" in p
-out["split_dec_sum_type"] = dict(df.dtypes)["sum(qd)"]
-out["split_dec_sum_rows"] = sorted(
-    [[x[0], str(x[1])] for x in df.collect()]
-)
-
-# 6d') split-mode decimal avg: decomposed sum+count partials are
-#      split-safe and must be PUSHED per split (same trade as 6c')
-df = rds.groupBy("l_returnflag").agg({{"qd": "avg"}})
-p = plan(df)
-out["split_dec_avg_pushed"] = "PushedAggregation: true" in p
-out["split_dec_avg_final_merge"] = "HashAggregate" in p
-out["split_dec_avg_rows"] = sorted(
-    [[x[0], str(x[1])] for x in df.collect()]
-)
-
-# 6e) split-decimal stability: run the exact r9 red-gate shape 10x in
-#     THIS busy session (shared server, warm JVM connection pool) and
-#     record every distinct result — the driver's hash gate failed once
-#     under a full-catalog shared session while passing in isolation
-df_sd = rds.groupBy("l_returnflag").agg({{"qd": "sum"}})
-out["split_dec_stress_distinct"] = sorted(
-    {{
-        json.dumps(sorted([[x[0], str(x[1])] for x in df_sd.collect()]))
-        for _ in range(10)
-    }}
-)
-
-# 10) torn-stream guard: a server that ends the IPC stream WITHOUT the
-#     EOS marker (valid HTTP framing — the shape of a torn split cut
-#     at a batch boundary) must fail the scan loudly, never merge a
-#     silently-short partial (r9 verdict directive #1)
-srv3 = ArrowTestServer(
-    {{"lineitem": {lineitem!r}}},
-    batch_rows=100,
-    truncate_after_batches=1,
-).start()
-try:
-    # raw-row fetch (no agg pushdown — an aggregate would return one
-    # batch, too short to tear): 100-row batches, cut after the first
-    rows = spark.read.format("dd_arrow_dsv2").option(
-        "url", srv3.url
-    ).option("path", "lineitem").load().select("l_orderkey").collect()
-    out["truncated_stream_error"] = f"NO ERROR ({{len(rows)}} rows)"
-except Exception as e:
-    out["truncated_stream_error"] = str(e)[:500]
-srv3.stop()
-
-# 11) compressed IPC bodies through the JAVA reader: the reference
-#     server ZSTD-compresses stream buffers (base_stream_reader.cpp
-#     decompresses); the Python source's pyarrow reader is already
-#     differential-tested against a zstd server — pin that arrow-java
-#     (via Spark's bundled codecs) decodes both supported codecs too,
-#     with the EOS guard active (codec framing is inside messages, the
-#     stream-level EOS marker stays plain)
-for codec in ("zstd", "lz4"):
-    srvc = ArrowTestServer(
-        {{"lineitem": {lineitem!r}}}, compression=codec, batch_rows=500
+def _transparent_pushdown_scenarios(spark) -> dict:
+    """Every scenario against the local wire server; returns what each
+    observed, asserted against DuckDB by the test."""
+    srv = ArrowTestServer({"lineitem": LINEITEM}, token="sekret").start()
+    # a second server advertising a DEAD endpoint first in every split's
+    # endpoints[]
+    srv2 = ArrowTestServer(
+        {"lineitem": LINEITEM}, extra_endpoints=["http://127.0.0.1:9"]
     ).start()
-    # raw-row fetch (no agg pushdown — a pushed aggregate would make
-    # the compressed body trivially small), summed client-side
-    out[f"compressed_{{codec}}_sum"] = sum(
-        r[0] for r in spark.read.format("dd_arrow_dsv2")
-        .option("url", srvc.url).option("path", "lineitem").load()
-        .select("l_orderkey").collect()
-    )
-    srvc.stop()
+    try:
+        r = (
+            spark.read.format("dd_arrow_dsv2")
+            .option("url", srv.url)
+            .option("path", "lineitem")
+            .option("token", "sekret")
+            .load()
+        )
+        out = {}
+        out["n_cols"] = len(r.schema.fields)
 
-# 9) JVM shutdown sweep (the Python source's SIGTERM/atexit third
-#    cancel channel): hold a reader MID-STREAM via py4j, fire the
-#    registry sweep the shutdown hook runs, and assert the server
-#    records the event-channel cancel while the stream is still open
-jvm = spark._jvm
-gw = spark.sparkContext._gateway
-pkg = jvm.org.apache.spark.sql.dazzleduck
-eps = gw.new_array(jvm.java.lang.String, 1)
-eps[0] = srv2.url
-part = pkg.DdPartition(eps, "SELECT * FROM lineitem", 0)
-# 9a) replica schema-consistency guard: a reader whose declared
-#     column order differs from what the replica answers must raise
-#     (positional binding would silently swap columns) — simulated by
-#     constructing the reader directly with swapped expectedNames
-wrongnames = gw.new_array(jvm.java.lang.String, 2)
-wrongnames[0] = "l_partkey"; wrongnames[1] = "l_orderkey"
-eps0 = gw.new_array(jvm.java.lang.String, 1)
-eps0[0] = srv2.url
-part_wrong = pkg.DdPartition(
-    eps0, "SELECT l_orderkey, l_partkey FROM lineitem LIMIT 5", 0
-)
-rdr_wrong = pkg.DdColumnarReader(part_wrong, "", False, wrongnames)
-try:
-    rdr_wrong.next()
-    out["schema_guard_error"] = "NO ERROR"
-except Exception as e:
-    out["schema_guard_error"] = str(e)[:300]
-rdr_wrong.close()
+        # 1) transparent projection: plain .select() prunes the remote SQL
+        df = r.select("l_orderkey")
+        p = plan(df)
+        out["proj_remote_single_col"] = 'RemoteSql: SELECT "l_orderkey" FROM' in p
+        out["proj_sum"] = df.groupBy().sum("l_orderkey").collect()[0][0]
 
-rdr = pkg.DdColumnarReader(part, "", False, None)
-assert rdr.next()  # first batch loaded, stream NOT exhausted
-out["sweep_in_flight"] = pkg.DdReaderRegistry.inFlight()
-n_before = len(srv2.cancelled)
-pkg.DdReaderRegistry.sweep()
-for _ in range(50):
-    if len(srv2.cancelled) > n_before:
-        break
-    _t.sleep(0.1)
-out["sweep_cancel_recorded"] = len(srv2.cancelled) > n_before
-rdr.close()
-out["sweep_unregistered"] = pkg.DdReaderRegistry.inFlight()
+        # 2) transparent filter: pushed into the remote WHERE; an
+        #    unsupported predicate (expression of two columns) stays post-scan
+        df = r.filter("l_quantity > 45").select("l_orderkey")
+        p = plan(df)
+        seg = p.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+        out["filter_pushed"] = "l_quantity" in seg
+        out["filter_count"] = df.count()
+        df = r.filter("l_quantity > 45").filter("l_partkey + l_suppkey > 50")
+        p = plan(df)
+        seg = p.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+        out["partial_keeps_unsupported_post_scan"] = (
+            "l_partkey" not in seg and "FilterExec" in p or "Filter " in p
+        )
+        out["partial_count"] = df.count()
 
-spark.stop()
-srv.stop()
-srv2.stop()
-print("SHIM_RESULT " + json.dumps(out))
-"""
+        # 3) transparent aggregate: complete pushdown, server computes finals
+        df = r.groupBy("l_returnflag").agg(
+            {"l_quantity": "sum", "l_extendedprice": "max", "*": "count"}
+        )
+        p = plan(df)
+        out["agg_pushed"] = "PushedAggregation: true" in p
+        out["agg_cols"] = df.columns
+        out["agg_rows"] = sorted([list(x) for x in df.collect()])
+
+        # filter + aggregate compose
+        df = r.filter("l_quantity > 45").groupBy("l_returnflag").count()
+        out["agg_filtered_rows"] = sorted([list(x) for x in df.collect()])
+
+        # 4a) avg: COMPLETE pushdown via the Avg case — the server computes
+        #     the final average; no partial aggregate runs above the scan
+        df = r.groupBy("l_returnflag").agg({"l_quantity": "avg"})
+        p = plan(df)
+        out["avg_pushed"] = "PushedAggregation: true" in p
+        out["avg_remote_complete"] = "avg(" in p and "RemoteSql" in p
+        out["avg_no_partial_agg"] = "HashAggregate" not in p
+        out["avg_rows"] = sorted(
+            [[x[0], round(x[1], 9)] for x in df.collect()]
+        )
+
+        # 4b) an untranslatable aggregate (stddev) falls back to a plain scan
+        df = r.groupBy("l_returnflag").agg(F.stddev("l_quantity"))
+        out["stddev_fallback_not_pushed"] = (
+            "PushedAggregation: true" not in plan(df)
+        )
+        out["stddev_rows"] = sorted(
+            [[x[0], round(x[1], 6)] for x in df.collect()]
+        )
+
+        # 5) empty projection (bare count) still counts rows
+        out["bare_count"] = r.count()
+
+        # 6) split mode: /v1/plan over the PRUNED+FILTERED sql, one Spark
+        #    partition per split; results identical to the non-split read
+        rs = (
+            spark.read.format("dd_arrow_dsv2")
+            .option("url", srv.url)
+            .option("path", "lineitem")
+            .option("token", "sekret")
+            .option("split", "true")
+            .option("split_size", "65536")
+            .load()
+        )
+        df = rs.select("l_orderkey")
+        out["split_n_partitions"] = df.rdd.getNumPartitions()
+        out["split_proj_sum"] = df.groupBy().sum("l_orderkey").collect()[0][0]
+        out["split_filter_count"] = rs.filter("l_quantity > 45").count()
+
+        # 6b) split + aggregate: PARTIAL pushdown — each split's slice is
+        #     aggregated server-side (the reference's split-mode pushdown),
+        #     Spark merges the partials in a final HashAggregate
+        df = rs.filter("l_quantity > 45").groupBy("l_returnflag").agg(
+            {"l_quantity": "sum", "*": "count"}
+        )
+        p = plan(df)
+        out["split_agg_pushed"] = "PushedAggregation: true" in p
+        out["split_agg_final_merge"] = "HashAggregate" in p
+        out["split_agg_cols"] = df.columns
+        out["split_agg_rows"] = sorted([list(x) for x in df.collect()])
+
+        # avg over splits: Spark decomposes into split-safe sum+count
+        # partials; count DISTINCT is NOT split-safe and falls back to a
+        # raw-row split scan (values still correct)
+        df = rs.groupBy("l_returnflag").agg({"l_quantity": "avg"})
+        out["split_avg_pushed"] = "PushedAggregation: true" in plan(df)
+        out["split_avg_rows"] = sorted(
+            [[x[0], round(x[1], 9)] for x in df.collect()]
+        )
+        df = rs.groupBy("l_returnflag").agg(
+            F.countDistinct("l_suppkey").alias("d")
+        )
+        out["split_cd_not_pushed"] = "PushedAggregation: true" not in plan(df)
+        out["split_cd_rows"] = sorted([list(x) for x in df.collect()])
+
+        # 6c) decimal sum: pushed COMPLETE with an explicit CAST to Spark's
+        #     widened result type DECIMAL(p+10, s) — previously excluded
+        rd = (
+            spark.read.format("dd_arrow_dsv2")
+            .option("url", srv.url)
+            .option("token", "sekret")
+            .option(
+                "query",
+                "SELECT l_returnflag,"
+                " CAST(l_quantity AS DECIMAL(12,2)) AS qd FROM lineitem",
+            )
+            .load()
+        )
+        df = rd.groupBy("l_returnflag").agg({"qd": "sum"})
+        p = plan(df)
+        out["dec_sum_pushed"] = "PushedAggregation: true" in p
+        out["dec_sum_type"] = dict(df.dtypes)["sum(qd)"]
+        out["dec_sum_rows"] = sorted([[x[0], str(x[1])] for x in df.collect()])
+
+        # 6c') decimal avg: COMPLETE pushdown is deliberately declined (DuckDB
+        #      decimal division degrades to DOUBLE; Spark's Average keeps the
+        #      widened-decimal result) — but the decomposed sum+count partial
+        #      path MUST still be PUSHED, not a raw-row scan. Plan-asserts the
+        #      documented trade so it stays true under refactoring
+        #      (reference type reconciliation:
+        #      src/scanner/read_arrow_dd.cpp:568-696).
+        df = rd.groupBy("l_returnflag").agg({"qd": "avg"})
+        p = plan(df)
+        out["dec_avg_pushed"] = "PushedAggregation: true" in p
+        out["dec_avg_remote_decomposed"] = (
+            "sum(" in p and "count(" in p and "RemoteSql" in p
+            and "avg(" not in p.split("RemoteSql", 1)[1].split("\n", 1)[0]
+        )
+        # non-split: the decomposed sum+count is pushed COMPLETE — the server
+        # runs the one GROUP BY, Spark only divides in a Project (no re-agg)
+        out["dec_avg_no_reagg"] = "HashAggregate" not in p
+        out["dec_avg_type"] = dict(df.dtypes)["avg(qd)"]
+        out["dec_avg_rows"] = sorted([[x[0], str(x[1])] for x in df.collect()])
+
+        # 7) replica failover: a second server advertises a DEAD endpoint
+        #    first in every split's endpoints[] — split 0 (and every even
+        #    split) STARTS there, fails to connect, rotates to the live
+        #    replica; results must be complete. The dead endpoint costs one
+        #    refused connect per even split.
+        rf = (
+            spark.read.format("dd_arrow_dsv2")
+            .option("url", srv2.url)
+            .option("path", "lineitem")
+            .option("split", "true")
+            .option("split_size", "65536")
+            .load()
+        )
+        out["failover_sum"] = rf.select("l_orderkey").groupBy().sum(
+            "l_orderkey"
+        ).collect()[0][0]
+
+        # 8) cancel-on-teardown: a LIMIT over the full scan tears the stream
+        #    down before exhaustion -> close() fires GET /v1/cancel (event
+        #    channel) on top of the connection drop (lease channel)
+        n_cancel_before = len(srv2.cancelled)
+        spark.read.format("dd_arrow_dsv2").option("url", srv2.url).option(
+            "path", "lineitem"
+        ).load().limit(1).collect()
+        for _ in range(50):  # the handler records asynchronously
+            if len(srv2.cancelled) > n_cancel_before:
+                break
+            _t.sleep(0.1)
+        out["cancel_recorded"] = len(srv2.cancelled) > n_cancel_before
+
+        # 6d) split-mode decimal sum: split-safe partial pushdown with the
+        #     same TRY_CAST'd widened type as the complete path
+        rds = (
+            spark.read.format("dd_arrow_dsv2")
+            .option("url", srv.url)
+            .option("token", "sekret")
+            .option(
+                "query",
+                "SELECT l_returnflag,"
+                " CAST(l_quantity AS DECIMAL(12,2)) AS qd FROM lineitem",
+            )
+            .option("split", "true")
+            .option("split_size", "65536")
+            .load()
+        )
+        df = rds.groupBy("l_returnflag").agg({"qd": "sum"})
+        p = plan(df)
+        out["split_dec_sum_pushed"] = "PushedAggregation: true" in p
+        out["split_dec_sum_final_merge"] = "HashAggregate" in p
+        out["split_dec_sum_type"] = dict(df.dtypes)["sum(qd)"]
+        out["split_dec_sum_rows"] = sorted(
+            [[x[0], str(x[1])] for x in df.collect()]
+        )
+
+        # 6d') split-mode decimal avg: decomposed sum+count partials are
+        #      split-safe and must be PUSHED per split (same trade as 6c')
+        df = rds.groupBy("l_returnflag").agg({"qd": "avg"})
+        p = plan(df)
+        out["split_dec_avg_pushed"] = "PushedAggregation: true" in p
+        out["split_dec_avg_final_merge"] = "HashAggregate" in p
+        out["split_dec_avg_rows"] = sorted(
+            [[x[0], str(x[1])] for x in df.collect()]
+        )
+
+        # 6e) split-decimal stability: run the split-decimal shape 10x in
+        #     THIS busy session (shared server, warm JVM connection pool) and
+        #     record every distinct result — the hash gate once failed
+        #     under a full-catalog shared session while passing in isolation
+        df_sd = rds.groupBy("l_returnflag").agg({"qd": "sum"})
+        out["split_dec_stress_distinct"] = sorted(
+            {
+                json.dumps(sorted([[x[0], str(x[1])] for x in df_sd.collect()]))
+                for _ in range(10)
+            }
+        )
+
+        # 10) torn-stream guard: a server that ends the IPC stream WITHOUT the
+        #     EOS marker (valid HTTP framing — the shape of a torn split cut
+        #     at a batch boundary) must fail the scan loudly, never merge a
+        #     silently-short partial
+        srv3 = ArrowTestServer(
+            {"lineitem": LINEITEM},
+            batch_rows=100,
+            truncate_after_batches=1,
+        ).start()
+        try:
+            # raw-row fetch (no agg pushdown — an aggregate would return one
+            # batch, too short to tear): 100-row batches, cut after the first
+            rows = spark.read.format("dd_arrow_dsv2").option(
+                "url", srv3.url
+            ).option("path", "lineitem").load().select("l_orderkey").collect()
+            out["truncated_stream_error"] = f"NO ERROR ({len(rows)} rows)"
+        except Exception as e:
+            out["truncated_stream_error"] = str(e)[:2000]
+        srv3.stop()
+
+        # 11) compressed IPC bodies through the JAVA reader: the reference
+        #     server ZSTD-compresses stream buffers (base_stream_reader.cpp
+        #     decompresses) — pin that arrow-java (via Spark's bundled
+        #     codecs) decodes both supported codecs, with the EOS guard
+        #     active (codec framing is inside messages, the
+        #     stream-level EOS marker stays plain)
+        for codec in ("zstd", "lz4"):
+            srvc = ArrowTestServer(
+                {"lineitem": LINEITEM}, compression=codec, batch_rows=500
+            ).start()
+            # raw-row fetch (no agg pushdown — a pushed aggregate would make
+            # the compressed body trivially small), summed client-side
+            out[f"compressed_{codec}_sum"] = sum(
+                r[0] for r in spark.read.format("dd_arrow_dsv2")
+                .option("url", srvc.url).option("path", "lineitem").load()
+                .select("l_orderkey").collect()
+            )
+            srvc.stop()
+
+        # 9) JVM shutdown sweep (the third cancel channel, for a JVM that
+        #    dies without closing its readers): hold a reader MID-STREAM via py4j, fire the
+        #    registry sweep the shutdown hook runs, and assert the server
+        #    records the event-channel cancel while the stream is still open
+        jvm = spark._jvm
+        gw = spark.sparkContext._gateway
+        pkg = jvm.org.apache.spark.sql.dazzleduck
+        eps = gw.new_array(jvm.java.lang.String, 1)
+        eps[0] = srv2.url
+        part = pkg.DdPartition(eps, "SELECT * FROM lineitem", 0)
+        rdr = pkg.DdColumnarReader(part, "", False, None)
+        assert rdr.next()  # first batch loaded, stream NOT exhausted
+        out["sweep_in_flight"] = pkg.DdReaderRegistry.inFlight()
+        n_before = len(srv2.cancelled)
+        pkg.DdReaderRegistry.sweep()
+        for _ in range(50):
+            if len(srv2.cancelled) > n_before:
+                break
+            _t.sleep(0.1)
+        out["sweep_cancel_recorded"] = len(srv2.cancelled) > n_before
+        rdr.close()
+        out["sweep_unregistered"] = pkg.DdReaderRegistry.inFlight()
+        return out
+    finally:
+        srv.stop()
+        srv2.stop()
 
 
 def test_jar_matches_scala_source():
@@ -400,24 +365,8 @@ def test_jar_matches_scala_source():
 
 
 @pytest.mark.slow
-def test_dsv2_shim_transparent_pushdowns():
-    assert os.path.exists(JAR), "run tools/build_shim.sh"
-    proc = subprocess.run(
-        [
-            sys.executable,
-            "-c",
-            _SCRIPT.format(repo=REPO, lineitem=LINEITEM, jar=JAR),
-        ],
-        capture_output=True,
-        text=True,
-        timeout=540,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    line = next(
-        ln for ln in proc.stdout.splitlines()
-        if ln.startswith("SHIM_RESULT ")
-    )
-    got = json.loads(line[len("SHIM_RESULT "):])
+def test_dsv2_shim_transparent_pushdowns(shim):
+    got = _transparent_pushdown_scenarios(shim)
 
     con = duckdb.sql
     assert got["n_cols"] == 11
@@ -548,11 +497,6 @@ def test_dsv2_shim_transparent_pushdowns():
     # codecs the wire supports, values exact
     assert got["compressed_zstd_sum"] == got["proj_sum"]
     assert got["compressed_lz4_sum"] == got["proj_sum"]
-    # 9a: a replica answering in a different column order raises
-    # (positional binding would otherwise silently swap columns)
-    assert "inconsistent replica" in got["schema_guard_error"], (
-        got["schema_guard_error"]
-    )
     # 9: the shutdown sweep cancels in-flight queries while the reader
     # is mid-stream, and close() drains the registry
     assert got["sweep_in_flight"] >= 1
@@ -560,48 +504,31 @@ def test_dsv2_shim_transparent_pushdowns():
     assert got["sweep_unregistered"] == 0
 
 
-_RAND_SCRIPT = r"""
-import json, sys
-sys.path.insert(0, {repo!r})
-from dazzleduck_sql_duckdb_spark.sources.local_server import ArrowTestServer
-
-srv = ArrowTestServer({{"lineitem": {lineitem!r}}}).start()
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-spark = (
-    SparkSession.builder.master("local[4]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.ui.showConsoleProgress", "false")
-    .config("spark.jars", {jar!r})
-    .getOrCreate()
-)
-out = []
-for case in {cases!r}:
-    rd = spark.read.format("dd_arrow_dsv2").option("url", srv.url).option(
-        "path", "lineitem"
-    )
-    if case["split"]:
-        rd = rd.option("split", "true").option("split_size", "65536")
-    df = rd.load()
-    if case["where"]:
-        df = df.filter(case["where"])
-    aggs = [F.expr(a).alias(f"a{{i}}") for i, a in enumerate(case["aggs"])]
-    if case["group"]:
-        df = df.groupBy(*case["group"]).agg(*aggs)
-    else:
-        df = df.agg(*aggs)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    rows = sorted([[repr(v) for v in r] for r in df.collect()])
-    out.append({{"pushed": "PushedAggregation: true" in plan, "rows": rows}})
-spark.stop()
-srv.stop()
-print("RAND_RESULT " + json.dumps(out))
-"""
+def _randomized_agg_cases(spark, cases) -> list:
+    out = []
+    with ArrowTestServer({"lineitem": LINEITEM}) as srv:
+        for case in cases:
+            rd = spark.read.format("dd_arrow_dsv2").option(
+                "url", srv.url
+            ).option("path", "lineitem")
+            if case["split"]:
+                rd = rd.option("split", "true").option("split_size", "65536")
+            df = rd.load()
+            if case["where"]:
+                df = df.filter(case["where"])
+            aggs = [F.expr(a).alias(f"a{i}") for i, a in enumerate(case["aggs"])]
+            if case["group"]:
+                df = df.groupBy(*case["group"]).agg(*aggs)
+            else:
+                df = df.agg(*aggs)
+            rows = sorted([[repr(v) for v in r] for r in df.collect()])
+            out.append({"pushed": "PushedAggregation: true" in plan(df),
+                        "rows": rows})
+    return out
 
 
 @pytest.mark.slow
-def test_dsv2_shim_randomized_agg_differential():
+def test_dsv2_shim_randomized_agg_differential(shim):
     """Seeded randomized agg shapes through the shim (split AND
     non-split) vs DuckDB over the same parquet: group keys, filters,
     and agg mixes drawn from the pushable surface. Every case must be
@@ -637,24 +564,7 @@ def test_dsv2_shim_randomized_agg_differential():
                 "where": rng.choice(where_pool),
             }
         )
-    proc = subprocess.run(
-        [
-            sys.executable,
-            "-c",
-            _RAND_SCRIPT.format(
-                repo=REPO, lineitem=LINEITEM, jar=JAR, cases=cases
-            ),
-        ],
-        capture_output=True,
-        text=True,
-        timeout=540,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    line = next(
-        ln for ln in proc.stdout.splitlines()
-        if ln.startswith("RAND_RESULT ")
-    )
-    got = json.loads(line[len("RAND_RESULT "):])
+    got = _randomized_agg_cases(shim, cases)
 
     import datetime
     import decimal  # noqa: F401  (repr() of decimal/date values)
