@@ -1,5 +1,7 @@
 """Remote-source surface (SURVEY.md §2.1): the Arrow-IPC-over-HTTP scan
-(`dd_read_arrow`), server-side aggregation (`dd_read_arrow_agg`), split
+(`dd_read_arrow`), server-side aggregation (`dd_read_arrow_agg`: Spark
+SQL aggregate expressions over the base relation filtered by a
+server-dialect `where`, pushed to the server by the reader), split
 introspection (`dd_splits`), the in-memory Arrow IPC buffer scan
 (`dd_scan_arrow_ipc`), and a local wire-protocol server for tests.
 

@@ -18,13 +18,14 @@ split plan fetch + atomic       ``planInputPartitions`` fetches /v1/plan;
   (:158-190, :84-92)              task scheduler replaces the claim counter
 projection pushdown             ``pruneColumns``: the remote SELECT list
   (:246-262, :296)                names only the columns Catalyst needs
-filter pushdown -> SQL WHERE    ``pushFilters`` / ``DdWire.filterToSql``;
-  (FilterToSQL :198-238;          unsupported filters stay post-scan —
-  unsupported stay local :234)    the same partial-pushdown contract
+filter pushdown -> SQL WHERE    ``pushPredicates`` / ``DdSql.translate``;
+  (FilterToSQL :198-238;          untranslatable predicates stay post-scan
+  unsupported stay local :234)    — the same partial-pushdown contract
 aggregation pushdown            ``pushAggregation`` (complete, or split
-  (aggregation_pushdown.cpp)      partials merged by Spark); the
-                                  ``agg_select`` template for
-                                  ``dd_read_arrow_agg(split=True)``
+  (aggregation_pushdown.cpp,      partials merged by Spark); aggregate
+  ExpressionToSQL :56-149)        arguments go through ``DdSql.translate``
+                                  too; ``dd_read_arrow_agg`` is a
+                                  ``groupBy().agg()`` over the reader
 per-split HTTP fetch, whole     ``DdColumnarReader`` streams Arrow batches
   body buffered in memory         into ``ColumnarBatch``es (bounded memory;
   (http_stream_factory.cpp:20)    zstd/lz4 bodies decoded by arrow-java)
@@ -54,7 +55,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 
 _JAR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -168,89 +168,6 @@ def dd_read_arrow_narrow(spark, url: str, plan_fn, **options):
     return plan_fn(dd_read_arrow(spark, url, **options))
 
 
-_SPLIT_SAFE_FNS = ("count", "sum", "min", "max")  # IsSplitSafe set
-
-
-def _parse_single_agg(expr: str) -> tuple[str, bool] | None:
-    """Parse `expr` as EXACTLY one aggregate call ``fn(<args>)`` —
-    nothing before, nothing after — returning (fn_lower, is_distinct),
-    or None if the expression has any other shape.
-
-    The reference gates split safety structurally, per
-    BoundAggregateExpression (aggregation_pushdown.cpp:190-199), so a
-    compound expression like ``max(a) - min(a)`` or ``sum(a)+1`` can
-    never sneak through as "a max". A name-prefix regex could be fooled
-    by exactly those shapes (merging ``max(a)-min(a)`` partials with
-    MAX is silently wrong); this scanner requires the call's closing
-    parenthesis to be the last token, tracking paren depth and
-    single-quoted strings (so ``count(')')`` parses correctly)."""
-    s = expr.strip()
-    m = re.match(r"([A-Za-z_][A-Za-z_0-9]*)\s*\(", s)
-    if not m:
-        return None
-    depth, in_str, end = 0, False, -1
-    i = m.end() - 1
-    while i < len(s):
-        ch = s[i]
-        if in_str:
-            if ch == "'":
-                if i + 1 < len(s) and s[i + 1] == "'":
-                    i += 1  # '' escape
-                else:
-                    in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                end = i
-                break
-        i += 1
-    if end < 0 or s[end + 1 :].strip():
-        return None  # unbalanced, or trailing tokens after the call
-    inner = s[m.end() : end]
-    distinct = re.match(r"\s*distinct\b", inner, re.IGNORECASE) is not None
-    return m.group(1).lower(), distinct
-
-
-def _split_safe_merge(alias: str, expr: str):
-    """Spark-side merge function for a server-computed partial aggregate,
-    or raise if the aggregate is not split-safe.
-
-    Mirrors the reference's ``IsSplitSafe`` gate
-    (aggregation_pushdown.cpp:190-199): only sum/count/count(*)/min/max
-    merge across splits; ``avg`` and ``DISTINCT`` do not (a DISTINCT
-    partial loses cross-split duplicates; an avg partial loses its
-    weight). The expression must BE a single aggregate call — compound
-    expressions (``max(a) - min(a)``, ``sum(a)+1``) are rejected even
-    when every function inside is individually safe, matching the
-    reference's per-BoundAggregateExpression structural check. One
-    unsafe aggregate fails the whole call — the reference falls back to
-    local execution there (:341-343), this builder directs the caller
-    to ``split=False`` (single-stream server-side aggregation) which is
-    contract-equivalent.
-    """
-    from pyspark.sql import functions as F
-
-    parsed = _parse_single_agg(expr)
-    if (
-        parsed is None
-        or parsed[0] not in _SPLIT_SAFE_FNS
-        or parsed[1]
-    ):
-        raise ValueError(
-            f"dd_read_arrow_agg: `{alias}={expr}` is not split-safe "
-            "(split mode pushes only a single sum/count/min/max call "
-            "without DISTINCT, the reference's IsSplitSafe set — use "
-            "split=False for a single-stream server-side aggregate)"
-        )
-    fn = parsed[0]
-    # count partials merge by SUM; sum/min/max merge by themselves
-    return F.sum if fn in ("count", "sum") else getattr(F, fn)
-
-
 def dd_read_arrow_agg(
     spark,
     url: str,
@@ -264,63 +181,41 @@ def dd_read_arrow_agg(
     split: bool = False,
     split_size: int | None = None,
 ):
-    """Aggregation pushdown as an explicit builder: the aggregate runs
-    ON THE SERVER and only the (tiny) aggregated result crosses the
-    wire.
+    """``dd_read_arrow(...).groupBy(*group_by).agg(*aggs)``, with the
+    aggregate pushed to the server by the reader like any other
+    aggregate over it.
 
-    The reference rewrites a host-side aggregate over a remote scan into
-    ``SELECT <aggs> FROM (<orig>) AS _subq [WHERE ..] [GROUP BY ..]``
-    transparently (src/optimizer/aggregation_pushdown.cpp:247-418); the
-    reader's ``agg_select``/``agg_where``/``agg_group_by`` options carry
-    that template (``AggTemplate`` in scala/DdArrowShim.scala). A
-    plain ``dd_read_arrow(...).agg(...)`` gets the same pushdown from
-    the DSv2 reader when Spark can translate the aggregate; this builder
-    sends server-dialect aggregate SQL as written.
+    `aggs` maps output alias -> Spark SQL aggregate expression, e.g.
+    ``{"n": "count(*)", "sum_qty": "sum(l_quantity)"}``; `group_by`
+    columns come first in the output. `where` is a server-dialect
+    predicate over the base relation, applied on the server before
+    anything else (``SELECT * FROM (<base>) AS _subq WHERE <where>``).
 
-    `aggs` maps output alias -> SQL aggregate expression (server
-    dialect), e.g. ``{"n": "count(*)", "sum_qty": "sum(l_quantity)"}``.
-    `group_by` columns are prepended to the SELECT list.
-
-    ``split=True`` is the reference's split-mode aggregation pushdown
-    (aggregation_pushdown.cpp:341-343 + IsSplitSafe :190-199): the base
-    relation is planned into splits (/v1/plan), EACH SPLIT computes the
-    aggregate over its slice server-side, and Spark merges the partials
-    (sum of sums/counts, min of mins, max of maxes) — the aggregation
-    itself distributes across the server fleet instead of running in
-    one stream. The partials arrive through ONE scan relation whose
-    InputPartitions each carry their split's rewritten aggregate SQL
-    (splits planned over base + WHERE), so the driver-side
-    plan is O(1) in split count — a 1000-split fleet costs 1000 tasks,
-    not a 1000-ary union of scan nodes. Only split-safe aggregates are
-    accepted; ``avg`` and ``DISTINCT`` (and any compound expression)
-    raise, directing the caller to ``split=False`` (the reference's
-    fallback contract, expressed explicitly).
+    The reference rewrites a host-side aggregate over a remote scan
+    into ``SELECT <aggs> FROM (<orig>) AS _subq [GROUP BY ..]``
+    (src/optimizer/aggregation_pushdown.cpp:247-418); the reader does
+    the same through Catalyst's aggregate pushdown. Without splits the
+    server computes the final aggregate. With ``split=True`` each split
+    computes partials over its slice and Spark merges them (avg rides
+    along as sum and count partials). When any aggregate cannot be
+    pushed — ``count(DISTINCT ..)`` in split mode, a function the
+    reader cannot translate — Spark aggregates the raw rows instead,
+    with the same result
+    (dd_read_arrow_aggregation_pushdown_split.test_slow:84-141).
     """
+    from pyspark.sql import functions as F
+
     if not aggs:
         raise ValueError("dd_read_arrow_agg: `aggs` must not be empty")
     base = _base_query(sql, source_table, None)
-    keys = list(group_by or [])
-    select = ", ".join(
-        [_quote_key(k) for k in keys]
-        + [f"{expr} AS {alias}" for alias, expr in aggs.items()]
-    )
-
-    merges = (
-        {a: _split_safe_merge(a, e) for a, e in aggs.items()} if split else {}
-    )
-    r = _reader(spark, url, base, auth_token, split, split_size).option(
-        "agg_select", select
-    )
     if where:
-        r = r.option("agg_where", where)
-    if keys:
-        r = r.option("agg_group_by", ",".join(keys))
-    partials = r.load()
-    if not split:
-        return partials  # the server computed the final aggregate
-    grouped = partials.groupBy(*keys) if keys else partials.groupBy()
-    return grouped.agg(
-        *[m(alias).alias(alias) for alias, m in merges.items()]
+        base = f"SELECT * FROM ({base}) AS _subq WHERE {where}"
+    df = dd_read_arrow(
+        spark, url, sql=base, auth_token=auth_token, split=split,
+        split_size=split_size,
+    )
+    return df.groupBy(*(group_by or [])).agg(
+        *[F.expr(e).alias(a) for a, e in aggs.items()]
     )
 
 

@@ -4,15 +4,17 @@
  * `dd_read_arrow_agg` and `dd_read_arrow_narrow` build their frames on
  * it; `format("dd_arrow_dsv2")` reaches it directly.
  *
- * Implements SupportsPushDownRequiredColumns, SupportsPushDownFilters
+ * Implements SupportsPushDownRequiredColumns, SupportsPushDownV2Filters
  * and SupportsPushDownAggregates, so a plain .select()/.filter()/.agg()
  * prunes, filters and aggregates server-side through the reference's
  * SQL rewrite templates (src/scanner/read_arrow_dd.cpp:246-296 for
  * projection, src/optimizer/aggregation_pushdown.cpp:247-418 for
- * aggregation). The `agg_select`/`agg_where`/`agg_group_by` options
- * carry a server-dialect aggregate instead (dd_read_arrow_agg): in
- * split mode every split runs it over its slice and Spark merges the
- * partials above the scan.
+ * aggregation). Pushed predicates and aggregate arguments both go
+ * through one V2 expression translator, `DdSql` (the reference's
+ * ExpressionToSQL); what it declines stays in Spark. In split mode
+ * every split computes the pushed aggregate over its slice and Spark
+ * merges the partials above the scan; an aggregate that cannot merge
+ * across splits is not pushed, and Spark aggregates the raw rows.
  *
  * Schema probe, split planning and reads all run in the JVM: no Python
  * worker starts for a remote scan.
@@ -36,10 +38,10 @@ import scala.collection.JavaConverters._
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector.ipc.ArrowStreamReader
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.{Expression, FieldReference, NamedReference, Transform}
+import org.apache.spark.sql.connector.expressions.{Cast, Expression, GeneralScalarExpression, Literal, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Avg, Count, CountStar, Max, Min, Sum}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.{ArrowUtils, CaseInsensitiveStringMap}
 import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnarBatch, ColumnVector}
@@ -210,112 +212,126 @@ object DdWire {
     }
     schema
   }
+}
 
+/** The one translator from a V2 expression to server SQL, for pushed
+ *  predicates and aggregate arguments alike (the reference's
+ *  ExpressionToSQL, aggregation_pushdown.cpp:56-149). Returns the SQL
+ *  and its Spark type; None = not translatable, and the expression
+ *  stays in Spark (the partial-pushdown contract of FilterToSQL,
+ *  read_arrow_dd.cpp:198-238). */
+object DdSql {
   def quoteIdent(name: String): String = "\"" + name.replace("\"", "\"\"") + "\""
 
-  def sqlLiteral(v: Any): Option[String] = v match {
-    case null => None // comparisons with NULL are never pushable
-    case s: String => Some("'" + s.replace("'", "''") + "'")
-    case b: Boolean => Some(if (b) "TRUE" else "FALSE")
-    case n @ (_: Byte | _: Short | _: Int | _: Long) => Some(n.toString)
-    case f: Float =>
-      if (f.isNaN || f.isInfinite) None else Some(f.toString)
-    case d: Double =>
-      if (d.isNaN || d.isInfinite) None else Some(d.toString)
-    case d: java.math.BigDecimal => Some(d.toPlainString)
-    case d: java.sql.Date => Some(s"DATE '$d'")
-    case t: java.sql.Timestamp => Some(s"TIMESTAMP '$t'")
-    case _ => None
+  def translate(e: Expression, schema: StructType): Option[(String, DataType)] =
+    e match {
+      case r: NamedReference =>
+        // top-level columns only; a longer path is a struct field
+        r.fieldNames() match {
+          case Array(n) =>
+            schema.fields.find(_.name == n).map(f => (quoteIdent(n), f.dataType))
+          case _ => None
+        }
+      case l: Literal[_] => literal(l.value, l.dataType).map((_, l.dataType))
+      case c: Cast =>
+        translate(c.expression, schema).flatMap { case (s, from) =>
+          cast(s, from, c.dataType).map((_, c.dataType))
+        }
+      case g: GeneralScalarExpression =>
+        val args = g.children.toSeq.map(translate(_, schema))
+        if (args.exists(_.isEmpty)) None
+        else scalar(g, args.flatten)
+      case _ => None
+    }
+
+  private def scalar(
+      g: GeneralScalarExpression,
+      args: Seq[(String, DataType)]): Option[(String, DataType)] = {
+    def bool(s: String) = Some((s, BooleanType))
+    (g.name, args.map(_._1)) match {
+      case (op @ ("AND" | "OR"), Seq(l, r)) => bool(s"($l $op $r)")
+      case ("NOT", Seq(x)) => bool(s"(NOT $x)")
+      case ("IS_NULL", Seq(x)) => bool(s"$x IS NULL")
+      case ("IS_NOT_NULL", Seq(x)) => bool(s"$x IS NOT NULL")
+      case (op @ ("=" | "<>" | "<" | "<=" | ">" | ">="), Seq(l, r)) =>
+        bool(s"$l $op $r")
+      case ("<=>", Seq(l, r)) => bool(s"$l IS NOT DISTINCT FROM $r")
+      case ("IN", x +: vs) if vs.nonEmpty =>
+        bool(s"$x IN (" + vs.mkString(", ") + ")")
+      case (op @ ("STARTS_WITH" | "ENDS_WITH" | "CONTAINS"), Seq(x, _)) =>
+        g.children()(1) match {
+          case l: Literal[_] if l.dataType == StringType =>
+            val pre = if (op == "STARTS_WITH") "" else "%"
+            val post = if (op == "ENDS_WITH") "" else "%"
+            bool(s"$x LIKE '$pre" + likeEscape(l.value.toString) +
+              s"$post' ESCAPE '\\'")
+          case _ => None
+        }
+      case ("COALESCE", xs) if args.map(_._2).distinct.size == 1 =>
+        Some((s"coalesce(${xs.mkString(", ")})", args.head._2))
+      case _ => None
+    }
   }
 
   private def likeEscape(s: String): String =
     s.replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_")
       .replace("'", "''")
 
-  private def ref(attribute: String): Option[String] = {
-    // only top-level columns; a dotted name would be a struct path
-    if (attribute.contains(".")) None else Some(quoteIdent(attribute))
-  }
+  private val Timestamp =
+    java.time.format.DateTimeFormatter.ofPattern("uuuu-MM-dd HH:mm:ss.SSSSSS")
 
-  /** v1 Filter -> server SQL predicate; None = not pushable (stays a
-   *  post-scan filter — the partial-pushdown contract of FilterToSQL,
-   *  read_arrow_dd.cpp:198-238, plus IN, LIKE and boolean
-   *  connectives). */
-  def filterToSql(f: Filter): Option[String] = f match {
-    case EqualTo(a, v) =>
-      for (r <- ref(a); l <- sqlLiteral(v)) yield s"$r = $l"
-    case EqualNullSafe(a, v) =>
-      val lit = sqlLiteral(v)
-      ref(a).flatMap { r =>
-        if (v == null) Some(s"$r IS NULL")
-        else lit.map(l => s"$r IS NOT DISTINCT FROM $l")
-      }
-    case GreaterThan(a, v) =>
-      for (r <- ref(a); l <- sqlLiteral(v)) yield s"$r > $l"
-    case GreaterThanOrEqual(a, v) =>
-      for (r <- ref(a); l <- sqlLiteral(v)) yield s"$r >= $l"
-    case LessThan(a, v) =>
-      for (r <- ref(a); l <- sqlLiteral(v)) yield s"$r < $l"
-    case LessThanOrEqual(a, v) =>
-      for (r <- ref(a); l <- sqlLiteral(v)) yield s"$r <= $l"
-    case In(a, vs) =>
-      if (vs == null || vs.isEmpty) None
-      else {
-        val lits = vs.map(sqlLiteral)
-        if (lits.exists(_.isEmpty)) None
-        else ref(a).map(r => s"$r IN (" + lits.flatten.mkString(", ") + ")")
-      }
-    case IsNull(a) => ref(a).map(r => s"$r IS NULL")
-    case IsNotNull(a) => ref(a).map(r => s"$r IS NOT NULL")
-    case StringStartsWith(a, v) =>
-      ref(a).map(r => s"$r LIKE '" + likeEscape(v) + "%' ESCAPE '\\'")
-    case StringEndsWith(a, v) =>
-      ref(a).map(r => s"$r LIKE '%" + likeEscape(v) + "' ESCAPE '\\'")
-    case StringContains(a, v) =>
-      ref(a).map(r => s"$r LIKE '%" + likeEscape(v) + "%' ESCAPE '\\'")
-    case And(l, r) =>
-      for (ls <- filterToSql(l); rs <- filterToSql(r))
-        yield s"($ls AND $rs)"
-    case Or(l, r) =>
-      for (ls <- filterToSql(l); rs <- filterToSql(r))
-        yield s"($ls OR $rs)"
-    case Not(c) => filterToSql(c).map(s => s"(NOT $s)")
+  /** A Catalyst literal value (`LiteralValue` carries the internal
+   *  form: UTF8String, epoch days, epoch microseconds, Decimal). */
+  private def literal(v: Any, t: DataType): Option[String] = (v, t) match {
+    case (null, _) => None // comparisons with NULL are never pushable
+    case (s, StringType) => Some("'" + s.toString.replace("'", "''") + "'")
+    case (b: Boolean, BooleanType) => Some(if (b) "TRUE" else "FALSE")
+    case (n, ByteType | ShortType | IntegerType | LongType) => Some(n.toString)
+    // an exponent makes DuckDB read a DOUBLE; a bare 0.1 is a DECIMAL
+    // whose conversion to DOUBLE can miss the nearest double
+    case (d: Double, DoubleType) if java.lang.Double.isFinite(d) =>
+      val s = d.toString
+      Some(if (s.contains('E')) s else s + "E0")
+    case (f: Float, FloatType) if java.lang.Float.isFinite(f) =>
+      Some(s"CAST('$f' AS REAL)")
+    case (d: Decimal, _: DecimalType) => Some(d.toJavaBigDecimal.toPlainString)
+    case (d: Int, DateType) =>
+      val day = java.time.LocalDate.ofEpochDay(d)
+      if (day.getYear < 1 || day.getYear > 9999) None
+      else Some(s"DATE '$day'")
+    case (us: Long, TimestampNTZType) => timestamp(us).map(ts => s"TIMESTAMP '$ts'")
+    case (us: Long, TimestampType) => timestamp(us).map(ts => s"TIMESTAMPTZ '$ts+00'")
     case _ => None
   }
-}
 
-/** The reference's aggregation-pushdown rewrite template
- *  (aggregation_pushdown.cpp:247-418) in server dialect, as
- *  dd_read_arrow_agg sends it: `select` is the aggregate list (group
- *  keys first), `where` an optional predicate, `groupBy` the unquoted
- *  key names. Without splits the server computes the final aggregate;
- *  with splits each split computes a partial. */
-case class AggTemplate(select: String, where: String, groupBy: Seq[String]) {
-  private def whereClause: String =
-    if (where == null || where.isEmpty) "" else s" WHERE $where"
-
-  def wrap(rel: String): String = {
-    val gb =
-      if (groupBy.isEmpty) ""
-      else " GROUP BY " + groupBy.map(DdWire.quoteIdent).mkString(", ")
-    s"SELECT $select FROM ($rel) AS _subq$whereClause$gb"
+  private def timestamp(us: Long): Option[String] = {
+    val ts = java.time.LocalDateTime.ofEpochSecond(
+      Math.floorDiv(us, 1000000L), (Math.floorMod(us, 1000000L) * 1000).toInt,
+      java.time.ZoneOffset.UTC)
+    if (ts.getYear < 1 || ts.getYear > 9999) None else Some(Timestamp.format(ts))
   }
 
-  /** The relation splits are planned over: base + WHERE, so a selective
-   *  predicate shrinks the split count. wrap() re-applies the WHERE per
-   *  split, which is idempotent. */
-  def filtered(base: String): String =
-    if (whereClause.isEmpty) base
-    else s"SELECT * FROM ($base) AS _subq$whereClause"
-}
+  private val Integral = Map[DataType, String](ByteType -> "TINYINT",
+    ShortType -> "SMALLINT", IntegerType -> "INTEGER", LongType -> "BIGINT")
 
-object AggTemplate {
-  def fromOptions(opts: CaseInsensitiveStringMap): Option[AggTemplate] =
-    Option(opts.get("agg_select")).filter(_.nonEmpty).map { sel =>
-      val keys = Option(opts.get("agg_group_by")).filter(_.nonEmpty)
-        .map(_.split(",").map(_.trim).toSeq).getOrElse(Seq.empty)
-      AggTemplate(sel, opts.get("agg_where"), keys)
+  /** CASTs with the same result in both dialects. DuckDB rounds a
+   *  fractional value cast to an integer (2.7 -> 3) where Spark
+   *  truncates (2.7 -> 2), so that cast truncates first. */
+  private def cast(s: String, from: DataType, to: DataType): Option[String] = {
+    def as(t: String) = Some(s"CAST($s AS $t)")
+    val integral = Integral.contains(from)
+    (from, to) match {
+      case _ if from == to => Some(s)
+      case _ if Integral.contains(to) && integral => as(Integral(to))
+      case (FloatType | DoubleType | _: DecimalType, _) if Integral.contains(to) =>
+        Some(s"CAST(trunc($s) AS ${Integral(to)})")
+      case (FloatType, DoubleType) => as("DOUBLE")
+      case (_, DoubleType) if integral => as("DOUBLE")
+      case (f: DecimalType, d: DecimalType) if f.scale <= d.scale => as(d.sql)
+      case (_, d: DecimalType) if integral => as(d.sql)
+      case _ => None
     }
+  }
 }
 
 // ------------------------------------------------------------ provider
@@ -333,14 +349,9 @@ class DdArrowDataSource extends TableProvider
       "dd_arrow_dsv2 needs option 'query' or 'path'")
   }
 
-  // With an aggregate template the probe wraps the WHOLE base relation
-  // in it: one round trip yields the schema every split partial shares.
-  override def inferSchema(opts: CaseInsensitiveStringMap): StructType = {
-    val base = baseQuery(opts)
-    DdWire.probeSchema(opts.get("url"),
-      AggTemplate.fromOptions(opts).fold(base)(_.wrap(base)),
+  override def inferSchema(opts: CaseInsensitiveStringMap): StructType =
+    DdWire.probeSchema(opts.get("url"), baseQuery(opts),
       opts.getOrDefault("token", ""))
-  }
 
   override def getTable(
       schema: StructType,
@@ -350,8 +361,7 @@ class DdArrowDataSource extends TableProvider
     new DdTable(schema, opts.get("url"), baseQuery(opts),
       opts.getOrDefault("token", ""),
       opts.getBoolean("split", false),
-      opts.getLong("split_size", 0L),
-      AggTemplate.fromOptions(opts))
+      opts.getLong("split_size", 0L))
   }
 
   override def supportsExternalMetadata(): Boolean = true
@@ -363,16 +373,14 @@ class DdTable(
     base: String,
     token: String,
     split: Boolean,
-    splitSize: Long,
-    template: Option[AggTemplate]) extends Table with SupportsRead {
+    splitSize: Long) extends Table with SupportsRead {
   override def name(): String = s"dd_arrow($base)"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(
       opts: CaseInsensitiveStringMap): ScanBuilder =
-    new DdScanBuilder(tableSchema, url, base, token, split, splitSize,
-      template)
+    new DdScanBuilder(tableSchema, url, base, token, split, splitSize)
 }
 
 // --------------------------------------------------------- scan builder
@@ -383,59 +391,42 @@ class DdScanBuilder(
     base: String,
     token: String,
     split: Boolean,
-    splitSize: Long,
-    template: Option[AggTemplate])
+    splitSize: Long)
   extends ScanBuilder
   with SupportsPushDownRequiredColumns
-  with SupportsPushDownFilters
+  with SupportsPushDownV2Filters
   with SupportsPushDownAggregates {
 
   private var required: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
+  private var pushed: Array[Predicate] = Array.empty
   private var whereSql: Seq[String] = Seq.empty
   private var aggSelect: Option[Seq[String]] = None
   private var aggGroupBy: Seq[String] = Seq.empty
   private var aggSchema: Option[StructType] = None
   private var aggInputCols: Seq[String] = Seq.empty
 
-  // ---- filters (partial-pushdown contract: unsupported filters are
-  // returned and re-evaluated by Spark above the scan). Under an
-  // aggregate template the scan yields aggregate rows — in split mode,
-  // partials Spark still has to merge — so nothing is consumed; the
-  // template carries its own WHERE.
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    if (template.isDefined) return filters
-    val (ok, rest) =
-      filters.partition(f => DdWire.filterToSql(f).isDefined)
+  private def sql(e: Expression): Option[(String, DataType)] =
+    DdSql.translate(e, fullSchema)
+
+  // ---- filters (partial-pushdown contract: untranslatable predicates
+  // are returned and re-evaluated by Spark above the scan)
+  override def pushPredicates(predicates: Array[Predicate]): Array[Predicate] = {
+    val (ok, rest) = predicates.partition(p => sql(p).isDefined)
     pushed = ok
-    whereSql = ok.toSeq.flatMap(DdWire.filterToSql)
+    whereSql = ok.toSeq.flatMap(sql).map(_._1)
     rest
   }
-  override def pushedFilters(): Array[Filter] = pushed
+  override def pushedPredicates(): Array[Predicate] = pushed
 
   // ---- projection
-  // (an aggregate template's output stays whole: it is a few rows)
   override def pruneColumns(requiredSchema: StructType): Unit = {
-    if (template.isEmpty) required = requiredSchema
+    required = requiredSchema
   }
 
-  // ---- aggregation (complete pushdown only: the server computes the
-  // final aggregate — the reference's rewrite template. Types are
+  // ---- aggregation (the reference's rewrite template. Types are
   // pinned with explicit CASTs to Spark's own aggregate result types,
   // the A5 HUGEINT->DECIMAL discipline: DuckDB's sum(BIGINT) is
   // HUGEINT, which would arrive as decimal128 without the CAST.)
-  private def col(e: Expression): Option[String] = e match {
-    case r: NamedReference if r.fieldNames().length == 1 =>
-      Some(DdWire.quoteIdent(r.fieldNames()(0)))
-    case _ => None
-  }
-
-  private def fieldOf(e: Expression): Option[StructField] = e match {
-    case r: NamedReference if r.fieldNames().length == 1 =>
-      fullSchema.fields.find(_.name == r.fieldNames()(0))
-    case _ => None
-  }
-
   private def sparkSumType(in: DataType): Option[DataType] = in match {
     case ByteType | ShortType | IntegerType | LongType => Some(LongType)
     case FloatType | DoubleType => Some(DoubleType)
@@ -443,44 +434,45 @@ class DdScanBuilder(
       // Spark's sum(DECIMAL(p,s)) result type is DECIMAL(min(38,
       // p+10), s); the explicit CAST below makes the server (whose
       // own sum widens to DECIMAL(38,s) via HUGEINT) return exactly
-      // that — the A5 type-reconciliation discipline, now covering
-      // decimals (round 7; previously excluded)
+      // that — the A5 type-reconciliation discipline
       Some(DecimalType(math.min(38, d.precision + 10), d.scale))
     case _ => None
   }
 
+  /** Group keys and min/max arguments reach Spark in their own type,
+   *  so a literal-only one stays in Spark: DuckDB types a bare literal
+   *  by its value (5 is an INTEGER even where Spark's literal is a
+   *  BIGINT) and reads an integer GROUP BY term as a column position. */
+  private def typed(e: Expression): Option[(String, DataType)] =
+    if (e.references().isEmpty) None else sql(e)
+
   private def translateAgg(
       f: AggregateFunc): Option[(String, DataType)] = f match {
     case _: CountStar => Some(("CAST(count(*) AS BIGINT)", LongType))
-    case c: Count if !c.isDistinct =>
-      col(c.column).map(r => (s"CAST(count($r) AS BIGINT)", LongType))
     case c: Count =>
-      col(c.column).map(r =>
-        (s"CAST(count(DISTINCT $r) AS BIGINT)", LongType))
-    case m: Min =>
-      for (r <- col(m.column); fl <- fieldOf(m.column))
-        yield (s"min($r)", fl.dataType)
-    case m: Max =>
-      for (r <- col(m.column); fl <- fieldOf(m.column))
-        yield (s"max($r)", fl.dataType)
+      val d = if (c.isDistinct) "DISTINCT " else ""
+      sql(c.column).map { case (r, _) =>
+        (s"CAST(count($d$r) AS BIGINT)", LongType)
+      }
+    case m: Min => typed(m.column).map { case (r, t) => (s"min($r)", t) }
+    case m: Max => typed(m.column).map { case (r, t) => (s"max($r)", t) }
     case s: Sum if !s.isDistinct =>
       for {
-        r <- col(s.column)
-        fl <- fieldOf(s.column)
-        out <- sparkSumType(fl.dataType)
+        (r, t) <- sql(s.column)
+        out <- sparkSumType(t)
       } yield {
         // decimal sums: TRY_CAST, not CAST — Spark's non-ANSI
         // sum(DECIMAL) returns NULL when the widened result type
         // overflows, while DuckDB's CAST raises a query error; the
-        // TRY_CAST mirrors Spark's null-on-overflow semantics
-        // (advisor finding r7). Integer sums keep the plain CAST:
-        // the server's HUGEINT sum fits BIGINT whenever Spark's own
-        // long accumulator hasn't already wrapped.
+        // TRY_CAST mirrors Spark's null-on-overflow semantics.
+        // Integer sums keep the plain CAST: the server's HUGEINT sum
+        // fits BIGINT whenever Spark's own long accumulator hasn't
+        // already wrapped.
         val cast = out match {
           case _: DecimalType => "TRY_CAST"
           case _ => "CAST"
         }
-        (s"$cast(sum($r) AS ${ddType(out)})", out)
+        (s"$cast(sum($r) AS ${out.sql})", out)
       }
     case a: Avg =>
       // Spark offers Avg for COMPLETE pushdown only; if we decline it
@@ -489,9 +481,8 @@ class DdScanBuilder(
       // decimals keep their widened-decimal result and stay on the
       // decomposed path (the A5 type-reconciliation discipline).
       for {
-        r <- col(a.column)
-        fl <- fieldOf(a.column)
-        if avgIsDouble(fl.dataType)
+        (r, t) <- sql(a.column)
+        if avgIsDouble(t)
       } yield {
         val d = if (a.isDistinct) "DISTINCT " else ""
         (s"CAST(avg($d$r) AS DOUBLE)", DoubleType)
@@ -505,23 +496,16 @@ class DdScanBuilder(
     case _ => false
   }
 
-  private def ddType(t: DataType): String = t match {
-    case LongType => "BIGINT"
-    case DoubleType => "DOUBLE"
-    case d: DecimalType => s"DECIMAL(${d.precision},${d.scale})"
-    case _ => throw new IllegalArgumentException(t.toString)
-  }
-
   // Complete pushdown only without splits: the server computes ONE
   // final aggregate. In split mode we instead accept PARTIAL pushdown
   // (below) — each split computes its slice's aggregate server-side
   // and Spark merges the partials, the reference's split-mode
   // pushdown (aggregation_pushdown.cpp IsSplitSafe contract).
   override def supportCompletePushDown(agg: Aggregation): Boolean =
-    !split && template.isEmpty && translatable(agg)
+    !split && translatable(agg)
 
   private def translatable(agg: Aggregation): Boolean = {
-    agg.groupByExpressions().forall(e => col(e).isDefined) &&
+    agg.groupByExpressions().forall(e => typed(e).isDefined) &&
     agg.aggregateExpressions().forall(f => translateAgg(f).isDefined)
   }
 
@@ -539,94 +523,52 @@ class DdScanBuilder(
     }
 
   override def pushAggregation(agg: Aggregation): Boolean = {
-    if (template.isDefined || !translatable(agg)) return false
+    if (!translatable(agg)) return false
     if (split && !splitSafe(agg)) return false
-    val gb = agg.groupByExpressions().toSeq.flatMap(col)
-    val gbFields = agg.groupByExpressions().toSeq.flatMap(fieldOf)
+    val keys = agg.groupByExpressions().toSeq.flatMap(typed)
     val aggs = agg.aggregateExpressions().toSeq.flatMap(translateAgg)
-    val selects = gb.zipWithIndex.map { case (g, i) =>
-      s"$g AS ${DdWire.quoteIdent(s"g_$i")}"
+    val selects = keys.zipWithIndex.map { case ((g, _), i) =>
+      s"$g AS ${DdSql.quoteIdent(s"g_$i")}"
     } ++ aggs.zipWithIndex.map { case ((sql, _), i) =>
-      s"$sql AS ${DdWire.quoteIdent(s"a_$i")}"
+      s"$sql AS ${DdSql.quoteIdent(s"a_$i")}"
     }
     aggSelect = Some(selects)
-    aggGroupBy = gb
+    aggGroupBy = keys.map(_._1)
     aggSchema = Some(StructType(
-      gbFields.zipWithIndex.map { case (f, i) =>
-        StructField(s"g_$i", f.dataType, f.nullable)
-      } ++ aggs.zipWithIndex.map { case ((_, dt), i) =>
-        StructField(s"a_$i", dt, nullable = true)
-      }))
-    // columns the per-split agg template reads (split planning prunes
+      keys.zipWithIndex.map { case ((_, dt), i) => StructField(s"g_$i", dt) } ++
+      aggs.zipWithIndex.map { case ((_, dt), i) => StructField(s"a_$i", dt) }))
+    // columns the per-split aggregate reads (split planning prunes
     // the base relation to these before /v1/plan)
-    aggInputCols = (
-      gb ++ agg.aggregateExpressions().toSeq.flatMap {
-        case c: Count => col(c.column).toSeq
-        case m: Min => col(m.column).toSeq
-        case m: Max => col(m.column).toSeq
-        case s: Sum => col(s.column).toSeq
-        case a: Avg => col(a.column).toSeq
-        case _ => Seq.empty
-      }
-    ).distinct
+    aggInputCols = (agg.groupByExpressions() ++ agg.aggregateExpressions())
+      .toSeq.flatMap(_.references().toSeq)
+      .map(r => DdSql.quoteIdent(r.fieldNames()(0))).distinct
     true
   }
 
-  // ---- final SQL
-  private def buildSql(): String = {
-    val rel = s"($base) __dd_t"
+  override def build(): Scan = {
     val where =
       if (whereSql.isEmpty) "" else " WHERE " + whereSql.mkString(" AND ")
-    aggSelect match {
-      case Some(sel) =>
-        val gb =
-          if (aggGroupBy.isEmpty) ""
-          else " GROUP BY " + aggGroupBy.mkString(", ")
-        s"SELECT ${sel.mkString(", ")} FROM $rel$where$gb"
-      case None =>
-        val cols =
-          if (required.fields.isEmpty) "42 AS \"__dd_dummy\""
-          else required.fields.map(f => DdWire.quoteIdent(f.name))
-            .mkString(", ")
-        s"SELECT $cols FROM $rel$where"
+    val gb =
+      if (aggGroupBy.isEmpty) "" else " GROUP BY " + aggGroupBy.mkString(", ")
+    def list(cols: Seq[String]) =
+      if (cols.isEmpty) "42 AS \"__dd_dummy\"" else cols.mkString(", ")
+    val rawCols = required.fields.toSeq.map(f => DdSql.quoteIdent(f.name))
+    val sql = aggSelect match {
+      case Some(sel) => s"SELECT ${sel.mkString(", ")} FROM ($base) __dd_t$where$gb"
+      case None => s"SELECT ${list(rawCols)} FROM ($base) __dd_t$where"
     }
-  }
-
-  override def build(): Scan = template match {
-    case Some(t) =>
-      new DdScan(fullSchema, url, t.wrap(base), token, pushed,
-        aggPushed = false, emptyProjection = false,
-        split = split, splitSize = splitSize,
-        splitPlanSql = t.filtered(base), wrapSplit = t.wrap)
-    case None => buildPushed()
-  }
-
-  private def buildPushed(): Scan = {
-    val schema = aggSchema.getOrElse(required)
     // Split planning runs over the PRUNED+FILTERED base relation;
     // with a (partial) aggregate pushed, each split's rewritten slice
-    // is wrapped with the agg template so the server computes the
+    // is wrapped with the aggregate so the server computes the
     // slice's partials and Spark merges them (plain splits when no
-    // agg is pushed).
-    val planCols =
-      if (aggSelect.isDefined) {
-        if (aggInputCols.isEmpty) "42 AS \"__dd_dummy\""
-        else aggInputCols.mkString(", ")
-      } else if (required.fields.isEmpty) "42 AS \"__dd_dummy\""
-      else required.fields.map(f => DdWire.quoteIdent(f.name))
-        .mkString(", ")
-    val where =
-      if (whereSql.isEmpty) "" else " WHERE " + whereSql.mkString(" AND ")
-    val splitPlanSql = s"SELECT $planCols FROM ($base) __dd_t$where"
-    val gbClause =
-      if (aggGroupBy.isEmpty) ""
-      else " GROUP BY " + aggGroupBy.mkString(", ")
+    // aggregate is pushed).
+    val planCols = if (aggSelect.isDefined) aggInputCols else rawCols
+    val splitPlanSql = s"SELECT ${list(planCols)} FROM ($base) __dd_t$where"
     val wrapSplit: String => String = aggSelect match {
-      case Some(sel) =>
-        q => s"SELECT ${sel.mkString(", ")} FROM ($q) __dd_s$gbClause"
+      case Some(sel) => q => s"SELECT ${sel.mkString(", ")} FROM ($q) __dd_s$gb"
       case None => identity
     }
-    new DdScan(schema, url, buildSql(), token, pushed,
+    new DdScan(aggSchema.getOrElse(required), url, sql, token, pushed,
       aggSelect.isDefined, emptyProjection = required.fields.isEmpty
         && aggSelect.isEmpty,
       split = split, splitSize = splitSize,
@@ -641,7 +583,7 @@ class DdScan(
     url: String,
     sql: String,
     token: String,
-    pushed: Array[Filter],
+    pushed: Array[Predicate],
     aggPushed: Boolean,
     emptyProjection: Boolean,
     split: Boolean = false,
@@ -658,7 +600,7 @@ class DdScan(
   override def planInputPartitions(): Array[InputPartition] =
     if (split) {
       // each split is the server's rewritten slice of splitPlanSql;
-      // with an aggregate pushed or templated, wrapSplit makes the
+      // with an aggregate pushed, wrapSplit makes the
       // server compute the slice's partials (Spark merges above)
       DdWire.fetchPlan(url, splitPlanSql, splitSize, token)
         .zipWithIndex.map { case ((eps, q), i) =>

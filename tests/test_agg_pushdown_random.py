@@ -1,19 +1,18 @@
 """Randomized differential for the remote aggregation-pushdown builder.
 
-`dd_read_arrow_agg` emits the reference's rewrite template
-(``SELECT <aggs> FROM (<orig>) AS _subq [WHERE] [GROUP BY]``) and runs
-the aggregate server-side (src/optimizer/aggregation_pushdown.cpp:
-247-418 behavior).  The reference's own oracle is "pushdown equals
-local execution" over fixed queries; this module randomizes it:
-random aggregate sets (count(*)/count/sum/min/max/avg/count DISTINCT —
-exactly the reference's supported set, aggregation_pushdown.cpp:
-206-209) over random columns, optional GROUP BY and WHERE, compared
-against Spark executing the *same SQL text* on the parquet directly.
-Engine-vs-engine: DuckDB computes the pushed aggregate on the server,
-Spark computes the local twin; values must agree (floats to 1e-9
-relative — avg over DOUBLE is association-order-dependent; DuckDB
-sum(BIGINT) arrives as DECIMAL(38,0) where Spark's is LONG, so cells
-are compared numerically, not by type).
+`dd_read_arrow_agg` is a ``groupBy().agg()`` over the remote reader,
+which pushes the aggregate to the server as the reference's rewrite
+template (``SELECT <aggs> FROM (<orig>) AS _subq [GROUP BY]``,
+src/optimizer/aggregation_pushdown.cpp:247-418 behavior).  The
+reference's own oracle is "pushdown equals local execution" over fixed
+queries; this module randomizes it: random aggregate sets
+(count(*)/count/sum/min/max/avg/count DISTINCT — the reference's
+supported set, aggregation_pushdown.cpp:206-209 — plus CAST and
+COALESCE arguments) over random columns, optional GROUP BY and WHERE,
+compared against Spark executing the *same SQL text* on the parquet
+directly.  Engine-vs-engine: DuckDB computes the pushed aggregate on
+the server, Spark computes the local twin; values must agree (floats
+to 1e-9 relative — avg over DOUBLE is association-order-dependent).
 """
 
 from __future__ import annotations
@@ -22,9 +21,11 @@ import math
 import os
 from decimal import Decimal
 
+import duckdb
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.errors import AnalysisException
 
 from dazzleduck_sql_duckdb_spark.sources import dd_read_arrow_agg, register
 from dazzleduck_sql_duckdb_spark.sources.local_server import ArrowTestServer
@@ -33,9 +34,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 ORDERS = os.path.join(SF_DIR, "orders.parquet")
 
 _NUM = ["o_orderkey", "o_custkey", "o_totalprice"]
+# argument expressions the reader translates: o_totalprice has cents, so
+# a cast that rounds where Spark truncates gives a different sum
+_EXPR_AGGS = ["sum(CAST(o_totalprice AS BIGINT))", "sum(coalesce(o_orderkey, 0))"]
 
 _agg_expr = st.one_of(
     st.just("count(*)"),
+    st.sampled_from(_EXPR_AGGS),
     st.builds(lambda c: f"count({c})", st.sampled_from(_NUM)),
     st.builds(lambda c: f"sum({c})", st.sampled_from(_NUM)),
     st.builds(lambda c: f"min({c})", st.sampled_from(_NUM)),
@@ -132,6 +137,7 @@ def test_agg_pushdown_equals_local_spark(registered, server, aggs, grp, whr):
 
 _safe_agg_expr = st.one_of(
     st.just("count(*)"),
+    st.sampled_from(_EXPR_AGGS),
     st.builds(lambda c: f"count({c})", st.sampled_from(_NUM)),
     st.builds(lambda c: f"sum({c})", st.sampled_from(_NUM)),
     st.builds(lambda c: f"min({c})", st.sampled_from(_NUM)),
@@ -201,65 +207,135 @@ def test_split_agg_partials_ran_server_side(registered, server):
     # aggregate — the partials really ran on the server, per split
     wire = [q for q in server.queries if "hash(_b)" in q]
     assert len(wire) >= 2, f"expected >=2 split queries, saw {server.queries}"
-    assert all("count(*)" in q and "sum(o_totalprice)" in q for q in wire)
+    assert all("count(*)" in q and 'sum("o_totalprice")' in q for q in wire)
     # schema is probed ONCE and reused across splits: exactly one
     # LIMIT-0 round trip regardless of split count
     probes = [q for q in server.queries if "LIMIT 0" in q]
     assert len(probes) == 1, f"expected 1 schema probe, saw {probes}"
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _remote_sql(plan: str) -> str:
+    return plan.split("RemoteSql: ", 1)[1].split("\n", 1)[0]
+
+
+def _split_equals_duckdb(registered, server, aggs):
+    """Run `aggs` in split mode, assert every cell equals DuckDB on the
+    parquet, and return the executed plan."""
+    df = dd_read_arrow_agg(
+        registered,
+        server.url,
+        source_table="orders",
+        aggs=aggs,
+        split=True,
+        split_size=16384,
+    )
+    got = df.collect()
+    want = duckdb.sql(
+        "SELECT " + ", ".join(aggs.values()) + f" FROM '{ORDERS}'"
+    ).fetchone()
+    assert len(got) == 1
+    for alias, w in zip(aggs, want):
+        assert _cells_equal(got[0][alias], w), (aggs, got, want)
+    return _plan(df)
+
+
 def test_split_agg_rejects_unsafe_aggregates(registered, server):
-    """avg / DISTINCT partials don't merge — the IsSplitSafe contract
-    (one unsafe aggregate fails the whole call, like the reference's
-    whole-query fallback)."""
-    for bad in ({"a": "avg(o_totalprice)"}, {"d": "count(DISTINCT o_custkey)"}):
-        with pytest.raises(ValueError, match="not split-safe"):
-            dd_read_arrow_agg(
-                registered,
-                server.url,
-                source_table="orders",
-                aggs={"n": "count(*)", **bad},
-                split=True,
+    """avg and DISTINCT partials don't merge (the IsSplitSafe set), and
+    the reference then runs the whole aggregate locally with the same
+    result (dd_read_arrow_aggregation_pushdown_split.test_slow:84-141):
+    avg is pushed as sum and count partials that Spark merges, and
+    count DISTINCT is not pushed — Spark aggregates the raw rows, as it
+    does for any aggregate the reader cannot translate."""
+    p = _split_equals_duckdb(
+        registered, server, {"n": "count(*)", "a": "avg(o_totalprice)"}
+    )
+    assert "PushedAggregation: true" in p, p
+    remote = _remote_sql(p)
+    assert "sum(" in remote and "count(" in remote and "avg(" not in remote
+    assert "HashAggregate" in p, p  # Spark merges the partials
+    p = _split_equals_duckdb(
+        registered, server, {"n": "count(*)", "d": "count(DISTINCT o_custkey)"}
+    )
+    assert "PushedAggregation: false" in p, p
+    # min/max of a literal-only argument: DuckDB would type the literal
+    # by its value (INTEGER), not as the BIGINT Spark reads back
+    p = _split_equals_duckdb(
+        registered, server, {"n": "count(*)", "c": "max(CAST(5 AS BIGINT))"}
+    )
+    assert "PushedAggregation: false" in p, p
+
+
+def test_literal_group_key_is_not_pushed(registered, server):
+    """A literal-only group key would reach the server as an integer
+    GROUP BY term, which DuckDB reads as a column position: it is not
+    pushed, and Spark groups the raw rows."""
+    from pyspark.sql import functions as F
+
+    from dazzleduck_sql_duckdb_spark.sources import dd_read_arrow
+
+    for split in (False, True):
+        df = (
+            dd_read_arrow(
+                registered, server.url, source_table="orders", split=split,
+                split_size=16384,
             )
+            .groupBy(F.lit(1).alias("k"))
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        assert "PushedAggregation: false" in _plan(df)
+        assert [tuple(r) for r in df.collect()] == [
+            (1, duckdb.sql(f"SELECT count(*) FROM '{ORDERS}'").fetchone()[0])
+        ]
 
 
 def test_split_agg_rejects_compound_expressions(registered, server):
-    """The IsSplitSafe gate is STRUCTURAL (one aggregate call, nothing
-    else), like the reference's per-BoundAggregateExpression check —
-    'max(a) - min(a)' must not slip through as 'a max' and be merged
-    with MAX (silently wrong partials)."""
-    for bad in (
+    """A compound aggregate expression pushes its aggregate calls as
+    per-split partials and Spark computes the expression over the
+    merged values — 'max(a) - min(a)' is a MAX and a MIN partial, never
+    one partial merged with MAX. A non-aggregate has no aggregate
+    meaning at all and fails analysis."""
+    for expr in (
         "max(o_totalprice) - min(o_totalprice)",
         "sum(o_totalprice)+1",
         "sum(o_totalprice)/sum(o_orderkey)",
         "1 + count(*)",
-        "o_orderkey",
     ):
-        with pytest.raises(ValueError, match="not split-safe"):
-            dd_read_arrow_agg(
-                registered,
-                server.url,
-                source_table="orders",
-                aggs={"b": bad},
-                split=True,
-            )
+        p = _split_equals_duckdb(registered, server, {"b": expr})
+        assert "PushedAggregation: true" in p, (expr, p)
+    remote = _remote_sql(
+        _split_equals_duckdb(
+            registered, server, {"b": "max(o_totalprice) - min(o_totalprice)"}
+        )
+    )
+    assert 'max("o_totalprice")' in remote and 'min("o_totalprice")' in remote
+    with pytest.raises(AnalysisException):
+        dd_read_arrow_agg(
+            registered,
+            server.url,
+            source_table="orders",
+            aggs={"b": "o_orderkey"},
+            split=True,
+        )
 
 
 def test_split_agg_accepts_nested_and_quoted_args(registered, server):
-    """Structural parse must still accept a single call whose ARGUMENT
-    contains parens or quoted strings: sum(coalesce(x, 0)) is one SUM."""
-    out = dd_read_arrow_agg(
-        registered,
-        server.url,
-        source_table="orders",
-        aggs={"s": "sum(coalesce(o_orderkey, 0))"},
-        split=True,
-        split_size=16384,
-    ).collect()
-    local = registered.sql(
-        f"SELECT sum(coalesce(o_orderkey, 0)) AS s FROM parquet.`{ORDERS}`"
-    ).collect()
-    assert _cells_equal(out[0]["s"], local[0]["s"])
+    """Aggregate arguments that are expressions — a fractional-to-integral
+    CAST (which must truncate like Spark, not round like DuckDB) and a
+    COALESCE — are translated and pushed as per-split partials."""
+    for expr in _EXPR_AGGS:
+        df = dd_read_arrow_agg(
+            registered, server.url, source_table="orders", aggs={"s": expr},
+            split=True, split_size=16384,
+        )
+        assert "PushedAggregation: true" in _plan(df), (expr, _plan(df))
+        local = registered.sql(
+            f"SELECT {expr} AS s FROM parquet.`{ORDERS}`"
+        ).collect()
+        assert _cells_equal(df.collect()[0]["s"], local[0]["s"]), expr
 
 
 def test_split_agg_is_one_scan_relation(registered, server):
@@ -314,8 +390,8 @@ def test_split_agg_plans_filtered_relation(registered, server):
     assert _cells_equal(out[0]["mx"], local[0]["mx"])
     wire = [q for q in server.queries if "hash(_b)" in q]
     # filtered relation -> far fewer splits than the ~6 the unfiltered
-    # base would plan; each split query carries the WHERE both inside
-    # the planned slice and re-applied in the template
+    # base would plan; each split query carries the WHERE once, inside
+    # the planned slice
     assert 1 <= len(wire) <= 2, wire
     for w in wire:
-        assert w.count("o_orderkey < 60") >= 2, w
+        assert w.count("o_orderkey < 60") == 1, w

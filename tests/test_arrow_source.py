@@ -101,6 +101,40 @@ def test_filter_pushdown_reaches_server(registered, server):
     assert pushed, f"filter not pushed; server saw: {server.queries}"
 
 
+def test_date_and_timestamp_ntz_filters_reach_server(registered, server):
+    """DuckDB TIMESTAMP columns arrive as timestamp_ntz and DATE columns
+    as date: a comparison with such a literal is pushed whole, not just
+    its inferred IS NOT NULL, and counts what DuckDB counts."""
+    import duckdb
+
+    cases = [
+        ("lineitem", "l_shipdate >= TIMESTAMP_NTZ '1997-01-01'",
+         "l_shipdate >= TIMESTAMP '1997-01-01'",
+         "\"l_shipdate\" >= TIMESTAMP '1997-01-01 00:00:00.000000'"),
+        ("(SELECT CAST(l_shipdate AS DATE) AS d FROM lineitem)",
+         "d >= DATE '1997-01-01'",
+         "CAST(l_shipdate AS DATE) >= DATE '1997-01-01'",
+         "\"d\" >= DATE '1997-01-01'"),
+    ]
+    total = _direct(registered, LINEITEM).count()
+    for rel, spark_pred, duck_pred, wire_pred in cases:
+        server.queries.clear()
+        df = dd_read_arrow(
+            registered, server.url, sql=f"SELECT * FROM {rel}"
+        ).where(spark_pred)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        seg = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+        assert ">=" in seg, seg
+        n = df.count()
+        assert n == duckdb.sql(
+            f"SELECT count(*) FROM '{LINEITEM}' WHERE {duck_pred}"
+        ).fetchone()[0]
+        assert 0 < n < total
+        assert any(
+            "WHERE" in q and wire_pred in q for q in server.queries
+        ), server.queries
+
+
 def test_pushdown_vs_local_execution_equality(registered, server):
     """The reference's pushdown differential
     (dd_read_arrow_aggregation_pushdown_split.test_slow:49-141 spirit):
@@ -489,7 +523,7 @@ def test_agg_pushdown_builder_server_side(registered, server):
         assert got[k][0] == want[k][0]
         assert abs(got[k][1] - want[k][1]) < 1e-6
     # the aggregation text reached the server (not just SELECT *)
-    assert any("GROUP BY" in q and "sum(l_quantity)" in q
+    assert any("GROUP BY" in q and 'sum("l_quantity")' in q
                for q in server.queries)
     with pytest.raises(ValueError):
         dd_read_arrow_agg(registered, server.url, source_table="t", aggs={})
@@ -649,42 +683,78 @@ def test_narrow_helper_derives_pruned_remote_select(registered):
 
 
 def test_filter_to_sql_serialization(registered):
-    """Spark v1 filters -> remote SQL through the reader's own serializer
-    (DdWire.filterToSql); None = not pushed, Spark re-applies it."""
+    """Spark V2 predicates -> remote SQL through the reader's one
+    translator (DdSql.translate); None = not pushed, Spark re-applies
+    it."""
+    from pyspark.sql.types import (
+        DateType, DoubleType, IntegerType, StringType, StructField,
+        StructType, TimestampNTZType, TimestampType,
+    )
+
     jvm = registered._jvm
-    f = jvm.org.apache.spark.sql.sources
-    to_sql = jvm.org.apache.spark.sql.dazzleduck.DdWire.filterToSql
+    gw = registered.sparkContext._gateway
+    ex = jvm.org.apache.spark.sql.connector.expressions
+    flt = ex.filter
+    schema = jvm.org.apache.spark.sql.types.DataType.fromJson(
+        StructType(
+            [StructField(c, IntegerType()) for c in ("a", "b", "k", "x")]
+            + [
+                StructField("p", DoubleType()),
+                StructField("s", StringType()),
+                StructField("d", DateType()),
+                StructField("ts", TimestampNTZType()),
+                StructField("tz", TimestampType()),
+                StructField(
+                    "nested", StructType([StructField("f", IntegerType())])
+                ),
+            ]
+        ).json()
+    )
 
-    def sql(flt):
-        out = to_sql(flt)
-        return out.get() if out.isDefined() else None
+    def sql(p):
+        out = jvm.org.apache.spark.sql.dazzleduck.DdSql.translate(p, schema)
+        return out.get()._1() if out.isDefined() else None
 
-    def objs(*vals):
-        arr = registered.sparkContext._gateway.new_array(
-            jvm.java.lang.Object, len(vals)
-        )
-        for i, v in enumerate(vals):
-            arr[i] = v
-        return arr
+    def pred(name, *children):
+        arr = gw.new_array(ex.Expression, len(children))
+        for i, c in enumerate(children):
+            arr[i] = c
+        return flt.Predicate(name, arr)
 
-    assert sql(f.EqualTo("a", 5)) == '"a" = 5'
-    assert sql(f.GreaterThan("p", 1.5)) == '"p" > 1.5'
-    assert sql(f.EqualTo("s", "o'brien")) == "\"s\" = 'o''brien'"
-    assert sql(f.IsNull("x")) == '"x" IS NULL'
-    assert sql(f.In("k", objs(1, 2, 3))) == '"k" IN (1, 2, 3)'
-    assert (sql(f.StringStartsWith("s", "ab"))
+    col, lit = ex.Expressions.column, ex.Expressions.literal
+    assert sql(pred("=", col("a"), lit(5))) == '"a" = 5'
+    assert sql(pred(">", col("p"), lit(1.5))) == '"p" > 1.5E0'
+    assert sql(pred("=", col("s"), lit("o'brien"))) == "\"s\" = 'o''brien'"
+    assert sql(pred("IS_NULL", col("x"))) == '"x" IS NULL'
+    assert (sql(pred("IN", col("k"), lit(1), lit(2), lit(3)))
+            == '"k" IN (1, 2, 3)')
+    assert (sql(pred("STARTS_WITH", col("s"), lit("ab")))
             == "\"s\" LIKE 'ab%' ESCAPE '\\'")
-    assert (sql(f.StringStartsWith("s", "a_b"))
+    assert (sql(pred("STARTS_WITH", col("s"), lit("a_b")))
             == "\"s\" LIKE 'a\\_b%' ESCAPE '\\'")
-    assert (sql(f.Or(f.EqualTo("a", 1), f.Not(f.IsNotNull("b"))))
+    assert (sql(flt.Or(pred("=", col("a"), lit(1)),
+                       flt.Not(pred("IS_NOT_NULL", col("b")))))
             == '("a" = 1 OR (NOT "b" IS NOT NULL))')
-    assert sql(f.EqualTo("nested.f", 1)) is None  # not pushed
+    assert sql(pred("=", col("nested.f"), lit(1))) is None  # not pushed
+    # dates and both timestamp kinds (DuckDB TIMESTAMP columns arrive
+    # as timestamp_ntz), as Spark hands them over: epoch days and epoch
+    # microseconds; the LTZ instant goes as UTC
+    types = jvm.org.apache.spark.sql.types.DataTypes
+    day = ex.LiteralValue(9131, types.DateType)  # 1995-01-01
+    assert sql(pred(">=", col("d"), day)) == "\"d\" >= DATE '1995-01-01'"
+    us = (9131 * 86400 + 45000) * 10**6 + 250000  # 1995-01-01 12:30:00.25
+    assert (sql(pred("<", col("ts"), ex.LiteralValue(us, types.TimestampNTZType)))
+            == "\"ts\" < TIMESTAMP '1995-01-01 12:30:00.250000'")
+    assert (sql(pred("=", col("tz"), ex.LiteralValue(us, types.TimestampType)))
+            == "\"tz\" = TIMESTAMPTZ '1995-01-01 12:30:00.250000+00'")
     # non-finite floats have no portable SQL literal -> stay local
     inf = jvm.java.lang.Double.POSITIVE_INFINITY
-    assert sql(f.GreaterThan("p", inf)) is None
-    assert sql(f.EqualTo("p", jvm.java.lang.Double.NaN)) is None
+    assert sql(pred(">", col("p"), lit(inf))) is None
+    assert sql(pred("=", col("p"), lit(jvm.java.lang.Double.NaN))) is None
+    assert sql(pred("=", col("p"), lit(jvm.java.lang.Double.NEGATIVE_INFINITY))) is None
     # a conjunction with one unpushable side is not pushed at all
-    assert sql(f.And(f.EqualTo("a", 1), f.EqualTo("p", inf))) is None
+    assert sql(flt.And(pred("=", col("a"), lit(1)),
+                       pred("=", col("p"), lit(inf)))) is None
 
 
 def test_split_load_spreads_across_live_replicas(registered):

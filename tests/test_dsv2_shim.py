@@ -1,7 +1,7 @@
 """DSv2 shim (scala/DdArrowShim.scala): TRANSPARENT pushdown parity.
 
 The shim implements SupportsPushDownRequiredColumns /
-SupportsPushDownFilters / SupportsPushDownAggregates, so a PLAIN
+SupportsPushDownV2Filters / SupportsPushDownAggregates, so a PLAIN
 .select()/.filter()/.agg() over the remote source prunes, filters, and
 aggregates server-side — the reference's optimizer-level pushdowns
 (src/scanner/read_arrow_dd.cpp:246-296,
