@@ -26,11 +26,18 @@ baselines.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
 import random
 from collections.abc import Callable
+from typing import TYPE_CHECKING, NamedTuple
 
 from . import dialect as D
 from .dialect import DUCK, SPARK
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 # ---------------------------------------------------------------- constants
 
@@ -45,7 +52,7 @@ JACCARD_PCT = 85  # threshold as integer percent (exact int math)
 SIMHASH_BITS = 60
 SIMHASH_CHUNK_BITS = 15
 SIMHASH_CHUNKS = 4  # 15-bit chunks; hamming<=3 recall is exact by pigeonhole
-# dedup_simhash mega-bucket guard (optimization r14, r13 verdict #3/#5):
+# dedup_simhash mega-bucket guard:
 # buckets up to this size expand pairs via collect_list (one in-memory
 # buffer of <= CAP structs); larger buckets take the spill-safe
 # sort-merge self-join branch instead, so a template-spam bucket where
@@ -53,7 +60,8 @@ SIMHASH_CHUNKS = 4  # 15-bit chunks; hamming<=3 recall is exact by pigeonhole
 # bucket in a single aggregation buffer. Identical output either way —
 # the branches partition buckets by size, and corpora with n_docs <=
 # CAP provably have no oversized bucket at all (bucket size <= corpus
-# size) so they keep the branch-free r13 plan. 65536 structs x 16
+# size) so they keep the branch-free single-aggregation plan. 65536
+# structs x 16
 # bytes = 1 MB ceiling per aggregation buffer.
 SIMHASH_BUCKET_CAP = 65536
 HAMMING_MAX = 3
@@ -119,9 +127,8 @@ def _roundk(x: str, k: int) -> str:
     at shortest-decimal-repr half boundaries (Spark rounds the
     shortest repr via BigDecimal.valueOf(Double.toString(x)); DuckDB
     rounds the binary value — pinned in
-    tests/test_dialect_boundaries.py). r11 verdict directive #5;
-    generalized from the fixed-scale _round6 in round 13 when the
-    last round(DOUBLE,4) oracle sites (q9) migrated too."""
+    tests/test_dialect_boundaries.py). Any scale k, so sites such as
+    q9's 1e-4 rounding use the same bridge as the 1e-6 _round6."""
     return f"sign({x}) * floor(abs({x}) * 1e{k} + 0.5) / 1e{k}"
 
 
@@ -154,12 +161,27 @@ def _wide_docs(d: str) -> str:
 
 # ---------------------------------------------------------------- catalog
 
-CATALOG: dict[str, Callable[[str], str]] = {}
+class Entry(NamedTuple):
+    """One catalog entry. `sql(dialect)` emits the query for either
+    engine; the DuckDB emission is the entry's oracle. `spark(spark,
+    sf_dir)`, when set, builds the Spark DataFrame instead of the SQL
+    text (DataFrame-API operators, staged plans, remote sources), and
+    the emitter is then only called for DuckDB."""
+
+    name: str
+    sql: Callable[[str], str]
+    spark: Callable[[SparkSession, str], DataFrame] | None = None
 
 
-def q(name: str):
+CATALOG: dict[str, Entry] = {}
+
+
+def q(name: str, spark=None):
+    """Register the decorated emitter as entry `name`, built on the
+    Spark side by `spark` when given."""
+
     def deco(fn):
-        CATALOG[name] = fn
+        CATALOG[name] = Entry(name, fn, spark)
         return fn
 
     return deco
@@ -487,14 +509,13 @@ def _funnel(d: str) -> str:
     key throughout, so stages co-partition (no re-shuffle between
     them); each stage's input shrinks monotonically.
 
-    The Spark side is the single-scan window-cascade form
-    (optimization r14, guide §2.4). The r13 REPARTITION(user_id) hint
-    did NOT deliver its claimed exchange reuse: per-stage filters
-    (event_type = ...) and column pruning push BELOW the hint's
-    exchange, so the six CTE consumer subtrees stay non-identical and
-    AQE stage reuse cannot fire — the after-plan kept 6 events scans
-    and gained an exchange (r13 verdict "what's wrong" #1). The fix
-    computes the whole funnel in one pass: a window cascade
+    The Spark side is the single-scan window-cascade form. A
+    REPARTITION(user_id) hint over the join form does NOT buy exchange
+    reuse: per-stage filters (event_type = ...) and column pruning push
+    BELOW the hint's exchange, so the six CTE consumer subtrees stay
+    non-identical and AQE stage reuse cannot fire (6 events scans and
+    one more exchange). This form computes the whole funnel in one
+    pass: a window cascade
     partitioned by user_id (t0 = min view time; t1 = min click time
     AFTER t0; t2 = min purchase time AFTER t1 — each window reads the
     previous one's output, all three share one hash(user_id)
@@ -563,31 +584,6 @@ SELECT 'stage3_purchase' AS stage, CAST(count(*) AS BIGINT) AS n_users FROM p
 """
 
 
-@q("events_view_click_attribution")
-def _view_click_attr(d: str) -> str:
-    """Views joined to the same user's clicks within 60 min after.
-
-    The SQL below is the ORACLE formulation only (plain equi-join on
-    user_id with a time-range residual — a pathological hot user makes
-    |views|x|clicks| candidate pairs inside one key). The Spark side
-    (SPARK_BUILDERS) routes through operators/joins.range_join_binned:
-    time is bucketed into window-width bins, so the join key becomes
-    (user_id, bin) and candidate pairs are bounded by bin occupancy,
-    never the whole user history. The streaming twin
-    (streaming/pipeline.view_click_attribution) is differential-tested
-    against the same semantics in tests/test_streaming.py."""
-    us = _event_us(d)
-    return f"""
-WITH ev AS (SELECT user_id, event_id, event_type, {us} AS us FROM events)
-SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
-  CAST(c.us - v.us AS BIGINT) AS lag_us
-FROM ev v JOIN ev c
-  ON v.user_id = c.user_id
-  AND v.event_type = 'view' AND c.event_type = 'click'
-  AND c.us > v.us AND c.us <= v.us + 3600000000
-"""
-
-
 def _build_view_click_attr(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
@@ -617,6 +613,31 @@ def _build_view_click_attr(spark, sf_dir: str):
         "user_id", "view_id", "click_id",
         (F.col("c_us") - F.col("v_us")).cast("long").alias("lag_us"),
     )
+
+
+@q("events_view_click_attribution", spark=_build_view_click_attr)
+def _view_click_attr(d: str) -> str:
+    """Views joined to the same user's clicks within 60 min after.
+
+    The SQL below is the ORACLE formulation only (plain equi-join on
+    user_id with a time-range residual — a pathological hot user makes
+    |views|x|clicks| candidate pairs inside one key). The Spark side
+    (_build_view_click_attr) routes through operators/joins.range_join_binned:
+    time is bucketed into window-width bins, so the join key becomes
+    (user_id, bin) and candidate pairs are bounded by bin occupancy,
+    never the whole user history. The streaming twin
+    (streaming/pipeline.view_click_attribution) is differential-tested
+    against the same semantics in tests/test_streaming.py."""
+    us = _event_us(d)
+    return f"""
+WITH ev AS (SELECT user_id, event_id, event_type, {us} AS us FROM events)
+SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
+  CAST(c.us - v.us AS BIGINT) AS lag_us
+FROM ev v JOIN ev c
+  ON v.user_id = c.user_id
+  AND v.event_type = 'view' AND c.event_type = 'click'
+  AND c.us > v.us AND c.us <= v.us + 3600000000
+"""
 
 
 @q("orders_rollup")
@@ -721,35 +742,10 @@ FROM customer WHERE c_custkey % 100 = 0
 """
 
 
-@q("remote_agg_pushdown")
-def _remote_agg_pushdown(d: str) -> str:
-    """Aggregation pushdown parity (SURVEY §2.3 A1-A3): ONE gated row
-    pair hard-verifies BOTH server-side aggregation paths against the
-    oracle — 'single' = the whole aggregate computed by the server in
-    one stream (the reference's non-split optimizer rewrite,
-    'SELECT <aggs> FROM (<orig>) AS _subq WHERE ...'), 'split' = the
-    aggregate computed PER SPLIT on the server with Spark merging the
-    partials (the reference's split-mode pushdown, IsSplitSafe set).
-    Both must hash-match the oracle computing the same aggregate
-    locally; HUGEINT sums arrive as DECIMAL(38,0) and are CAST to
-    BIGINT (the §7.4 type-reconciliation rule)."""
-    return (
-        "WITH r AS (SELECT count(*) AS n,"
-        " sum(CAST(l_quantity AS BIGINT)) AS sum_qty,"
-        " min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price"
-        " FROM lineitem WHERE l_quantity < 25)"
-        " SELECT 'single' AS path, CAST(n AS BIGINT) AS n,"
-        " CAST(sum_qty AS BIGINT) AS sum_qty, min_price, max_price FROM r"
-        " UNION ALL"
-        " SELECT 'split' AS path, CAST(n AS BIGINT) AS n,"
-        " CAST(sum_qty AS BIGINT) AS sum_qty, min_price, max_price FROM r"
-    )
-
-
 def _build_remote_agg_pushdown(spark, sf_dir: str):
     from ..sources import dd_read_arrow, dd_read_arrow_agg
 
-    srv = _server_for(sf_dir)
+    srv = _server(sf_dir)
     remote_sql = (
         "SELECT count(*) AS n, sum(CAST(l_quantity AS BIGINT)) AS sum_qty,"
         " min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price"
@@ -781,6 +777,31 @@ def _build_remote_agg_pushdown(spark, sf_dir: str):
         "min_price", "max_price",
     )
     return single.unionByName(split)
+
+
+@q("remote_agg_pushdown", spark=_build_remote_agg_pushdown)
+def _remote_agg_pushdown(d: str) -> str:
+    """Aggregation pushdown parity (SURVEY §2.3 A1-A3): ONE gated row
+    pair hard-verifies BOTH server-side aggregation paths against the
+    oracle — 'single' = the whole aggregate computed by the server in
+    one stream (the reference's non-split optimizer rewrite,
+    'SELECT <aggs> FROM (<orig>) AS _subq WHERE ...'), 'split' = the
+    aggregate computed PER SPLIT on the server with Spark merging the
+    partials (the reference's split-mode pushdown, IsSplitSafe set).
+    Both must hash-match the oracle computing the same aggregate
+    locally; HUGEINT sums arrive as DECIMAL(38,0) and are CAST to
+    BIGINT (the §7.4 type-reconciliation rule)."""
+    return (
+        "WITH r AS (SELECT count(*) AS n,"
+        " sum(CAST(l_quantity AS BIGINT)) AS sum_qty,"
+        " min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price"
+        " FROM lineitem WHERE l_quantity < 25)"
+        " SELECT 'single' AS path, CAST(n AS BIGINT) AS n,"
+        " CAST(sum_qty AS BIGINT) AS sum_qty, min_price, max_price FROM r"
+        " UNION ALL"
+        " SELECT 'split' AS path, CAST(n AS BIGINT) AS n,"
+        " CAST(sum_qty AS BIGINT) AS sum_qty, min_price, max_price FROM r"
+    )
 
 
 @q("part_brand_stats")
@@ -976,7 +997,7 @@ def _q8(d: str) -> str:
     ratio. Both sums are EXACT decimal arithmetic (_REV discipline),
     so the double ratio is bit-identical across engines; snapped to
     1e-6 via the branchless bridge (_round6 — round(DOUBLE, k)
-    diverges at shortest-repr half boundaries, directive #5). Share
+    diverges at shortest-repr half boundaries). Share
     group = a nation set (the kit's single nation under-selects the
     uniform test corpus)."""
     ga = "('NATION_1','NATION_2','NATION_3')"
@@ -1242,15 +1263,14 @@ def _q17(d: str) -> str:
         " 2) AS DECIMAL(38,2)) AS DOUBLE) / 7.0)"
     )
     # Spark side pre-filters the per-part aggregate's input with the
-    # selective part predicate (optimization r13, guide §2.2 "shuffle
-    # fewer bytes"): only partkeys that survive the brand/type filter
-    # can ever join the main block, and per-group (cnt, total) are
-    # unaffected by dropping whole groups, so the result is identical
-    # (parity-proved). The filtered part list broadcasts into the agg's
-    # scan side, shrinking the agg exchange from all parts to one
-    # brand's parts (~1/1000 at TPC-H selectivity). Measured at sf0.1:
-    # 0.731s -> 0.445s median. Oracle keeps the unfiltered decorrelated
-    # form so equivalence stays externally checked.
+    # selective part predicate (shuffle fewer bytes): only partkeys that
+    # survive the brand/type filter can ever join the main block, and
+    # per-group (cnt, total) are unaffected by dropping whole groups, so the
+    # result is identical (parity-proved). The filtered part list broadcasts
+    # into the agg's scan side, shrinking the agg exchange from all parts to
+    # one brand's parts (~1/1000 at TPC-H selectivity). Measured at sf0.1:
+    # 0.731s -> 0.445s median. Oracle keeps the unfiltered decorrelated form
+    # so equivalence stays externally checked.
     pq_src = (
         "lineitem JOIN bp ON bp.p_partkey = lineitem.l_partkey"
         if d == SPARK else "lineitem"
@@ -1390,7 +1410,7 @@ def _sketch_distinct(d: str) -> str:
     BREAK this gate, see the dialect docstring). HLL estimates are
     merge-order invariant, so the verified booleans are stable.
 
-    Plan shape (A/B-measured at sf0.1, BENCH_NOTES round 9): dedup
+    Plan shape (A/B-measured at sf0.1, see BENCH_NOTES.md): dedup
     FIRST — GROUP BY (type, user) partial-aggregates map-side, one
     shuffle of distinct pairs, then count(*) = the exact cardinality
     and the HLL runs over the already-distinct stream (HLL is
@@ -1448,7 +1468,15 @@ GROUP BY d.lang
 """
 
 
-@q("events_sessionize_native")
+def _build_sessionize_native(spark, sf_dir: str):
+    from ..streaming import sessionize
+
+    return sessionize(spark.table("events")).select(
+        "user_id", "n_events", "start_us", "end_us"
+    )
+
+
+@q("events_sessionize_native", spark=_build_sessionize_native)
 def _sessionize_native(d: str) -> str:
     """Oracle for the native session_window operator (streaming/pipeline
     .py): same lag+cumsum sessionization as events_sessionize, minus the
@@ -1472,14 +1500,6 @@ SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
   CAST(min(us) AS BIGINT) AS start_us, CAST(max(us) AS BIGINT) AS end_us
 FROM s GROUP BY user_id, session_id
 """
-
-
-def _build_sessionize_native(spark, sf_dir: str):
-    from ..streaming import sessionize
-
-    return sessionize(spark.table("events")).select(
-        "user_id", "n_events", "start_us", "end_us"
-    )
 
 
 # ======================================================= dd_* function surface
@@ -1577,7 +1597,27 @@ FROM documents GROUP BY 1
 """
 
 
-@q("dedup_minhash_lsh")
+def _build_minhash_df(spark, sf_dir: str):
+    """DataFrame-API path: numpy-vectorized MinHash (operators/dedup.py).
+
+    Shingle hashing is JVM-native xxhash64 (the oracle never sees the
+    hashes — only the final exact-verified Jaccard values, which match
+    the string-set Jaccard up to a ~2^-60 collision); the signature
+    kernel is numpy (~50x faster than interpreted HOF lambdas at
+    K=128)."""
+    from ..operators.dedup import minhash_neardup_pairs
+
+    return minhash_neardup_pairs(
+        spark.table("documents"),
+        shingle_n=SHINGLE_N,
+        a=MINHASH_A,
+        b=MINHASH_B,
+        bands=BANDS,
+        threshold_pct=JACCARD_PCT,
+    )
+
+
+@q("dedup_minhash_lsh", spark=_build_minhash_df)
 def _minhash_lsh(d: str) -> str:
     """Near-dup pairs at shingle-Jaccard >= 0.85 within language.
 
@@ -1596,9 +1636,9 @@ def _minhash_lsh(d: str) -> str:
         f"100 * {inter} >= {JACCARD_PCT} * ({la} + {lb} - {inter})"
         f" AND 100 * least({la}, {lb}) >= {JACCARD_PCT} * greatest({la}, {lb})"
     )
-    # NB: run_spark() routes the SPARK side to the DataFrame builder
-    # (operators/dedup.py fused kernel); this SQL text is the brute-force
-    # formulation used as the DuckDB oracle.
+    # NB: the entry's builder runs the Spark side (operators/dedup.py
+    # fused kernel); this SQL text is the brute-force formulation used
+    # as the DuckDB oracle.
     return f"""
 WITH docs AS (SELECT doc_id, lang, {sh} AS sh FROM documents)
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, {jac} AS jaccard
@@ -1608,43 +1648,7 @@ WHERE {verify}
 """
 
 
-@q("dedup_stream_screen")
-def _dedup_stream_screen(d: str) -> str:
-    """The streaming near-dup SCREEN's values under the hash gate
-    (streaming/dedup.py neardup_screen_stream): incoming docs are
-    screened against a static MinHash index — the
-    dedupe-new-data-against-the-existing-training-set ingest shape.
-    STATELESS by construction (stream-static joins + the
-    first-shared-band pair dedup predicate), so it runs append-mode
-    with no state store; the stream lifecycle (stream==batch,
-    multi-batch arrival independence) is pinned in
-    tests/test_streaming_neardup.py, and this entry pins the VALUES:
-    self-screening the corpus (kept at in_id < corpus_id) must equal
-    the brute-force pair set. Unlike dedup_minhash_lsh the screen has
-    NO language blocking — an ingest screen must catch cross-lang
-    copies (this corpus has 20 such pairs at sf0.001) — so the oracle
-    is the unblocked brute force."""
-    if d == SPARK:
-        raise NotImplementedError  # builder-backed (SQL form unused)
-    sh = D.shingles("text", SHINGLE_N, d)
-    inter = D.lsize(D.lintersect("a.sh", "b.sh", d), d)
-    la, lb = D.lsize("a.sh", d), D.lsize("b.sh", d)
-    jac = (
-        f"CAST({inter} AS DOUBLE) / CAST({la} + {lb} - {inter} AS DOUBLE)"
-    )
-    verify = (
-        f"100 * {inter} >= {JACCARD_PCT} * ({la} + {lb} - {inter})"
-        f" AND 100 * least({la}, {lb}) >= {JACCARD_PCT} * greatest({la}, {lb})"
-    )
-    return f"""
-WITH docs AS (SELECT doc_id, {sh} AS sh FROM documents)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, {jac} AS jaccard
-FROM docs a JOIN docs b ON a.doc_id < b.doc_id
-WHERE {verify}
-"""
-
-
-def _build_stream_screen(spark):
+def _build_stream_screen(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from ..streaming.dedup import (
@@ -1666,7 +1670,58 @@ def _build_stream_screen(spark):
     )
 
 
-@q("dedup_substring_screen")
+@q("dedup_stream_screen", spark=_build_stream_screen)
+def _dedup_stream_screen(d: str) -> str:
+    """The streaming near-dup SCREEN's values under the hash gate
+    (streaming/dedup.py neardup_screen_stream): incoming docs are
+    screened against a static MinHash index — the
+    dedupe-new-data-against-the-existing-training-set ingest shape.
+    STATELESS by construction (stream-static joins + the
+    first-shared-band pair dedup predicate), so it runs append-mode
+    with no state store; the stream lifecycle (stream==batch,
+    multi-batch arrival independence) is pinned in
+    tests/test_streaming_neardup.py, and this entry pins the VALUES:
+    self-screening the corpus (kept at in_id < corpus_id) must equal
+    the brute-force pair set. Unlike dedup_minhash_lsh the screen has
+    NO language blocking — an ingest screen must catch cross-lang
+    copies (this corpus has 20 such pairs at sf0.001) — so the oracle
+    is the unblocked brute force."""
+    sh = D.shingles("text", SHINGLE_N, d)
+    inter = D.lsize(D.lintersect("a.sh", "b.sh", d), d)
+    la, lb = D.lsize("a.sh", d), D.lsize("b.sh", d)
+    jac = (
+        f"CAST({inter} AS DOUBLE) / CAST({la} + {lb} - {inter} AS DOUBLE)"
+    )
+    verify = (
+        f"100 * {inter} >= {JACCARD_PCT} * ({la} + {lb} - {inter})"
+        f" AND 100 * least({la}, {lb}) >= {JACCARD_PCT} * greatest({la}, {lb})"
+    )
+    return f"""
+WITH docs AS (SELECT doc_id, {sh} AS sh FROM documents)
+SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, {jac} AS jaccard
+FROM docs a JOIN docs b ON a.doc_id < b.doc_id
+WHERE {verify}
+"""
+
+
+def _build_substring_screen(spark, sf_dir: str):
+    from pyspark.sql import functions as F
+
+    from ..streaming.dedup import (
+        build_substring_index, substring_screen_stream,
+    )
+
+    docs = spark.table("documents")
+    index = build_substring_index(docs)
+    out = substring_screen_stream(docs, index)
+    return out.where(F.col("doc_id") < F.col("corpus_id")).select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("corpus_id").alias("doc_b"),
+        "shared_windows",
+    )
+
+
+@q("dedup_substring_screen", spark=_build_substring_screen)
 def _dedup_substring_screen(d: str) -> str:
     """The streaming exact-substring SCREEN's values under the hash
     gate (streaming/dedup.py substring_screen_stream): incoming docs
@@ -1684,54 +1739,10 @@ def _dedup_substring_screen(d: str) -> str:
     DuckDB formulation. Stream lifecycle (stream==batch, arrival
     independence, min_shared) pinned in
     tests/test_streaming_substring.py."""
-    if d == SPARK:
-        raise NotImplementedError  # builder-backed (SQL form unused)
     return _exact_substring(d)
 
 
-def _build_substring_screen(spark):
-    from pyspark.sql import functions as F
-
-    from ..streaming.dedup import (
-        build_substring_index, substring_screen_stream,
-    )
-
-    docs = spark.table("documents")
-    index = build_substring_index(docs)
-    out = substring_screen_stream(docs, index)
-    return out.where(F.col("doc_id") < F.col("corpus_id")).select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("corpus_id").alias("doc_b"),
-        "shared_windows",
-    )
-
-
-@q("embed_semantic_screen")
-def _embed_semantic_screen(d: str) -> str:
-    """The streaming SEMANTIC screen's values under the hash gate
-    (streaming/dedup.py semantic_screen_stream): incoming embeddings
-    screened against a static SemDeDup-style cell index — the third
-    member of the screen family (MinHash near-dup, exact-substring
-    passage, semantic redundancy), all sharing the stateless
-    first-shared-anchor construction. This entry gates the EXACTNESS
-    anchor (single-cell index == brute force, the
-    embed_semantic_dedup_exact discipline) through the screen's
-    join-based per-row fold scoring — a genuinely different physical
-    path from the batch applyInPandas blocked scorer, against the
-    same brute-force oracle. Production configs (clustered, spilled,
-    capped) are pinned bit-exact vs semantic_dedup_pairs in
-    tests/test_streaming_semantic.py."""
-    if d == SPARK:
-        raise NotImplementedError  # builder-backed (SQL form unused)
-    dot = _dot("a.embedding", "b.embedding", d)
-    return f"""
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {dot} AS sim
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE {dot} >= {_SEMDEDUP_T}
-"""
-
-
-def _build_semantic_screen(spark):
+def _build_semantic_screen(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from ..streaming.dedup import (
@@ -1748,10 +1759,56 @@ def _build_semantic_screen(spark):
     )
 
 
-@q("dedup_minhash_auto")
+@q("embed_semantic_screen", spark=_build_semantic_screen)
+def _embed_semantic_screen(d: str) -> str:
+    """The streaming SEMANTIC screen's values under the hash gate
+    (streaming/dedup.py semantic_screen_stream): incoming embeddings
+    screened against a static SemDeDup-style cell index — the third
+    member of the screen family (MinHash near-dup, exact-substring
+    passage, semantic redundancy), all sharing the stateless
+    first-shared-anchor construction. This entry gates the EXACTNESS
+    anchor (single-cell index == brute force, the
+    embed_semantic_dedup_exact discipline) through the screen's
+    join-based per-row fold scoring — a genuinely different physical
+    path from the batch applyInPandas blocked scorer, against the
+    same brute-force oracle. Production configs (clustered, spilled,
+    capped) are pinned bit-exact vs semantic_dedup_pairs in
+    tests/test_streaming_semantic.py."""
+    dot = _dot("a.embedding", "b.embedding", d)
+    return f"""
+SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {dot} AS sim
+FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+WHERE {dot} >= {_SEMDEDUP_T}
+"""
+
+
+def _build_minhash_auto_df(spark, sf_dir: str):
+    """Production-default MinHash path: banding derived from the corpus
+    size via auto_bands(n) and the max_bucket_docs hot-bucket guard ON
+    (the knobs the 500k-doc scale proof runs with), facing the same
+    DuckDB brute-force oracle as dedup_minhash_lsh. The cap (256) is
+    far above any bucket the gate corpora produce, so no pair is
+    dropped at gate sf; at production scale the same cap is what
+    bounds boilerplate mega-clusters."""
+    from ..operators.dedup import auto_bands, minhash_neardup_pairs
+
+    docs = spark.table("documents")
+    n = docs.count()
+    return minhash_neardup_pairs(
+        docs,
+        shingle_n=SHINGLE_N,
+        a=MINHASH_A,
+        b=MINHASH_B,
+        bands=auto_bands(n, k=MINHASH_K),
+        threshold_pct=JACCARD_PCT,
+        max_bucket_docs=256,
+    )
+
+
+@q("dedup_minhash_auto", spark=_build_minhash_auto_df)
 def _minhash_auto(d: str) -> str:
     """dedup_minhash_lsh's contract under the PRODUCTION knobs: the
-    Spark side (SPARK_BUILDERS) runs bands = auto_bands(n_docs) and a
+    Spark side (_build_minhash_auto_df) runs bands = auto_bands(n_docs) and a
     non-None max_bucket_docs hot-bucket cap — the exact defaults
     tools/scale_proof.py measures at 500k docs — against the same
     brute-force DuckDB oracle.
@@ -1768,7 +1825,32 @@ def _minhash_auto(d: str) -> str:
     return _minhash_lsh(d)
 
 
-@q("dedup_minhash_recall_held")
+def _build_minhash_recall_held_df(spark, sf_dir: str):
+    """Recall-held schedule: r from auto-banding, b = bands_for_recall
+    (r) so per-pair recall at J=0.85 stays >=99%, K = r*b seeds from
+    the wide pool. See _minhash_recall_held docstring."""
+    import math
+
+    from ..operators.dedup import bands_for_recall, minhash_neardup_pairs
+
+    docs = spark.table("documents")
+    n = docs.count()
+    r = min(12, max(4, math.ceil(math.log2(max(n, 2)) / 2)))
+    b = bands_for_recall(r, threshold=JACCARD_PCT / 100, min_recall=0.99)
+    k = r * b
+    assert k <= MINHASH_KMAX, (r, b, k)
+    return minhash_neardup_pairs(
+        docs,
+        shingle_n=SHINGLE_N,
+        a=MINHASH_A_WIDE[:k],
+        b=MINHASH_B_WIDE[:k],
+        bands=b,
+        threshold_pct=JACCARD_PCT,
+        max_bucket_docs=256,
+    )
+
+
+@q("dedup_minhash_recall_held", spark=_build_minhash_recall_held_df)
 def _minhash_recall_held(d: str) -> str:
     """The RECALL-HELD production schedule under the oracle gate: r
     still grows with log2(n) (auto-banding keeps the false-candidate
@@ -1784,7 +1866,18 @@ def _minhash_recall_held(d: str) -> str:
     return _minhash_lsh(d)
 
 
-@q("dedup_components")
+def _build_dedup_components(spark, sf_dir: str):
+    from ..operators.components import connected_components
+
+    pairs = _build_minhash_df(spark, sf_dir)
+    # minhash pairs are distinct with doc_a < doc_b by construction ->
+    # skip the defensive symmetrize-distinct exchange
+    return connected_components(
+        pairs, "doc_a", "doc_b", edges_distinct=True
+    )
+
+
+@q("dedup_components", spark=_build_dedup_components)
 def _dedup_components(d: str) -> str:
     """Near-dup clusters: connected components over the minhash pair
     graph (component = min reachable doc_id). Spark runs iterative
@@ -1804,17 +1897,6 @@ reach(node, r) AS (
 SELECT CAST(node AS BIGINT) AS doc_id, CAST(min(r) AS BIGINT) AS component
 FROM reach GROUP BY node
 """
-
-
-def _build_dedup_components(spark, sf_dir: str):
-    from ..operators.components import connected_components
-
-    pairs = _build_minhash_df(spark)
-    # minhash pairs are distinct with doc_a < doc_b by construction ->
-    # skip the defensive symmetrize-distinct exchange (optimization r13)
-    return connected_components(
-        pairs, "doc_a", "doc_b", edges_distinct=True
-    )
 
 
 # shared tail: given a (doc_id, component) relation `{comp}` covering the
@@ -1839,7 +1921,58 @@ FROM ranked WHERE rk = 1
 """
 
 
-@q("dedup_canonical_corpus")
+def _build_dedup_canonical(spark, sf_dir: str):
+    """Spark path: aggregation-based representative selection instead of
+    the oracle's window. row_number() OVER (PARTITION BY component ...)
+    sorts each component inside ONE partition — a pathological
+    mega-cluster (template spam) becomes a single hot sort at 100 TB.
+
+    Selection is ONE partial-aggregatable pass:
+    max(struct(n_chars, -doc_id)) picks the longest text with the
+    LOWEST doc_id on ties (struct ordering is lexicographic, so
+    negating doc_id turns the min tie-break into the max). A two-pass
+    form (max(n_chars) + min(doc_id among maxima) over a persisted
+    `lab` + join-back) picks the same row at the cost of a cache write,
+    a second aggregation and a join; map-side combine makes the single
+    max/count skew-immune at 100 TB.
+
+    NULL n_chars (no such rows exist in any test corpus): a join-back
+    on n_chars == kept_chars would DROP a component whose rows all had
+    NULL n_chars; the struct max emits it with NULL kept_chars and the
+    min doc_id, which matches the DuckDB oracle's window formulation
+    (row_number orders NULLs like any value; the component keeps a row
+    either way)."""
+    from pyspark.sql import functions as F
+
+    from ..operators.components import connected_components
+
+    pairs = _build_minhash_df(spark, sf_dir)
+    comps = connected_components(
+        pairs, "doc_a", "doc_b", edges_distinct=True
+    )
+    docs = spark.table("documents").select("doc_id", "n_chars")
+    lab = docs.join(comps, "doc_id", "left").select(
+        "doc_id",
+        F.coalesce("component", "doc_id").alias("component"),
+        "n_chars",
+    )
+    best = lab.groupBy("component").agg(
+        F.max(
+            F.struct(
+                F.col("n_chars"), (-F.col("doc_id")).alias("neg_doc")
+            )
+        ).alias("best"),
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+    )
+    return best.select(
+        F.col("component").cast("long"),
+        (-F.col("best.neg_doc")).cast("long").alias("kept_doc"),
+        F.col("best.n_chars").cast("long").alias("kept_chars"),
+        F.col("n_docs").cast("long"),
+    )
+
+
+@q("dedup_canonical_corpus", spark=_build_dedup_canonical)
 def _dedup_canonical(d: str) -> str:
     """The dedup pipeline's end product: the deduplicated corpus. Every
     near-dup cluster (connected components over the MinHash pair graph)
@@ -1866,59 +1999,6 @@ reach(node, r) AS (
 SELECT node AS doc_id, min(r) AS component FROM reach GROUP BY node
 )"""
     return _CANON_TAIL.format(comp=comp)
-
-
-def _build_dedup_canonical(spark, sf_dir: str):
-    """Spark path: aggregation-based representative selection instead of
-    the oracle's window. row_number() OVER (PARTITION BY component ...)
-    sorts each component inside ONE partition — a pathological
-    mega-cluster (template spam) becomes a single hot sort at 100 TB.
-
-    Selection is ONE partial-aggregatable pass (optimization r13, guide
-    §2.4): max(struct(n_chars, -doc_id)) picks the longest text with
-    the LOWEST doc_id on ties (struct ordering is lexicographic, so
-    negating doc_id turns the min tie-break into the max). Identical
-    row to the previous two-pass form (max(n_chars) + min(doc_id among
-    maxima) over a persisted `lab` + join-back), which cost a cache
-    write, a second aggregation and a join; map-side combine makes the
-    single max/count skew-immune at 100 TB exactly as before.
-
-    NULL n_chars (advisor r13 note — no such rows exist in any test
-    corpus): the old join-back (n_chars == kept_chars) DROPPED a
-    component whose rows all had NULL n_chars; the struct max emits it
-    with NULL kept_chars and the min doc_id, which matches the DuckDB
-    oracle's window formulation (row_number orders NULLs like any
-    value; the component keeps a row either way). The struct-max form
-    is therefore oracle-aligned where the two-pass form silently was
-    not."""
-    from pyspark.sql import functions as F
-
-    from ..operators.components import connected_components
-
-    pairs = _build_minhash_df(spark)
-    comps = connected_components(
-        pairs, "doc_a", "doc_b", edges_distinct=True
-    )
-    docs = spark.table("documents").select("doc_id", "n_chars")
-    lab = docs.join(comps, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("component", "doc_id").alias("component"),
-        "n_chars",
-    )
-    best = lab.groupBy("component").agg(
-        F.max(
-            F.struct(
-                F.col("n_chars"), (-F.col("doc_id")).alias("neg_doc")
-            )
-        ).alias("best"),
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-    )
-    return best.select(
-        F.col("component").cast("long"),
-        (-F.col("best.neg_doc")).cast("long").alias("kept_doc"),
-        F.col("best.n_chars").cast("long").alias("kept_chars"),
-        F.col("n_docs").cast("long"),
-    )
 
 
 def _simhash_from_hashes(hs_col: str, d: str) -> str:
@@ -1949,37 +2029,122 @@ def _simhash_from_hashes(hs_col: str, d: str) -> str:
 def _simhash64(d: str) -> str:
     """60-bit SimHash over whitespace tokens via the portable hash
     (inline form — used by the DuckDB oracle; the Spark path stages
-    token hashes first, see SPARK_BUILDERS)."""
+    token hashes first, see _stage_simhash_values)."""
     tk = D.tokens("text", d)
     h = D.hash60("t", d)
     hs = D.ltransform(tk, f"t -> {h}", d)
     return _simhash_from_hashes(hs, d)
 
 
-@q("simhash_values")
+# ======================================================= staged Spark plans
+#
+# Expression-level sharing: Spark's optimizer inlines CTEs/projections,
+# so an expensive per-row array (md5 shingle hashes) referenced inside a
+# higher-order-function lambda would be recomputed per lambda iteration
+# (128 permutations x 32 bands = 4096x). The scale-correct plan stages
+# the heavy projection and persists it, cutting the lineage — on a real
+# cluster this is a cached/checkpointed intermediate dataset. The DuckDB
+# oracles keep their single-statement brute-force form.
+
+
+def _stage(spark, view: str, df):
+    """Persist `df` and register it as temp view `view`.
+
+    Deliberately re-built on every call: `df` reads session temp views
+    (documents etc.) that load_tables re-points at a different sf_dir
+    between gate runs, so reusing an earlier staging could serve stale
+    data. The view's previous plan is uncached first, because
+    createOrReplaceTempView alone leaves it in the cache manager."""
+    if spark.catalog.tableExists(view):
+        spark.catalog.uncacheTable(view)
+    df = df.persist()
+    df.createOrReplaceTempView(view)
+    return df
+
+
+def _stage_simhash_values(spark) -> None:
+    # Tokenization stays JVM-side (codegen split/filter — exactly the
+    # oracle's token set); the per-token md5 + 60-bit majority fold runs
+    # as ONE numpy/hashlib pandas UDF. The SQL twin evaluates md5 inside
+    # an interpreted HOF lambda (~250k evals at sf0.1) — the fused
+    # kernel is ~4x faster and bit-identical: hash60(t) ==
+    # int(md5(utf8(t)).hexdigest()[:15], 16).
+    import hashlib
+
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    bits = np.arange(SIMHASH_BITS, dtype=np.int64)
+
+    # NB: no type hints — local imports + postponed annotations break
+    # pandas_udf's hint evaluation; legacy SCALAR inference applies
+    @F.pandas_udf(T.LongType())
+    def _simhash_np(tok):
+        md5 = hashlib.md5
+        cache: dict[str, int] = {}  # tokens repeat heavily in prose
+        out = np.zeros(len(tok), dtype=np.int64)
+        for i, arr in enumerate(tok):
+            if arr is None or len(arr) == 0:
+                continue
+            hv = np.fromiter(
+                (
+                    cache.get(t)
+                    or cache.setdefault(
+                        t, int(md5(t.encode()).hexdigest()[:15], 16)
+                    )
+                    for t in arr
+                ),
+                dtype=np.int64,
+                count=len(arr),
+            )
+            # per bit b: sum over tokens of +1/-1 by bit value; set bit
+            # where the sum is positive (matches _simhash_from_hashes)
+            ones = ((hv[:, None] >> bits) & 1).sum(axis=0)
+            bitsum = 2 * ones - len(hv)
+            out[i] = int(((bitsum > 0).astype(np.int64) << bits).sum())
+        return pd.Series(out)
+
+    # widen the single-row-group scan before the CPU-heavy kernel (no-op
+    # on real multi-partition inputs)
+    n_parts = spark.sparkContext.defaultParallelism
+    tk = D.tokens("text", SPARK)
+    df = spark.sql(
+        f"SELECT /*+ REPARTITION({n_parts}) */ doc_id, lang, {tk} AS tok"
+        " FROM documents"
+    ).select("doc_id", "lang", _simhash_np("tok").alias("simhash"))
+    _stage(spark, "__sh_vals", df)
+
+
+def _build_simhash_values(spark, sf_dir: str):
+    _stage_simhash_values(spark)
+    return spark.sql("SELECT doc_id, simhash FROM __sh_vals")
+
+
+def _build_dedup_simhash(spark, sf_dir: str):
+    # the corpus size picks the plan form (one metadata-cheap count(*)
+    # job over the parquet view; the bucket-size bound it proves is
+    # what keeps small corpora on the single-aggregation plan)
+    n_docs = spark.table("documents").count()
+    _stage_simhash_values(spark)
+    return spark.sql(_simhash_pairs(SPARK, n_docs=n_docs))
+
+
+@q("simhash_values", spark=_build_simhash_values)
 def _simhash_vals(d: str) -> str:
-    if d == SPARK:
-        return "SELECT doc_id, simhash FROM __sh_vals"
     return f"SELECT doc_id, {_simhash64(d)} AS simhash FROM documents"
 
 
-# Corpus row count recorded by _build_simhash_stages (the SPARK_STAGES
-# builder run_spark invokes before generating the Spark SQL); None when
-# unknown (e.g. spark_sql_for called without staging), which selects
-# the conservative spill-safe form below.
-_SIMHASH_N_DOCS: int | None = None
-
-
-@q("dedup_simhash")
-def _simhash_pairs(d: str) -> str:
+@q("dedup_simhash", spark=_build_dedup_simhash)
+def _simhash_pairs(d: str, n_docs: int | None = None) -> str:
     """SimHash near-dup pairs (hamming <= 3) within language.
 
     Spark path blocks on {SIMHASH_CHUNKS} 16-bit chunks: 3 flipped bits
     can dirty at most 3 chunks, so one chunk always matches — recall is
     EXACTLY 100% (pigeonhole), which makes LSH == brute-force oracle.
 
-    Optimization r13 (guide §2.4 "remove shuffles outright"): one
-    bucket aggregation on (lang, chunk, ck) replaces the chunk
+    One bucket aggregation on (lang, chunk, ck) replaces a chunk
     self-join (2 exchanges + SMJ sort) + DISTINCT exchange + two
     broadcast join-backs. Simhashes ride the bucket structs, so
     hamming is computed in-bucket; the DISTINCT is replaced by an
@@ -1990,20 +2155,20 @@ def _simhash_pairs(d: str) -> str:
     accepting the '>>' operator (probed — parse error), so the
     post-explode arms use the function form.
 
-    Optimization r14 (r13 verdict #3/#5 — bound the mega-bucket): the
-    r13 collect_list was uncapped, so one template-spam bucket (every
-    doc sharing a 15-bit chunk value in one lang) landed in a single
-    unspillable aggregation buffer — an executor OOM at 100 TB. The
-    fix is a SCALE-GATED plan choice on a provable bound: a bucket can
-    never hold more members than the corpus has docs, so when n_docs
-    <= SIMHASH_BUCKET_CAP the r13 single-aggregation plan is already
-    buffer-bounded and is kept verbatim; only larger corpora pay the
+    Bounding the mega-bucket: an uncapped collect_list lands one
+    template-spam bucket (every doc sharing a 15-bit chunk value in
+    one lang) in a single unspillable aggregation buffer — an executor
+    OOM at 100 TB. The plan choice is therefore SCALE-GATED on a
+    provable bound: a bucket can never hold more members than the
+    corpus has docs, so when n_docs <= SIMHASH_BUCKET_CAP the
+    single-aggregation plan is already buffer-bounded and is kept
+    verbatim; only larger corpora (or an unknown n_docs) pay the
     spill-safe routing plan, where a window count over the bucket key
     sends <=CAP buckets through the collect_list expansion (buffer
     <= CAP structs = 1 MB) and oversized buckets through a sort-merge
-    self-join (the spill-safe pre-r13 plan, now only for the rows
-    that need it; WindowExec buffers spill via
-    ExternalAppendOnlyUnsafeRowArray, SMJ sorts spill). The two forms
+    self-join (spill-safe, and only for the rows that need it;
+    WindowExec buffers spill via ExternalAppendOnlyUnsafeRowArray, SMJ
+    sorts spill). The two forms
     emit IDENTICAL pairs for any corpus — the branches partition
     buckets by size (pinned on a synthetic mega-bucket corpus by
     tests/test_dedup.py::test_simhash_mega_bucket_form_identical).
@@ -2012,7 +2177,7 @@ def _simhash_pairs(d: str) -> str:
     stage reuse over the textually identical subtrees does not fire,
     see the in-SQL notes — plus the window sort), which is exactly
     why it is gated to the corpora that need it; the n_docs count the
-    gate needs is one metadata-cheap job in the staging builder.
+    gate needs is one metadata-cheap job in the entry's builder.
     """
     ham = "bit_count(a.simhash ^ b.simhash)" if d == SPARK else (
         "bit_count(xor(a.simhash, b.simhash))"
@@ -2030,10 +2195,9 @@ FROM pairs
 WHERE bit_count(ha ^ hb) <= {HAMMING_MAX}
   AND chunk = {first_chunk}
 """
-        if (_SIMHASH_N_DOCS is not None
-                and _SIMHASH_N_DOCS <= SIMHASH_BUCKET_CAP):
+        if n_docs is not None and n_docs <= SIMHASH_BUCKET_CAP:
             # n_docs <= CAP proves every (lang, chunk, ck) bucket is
-            # <= CAP members: the r13 single-aggregation plan is
+            # <= CAP members: the single-aggregation plan is
             # buffer-bounded as-is
             return f"""
 WITH s AS (SELECT doc_id, lang, simhash FROM __sh_vals),
@@ -2132,9 +2296,8 @@ def _ngram_jaccard(d: str) -> str:
     # 1000). Threshold J >= 1/5 uses exact integer arithmetic (no
     # float boundary) and the panel is sized so the gated result is
     # NON-EMPTY at every gate scale: sf0.001 -> 3 pairs, sf0.01 -> 8
-    # pairs (r10 verdict #3 — the previous 2%-sample/J>=1/3 form
-    # returned 0 rows both sides every driver round since r2, proving
-    # nothing).
+    # pairs (a 2%-sample/J>=1/3 form returns 0 rows on both sides,
+    # which proves nothing).
     sh = D.shingles("text", SHINGLE_N, d)
     inter = D.lsize(D.lintersect("a.sh", "b.sh", d), d)
     la, lb = D.lsize("a.sh", d), D.lsize("b.sh", d)
@@ -2170,17 +2333,6 @@ WHERE rn <= 5
 """
 
 
-@q("embed_ann_ivf_fullprobe")
-def _ann_ivf_fullprobe(d: str) -> str:
-    """IVF ANN with n_probe == n_centroids: probing every cell makes IVF
-    exactly equal to brute force REGARDLESS of centroid quality, so the
-    entire IVF pipeline (sample -> Lloyd -> assign -> probe -> rerank)
-    is verified by the brute-force oracle. The n_probe < n_centroids
-    scale path is embed_ann_ivf_probed (hash-gated per-query
-    differential since r13)."""
-    return _knn(d)  # identical result contract -> identical oracle
-
-
 def _build_ann_ivf(n_probe: int, spill: int = 1):
     def build(spark, sf_dir: str):
         from ..operators.similarity import ann_ivf_topk
@@ -2195,6 +2347,17 @@ def _build_ann_ivf(n_probe: int, spill: int = 1):
     return build
 
 
+@q("embed_ann_ivf_fullprobe", spark=_build_ann_ivf(n_probe=8))
+def _ann_ivf_fullprobe(d: str) -> str:
+    """IVF ANN with n_probe == n_centroids: probing every cell makes IVF
+    exactly equal to brute force REGARDLESS of centroid quality, so the
+    entire IVF pipeline (sample -> Lloyd -> assign -> probe -> rerank)
+    is verified by the brute-force oracle. The n_probe < n_centroids
+    scale path is embed_ann_ivf_probed (hash-gated per-query
+    differential)."""
+    return _knn(d)  # identical result contract -> identical oracle
+
+
 # Per-query recall floor for the production probed configs (IVF and
 # IVF-PQ). Stricter in grain than ANN_RECALL_FLOOR (which bounds the
 # aggregate): EVERY query must recover >= this fraction of its exact
@@ -2207,12 +2370,27 @@ def _build_ann_ivf(n_probe: int, spill: int = 1):
 ANN_PER_QUERY_FLOOR = 0.6
 
 
-@q("embed_ann_ivf_probed")
+def _build_ann_ivf_probed_diff(spark, sf_dir: str):
+    from ..operators.similarity import ann_ivf_topk
+
+    k, n_probe = 5, 4
+    emb = spark.table("embeddings")
+    queries = emb.where("vec_id % 100 = 0")
+    probed = ann_ivf_topk(
+        emb, queries, k=k, n_centroids=8, n_probe=n_probe,
+        query_id_col="qid", spill=2,
+    ).select("qid", "vec_id")
+    exact = spark.sql(spark_sql_for("embed_knn_bruteforce")).select(
+        "qid", "vec_id"
+    )
+    return _build_ann_per_query_diff(probed, exact, k, n_probe)
+
+
+@q("embed_ann_ivf_probed", spark=_build_ann_ivf_probed_diff)
 def _ann_ivf_probed(d: str) -> str:
     """Hash-gated per-query differential for the production probed
-    config (n_probe=4 of 8 cells, spill=2 boundary replication) — r12
-    verdict directive #2 option (b): formerly rows-only, now the gated
-    output is the per-query contract the oracle CAN predict: the
+    config (n_probe=4 of 8 cells, spill=2 boundary replication). The
+    gated output is the per-query contract the oracle CAN predict: the
     probed path returns exactly k rows per query (n_found hashes as
     5), the exact top-k has exactly k rows per query (n_exact grounded
     in the brute-force SQL), and every query clears the per-query
@@ -2242,7 +2420,40 @@ GROUP BY qid
 ANN_RECALL_FLOOR = 0.85
 
 
-@q("embed_ann_recall")
+def _build_ann_recall(spark, sf_dir: str):
+    from ..operators.similarity import ann_ivf_topk
+
+    from pyspark.sql import functions as F
+
+    k, n_probe = 5, 4
+    emb = spark.table("embeddings")
+    queries = emb.where("vec_id % 100 = 0")
+    # the exact config embed_ann_ivf_probed ships
+    probed = ann_ivf_topk(
+        emb, queries, k=k, n_centroids=8, n_probe=n_probe,
+        query_id_col="qid", spill=2,
+    ).select("qid", "vec_id")
+    exact = spark.sql(spark_sql_for("embed_knn_bruteforce")).select(
+        "qid", "vec_id"
+    )
+    stats = exact.agg(
+        F.count_distinct("qid").alias("nq"), F.count(F.lit(1)).alias("n_exact")
+    )
+    hits = probed.join(exact, ["qid", "vec_id"]).agg(
+        F.count(F.lit(1)).alias("n_hits")
+    )
+    return stats.crossJoin(hits).select(
+        F.col("nq").cast("long").alias("n_queries"),
+        F.col("n_exact").cast("long").alias("n_exact"),
+        F.lit(k).cast("int").alias("k"),
+        F.lit(n_probe).cast("int").alias("n_probe"),
+        (
+            (F.col("n_hits") / F.col("n_exact")) >= F.lit(ANN_RECALL_FLOOR)
+        ).alias("recall_ge_floor"),
+    )
+
+
+@q("embed_ann_recall", spark=_build_ann_recall)
 def _ann_recall(d: str) -> str:
     """Hash-gated recall floor for the approximate (n_probe < n_cells)
     ANN path — the aggregate companion to `embed_ann_ivf_probed`'s
@@ -2297,27 +2508,11 @@ def _build_ann_per_query_diff(probed, exact, k: int, n_probe: int,
     )
 
 
-def _build_ann_ivf_probed_diff(spark, sf_dir: str):
-    from ..operators.similarity import ann_ivf_topk
-
-    k, n_probe = 5, 4
-    emb = spark.table("embeddings")
-    queries = emb.where("vec_id % 100 = 0")
-    probed = ann_ivf_topk(
-        emb, queries, k=k, n_centroids=8, n_probe=n_probe,
-        query_id_col="qid", spill=2,
-    ).select("qid", "vec_id")
-    exact = spark.sql(spark_sql_for("embed_knn_bruteforce")).select(
-        "qid", "vec_id"
-    )
-    return _build_ann_per_query_diff(probed, exact, k, n_probe)
-
-
 def _build_ann_ivfpq_diff(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     k, n_probe = 5, 4
-    pq = _build_ann_ivfpq(spark).select("qid", "vec_id")
+    pq = _ann_ivfpq_probed(spark).select("qid", "vec_id")
     exact = spark.sql(spark_sql_for("embed_knn_bruteforce")).select(
         "qid", "vec_id"
     )
@@ -2330,7 +2525,7 @@ def _build_ann_ivfpq_diff(spark, sf_dir: str):
     )
 
 
-def _build_semdedup_diff(spark):
+def _build_semdedup_diff(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from ..operators.similarity import semantic_dedup_pairs
@@ -2361,47 +2556,13 @@ def _build_semdedup_diff(spark):
     )
 
 
-def _build_ann_recall(spark, sf_dir: str):
-    from ..operators.similarity import ann_ivf_topk
-
-    from pyspark.sql import functions as F
-
-    k, n_probe = 5, 4
-    emb = spark.table("embeddings")
-    queries = emb.where("vec_id % 100 = 0")
-    # the exact config embed_ann_ivf_probed ships
-    probed = ann_ivf_topk(
-        emb, queries, k=k, n_centroids=8, n_probe=n_probe,
-        query_id_col="qid", spill=2,
-    ).select("qid", "vec_id")
-    exact = spark.sql(spark_sql_for("embed_knn_bruteforce")).select(
-        "qid", "vec_id"
-    )
-    stats = exact.agg(
-        F.count_distinct("qid").alias("nq"), F.count(F.lit(1)).alias("n_exact")
-    )
-    hits = probed.join(exact, ["qid", "vec_id"]).agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    return stats.crossJoin(hits).select(
-        F.col("nq").cast("long").alias("n_queries"),
-        F.col("n_exact").cast("long").alias("n_exact"),
-        F.lit(k).cast("int").alias("k"),
-        F.lit(n_probe).cast("int").alias("n_probe"),
-        (
-            (F.col("n_hits") / F.col("n_exact")) >= F.lit(ANN_RECALL_FLOOR)
-        ).alias("recall_ge_floor"),
-    )
-
-
-@q("embed_ann_ivfpq")
+@q("embed_ann_ivfpq", spark=_build_ann_ivfpq_diff)
 def _ann_ivfpq(d: str) -> str:
     """Hash-gated per-query differential for the production IVF-PQ
     config (ADC scan over residual-PQ codes, exact rerank of the
     bounded candidate set — operators/similarity.py ann_ivfpq_topk;
-    n_probe=4, m=32, n_codes=64, refine=8, spill=2). Same restructure
-    as embed_ann_ivf_probed (r12 directive #2 option b): formerly
-    rows-only, now gates per-query n_found == k, n_exact grounded in
+    n_probe=4, m=32, n_codes=64, refine=8, spill=2). Same shape as
+    embed_ann_ivf_probed: gates per-query n_found == k, n_exact grounded in
     the brute-force oracle, and the per-query recall floor. The
     fullprobe-covering-refine equality law stays pinned in
     tests/test_similarity.py."""
@@ -2418,7 +2579,19 @@ GROUP BY qid
 """
 
 
-@q("embed_ann_ivfpq_fullprobe")
+def _build_ann_ivfpq_fullprobe(spark, sf_dir: str):
+    from ..operators.similarity import ann_ivfpq_topk
+
+    emb = spark.table("embeddings")
+    queries = emb.where("vec_id % 100 = 0")
+    return ann_ivfpq_topk(
+        emb, queries, k=5, n_centroids=8, n_probe=8,
+        m_subspaces=32, n_codes=64, refine=1000,
+        query_id_col="qid",
+    )
+
+
+@q("embed_ann_ivfpq_fullprobe", spark=_build_ann_ivfpq_fullprobe)
 def _ann_ivfpq_fullprobe(d: str) -> str:
     """IVF-PQ with n_probe == n_centroids and a refine window covering
     the corpus (k*refine >= n_vectors at every gate SF): the ADC stage
@@ -2430,18 +2603,6 @@ def _ann_ivfpq_fullprobe(d: str) -> str:
     oracle. The law is also pinned in tests/test_similarity.py
     (test_ivfpq_fullprobe_covering_refine_equals_exact)."""
     return _knn(d)  # identical result contract -> identical oracle
-
-
-def _build_ann_ivfpq_fullprobe(spark):
-    from ..operators.similarity import ann_ivfpq_topk
-
-    emb = spark.table("embeddings")
-    queries = emb.where("vec_id % 100 = 0")
-    return ann_ivfpq_topk(
-        emb, queries, k=5, n_centroids=8, n_probe=8,
-        m_subspaces=32, n_codes=64, refine=1000,
-        query_id_col="qid",
-    )
 
 
 # the IVF-PQ production config must recover at least this fraction of
@@ -2456,44 +2617,11 @@ def _build_ann_ivfpq_fullprobe(spark):
 IVFPQ_RECALL_FLOOR = 0.85
 
 
-@q("embed_ann_ivfpq_recall")
-def _ann_ivfpq_recall(d: str) -> str:
-    """Hash-gated recall floor for the IVF-PQ path — the quality metric
-    for `embed_ann_ivfpq` (aggregate companion to its per-query
-    differential). Same
-    differential-vs-exact shape as embed_ann_recall: Spark runs BOTH
-    pipelines for real; the oracle grounds n_queries/n_exact in the
-    same data via the brute-force SQL and asserts the floor."""
-    exact = _knn(d)
-    return f"""
-SELECT CAST(nq AS BIGINT) AS n_queries,
-  CAST(n_exact AS BIGINT) AS n_exact,
-  CAST(5 AS INT) AS k, CAST(4 AS INT) AS n_probe,
-  CAST(32 AS INT) AS m_subspaces, CAST(64 AS INT) AS n_codes,
-  n_exact > 0 AS recall_ge_floor
-FROM (
-  SELECT count(DISTINCT qid) AS nq, count(*) AS n_exact
-  FROM ({exact}) exact_topk)
-"""
-
-
-def _build_ann_ivfpq(spark):
-    from ..operators.similarity import ann_ivfpq_topk
-
-    emb = spark.table("embeddings")
-    queries = emb.where("vec_id % 100 = 0")
-    return ann_ivfpq_topk(
-        emb, queries, k=5, n_centroids=8, n_probe=4,
-        m_subspaces=32, n_codes=64, refine=8, spill=2,
-        query_id_col="qid",
-    )
-
-
 def _build_ann_ivfpq_recall(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     k, n_probe = 5, 4
-    pq = _build_ann_ivfpq(spark).select("qid", "vec_id")
+    pq = _ann_ivfpq_probed(spark).select("qid", "vec_id")
     exact = spark.sql(spark_sql_for("embed_knn_bruteforce")).select(
         "qid", "vec_id"
     )
@@ -2516,12 +2644,45 @@ def _build_ann_ivfpq_recall(spark, sf_dir: str):
     )
 
 
+@q("embed_ann_ivfpq_recall", spark=_build_ann_ivfpq_recall)
+def _ann_ivfpq_recall(d: str) -> str:
+    """Hash-gated recall floor for the IVF-PQ path — the quality metric
+    for `embed_ann_ivfpq` (aggregate companion to its per-query
+    differential). Same
+    differential-vs-exact shape as embed_ann_recall: Spark runs BOTH
+    pipelines for real; the oracle grounds n_queries/n_exact in the
+    same data via the brute-force SQL and asserts the floor."""
+    exact = _knn(d)
+    return f"""
+SELECT CAST(nq AS BIGINT) AS n_queries,
+  CAST(n_exact AS BIGINT) AS n_exact,
+  CAST(5 AS INT) AS k, CAST(4 AS INT) AS n_probe,
+  CAST(32 AS INT) AS m_subspaces, CAST(64 AS INT) AS n_codes,
+  n_exact > 0 AS recall_ge_floor
+FROM (
+  SELECT count(DISTINCT qid) AS nq, count(*) AS n_exact
+  FROM ({exact}) exact_topk)
+"""
+
+
+def _ann_ivfpq_probed(spark):
+    from ..operators.similarity import ann_ivfpq_topk
+
+    emb = spark.table("embeddings")
+    queries = emb.where("vec_id % 100 = 0")
+    return ann_ivfpq_topk(
+        emb, queries, k=5, n_centroids=8, n_probe=4,
+        m_subspaces=32, n_codes=64, refine=8, spill=2,
+        query_id_col="qid",
+    )
+
+
 # Near-dup cosine threshold for the GATED embedding entries. The
 # production default stays 0.99 (operators/similarity.py, pytest-
 # verified with planted pairs); the corpus however contains no pair
 # above cos ~0.51 (max same-label cos: 0.475 at sf0.01, 0.449 at
-# sf0.001), so a 0.99 gate returned 0 rows on both sides in every
-# driver round since r2 — vacuous (r10 verdict #3). 0.402 sits in the
+# sf0.001), so a 0.99 gate returns 0 rows on both sides — vacuous.
+# 0.402 sits in the
 # corpus's top-pair band (sf0.01: 5 pairs, nearest excluded 0.3983;
 # sf0.001: 4 pairs, nearest excluded 0.40104) with both engines
 # computing bit-identical double sims (same fold order), so the
@@ -2548,14 +2709,13 @@ _SEMDEDUP_K = 8        # production cluster count at gate scale
 _SEMDEDUP_SPILL = 3    # boundary replication (recall 0.97 measured)
 
 
-@q("embed_semantic_dedup")
+@q("embed_semantic_dedup", spark=_build_semdedup_diff)
 def _semdedup(d: str) -> str:
     """Hash-gated precision+recall contract for the production
     SemDeDup config (Abbas et al. 2023: k-means cells, then similar
     pairs WITHIN each cell only — operators/similarity.py
-    semantic_dedup_pairs). r12 directive #2 option (b): formerly
-    rows-only; the gated output is now the differential the oracle
-    CAN predict. Precision arm: within-cell cosines are exact, so
+    semantic_dedup_pairs). The gated output is the differential the
+    oracle CAN predict. Precision arm: within-cell cosines are exact, so
     found ⊆ truth by construction — n_false_positives hashes as
     EXACTLY 0 and any emitted non-truth pair breaks the hash (an arm
     the recall twin lacks). Recall arm: floor 0.5 (measured 0.970 /
@@ -2577,7 +2737,15 @@ FROM (
 """
 
 
-@q("embed_semantic_dedup_exact")
+def _build_semdedup_exact(spark, sf_dir: str):
+    from ..operators.similarity import semantic_dedup_pairs
+
+    return semantic_dedup_pairs(
+        spark.table("embeddings"), n_clusters=1, threshold=_SEMDEDUP_T,
+    )
+
+
+@q("embed_semantic_dedup_exact", spark=_build_semdedup_exact)
 def _semdedup_exact(d: str) -> str:
     """Exactness anchor for SemDeDup: n_clusters=1 disables the
     cluster pruning, so the operator's full pipeline (assignment UDF,
@@ -2585,8 +2753,6 @@ def _semdedup_exact(d: str) -> str:
     reproduce the FULL brute-force pair set BIT-EXACTLY (the fold-dot
     discipline); the 500-row gate table keeps the oracle's n^2
     affordable."""
-    if d == SPARK:
-        raise NotImplementedError  # builder-backed (SQL form unused)
     dot = _dot("a.embedding", "b.embedding", d)
     return f"""
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {dot} AS sim
@@ -2595,11 +2761,33 @@ WHERE {dot} >= {_SEMDEDUP_T}
 """
 
 
-@q("embed_semantic_dedup_recall")
+def _build_semdedup_recall(spark, sf_dir: str):
+    from ..operators.similarity import semantic_dedup_pairs
+
+    emb = spark.table("embeddings")
+    truth = semantic_dedup_pairs(
+        emb, n_clusters=1, threshold=_SEMDEDUP_T
+    ).count()
+    found = semantic_dedup_pairs(
+        emb, n_clusters=_SEMDEDUP_K, threshold=_SEMDEDUP_T,
+        spill=_SEMDEDUP_SPILL,
+    ).count()
+    recall = found / truth if truth else 1.0
+    assert recall >= 0.5, (
+        f"semantic dedup recall {recall:.3f} under the 0.5 floor"
+    )
+    return spark.createDataFrame(
+        [(truth, _SEMDEDUP_K, _SEMDEDUP_SPILL, _SEMDEDUP_T, truth > 0)],
+        "n_truth BIGINT, n_clusters INT, spill INT, threshold DOUBLE,"
+        " recall_ge_floor BOOLEAN",
+    )
+
+
+@q("embed_semantic_dedup_recall", spark=_build_semdedup_recall)
 def _semdedup_recall(d: str) -> str:
     """Hash-gated recall floor for the production SemDeDup config —
-    the aggregate companion to `embed_semantic_dedup`, which since
-    r13 gates its own precision+recall contract (this twin keeps the
+    the aggregate companion to `embed_semantic_dedup`, which gates
+    its own precision+recall contract (this twin keeps the
     explicit floor assert). Same shape as embed_ann_ivfpq_recall: Spark
     runs BOTH the clustered and the exact pipelines for real; the
     oracle grounds n_truth in the same data via the brute-force SQL
@@ -2621,36 +2809,6 @@ FROM (
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
   WHERE {dot} >= {_SEMDEDUP_T}) t
 """
-
-
-def _build_semdedup_exact(spark):
-    from ..operators.similarity import semantic_dedup_pairs
-
-    return semantic_dedup_pairs(
-        spark.table("embeddings"), n_clusters=1, threshold=_SEMDEDUP_T,
-    )
-
-
-def _build_semdedup_recall(spark):
-    from ..operators.similarity import semantic_dedup_pairs
-
-    emb = spark.table("embeddings")
-    truth = semantic_dedup_pairs(
-        emb, n_clusters=1, threshold=_SEMDEDUP_T
-    ).count()
-    found = semantic_dedup_pairs(
-        emb, n_clusters=_SEMDEDUP_K, threshold=_SEMDEDUP_T,
-        spill=_SEMDEDUP_SPILL,
-    ).count()
-    recall = found / truth if truth else 1.0
-    assert recall >= 0.5, (
-        f"semantic dedup recall {recall:.3f} under the 0.5 floor"
-    )
-    return spark.createDataFrame(
-        [(truth, _SEMDEDUP_K, _SEMDEDUP_SPILL, _SEMDEDUP_T, truth > 0)],
-        "n_truth BIGINT, n_clusters INT, spill INT, threshold DOUBLE,"
-        " recall_ge_floor BOOLEAN",
-    )
 
 
 # ======================================================= text analysis
@@ -2753,7 +2911,7 @@ def _perplexity(d: str) -> str:
     # NB no _wide_docs repartition here: split+explode is cheap JVM
     # codegen, not interpreted-HOF work, and the widening exchange
     # measured ~2x the whole query (0.97s -> 0.56s without it).
-    # REPARTITION(doc_id) (optimization r13) is a different animal
+    # REPARTITION(doc_id) is a different animal
     # from that widening: it shuffles whole documents ONCE and lets
     # AQE runtime stage reuse serve every CTE consumer from the same
     # exchange — the tfidf trick (see _tfidf). Without it Spark
@@ -2805,7 +2963,7 @@ def _perplexity_bigram(d: str) -> str:
     Log space + the 1e-6 branchless bridge (_round6) absorbs
     cross-engine ln/summation last-ulp drift (the text_perplexity
     determinism argument) without round(DOUBLE, k)'s shortest-repr
-    boundary divergence (directive #5).
+    boundary divergence.
 
     Scale: bigram production is codegen (posexplode + one array
     index, no interpreted lambda); the transition-count and
@@ -2814,7 +2972,7 @@ def _perplexity_bigram(d: str) -> str:
     ONCE for the per-doc GROUP BY. Unseen bigrams/contexts coalesce
     to 0 — the add-one floor prices them, no join loss."""
     tk = D.tokens("text", d)
-    # REPARTITION(doc_id) on the tokenized scan (optimization r13):
+    # REPARTITION(doc_id) on the tokenized scan:
     # `big` has three CTE consumers and `toks` one, and Spark inlines
     # all four into separate scan+tokenize subtrees; the hint makes
     # the subtrees share one exchange via AQE runtime stage reuse
@@ -2865,7 +3023,14 @@ GROUP BY s.doc_id
 """
 
 
-@q("text_perplexity_static_lm")
+def _build_perplexity_static(spark, sf_dir: str):
+    from ..streaming.quality import build_unigram_lm, perplexity_scores
+
+    docs = spark.table("documents")
+    return perplexity_scores(docs, build_unigram_lm(docs))
+
+
+@q("text_perplexity_static_lm", spark=_build_perplexity_static)
 def _perplexity_static(d: str) -> str:
     """The STREAMING formulation of the perplexity filter under the
     hash gate (streaming/quality.py): scores are computed per row by a
@@ -2877,53 +3042,10 @@ def _perplexity_static(d: str) -> str:
     arrival independence, filter semantics) is pinned in
     tests/test_streaming_quality.py; this entry pins the VALUES of the
     shared expressions cross-engine."""
-    if d == SPARK:
-        raise NotImplementedError  # builder-backed (SQL form unused)
     return _perplexity(d)
 
 
-def _build_perplexity_static(spark):
-    from ..streaming.quality import build_unigram_lm, perplexity_scores
-
-    docs = spark.table("documents")
-    return perplexity_scores(docs, build_unigram_lm(docs))
-
-
-@q("text_normalize")
-def _text_normalize(d: str) -> str:
-    """Unicode NFC + control-strip + whitespace-collapse text
-    normalization — the pre-hash step every dedup/fingerprint pipeline
-    runs first (CCNet normalizes before hashing; two byte-different
-    encodings of the same rendered text must dedup together). The
-    synthetic corpus is ASCII, so the entry prepends a DECOMPOSED
-    'Cafe'+U+0301 prefix to every doc — NFC composes it to U+00E9,
-    shrinking the codepoint count, which makes the nfc_chars/raw_chars
-    columns (and the full normalized text under the hash) an actual
-    NFC test rather than an identity pass.
-
-    Spark has no unicode-normalization builtin, so the Spark side is
-    a vectorized pandas UDF over Python's unicodedata (the documented
-    use-Python-only-where-builtins-can't rule); control-strip and
-    whitespace-collapse stay JVM-side regexp_replace. Oracle: DuckDB's
-    utf8proc-backed nfc_normalize — the hash gate therefore pins that
-    CPython's and utf8proc's NFC agree on the exercised text. Order of
-    ops (strip controls -> collapse ws -> NFC) is identical in both
-    dialects."""
-    if d == SPARK:
-        raise NotImplementedError("builder-backed; SQL form unused")
-    return """
-SELECT doc_id,
-  nfc_normalize(regexp_replace(regexp_replace(
-      'Cafe' || chr(769) || ' ' || text,
-      '[\\x00-\\x1f\\x7f]', ' ', 'g'), '\\s+', ' ', 'g')) AS norm_text,
-  CAST(length(nfc_normalize('Cafe' || chr(769) || ' ' || text))
-       AS BIGINT) AS nfc_chars,
-  CAST(length('Cafe' || chr(769) || ' ' || text) AS BIGINT) AS raw_chars
-FROM documents
-"""
-
-
-def _build_text_normalize(spark, sf_dir: str | None = None):
+def _build_text_normalize(spark, sf_dir: str):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -2948,7 +3070,7 @@ def _build_text_normalize(spark, sf_dir: str | None = None):
 
     # DECOMPOSED prefix ('e' + combining acute U+0301), matching the
     # oracle's 'Cafe' || chr(769) — NFC composes it to one U+00E9
-    # Constructed EXPLICITLY via chr(0x301) (r10 advice #5): as a
+    # Constructed EXPLICITLY via chr(0x301): as a
     # source literal the decomposition is invisible ('Cafe'+U+0301
     # renders identically to composed U+00E9), so any editor or
     # formatter that NFC-normalizes source files would silently
@@ -2963,6 +3085,38 @@ def _build_text_normalize(spark, sf_dir: str | None = None):
         F.length(nfc(aug)).cast("long").alias("nfc_chars"),
         F.length(aug).cast("long").alias("raw_chars"),
     )
+
+
+@q("text_normalize", spark=_build_text_normalize)
+def _text_normalize(d: str) -> str:
+    """Unicode NFC + control-strip + whitespace-collapse text
+    normalization — the pre-hash step every dedup/fingerprint pipeline
+    runs first (CCNet normalizes before hashing; two byte-different
+    encodings of the same rendered text must dedup together). The
+    synthetic corpus is ASCII, so the entry prepends a DECOMPOSED
+    'Cafe'+U+0301 prefix to every doc — NFC composes it to U+00E9,
+    shrinking the codepoint count, which makes the nfc_chars/raw_chars
+    columns (and the full normalized text under the hash) an actual
+    NFC test rather than an identity pass.
+
+    Spark has no unicode-normalization builtin, so the Spark side is
+    a vectorized pandas UDF over Python's unicodedata (the documented
+    use-Python-only-where-builtins-can't rule); control-strip and
+    whitespace-collapse stay JVM-side regexp_replace. Oracle: DuckDB's
+    utf8proc-backed nfc_normalize — the hash gate therefore pins that
+    CPython's and utf8proc's NFC agree on the exercised text. Order of
+    ops (strip controls -> collapse ws -> NFC) is identical in both
+    dialects."""
+    return """
+SELECT doc_id,
+  nfc_normalize(regexp_replace(regexp_replace(
+      'Cafe' || chr(769) || ' ' || text,
+      '[\\x00-\\x1f\\x7f]', ' ', 'g'), '\\s+', ' ', 'g')) AS norm_text,
+  CAST(length(nfc_normalize('Cafe' || chr(769) || ' ' || text))
+       AS BIGINT) AS nfc_chars,
+  CAST(length('Cafe' || chr(769) || ' ' || text) AS BIGINT) AS raw_chars
+FROM documents
+"""
 
 
 @q("text_fingerprint")
@@ -2999,8 +3153,8 @@ def _repetition(d: str) -> str:
     frequent bigram's count equals the longest run in the SORTED
     per-row bigram array, computed by an O(n_tok) aggregate() fold.
     The HOF lambdas evaluate interpreted, but each token is touched a
-    constant number of times; the previous explode + GROUP BY (doc_id,
-    bigram) form shuffled one row per bigram OCCURRENCE — at 100 TB,
+    constant number of times; an explode + GROUP BY (doc_id,
+    bigram) form shuffles one row per bigram OCCURRENCE — at 100 TB,
     the entire corpus through two exchanges. Measured at sf0.1: 0.37s
     warm vs 0.83s, values identical (exceptAll-verified both ways)."""
     tk = D.tokens("text", d)
@@ -3191,7 +3345,20 @@ FROM (SELECT source, {grams} AS gs
     return exploded, D.hash60("g", d)
 
 
-@q("cross_source_contamination")
+def _build_contamination(spark, sf_dir: str):
+    """Route cross_source_contamination by provenance-label count:
+    the one-BIGINT-mask fast path when every source fits one mask,
+    the chunked-mask path past 62 (where the fast path's assert_true
+    would raise). The count probe is a ~|sources|-row aggregate."""
+    n = spark.sql(
+        "SELECT count(DISTINCT source) AS n FROM documents"
+    ).collect()[0][0]
+    if n <= 62:
+        return spark.sql(_contamination(SPARK))
+    return spark.sql(_contamination_chunked_sql())
+
+
+@q("cross_source_contamination", spark=_build_contamination)
 def _contamination(d: str) -> str:
     """Train/test decontamination check: count distinct token 8-grams
     shared between each pair of sources. The standard n-gram-overlap
@@ -3212,7 +3379,7 @@ def _contamination(d: str) -> str:
         # compute grams ONCE. Source sets are encoded as a 64-bit
         # BITMASK per gram (source -> dense bit via a broadcast dim):
         # bit_or is a plain long-buffer codegen aggregate, so the big
-        # per-gram groupBy never allocates set objects (the previous
+        # per-gram groupBy never allocates set objects (a
         # collect_set formulation spent 0.6s of its 1.2s in
         # ObjectHashAggregate at sf0.1; the mask path runs the same
         # stage in ~0.2s). Pair counts then come from the TINY
@@ -3230,14 +3397,13 @@ def _contamination(d: str) -> str:
         # DISTINCT source — bounded ≤62 rows by the adjacent assert —
         # so its single-partition WindowExec (and Spark's warning
         # about it) is a one-reducer pass over a dim table, not a
-        # scale hazard. Round 7 built BOTH warning-free rewrites the
-        # r6 verdict suggested and A/B-measured each SLOWER at sf0.1
-        # (same session, interleaved): a triangular self-join rank
+        # scale hazard. Both warning-free rewrites measured SLOWER at
+        # sf0.1 (same session, interleaved A/B): a triangular self-join rank
         # CTE-inlined into 3 evaluations (3x the documents scans,
         # 2-6x wall); a stage-collected LocalRelation sid dim turned
         # the bit-test joins into CartesianProduct (18s) and its
         # explode+equi repair still ran 1.25-1.5s vs 0.5-0.6s for
-        # this form (BENCH_NOTES r7). The warning is cosmetic; the
+        # this form (BENCH_NOTES.md). The warning is cosmetic; the
         # window stays.
         return f"""
 WITH sid AS (
@@ -3275,7 +3441,7 @@ GROUP BY a.source, b.source
 
 def _contamination_chunked_sql(docs: str | None = None) -> str:
     """The >62-source generalization the one-mask form's assert points
-    at (r7 verdict stretch directive): sources are densely numbered as
+    at: sources are densely numbered as
     before, then split into 62-bit CHUNKS (chunk = sid DIV 62, bit =
     sid % 62); the per-gram aggregate groups by (gh, chunk) so each
     gram carries one bounded-width mask row PER CHUNK it touches.
@@ -3295,7 +3461,7 @@ def _contamination_chunked_sql(docs: str | None = None) -> str:
     one BIGINT. Shuffles still carry 8-byte hashes + masks, never
     gram text.
 
-    Round-10 A/B (kept the self-join): a collect_list(struct(chunk,
+    Why the self-join stays (interleaved A/B): a collect_list(struct(chunk,
     mask)) + in-row double-explode rewrite removes one gm-sized gh
     shuffle (plan: 19 -> 13 exchanges, BHJx5 -> BHJx3) but measured
     25-30% SLOWER at 5k/50k synthetic docs (1.33/7.99s -> 1.66/10.59s
@@ -3346,19 +3512,6 @@ GROUP BY sa.source, sb.source
 """
 
 
-def _build_contamination(spark, sf_dir: str | None = None):
-    """Route cross_source_contamination by provenance-label count:
-    the one-BIGINT-mask fast path when every source fits one mask,
-    the chunked-mask path past 62 (where the fast path's assert_true
-    would raise). The count probe is a ~|sources|-row aggregate."""
-    n = spark.sql(
-        "SELECT count(DISTINCT source) AS n FROM documents"
-    ).collect()[0][0]
-    if n <= 62:
-        return spark.sql(spark_sql_for("cross_source_contamination"))
-    return spark.sql(_contamination_chunked_sql())
-
-
 _CONTAM_FINE_SPARK = (
     "(SELECT /*+ REPARTITION(64) */"
     " concat(source, '_', CAST(doc_id % 100 AS STRING)) AS source,"
@@ -3373,7 +3526,7 @@ _CONTAM_FINE_DUCK = (
 @q("cross_source_contamination_chunked")
 def _contamination_chunked_entry(d: str) -> str:
     """The >62-source chunked-mask contamination path under the DRIVER
-    gate (r9 verdict directive #5: previously only pytest-covered).
+    gate, not only under pytest.
     The test corpus has 20 provenance labels, so the entry derives a
     fine-grained source (source + doc_id % 100 -> 100 labels, 2 mask
     chunks) and runs the REAL chunked implementation
@@ -3404,7 +3557,7 @@ def _exact_substring(d: str) -> str:
     copied PASSAGES that whole-doc MinHash misses (a long doc quoting
     a paragraph of another sits far below any Jaccard threshold).
 
-    Spark-native formulation (r9 rewrite): hash each 12-token window
+    Spark-native formulation: hash each 12-token window
     directly with a multi-argument xxhash64 over the 12 array elements
     -> ONE shuffle groups windows with collect_set(doc_id) under the
     2..64-doc bucket bound -> pairs generated INSIDE each bounded
@@ -3417,14 +3570,14 @@ def _exact_substring(d: str) -> str:
     EQUALITY-based, so the two dialects don't need hash identity —
     only that each hash is injective-in-practice on window content
     (the driver compares pair results, never hashes). That freed the
-    Spark side from the portable md5+conv string hash (r8 profile:
-    the dominant per-row cost was building the 70-char window string
-    and then md5 -> substr -> conv base-16 parsing, all interpreted)
-    for codegen'd xxhash64 over the 12 strings with NO intermediate
-    string, and fused the former DISTINCT(doc_id, wh) exchange into
-    the bucket aggregation (collect_set dedups inside the set):
-    two shuffles -> one. Measured at sf0.1: 1.090s -> 0.86s median
-    (1.78x -> 1.40x of the DuckDB oracle), identical pair results
+    Spark side from the portable md5+conv string hash (profiled: the
+    dominant per-row cost was building the 70-char window string and
+    then md5 -> substr -> conv base-16 parsing, all interpreted) for
+    codegen'd xxhash64 over the 12 strings with NO intermediate
+    string, and lets the bucket aggregation do the DISTINCT(doc_id,
+    wh) (collect_set dedups inside the set): two shuffles -> one.
+    Measured at sf0.1: 1.090s -> 0.86s median (1.78x -> 1.40x of the
+    DuckDB oracle), identical pair results
     (.scale/probe_substring.py).
 
     Scale: the bucket bound is load-bearing twice — buckets of 1
@@ -3432,8 +3585,8 @@ def _exact_substring(d: str) -> str:
     expansion, and buckets >64 docs are boilerplate (licence headers,
     templated banners) whose pair expansion would go quadratic;
     production treats those as cluster-level boilerplate exactly like
-    the MinHash hot-bucket cap. Honest buffer note (true of BOTH this
-    form and the r8 DISTINCT+collect_list form): the HAVING drops
+    the MinHash hot-bucket cap. Buffer note (true of any
+    collect-based form): the HAVING drops
     oversize buckets after aggregation, so a pathological window
     shared by M docs transiently holds an M-element set in the
     aggregation buffer; a corpus with boilerplate at that scale wants
@@ -3538,18 +3691,17 @@ def _tfidf(d: str) -> str:
     tf CTE into both consumers, but AQE's runtime stage reuse deduces
     the two REPARTITION(doc_id) exchanges are identical and the df
     branch reads the tf branch's shuffle output via ReusedExchange
-    (verified in the final adaptive plan, round 8) — so the
-    scan+tokenize runs ONCE and only the cheap explode+aggregate runs
-    per branch. This beat the previous persisted-view staging (~0.95s
-    vs ~1.6s at sf0.1, r6 A/B) precisely because the "recompute" the
-    persist avoided was already shared at the exchange.
+    (verified in the final adaptive plan) — so the scan+tokenize runs
+    ONCE and only the cheap explode+aggregate runs per branch. This
+    beats a persisted-view staging (~0.95s vs ~1.6s at sf0.1, A/B)
+    precisely because the "recompute" the persist avoids is already
+    shared at the exchange.
 
-    The r7 "drift" (+30% single-run / +15% median-of-3 on untouched
-    code) root-caused in round 8 as JIT lifecycle, not plan change: a
-    15-run series decays monotonically 1.0s -> 0.55s (the r6 median)
-    as C2 compiles the tokenizer; the lambda-free dialect.tokens()
-    rewrite removes the interpreted higher-order filter that dominated
-    that warmup (BENCH_NOTES r8)."""
+    Run-to-run drift on this entry is JIT lifecycle, not plan change: a
+    15-run series decays monotonically 1.0s -> 0.55s as C2 compiles
+    the tokenizer; the lambda-free dialect.tokens() form removes the
+    interpreted higher-order filter that dominated that warmup
+    (BENCH_NOTES.md)."""
     tk = D.tokens("text", d)
     if d == SPARK:
         exploded = (
@@ -3583,185 +3735,6 @@ WHERE rk <= 5
 """
 
 
-# ======================================================= staged Spark plans
-#
-# Expression-level sharing: Spark's optimizer inlines CTEs/projections,
-# so an expensive per-row array (md5 shingle hashes) referenced inside a
-# higher-order-function lambda would be recomputed per lambda iteration
-# (128 permutations x 32 bands = 4096x). The scale-correct plan stages
-# the heavy projection and persists it, cutting the lineage — on a real
-# cluster this is a cached/checkpointed intermediate dataset. The DuckDB
-# oracles keep their single-statement brute-force form.
-
-_STAGE_CACHE: dict[tuple[int, str], object] = {}
-
-
-def _stage(spark, view: str, df):
-    """Persist `df` and register it as temp view `view`.
-
-    Deliberately re-built on every call: `df` reads session temp views
-    (documents etc.) that load_tables re-points at a different sf_dir
-    between gate runs, so a (spark, view) cache hit could serve stale
-    data. The cache exists only to unpersist the previous
-    incarnation."""
-    key = (spark, view)
-    old = _STAGE_CACHE.get(key)
-    if old is not None:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    df = df.persist()
-    df.createOrReplaceTempView(view)
-    _STAGE_CACHE[key] = df
-    return df
-
-
-def _build_simhash_stages(spark) -> None:
-    # Tokenization stays JVM-side (codegen split/filter — exactly the
-    # oracle's token set); the per-token md5 + 60-bit majority fold runs
-    # as ONE numpy/hashlib pandas UDF. The SQL twin evaluates md5 inside
-    # an interpreted HOF lambda (~250k evals at sf0.1) — the fused
-    # kernel is ~4x faster and bit-identical: hash60(t) ==
-    # int(md5(utf8(t)).hexdigest()[:15], 16).
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    bits = np.arange(SIMHASH_BITS, dtype=np.int64)
-
-    # NB: no type hints — local imports + postponed annotations break
-    # pandas_udf's hint evaluation; legacy SCALAR inference applies
-    @F.pandas_udf(T.LongType())
-    def _simhash_np(tok):
-        md5 = hashlib.md5
-        cache: dict[str, int] = {}  # tokens repeat heavily in prose
-        out = np.zeros(len(tok), dtype=np.int64)
-        for i, arr in enumerate(tok):
-            if arr is None or len(arr) == 0:
-                continue
-            hv = np.fromiter(
-                (
-                    cache.get(t)
-                    or cache.setdefault(
-                        t, int(md5(t.encode()).hexdigest()[:15], 16)
-                    )
-                    for t in arr
-                ),
-                dtype=np.int64,
-                count=len(arr),
-            )
-            # per bit b: sum over tokens of +1/-1 by bit value; set bit
-            # where the sum is positive (matches _simhash_from_hashes)
-            ones = ((hv[:, None] >> bits) & 1).sum(axis=0)
-            bitsum = 2 * ones - len(hv)
-            out[i] = int(((bitsum > 0).astype(np.int64) << bits).sum())
-        return pd.Series(out)
-
-    # widen the single-row-group scan before the CPU-heavy kernel (no-op
-    # on real multi-partition inputs)
-    n_parts = spark.sparkContext.defaultParallelism
-    tk = D.tokens("text", SPARK)
-    # record the corpus size for dedup_simhash's scale-gated plan
-    # choice (one metadata-cheap count(*) job over the parquet view;
-    # the bucket-size bound it proves is what keeps small corpora on
-    # the branch-free single-aggregation plan — see _simhash_pairs)
-    global _SIMHASH_N_DOCS
-    _SIMHASH_N_DOCS = spark.table("documents").count()
-    df = spark.sql(
-        f"SELECT /*+ REPARTITION({n_parts}) */ doc_id, lang, {tk} AS tok"
-        " FROM documents"
-    ).select("doc_id", "lang", _simhash_np("tok").alias("simhash"))
-    _stage(spark, "__sh_vals", df)
-
-
-# name -> stage-builder run before the Spark SQL for that query
-SPARK_STAGES: dict[str, Callable] = {
-    "simhash_values": _build_simhash_stages,
-    "dedup_simhash": _build_simhash_stages,
-}
-
-
-def _build_minhash_df(spark):
-    """DataFrame-API path: numpy-vectorized MinHash (operators/dedup.py).
-
-    Shingle hashing is JVM-native xxhash64 (the oracle never sees the
-    hashes — only the final exact-verified Jaccard values, which match
-    the string-set Jaccard up to a ~2^-60 collision); the signature
-    kernel is numpy (~50x faster than interpreted HOF lambdas at
-    K=128)."""
-    from ..operators.dedup import minhash_neardup_pairs
-
-    return minhash_neardup_pairs(
-        spark.table("documents"),
-        shingle_n=SHINGLE_N,
-        a=MINHASH_A,
-        b=MINHASH_B,
-        bands=BANDS,
-        threshold_pct=JACCARD_PCT,
-    )
-
-
-def _build_minhash_auto_df(spark):
-    """Production-default MinHash path: banding derived from the corpus
-    size via auto_bands(n) and the max_bucket_docs hot-bucket guard ON
-    (the knobs the 500k-doc scale proof runs with), facing the same
-    DuckDB brute-force oracle as dedup_minhash_lsh. The cap (256) is
-    far above any bucket the gate corpora produce, so no pair is
-    dropped at gate sf; at production scale the same cap is what
-    bounds boilerplate mega-clusters."""
-    from ..operators.dedup import auto_bands, minhash_neardup_pairs
-
-    docs = spark.table("documents")
-    n = docs.count()
-    return minhash_neardup_pairs(
-        docs,
-        shingle_n=SHINGLE_N,
-        a=MINHASH_A,
-        b=MINHASH_B,
-        bands=auto_bands(n, k=MINHASH_K),
-        threshold_pct=JACCARD_PCT,
-        max_bucket_docs=256,
-    )
-
-
-def _build_minhash_recall_held_df(spark):
-    """Recall-held schedule: r from auto-banding, b = bands_for_recall
-    (r) so per-pair recall at J=0.85 stays >=99%, K = r*b seeds from
-    the wide pool. See _minhash_recall_held docstring."""
-    import math
-
-    from ..operators.dedup import bands_for_recall, minhash_neardup_pairs
-
-    docs = spark.table("documents")
-    n = docs.count()
-    r = min(12, max(4, math.ceil(math.log2(max(n, 2)) / 2)))
-    b = bands_for_recall(r, threshold=JACCARD_PCT / 100, min_recall=0.99)
-    k = r * b
-    assert k <= MINHASH_KMAX, (r, b, k)
-    return minhash_neardup_pairs(
-        docs,
-        shingle_n=SHINGLE_N,
-        a=MINHASH_A_WIDE[:k],
-        b=MINHASH_B_WIDE[:k],
-        bands=b,
-        threshold_pct=JACCARD_PCT,
-        max_bucket_docs=256,
-    )
-
-
-# name -> full DataFrame builder replacing the Spark SQL text
-SPARK_BUILDERS: dict[str, Callable] = {
-    "dedup_minhash_lsh": _build_minhash_df,
-    "dedup_minhash_auto": _build_minhash_auto_df,
-    "dedup_minhash_recall_held": _build_minhash_recall_held_df,
-    "cross_source_contamination": _build_contamination,
-    "text_normalize": _build_text_normalize,
-}
-
 # ======================================================= remote-source queries
 #
 # dd_read_arrow exercised under the driver's hash gate: a lazy local
@@ -3770,25 +3743,41 @@ SPARK_BUILDERS: dict[str, Callable] = {
 # becomes a checked invariant (the reference's own core differential
 # test, dd_read_arrow_split.test_slow:40-62).
 
-_SERVERS: dict[str, object] = {}
+@functools.cache
+def _server(sf_dir: str, kind: str = "plain"):
+    """The local wire-protocol server of one kind over sf_dir's parquet,
+    started on first use and stopped at interpreter exit.
 
+    - plain: lineitem, orders, customer and events;
+    - failover: lineitem, with a DEAD replica (port 9 / discard refuses
+      immediately) advertised FIRST in every split's endpoints[]. Split
+      i starts at replica i % 2, so every even split must fail over to
+      the live server — the reference's replica-rotation contract
+      (split_info.hpp endpoints[]) under the driver's value gate;
+    - auth: lineitem behind /v1/login credentials and a bearer token."""
+    from ..sources.local_server import ArrowTestServer
 
-def _server_for(sf_dir: str):
-    import atexit
-    import os
-
-    srv = _SERVERS.get(sf_dir)
-    if srv is None:
-        from ..sources.local_server import ArrowTestServer
-
-        tables = {}
-        for n in ("lineitem", "orders", "customer", "events"):
-            p = os.path.join(sf_dir, f"{n}.parquet")
-            if os.path.exists(p):
-                tables[n] = p
-        srv = ArrowTestServer(tables).start()
-        atexit.register(srv.stop)
-        _SERVERS[sf_dir] = srv
+    lineitem = {"lineitem": os.path.join(sf_dir, "lineitem.parquet")}
+    if kind == "failover":
+        srv = ArrowTestServer(
+            lineitem, extra_endpoints=["http://127.0.0.1:9"]
+        )
+    elif kind == "auth":
+        srv = ArrowTestServer(
+            lineitem,
+            token="tok-remote-login-scan",
+            credentials=("sparky", "hunter2"),
+        )
+    else:
+        paths = {
+            n: os.path.join(sf_dir, f"{n}.parquet")
+            for n in ("lineitem", "orders", "customer", "events")
+        }
+        srv = ArrowTestServer(
+            {n: p for n, p in paths.items() if os.path.exists(p)}
+        )
+    srv.start()
+    atexit.register(srv.stop)
     return srv
 
 
@@ -3799,7 +3788,23 @@ _REMOTE_AGG = (
 )
 
 
-@q("remote_scan_split_agg")
+def _build_remote_scan_split_agg(spark, sf_dir: str):
+    from ..sources import dd_read_arrow
+
+    srv = _server(sf_dir)
+    split_scan = dd_read_arrow(
+        spark, srv.url, source_table="lineitem", split=True,
+        split_size=64 * 4000,
+    )
+    plain_scan = dd_read_arrow(spark, srv.url, source_table="lineitem")
+    split_scan.createOrReplaceTempView("__remote_lineitem_split")
+    plain_scan.createOrReplaceTempView("__remote_lineitem_plain")
+    agg_split = spark.sql(_REMOTE_AGG.format(src="__remote_lineitem_split"))
+    agg_plain = spark.sql(_REMOTE_AGG.format(src="__remote_lineitem_plain"))
+    return _label_paths({"split": agg_split, "plain": agg_plain})
+
+
+@q("remote_scan_split_agg", spark=_build_remote_scan_split_agg)
 def _remote_scan_split_agg(d: str) -> str:
     """Split==non-split differential under the hash gate (the reference's
     core invariant, test/python/dd_read_arrow_split.test_slow:40-62): the
@@ -3812,22 +3817,6 @@ def _remote_scan_split_agg(d: str) -> str:
         f"SELECT 'split' AS path, * FROM ({one}) AS s"
         f" UNION ALL SELECT 'plain' AS path, * FROM ({one}) AS p"
     )
-
-
-def _build_remote_scan_split_agg(spark, sf_dir: str):
-    from ..sources import dd_read_arrow
-
-    srv = _server_for(sf_dir)
-    split_scan = dd_read_arrow(
-        spark, srv.url, source_table="lineitem", split=True,
-        split_size=64 * 4000,
-    )
-    plain_scan = dd_read_arrow(spark, srv.url, source_table="lineitem")
-    split_scan.createOrReplaceTempView("__remote_lineitem_split")
-    plain_scan.createOrReplaceTempView("__remote_lineitem_plain")
-    agg_split = spark.sql(_REMOTE_AGG.format(src="__remote_lineitem_split"))
-    agg_plain = spark.sql(_REMOTE_AGG.format(src="__remote_lineitem_plain"))
-    return _label_paths({"split": agg_split, "plain": agg_plain})
 
 
 def _label_paths(paths: dict):
@@ -3845,35 +3834,22 @@ def _label_paths(paths: dict):
     return reduce(lambda a, b: a.unionByName(b), labelled)
 
 
-_FAILOVER_SERVERS: dict[str, object] = {}
+def _build_remote_scan_failover(spark, sf_dir: str):
+    from ..sources import dd_read_arrow
+
+    srv = _server(sf_dir, "failover")
+    scan = dd_read_arrow(
+        spark, srv.url, source_table="lineitem", split=True,
+        split_size=64 * 4000,
+    )
+    scan.createOrReplaceTempView("__remote_lineitem_failover")
+    return spark.sql(_REMOTE_AGG.format(src="__remote_lineitem_failover"))
 
 
-def _failover_server_for(sf_dir: str):
-    import atexit
-    import os
-
-    srv = _FAILOVER_SERVERS.get(sf_dir)
-    if srv is None:
-        from ..sources.local_server import ArrowTestServer
-
-        # a DEAD replica advertised FIRST in every split's endpoints[]
-        # (port 9 / discard refuses immediately): split i starts at
-        # replica i % 2, so every even split must fail over to the
-        # live server — the reference's replica-rotation contract
-        # (split_info.hpp endpoints[]) under the driver's value gate
-        srv = ArrowTestServer(
-            {"lineitem": os.path.join(sf_dir, "lineitem.parquet")},
-            extra_endpoints=["http://127.0.0.1:9"],
-        ).start()
-        atexit.register(srv.stop)
-        _FAILOVER_SERVERS[sf_dir] = srv
-    return srv
-
-
-@q("remote_scan_failover")
+@q("remote_scan_failover", spark=_build_remote_scan_failover)
 def _remote_scan_failover(d: str) -> str:
-    """Replica failover under the HASH gate (round 10 — previously
-    pytest-only, test_arrow_source.py dead-then-live): every split of
+    """Replica failover under the HASH gate (test_arrow_source.py
+    covers the dead-then-live case under pytest): every split of
     a split-mode remote scan advertises a dead endpoint first, so
     half the splits exercise the rotate-with-fresh-query-id path
     (scala/DdArrowShim.scala DdColumnarReader; abandoned ids
@@ -3883,64 +3859,24 @@ def _remote_scan_failover(d: str) -> str:
     return _REMOTE_AGG.format(src="lineitem")
 
 
-def _build_remote_scan_failover(spark, sf_dir: str):
-    from ..sources import dd_read_arrow
-
-    srv = _failover_server_for(sf_dir)
-    scan = dd_read_arrow(
-        spark, srv.url, source_table="lineitem", split=True,
-        split_size=64 * 4000,
-    )
-    scan.createOrReplaceTempView("__remote_lineitem_failover")
-    return spark.sql(_REMOTE_AGG.format(src="__remote_lineitem_failover"))
-
-
 _REMOTE_FILTER = (
     "SELECT o_orderkey, o_totalprice FROM {src}"
     " WHERE o_totalprice > 50000 AND o_orderstatus = 'F'"
 )
 
 
-@q("remote_scan_filter_pushdown")
-def _remote_scan_filter(d: str) -> str:
-    return _REMOTE_FILTER.format(src="orders")
-
-
 def _build_remote_scan_filter(spark, sf_dir: str):
     from ..sources import dd_read_arrow
 
-    srv = _server_for(sf_dir)
+    srv = _server(sf_dir)
     scan = dd_read_arrow(spark, srv.url, source_table="orders")
     scan.createOrReplaceTempView("__remote_orders")
     return spark.sql(_REMOTE_FILTER.format(src="__remote_orders"))
 
 
-@q("remote_scan_dsv2")
-def _remote_scan_dsv2(d: str) -> str:
-    """The DSv2 shim (scala/DdArrowShim.scala) under the driver's hash
-    gate: a PLAIN .filter().groupBy().agg() over format("dd_arrow_dsv2")
-    must prune/filter/aggregate server-side (transparent pushdown — the
-    reference's optimizer-level rewrites,
-    src/scanner/read_arrow_dd.cpp:246-296 and
-    src/optimizer/aggregation_pushdown.cpp:247-418) and still match the
-    direct-parquet oracle. Two labeled paths: 'complete_agg' is the
-    server-computed final aggregate (count/sum/avg COMPLETE pushdown,
-    plan-asserted in the builder), 'split' runs the same aggregation in
-    Spark above a /v1/plan split scan of the pruned+filtered relation."""
-    if d == SPARK:
-        raise NotImplementedError("builder-backed; SQL form unused")
-    base = (
-        "SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,"
-        " CAST(sum(o_custkey) AS BIGINT) AS sum_ckey,"
-        f" {_round6('avg(o_custkey)')} AS avg_ckey"
-        " FROM orders"
-        " WHERE o_totalprice > 50000 AND o_orderstatus = 'F'"
-        " GROUP BY o_orderpriority"
-    )
-    return (
-        f"SELECT 'complete_agg' AS path, * FROM ({base}) a"
-        f" UNION ALL SELECT 'split' AS path, * FROM ({base}) s"
-    )
+@q("remote_scan_filter_pushdown", spark=_build_remote_scan_filter)
+def _remote_scan_filter(d: str) -> str:
+    return _REMOTE_FILTER.format(src="orders")
 
 
 def _build_remote_scan_dsv2(spark, sf_dir: str):
@@ -3949,7 +3885,7 @@ def _build_remote_scan_dsv2(spark, sf_dir: str):
     from ..sources import register
 
     register(spark)
-    srv = _server_for(sf_dir)
+    srv = _server(sf_dir)
 
     def scan(**extra):
         rd = (
@@ -3993,46 +3929,30 @@ def _build_remote_scan_dsv2(spark, sf_dir: str):
     return _label_paths({"complete_agg": plain, "split": split})
 
 
-@q("remote_scan_dsv2_split_dec")
-def _remote_scan_dsv2_split_dec(d: str) -> str:
-    """Second shim entry family under the driver's hash gate (r8
-    verdict directive #6): the split-mode DECIMAL partial-aggregate
-    path end to end. A `query`-option scan exposes
-    CAST(l_quantity AS DECIMAL(12,2)); Spark's groupBy/sum over the
-    split scan pushes PARTIAL decimal sums per split — the shim emits
-    them as TRY_CAST to Spark's widened DECIMAL(p+10, s) result type
-    (scala/DdArrowShim.scala:359-402: TRY_CAST mirrors Spark's
-    non-ANSI null-on-overflow), Spark merges partials.
-
-    Three labelled routes to the same aggregate: `complete` (non-split
-    scan, the server computes the final aggregate), `split` (per-split
-    decimal partials merged by Spark) and `raw` (split scan streaming
-    raw rows, Spark aggregates with no pushdown). sum_qty leaves the
-    plan as its canonical string ('506627.00') in both dialects, so no
-    python Decimal reaches a result hasher. Reference contract:
-    pushed == local, src/optimizer/aggregation_pushdown.cpp:247-418."""
-    if d == SPARK:
-        raise NotImplementedError("builder-backed; SQL form unused")
+@q("remote_scan_dsv2", spark=_build_remote_scan_dsv2)
+def _remote_scan_dsv2(d: str) -> str:
+    """The DSv2 shim (scala/DdArrowShim.scala) under the driver's hash
+    gate: a PLAIN .filter().groupBy().agg() over format("dd_arrow_dsv2")
+    must prune/filter/aggregate server-side (transparent pushdown — the
+    reference's optimizer-level rewrites,
+    src/scanner/read_arrow_dd.cpp:246-296 and
+    src/optimizer/aggregation_pushdown.cpp:247-418) and still match the
+    direct-parquet oracle. Two labeled paths: 'complete_agg' is the
+    server-computed final aggregate (count/sum/avg COMPLETE pushdown,
+    plan-asserted in the builder), 'split' runs the same aggregation in
+    Spark above a /v1/plan split scan of the pruned+filtered relation."""
     base = (
-        "SELECT l_returnflag,"
-        " CAST(CAST(sum(CAST(l_quantity AS DECIMAL(12,2)))"
-        "   AS DECIMAL(38,2)) AS VARCHAR) AS sum_qty,"
-        " CAST(count(*) AS BIGINT) AS n"
-        " FROM lineitem"
-        " GROUP BY l_returnflag"
+        "SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,"
+        " CAST(sum(o_custkey) AS BIGINT) AS sum_ckey,"
+        f" {_round6('avg(o_custkey)')} AS avg_ckey"
+        " FROM orders"
+        " WHERE o_totalprice > 50000 AND o_orderstatus = 'F'"
+        " GROUP BY o_orderpriority"
     )
     return (
-        f"SELECT 'complete' AS path, * FROM ({base}) c"
+        f"SELECT 'complete_agg' AS path, * FROM ({base}) a"
         f" UNION ALL SELECT 'split' AS path, * FROM ({base}) s"
-        f" UNION ALL SELECT 'raw' AS path, * FROM ({base}) r"
     )
-
-
-_SPLIT_DEC_QUERY = (
-    "SELECT l_returnflag,"
-    " CAST(l_quantity AS DECIMAL(12,2)) AS qd FROM lineitem"
-)
-_SPLIT_DEC_SIZE = 64 * 4000
 
 
 def _build_remote_scan_dsv2_split_dec(spark, sf_dir: str):
@@ -4041,7 +3961,7 @@ def _build_remote_scan_dsv2_split_dec(spark, sf_dir: str):
     from ..sources import register
 
     register(spark)
-    srv = _server_for(sf_dir)
+    srv = _server(sf_dir)
 
     def scan(split: bool):
         rd = (
@@ -4090,6 +4010,46 @@ def _build_remote_scan_dsv2_split_dec(spark, sf_dir: str):
         name: df.withColumn("sum_qty", F.col("sum_qty").cast("string"))
         for name, df in paths.items()
     })
+
+
+@q("remote_scan_dsv2_split_dec", spark=_build_remote_scan_dsv2_split_dec)
+def _remote_scan_dsv2_split_dec(d: str) -> str:
+    """Second shim entry family under the driver's hash gate: the
+    split-mode DECIMAL partial-aggregate
+    path end to end. A `query`-option scan exposes
+    CAST(l_quantity AS DECIMAL(12,2)); Spark's groupBy/sum over the
+    split scan pushes PARTIAL decimal sums per split — the shim emits
+    them as TRY_CAST to Spark's widened DECIMAL(p+10, s) result type
+    (scala/DdArrowShim.scala:359-402: TRY_CAST mirrors Spark's
+    non-ANSI null-on-overflow), Spark merges partials.
+
+    Three labelled routes to the same aggregate: `complete` (non-split
+    scan, the server computes the final aggregate), `split` (per-split
+    decimal partials merged by Spark) and `raw` (split scan streaming
+    raw rows, Spark aggregates with no pushdown). sum_qty leaves the
+    plan as its canonical string ('506627.00') in both dialects, so no
+    python Decimal reaches a result hasher. Reference contract:
+    pushed == local, src/optimizer/aggregation_pushdown.cpp:247-418."""
+    base = (
+        "SELECT l_returnflag,"
+        " CAST(CAST(sum(CAST(l_quantity AS DECIMAL(12,2)))"
+        "   AS DECIMAL(38,2)) AS VARCHAR) AS sum_qty,"
+        " CAST(count(*) AS BIGINT) AS n"
+        " FROM lineitem"
+        " GROUP BY l_returnflag"
+    )
+    return (
+        f"SELECT 'complete' AS path, * FROM ({base}) c"
+        f" UNION ALL SELECT 'split' AS path, * FROM ({base}) s"
+        f" UNION ALL SELECT 'raw' AS path, * FROM ({base}) r"
+    )
+
+
+_SPLIT_DEC_QUERY = (
+    "SELECT l_returnflag,"
+    " CAST(l_quantity AS DECIMAL(12,2)) AS qd FROM lineitem"
+)
+_SPLIT_DEC_SIZE = 64 * 4000
 
 
 def _zorder_sql(d: str, cols_ranges, bits: int) -> str:
@@ -4150,45 +4110,35 @@ GROUP BY 1
 """
 
 
-@q("bucketed_join_rollup")
-def _bucketed_join_rollup(d: str) -> str:
-    """S5 sink surface under the hash gate: orders and customer are
-    written as co-bucketed tables (8 buckets on the join key), then
-    joined WITHOUT any exchange (the builder asserts it) and rolled up.
-    The oracle runs the same join over the original parquet — storage
-    layout must not change values."""
-    return """
-SELECT c.c_mktsegment,
-  CAST(count(*) AS BIGINT) AS n_orders,
-  CAST(CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(18,4))), 4) AS DECIMAL(38,4)) AS DOUBLE) AS total_spend
-FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-GROUP BY c.c_mktsegment
-"""
+@functools.cache
+def _bucketed_dir() -> str:
+    """The process's directory for the co-bucketed tables, removed at
+    interpreter exit."""
+    import shutil
+    import tempfile
 
-
-_BUCKETED: set[tuple[int, str]] = set()
+    path = tempfile.mkdtemp(prefix="dd_bucketed_")
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def _build_bucketed_join_rollup(spark, sf_dir: str):
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from ..operators.storage import write_bucketed
 
-    key = (spark, sf_dir)
-    if key not in _BUCKETED:
-        base = tempfile.mkdtemp(prefix="dd_bucketed_")
-        for src, tbl, col in [
-            ("orders", "orders_bkt", "o_custkey"),
-            ("customer", "customer_bkt", "c_custkey"),
-        ]:
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            write_bucketed(
-                spark.table(src), tbl, bucket_cols=col, n_buckets=8,
-                sort_cols=col, path=f"{base}/{tbl}",
-            )
-        _BUCKETED.add(key)
+    # re-written on every call: the table names are fixed, so tables
+    # kept from an earlier call may hold another sf_dir's rows
+    base = _bucketed_dir()
+    for src, tbl, col in [
+        ("orders", "orders_bkt", "o_custkey"),
+        ("customer", "customer_bkt", "c_custkey"),
+    ]:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        write_bucketed(
+            spark.table(src), tbl, bucket_cols=col, n_buckets=8,
+            sort_cols=col, path=f"{base}/{tbl}",
+        )
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -4216,7 +4166,40 @@ def _build_bucketed_join_rollup(spark, sf_dir: str):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-@q("remote_login_scan")
+@q("bucketed_join_rollup", spark=_build_bucketed_join_rollup)
+def _bucketed_join_rollup(d: str) -> str:
+    """S5 sink surface under the hash gate: orders and customer are
+    written as co-bucketed tables (8 buckets on the join key), then
+    joined WITHOUT any exchange (the builder asserts it) and rolled up.
+    The oracle runs the same join over the original parquet — storage
+    layout must not change values."""
+    return """
+SELECT c.c_mktsegment,
+  CAST(count(*) AS BIGINT) AS n_orders,
+  CAST(CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(18,4))), 4) AS DECIMAL(38,4)) AS DOUBLE) AS total_spend
+FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+GROUP BY c.c_mktsegment
+"""
+
+
+def _build_remote_login_scan(spark, sf_dir: str):
+    from pyspark.sql import functions as F
+
+    from ..functions.misc import login
+    from ..sources import dd_read_arrow
+
+    srv = _server(sf_dir, "auth")
+    token = login(srv.url, "sparky", "hunter2")
+    scan = dd_read_arrow(
+        spark, srv.url, source_table="lineitem", auth_token=token
+    )
+    return scan.groupBy("l_returnflag").agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum("l_orderkey").cast("long").alias("sum_okey"),
+    )
+
+
+@q("remote_login_scan", spark=_build_remote_login_scan)
 def _remote_login_scan(d: str) -> str:
     """dd_login (F8, dd_login.cpp:19-218) end-to-end under the hash
     gate: POST /v1/login for a token, thread it into an authed
@@ -4231,55 +4214,26 @@ FROM lineitem GROUP BY l_returnflag
 """
 
 
-_AUTH_SERVERS: dict[str, object] = {}
+def _build_remote_splits(spark, sf_dir: str):
+    from ..sources import dd_splits
+
+    srv = _server(sf_dir)
+    return dd_splits(
+        spark, srv.url, source_table="lineitem", split_size=64 * 4000
+    ).select("query", "producer_id", "split_size", "query_checksum")
 
 
-def _auth_server_for(sf_dir: str):
-    import atexit
-    import os
-
-    srv = _AUTH_SERVERS.get(sf_dir)
-    if srv is None:
-        from ..sources.local_server import ArrowTestServer
-
-        srv = ArrowTestServer(
-            {"lineitem": os.path.join(sf_dir, "lineitem.parquet")},
-            token="tok-remote-login-scan",
-            credentials=("sparky", "hunter2"),
-        ).start()
-        atexit.register(srv.stop)
-        _AUTH_SERVERS[sf_dir] = srv
-    return srv
-
-
-def _build_remote_login_scan(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..functions.misc import login
-    from ..sources import dd_read_arrow
-
-    srv = _auth_server_for(sf_dir)
-    token = login(srv.url, "sparky", "hunter2")
-    scan = dd_read_arrow(
-        spark, srv.url, source_table="lineitem", auth_token=token
-    )
-    return scan.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("l_orderkey").cast("long").alias("sum_okey"),
-    )
-
-
-@q("remote_splits_plan")
+@q("remote_splits_plan", spark=_build_remote_splits)
 def _remote_splits(d: str) -> str:
-    """HASH-GATED (closing the r3 `no_oracle` row, verdict r3 #5): the
-    gate projects the DETERMINISTIC columns of the split plan — per-split
-    rewritten query text, producer id, split size, query checksum — and
-    the oracle re-derives the local server's planning contract from
-    first principles: n = clamp(ceil(rows*64 / split_size), 1, 32)
-    splits (local_server.py:165-175), each slicing by the order-stable
-    row-hash predicate, checksum = sha256(base_sql)[:16]. Only the
-    server-assigned endpoints[]/query ids (random ports, fresh int63s)
-    stay out of the hash — they defeat any value gate by nature."""
+    """HASH-GATED: the gate projects the DETERMINISTIC columns of the
+    split plan — per-split rewritten query text, producer id, split
+    size, query checksum — and the oracle re-derives the local server's
+    planning contract from first principles: n = clamp(ceil(rows*64 /
+    split_size), 1, 32) splits (local_server.py:165-175), each slicing
+    by the order-stable row-hash predicate, checksum =
+    sha256(base_sql)[:16]. Only the server-assigned endpoints[]/query
+    ids (random ports, fresh int63s) stay out of the hash — they defeat
+    any value gate by nature."""
     return """
 WITH p AS (
   SELECT greatest(1, least(32, (count(*) * 64 + 255999) // 256000)) AS n
@@ -4293,19 +4247,10 @@ FROM p, unnest(range(0, CAST(n AS BIGINT))) AS u(i)
 """
 
 
-def _build_remote_splits(spark, sf_dir: str):
-    from ..sources import dd_splits
-
-    srv = _server_for(sf_dir)
-    return dd_splits(
-        spark, srv.url, source_table="lineitem", split_size=64 * 4000
-    ).select("query", "producer_id", "split_size", "query_checksum")
-
-
 def _build_embed_neardup_lsh(spark, sf_dir: str):
     from ..operators.similarity import embed_neardup_pairs_lsh
 
-    # Gate-scale parameterization (r10 verdict #3 — non-vacuous): the
+    # Gate-scale parameterization (non-vacuous): the
     # gate threshold is the corpus's top-pair band (_EMBED_NEARDUP_T
     # comment above), and at cos=0.402 the hyperplane collision
     # probability per bit is p = 1 - acos(0.402)/pi ~ 0.632, so 2-bit
@@ -4321,7 +4266,7 @@ def _build_embed_neardup_lsh(spark, sf_dir: str):
     )
 
 
-@q("embed_neardup_lsh")
+@q("embed_neardup_lsh", spark=_build_embed_neardup_lsh)
 def _embed_neardup_lsh_q(d: str) -> str:
     """Sign-LSH near-dup scale path. Oracle = the brute-force pair SQL:
     the LSH result is exact-verified, so it can only MISS pairs (never
@@ -4412,35 +4357,6 @@ SELECT doc_id, {redact_sql('text', d)} AS clean_text FROM documents
 # plans — an algorithmic differential, not a reimplementation check.
 
 
-@q("events_orders_asof_join")
-def _asof_join_q(d: str) -> str:
-    """Point-in-time: each event picks up the customer's most recent
-    order at-or-before the event (orders pre-deduped to one row per
-    (custkey, date) so the as-of match is deterministic)."""
-    if d == SPARK:
-        # argmax formulation (valid Spark SQL; run_spark routes to the
-        # union+window builder instead — this text is the naive twin)
-        return """
-WITH ord AS (
-  SELECT o_custkey, unix_micros(CAST(o_orderdate AS TIMESTAMP)) AS o_us,
-         max(o_orderkey) AS last_orderkey
-  FROM orders GROUP BY 1, 2)
-SELECT e.event_id, e.user_id, max_by(o.last_orderkey, o.o_us) AS last_orderkey
-FROM events e LEFT JOIN ord o
-  ON o.o_custkey = e.user_id AND o.o_us <= unix_micros(CAST(e.ts AS TIMESTAMP))
-GROUP BY e.event_id, e.user_id
-"""
-    return """
-WITH ord AS (
-  SELECT o_custkey, o_orderdate, max(o_orderkey) AS last_orderkey
-  FROM orders GROUP BY 1, 2)
-SELECT e.event_id, e.user_id, o.last_orderkey
-FROM events e ASOF LEFT JOIN ord o
-  ON e.user_id = o.o_custkey
- AND epoch_us(e.ts) >= epoch_us(o.o_orderdate)
-"""
-
-
 def _build_asof_join(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
@@ -4462,18 +4378,19 @@ def _build_asof_join(spark, sf_dir: str):
     ).select("event_id", "user_id", "last_orderkey")
 
 
-@q("events_activity_range_join")
-def _activity_range_q(d: str) -> str:
-    """Bounded-window self correlation: per event, how many events the
-    same user produced in the strictly-preceding 5 minutes."""
-    pe = "unix_micros(CAST(p.ts AS TIMESTAMP))" if d == SPARK else "epoch_us(p.ts)"
-    ee = "unix_micros(CAST(e.ts AS TIMESTAMP))" if d == SPARK else "epoch_us(e.ts)"
-    return f"""
-SELECT e.event_id, e.user_id, CAST(count(p.event_id) AS BIGINT) AS n_prior
-FROM events e LEFT JOIN events p
-  ON p.user_id = e.user_id
- AND {pe} >= {ee} - 300000000 AND {pe} <= {ee} - 1
-GROUP BY e.event_id, e.user_id
+@q("events_orders_asof_join", spark=_build_asof_join)
+def _asof_join_q(d: str) -> str:
+    """Point-in-time: each event picks up the customer's most recent
+    order at-or-before the event (orders pre-deduped to one row per
+    (custkey, date) so the as-of match is deterministic)."""
+    return """
+WITH ord AS (
+  SELECT o_custkey, o_orderdate, max(o_orderkey) AS last_orderkey
+  FROM orders GROUP BY 1, 2)
+SELECT e.event_id, e.user_id, o.last_orderkey
+FROM events e ASOF LEFT JOIN ord o
+  ON e.user_id = o.o_custkey
+ AND epoch_us(e.ts) >= epoch_us(o.o_orderdate)
 """
 
 
@@ -4503,16 +4420,17 @@ def _build_activity_range(spark, sf_dir: str):
     )
 
 
-@q("skew_salted_join_agg")
-def _skew_salted_q(d: str) -> str:
-    """Fact-dim join + agg; Spark side runs it through the salted-join
-    operator (operators/skew.py) so the driver gate pins salting to the
-    plain-join answer."""
+@q("events_activity_range_join", spark=_build_activity_range)
+def _activity_range_q(d: str) -> str:
+    """Bounded-window self correlation: per event, how many events the
+    same user produced in the strictly-preceding 5 minutes."""
     return """
-SELECT s_nationkey, CAST(count(*) AS BIGINT) AS n_items,
-       CAST(CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 4) AS DECIMAL(38,4)) AS DOUBLE) AS sum_qty
-FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-GROUP BY s_nationkey
+SELECT e.event_id, e.user_id, CAST(count(p.event_id) AS BIGINT) AS n_prior
+FROM events e LEFT JOIN events p
+  ON p.user_id = e.user_id
+ AND epoch_us(p.ts) >= epoch_us(e.ts) - 300000000
+ AND epoch_us(p.ts) <= epoch_us(e.ts) - 1
+GROUP BY e.event_id, e.user_id
 """
 
 
@@ -4540,6 +4458,19 @@ def _build_skew_salted(spark, sf_dir: str):
     )
 
 
+@q("skew_salted_join_agg", spark=_build_skew_salted)
+def _skew_salted_q(d: str) -> str:
+    """Fact-dim join + agg; Spark side runs it through the salted-join
+    operator (operators/skew.py) so the driver gate pins salting to the
+    plain-join answer."""
+    return """
+SELECT s_nationkey, CAST(count(*) AS BIGINT) AS n_items,
+       CAST(CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 4) AS DECIMAL(38,4)) AS DOUBLE) AS sum_qty
+FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+GROUP BY s_nationkey
+"""
+
+
 # ==================================================== multimodal plumbing
 # Media-as-binary columns (operators/multimodal.py) exercised on real
 # bytes: documents.text encoded as the opaque payload. The dedup-key
@@ -4548,25 +4479,10 @@ def _build_skew_salted(spark, sf_dir: str):
 # pure-numpy/stdlib decoders through mapInPandas — and because the
 # payloads are deterministic byte arithmetic over documents.text, the
 # decode+pool output has a closed form a DuckDB oracle can mirror, so
-# the end-to-end pipelines are HASH-GATED (closing the r3 rows-only
-# gap). Entropy-coded formats needing external codec libs (jpeg/mp4)
-# stay stubbed — none ship in this container; PNG decodes for real via
-# stdlib zlib.
-
-
-@q("multimodal_media_keys")
-def _media_keys_q(d: str) -> str:
-    if d == SPARK:
-        return """
-SELECT doc_id AS media_id, sha2(encode(text, 'UTF-8'), 256) AS content_sha256,
-       CAST(octet_length(encode(text, 'UTF-8')) AS BIGINT) AS n_bytes
-FROM documents
-"""
-    return """
-SELECT doc_id AS media_id, sha256(text) AS content_sha256,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-FROM documents
-"""
+# the end-to-end pipelines are HASH-GATED, not rows-only.
+# Entropy-coded formats needing external codec libs (jpeg/mp4) stay
+# stubbed — the package depends on no codec library; PNG decodes for
+# real via stdlib zlib.
 
 
 def _build_media_keys(spark, sf_dir: str):
@@ -4579,6 +4495,15 @@ def _build_media_keys(spark, sf_dir: str):
         F.encode("text", "UTF-8").alias("payload"),
     )
     return media_dedup_keys(media)
+
+
+@q("multimodal_media_keys", spark=_build_media_keys)
+def _media_keys_q(d: str) -> str:
+    return """
+SELECT doc_id AS media_id, sha256(text) AS content_sha256,
+       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
+FROM documents
+"""
 
 
 # hex("P6\n8 8\n255\n") — the 11-byte PPM header every synthesized
@@ -4605,10 +4530,36 @@ _CHUNK_SUMS_SPARK = (
 )
 
 
-@q("multimodal_features")
+def _build_media_features(spark, sf_dir: str):
+    from pyspark.sql import functions as F
+
+    from ..operators.multimodal import decode_ppm, extract_features
+
+    media = _synth_ppm_media(spark)
+    # payload_sha is computed on the synthesized payload pre-decode and
+    # broadcast-joined back onto the (payload-free) feature rows
+    shas = media.select(
+        "media_id",
+        F.sha2(F.lower(F.hex("payload")), 256).alias("payload_sha"),
+    )
+    feats = extract_features(media, decoder=decode_ppm)
+    return (
+        feats.join(F.broadcast(shas), "media_id")
+        .select(
+            "media_id",
+            "kind",
+            "n_bytes",
+            "payload_sha",
+            # float32 chunk-mean -> exact integer byte sum (see oracle)
+            F.expr(_CHUNK_SUMS_SPARK).alias("feature"),
+        )
+    )
+
+
+@q("multimodal_features", spark=_build_media_features)
 def _media_features_q(d: str) -> str:
-    """HASH-GATED oracle for the real-decode feature pipeline (closing
-    the r3 `no_oracle` gap, verdict r3 #3). The Spark side synthesizes
+    """HASH-GATED oracle for the real-decode feature pipeline. The
+    Spark side synthesizes
     a valid 8x8 P6 payload per doc (header + first 192 text bytes,
     zero-padded), runs the REAL pure-numpy PPM decoder through
     mapInPandas, and pools 16 chunk-means; deterministic pixel math
@@ -4658,56 +4609,6 @@ def _synth_ppm_media(spark):
     )
 
 
-def _build_media_features(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..operators.multimodal import decode_ppm, extract_features
-
-    media = _synth_ppm_media(spark)
-    # payload_sha is computed on the synthesized payload pre-decode and
-    # broadcast-joined back onto the (payload-free) feature rows
-    shas = media.select(
-        "media_id",
-        F.sha2(F.lower(F.hex("payload")), 256).alias("payload_sha"),
-    )
-    feats = extract_features(media, decoder=decode_ppm)
-    return (
-        feats.join(F.broadcast(shas), "media_id")
-        .select(
-            "media_id",
-            "kind",
-            "n_bytes",
-            "payload_sha",
-            # float32 chunk-mean -> exact integer byte sum (see oracle)
-            F.expr(_CHUNK_SUMS_SPARK).alias("feature"),
-        )
-    )
-
-
-@q("multimodal_png_features")
-def _png_features_q(d: str) -> str:
-    """HASH-GATED end-to-end PNG pipeline (verdict r3 #4): per doc the
-    Spark side packs the first 192 text bytes (zero-padded) into an
-    8x8x3 raster, ENCODES it as a real PNG (stdlib zlib DEFLATE) in one
-    mapInPandas stage, DECODES it with decode_png (chunk walk, inflate,
-    row unfiltering) in the feature stage, and pools chunk sums. The
-    zlib-compressed payload bytes themselves are codec-dependent, so
-    n_bytes/sha stay out of this gate (the PPM twin pins payload
-    bytes); the DECODED pixels are deterministic byte arithmetic the
-    oracle mirrors exactly — any corruption across encode->deflate->
-    inflate->unfilter->pool breaks the hash."""
-    return f"""
-WITH hexed AS (
-  SELECT doc_id AS media_id,
-         rpad(substr(upper(hex(encode(text))), 1, 384), 384, '0') AS rh
-  FROM documents
-)
-SELECT media_id, 'image' AS kind,
-  {_CHUNK_SUMS_ORACLE} AS feature
-FROM hexed
-"""
-
-
 def _build_png_features(spark, sf_dir: str):
     import numpy as np
     import pandas as pd
@@ -4748,249 +4649,28 @@ def _build_png_features(spark, sf_dir: str):
     )
 
 
-@q("multimodal_jpeg_features")
-def _jpeg_features_q(d: str) -> str:
-    """HASH-GATED end-to-end baseline-JPEG pipeline (verdict r4 stretch
-    #7): per doc the Spark side expands the first 64 text bytes
-    (zero-padded) into a 64x64 grayscale image of UNIFORM 8x8 blocks
-    (block (i,j) = byte 8i+j), ENCODES it as a real baseline JPEG
-    (FDCT, all-ones quant, T.81 Huffman, byte stuffing) in one
-    mapInPandas stage, DECODES it with decode_jpeg (marker walk,
-    canonical Huffman, dequant, IDCT) in the feature stage, and pools
-    16 chunk-means. A constant 8x8 block at quant=1 is DC-only and
-    survives the full entropy->IDCT path byte-exactly (operators/
-    jpeg.py docstring derivation), so the decoded pixels are integer
-    arithmetic the oracle mirrors: chunk c covers 4 image rows inside
-    block-row b = c//2, so its mean is sum(bytes[8b:8b+8]) / 8 — and
-    float32(S/8) is exact (S * 2^-3), so round(m*8) recovers S with no
-    rounding slack at all. The Huffman byte stream itself is
-    codec-shaped, so n_bytes/sha stay out of this gate (the PPM twin
-    pins payload bytes); any corruption across encode->huffman->
-    decode->IDCT->pool breaks the hash.
-
-    TWO rows per doc since r11 (verdict #7 — cover chroma subsampling
-    end to end): kind='gray' is the single-component path above;
-    kind='rgb422' encodes the SAME blocks as an RGB image with r=g=b
-    at 4:2:2 (2x1 luma sampling). With r=g=b the BT.601 conversion
-    gives Y=v exactly and Cb=Cr=128 exactly (float residue ~1e-13,
-    crushed by DC rounding), so the decoded RGB is bit-exact (v,v,v)
-    — the oracle derivation is IDENTICAL per kind (each chunk's 768
-    interleaved channel values triplicate the 256 gray pixels, so the
-    chunk mean is unchanged) while the Spark path now exercises
-    3-component SOF, chroma Huffman tables, 2x1 MCU geometry, chroma
-    upsampling and YCbCr->RGB reconstruction under the driver hash."""
-    if d == SPARK:
-        # built by _build_jpeg_features; SQL form unused
-        raise NotImplementedError
-    return """
+@q("multimodal_png_features", spark=_build_png_features)
+def _png_features_q(d: str) -> str:
+    """HASH-GATED end-to-end PNG pipeline: per doc the
+    Spark side packs the first 192 text bytes (zero-padded) into an
+    8x8x3 raster, ENCODES it as a real PNG (stdlib zlib DEFLATE) in one
+    mapInPandas stage, DECODES it with decode_png (chunk walk, inflate,
+    row unfiltering) in the feature stage, and pools chunk sums. The
+    zlib-compressed payload bytes themselves are codec-dependent, so
+    n_bytes/sha stay out of this gate (the PPM twin pins payload
+    bytes); the DECODED pixels are deterministic byte arithmetic the
+    oracle mirrors exactly — any corruption across encode->deflate->
+    inflate->unfilter->pool breaks the hash."""
+    return f"""
 WITH hexed AS (
   SELECT doc_id AS media_id,
-         rpad(substr(upper(hex(encode(text))), 1, 128), 128, '0') AS rh
+         rpad(substr(upper(hex(encode(text))), 1, 384), 384, '0') AS rh
   FROM documents
 )
-SELECT media_id, k.kind,
-  array_to_string(list_transform(range(0, 16), j ->
-    CAST(list_sum(list_transform(range(0, 8), i ->
-      (strpos('0123456789ABCDEF',
-              substr(rh, CAST((j // 2) * 8 + i AS INT) * 2 + 1, 1)) - 1)
-      * 16
-      + strpos('0123456789ABCDEF',
-               substr(rh, CAST((j // 2) * 8 + i AS INT) * 2 + 2, 1)) - 1
-    )) AS VARCHAR)), '|') AS feature
-FROM hexed, (VALUES ('gray'), ('rgb422')) AS k(kind)
+SELECT media_id, 'image' AS kind,
+  {_CHUNK_SUMS_ORACLE} AS feature
+FROM hexed
 """
-
-
-@q("multimodal_video_frames")
-def _video_frames_q(d: str) -> str:
-    """HASH-GATED MJPEG frame-decode pipeline — the frame-decode slot
-    is now REAL for one codec (r6 verdict "missing #1"): per doc the
-    Spark side encodes 1 + doc_id%3 frames (frame f = text bytes
-    [64f, 64f+64) zero-padded, expanded to a 64x64 grayscale image of
-    uniform 8x8 blocks), each as a complete baseline JPEG
-    (operators/jpeg.py encode_jpeg, quant=1), MUXES them into a valid
-    MJPEG mp4 with real sample tables (operators/mp4.py
-    encode_mjpeg_mp4: stsz/stco/stsc/stts), then DEMUXES through those
-    tables and DECODES every frame (video_frame_features ->
-    extract_video_samples -> decode_jpeg) into 16 chunk-means. The
-    uniform-block/quant=1 construction survives the entropy->IDCT
-    path byte-exactly (the multimodal_jpeg_features derivation), so
-    the oracle mirrors every frame's chunk sums with integer
-    arithmetic over hex windows of the text — any corruption across
-    encode->mux->demux->entropy-decode->IDCT->pool breaks the hash.
-    Since r11 (verdict #7) frame 1 is encoded as r=g=b RGB at 4:2:2
-    and frame 2 at 4:2:0 — bit-exact decode by the Y=v / Cb=Cr=128
-    construction (multimodal_jpeg_features docstring; 2x2 luma
-    sampling keeps each 8x8 luma block constant), so this oracle is
-    unchanged while the MJPEG demux->decode path exercises all three
-    sampling modes under the driver hash.
-    Inter-frame codecs (avc1/hev1/av01) remain the declared stub;
-    the codec-library boundary is now per-codec, not per-operator."""
-    if d == SPARK:
-        # built by _build_video_frames; SQL form unused
-        raise NotImplementedError
-    return """
-WITH frames AS (
-  SELECT doc_id AS media_id,
-         CAST(f AS INT) AS frame_idx,
-         rpad(substr(upper(hex(encode(text))),
-                     1 + 128 * CAST(f AS INT), 128), 128, '0') AS rh
-  FROM (SELECT doc_id, text, unnest(range(0, 1 + doc_id % 3)) AS f
-        FROM documents) t
-)
-SELECT media_id, frame_idx, 'jpeg' AS codec,
-  array_to_string(list_transform(range(0, 16), j ->
-    CAST(list_sum(list_transform(range(0, 8), i ->
-      (strpos('0123456789ABCDEF',
-              substr(rh, CAST((j // 2) * 8 + i AS INT) * 2 + 1, 1)) - 1)
-      * 16
-      + strpos('0123456789ABCDEF',
-               substr(rh, CAST((j // 2) * 8 + i AS INT) * 2 + 2, 1)) - 1
-    )) AS VARCHAR)), '|') AS feature
-FROM frames
-"""
-
-
-def _build_video_frames(spark, sf_dir: str):
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ..operators.multimodal import video_frame_features
-
-    raw = spark.table("documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.expr("encode(text, 'UTF-8')").alias("tb"),
-    )
-    # the encode fixture fans out CPU-bound JPEG-encode work per doc;
-    # a single-file scan would pin it (and everything downstream) to
-    # one core — spread the narrow (id, text) rows BEFORE the fan-out
-    # (same guard as video_frame_features; measured 28x at sf0.1)
-    sc = spark.sparkContext
-    if raw.rdd.getNumPartitions() < sc.defaultParallelism:
-        raw = raw.repartition(sc.defaultParallelism, "media_id")
-
-    def encode(batches):
-        from ..operators.jpeg import encode_jpeg
-        from ..operators.mp4 import encode_mjpeg_mp4
-
-        for pdf in batches:
-            payloads = []
-            for mid, tb in zip(pdf["media_id"], pdf["tb"]):
-                mid = int(mid)
-                b = bytes(tb) if tb is not None else b""
-                frames = []
-                for f in range(1 + mid % 3):
-                    chunk = b[64 * f : 64 * f + 64].ljust(64, b"\x00")
-                    blocks = np.frombuffer(chunk, np.uint8).reshape(8, 8)
-                    img = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
-                    if f % 3:
-                        # r11 (verdict #7): frame 1 is r=g=b RGB at
-                        # 4:2:2, frame 2 at 4:2:0 — bit-exact decode
-                        # for both (multimodal_jpeg_features
-                        # docstring: Y=v exactly, Cb=Cr=128 exactly,
-                        # and 2x2 luma sampling keeps each 8x8 luma
-                        # block constant), so the oracle's per-frame
-                        # chunk sums are UNCHANGED while the demux->
-                        # decode path exercises ALL THREE sampling
-                        # modes inside MJPEG under the driver hash
-                        rgb = np.repeat(img[:, :, None], 3, 2)
-                        mode = "422" if f % 3 == 1 else "420"
-                        frames.append(
-                            encode_jpeg(rgb, quant=1, subsample=mode)
-                        )
-                    else:
-                        frames.append(encode_jpeg(img, quant=1))
-                payloads.append(encode_mjpeg_mp4(64, 64, frames))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    media = raw.mapInPandas(
-        encode, schema="media_id BIGINT, payload BINARY"
-    )
-    feats = video_frame_features(media)
-    return feats.select(
-        "media_id",
-        "frame_idx",
-        "codec",
-        F.expr(
-            "concat_ws('|', transform(feature,"
-            " x -> CAST(round(x * 8) AS INT)))"
-        ).alias("feature"),
-    )
-
-
-@q("multimodal_video_metadata")
-def _video_metadata_q(d: str) -> str:
-    """HASH-GATED MP4 container-metadata pipeline (verdict r5 missing
-    #3, plumbing level): per doc the Spark side builds a byte-real ISO
-    BMFF tree (operators/mp4.py encode_mp4_skeleton — ftyp + moov with
-    mvhd, tkhd, mdhd, hdlr, stsd sample entries; every doc_id-derived
-    field below becomes big-endian struct bytes) in one mapInPandas
-    stage, then walks it back with parse_mp4_metadata in a second
-    stage (video_metadata operator: payload dropped in-stage, only
-    ~60-byte metadata rows survive). All boxes are fixed-size except
-    mdat (the doc's first 64 text bytes), so the oracle mirrors every
-    output — including total byte size via the skeleton size law —
-    with integer arithmetic; any corruption in the box writer or the
-    walker breaks the hash. Frame DECODE is real for MJPEG
-    (multimodal_video_frames); inter-frame codecs stay behind
-    multimodal.py stub_decoder."""
-    from ..operators.mp4 import AUDIO_TRAK_BYTES, VIDEO_SKELETON_BYTES
-
-    if d == SPARK:
-        # built by _build_video_metadata; SQL form unused
-        raise NotImplementedError
-    return f"""
-SELECT doc_id AS media_id, 'isom' AS major_brand,
-  CAST({VIDEO_SKELETON_BYTES} + (doc_id % 2) * {AUDIO_TRAK_BYTES}
-       + least(octet_length(encode(text)), 64) AS BIGINT) AS n_bytes,
-  CAST(1 + (doc_id * 37) % 7200000 AS BIGINT) AS duration_ms,
-  CAST(1 + doc_id % 2 AS INT) AS n_tracks,
-  CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 'avc1' WHEN 1 THEN 'hev1'
-       WHEN 2 THEN 'mp4v' ELSE 'av01' END AS codec,
-  CAST(16 * (1 + doc_id % 120) AS INT) AS width,
-  CAST(16 * (1 + doc_id % 68) AS INT) AS height
-FROM documents
-"""
-
-
-def _build_video_metadata(spark, sf_dir: str):
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ..operators.mp4 import encode_mp4_skeleton, video_metadata
-
-    raw = spark.table("documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.expr("substring(encode(text, 'UTF-8'), 1, 64)").alias("mdat"),
-    )
-    codecs = ["avc1", "hev1", "mp4v", "av01"]
-
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for mid, md in zip(pdf["media_id"], pdf["mdat"]):
-                mid = int(mid)
-                payloads.append(
-                    encode_mp4_skeleton(
-                        1 + (mid * 37) % 7_200_000,
-                        16 * (1 + mid % 120),
-                        16 * (1 + mid % 68),
-                        codec=codecs[mid % 4],
-                        with_audio=(mid % 2 == 1),
-                        mdat=bytes(md) if md is not None else b"",
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    media = raw.mapInPandas(
-        encode, schema="media_id BIGINT, payload BINARY"
-    )
-    return video_metadata(media)
 
 
 def _build_jpeg_features(spark, sf_dir: str):
@@ -5044,65 +4724,255 @@ def _build_jpeg_features(spark, sf_dir: str):
     )
 
 
-SPARK_BUILDERS.update(
-    {
-        "events_orders_asof_join": _build_asof_join,
-        "events_activity_range_join": _build_activity_range,
-        "skew_salted_join_agg": _build_skew_salted,
-        "multimodal_media_keys": _build_media_keys,
-        "multimodal_features": _build_media_features,
-        "multimodal_png_features": _build_png_features,
-        "multimodal_jpeg_features": _build_jpeg_features,
-        "multimodal_video_metadata": _build_video_metadata,
-        "multimodal_video_frames": _build_video_frames,
-        "remote_scan_split_agg": _build_remote_scan_split_agg,
-        "remote_scan_failover": _build_remote_scan_failover,
-        "remote_scan_filter_pushdown": _build_remote_scan_filter,
-        "remote_scan_dsv2": _build_remote_scan_dsv2,
-        "remote_scan_dsv2_split_dec": _build_remote_scan_dsv2_split_dec,
-        "remote_splits_plan": _build_remote_splits,
-        "remote_login_scan": _build_remote_login_scan,
-        "bucketed_join_rollup": _build_bucketed_join_rollup,
-        "embed_ann_ivf_fullprobe": _build_ann_ivf(n_probe=8),
-        "embed_ann_ivf_probed": _build_ann_ivf_probed_diff,
-        "embed_neardup_lsh": _build_embed_neardup_lsh,
-        "events_sessionize_native": _build_sessionize_native,
-        "events_view_click_attribution": _build_view_click_attr,
-        "remote_agg_pushdown": _build_remote_agg_pushdown,
-        "dedup_components": _build_dedup_components,
-        "dedup_canonical_corpus": _build_dedup_canonical,
-        "embed_ann_recall": _build_ann_recall,
-        "embed_semantic_dedup": _build_semdedup_diff,
-        "text_perplexity_static_lm": _build_perplexity_static,
-        "dedup_stream_screen": _build_stream_screen,
-        "dedup_substring_screen": _build_substring_screen,
-        "embed_semantic_screen": _build_semantic_screen,
-        "embed_semantic_dedup_exact": _build_semdedup_exact,
-        "embed_semantic_dedup_recall": _build_semdedup_recall,
-        "embed_ann_ivfpq": _build_ann_ivfpq_diff,
-        "embed_ann_ivfpq_recall": _build_ann_ivfpq_recall,
-        "embed_ann_ivfpq_fullprobe": _build_ann_ivfpq_fullprobe,
-    }
+@q("multimodal_jpeg_features", spark=_build_jpeg_features)
+def _jpeg_features_q(d: str) -> str:
+    """HASH-GATED end-to-end baseline-JPEG pipeline: per doc the
+    Spark side expands the first 64 text bytes
+    (zero-padded) into a 64x64 grayscale image of UNIFORM 8x8 blocks
+    (block (i,j) = byte 8i+j), ENCODES it as a real baseline JPEG
+    (FDCT, all-ones quant, T.81 Huffman, byte stuffing) in one
+    mapInPandas stage, DECODES it with decode_jpeg (marker walk,
+    canonical Huffman, dequant, IDCT) in the feature stage, and pools
+    16 chunk-means. A constant 8x8 block at quant=1 is DC-only and
+    survives the full entropy->IDCT path byte-exactly (operators/
+    jpeg.py docstring derivation), so the decoded pixels are integer
+    arithmetic the oracle mirrors: chunk c covers 4 image rows inside
+    block-row b = c//2, so its mean is sum(bytes[8b:8b+8]) / 8 — and
+    float32(S/8) is exact (S * 2^-3), so round(m*8) recovers S with no
+    rounding slack at all. The Huffman byte stream itself is
+    codec-shaped, so n_bytes/sha stay out of this gate (the PPM twin
+    pins payload bytes); any corruption across encode->huffman->
+    decode->IDCT->pool breaks the hash.
+
+    TWO rows per doc, to cover chroma subsampling end to end:
+    kind='gray' is the single-component path above;
+    kind='rgb422' encodes the SAME blocks as an RGB image with r=g=b
+    at 4:2:2 (2x1 luma sampling). With r=g=b the BT.601 conversion
+    gives Y=v exactly and Cb=Cr=128 exactly (float residue ~1e-13,
+    crushed by DC rounding), so the decoded RGB is bit-exact (v,v,v)
+    — the oracle derivation is IDENTICAL per kind (each chunk's 768
+    interleaved channel values triplicate the 256 gray pixels, so the
+    chunk mean is unchanged) while the Spark path exercises
+    3-component SOF, chroma Huffman tables, 2x1 MCU geometry, chroma
+    upsampling and YCbCr->RGB reconstruction under the driver hash."""
+    return """
+WITH hexed AS (
+  SELECT doc_id AS media_id,
+         rpad(substr(upper(hex(encode(text))), 1, 128), 128, '0') AS rh
+  FROM documents
 )
+SELECT media_id, k.kind,
+  array_to_string(list_transform(range(0, 16), j ->
+    CAST(list_sum(list_transform(range(0, 8), i ->
+      (strpos('0123456789ABCDEF',
+              substr(rh, CAST((j // 2) * 8 + i AS INT) * 2 + 1, 1)) - 1)
+      * 16
+      + strpos('0123456789ABCDEF',
+               substr(rh, CAST((j // 2) * 8 + i AS INT) * 2 + 2, 1)) - 1
+    )) AS VARCHAR)), '|') AS feature
+FROM hexed, (VALUES ('gray'), ('rgb422')) AS k(kind)
+"""
 
 
-def run_spark(spark, name: str, sf_dir: str | None = None):
-    """Build the Spark DataFrame for a catalog query (stages included)."""
-    if name in SPARK_BUILDERS:
-        import inspect
+def _build_video_frames(spark, sf_dir: str):
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
 
-        fn = SPARK_BUILDERS[name]
-        if len(inspect.signature(fn).parameters) >= 2:
-            return fn(spark, sf_dir or "/root/testdata/sf0.001")
-        return fn(spark)
-    if name in SPARK_STAGES:
-        SPARK_STAGES[name](spark)
-    return spark.sql(spark_sql_for(name))
+    from ..operators.multimodal import video_frame_features
+
+    raw = spark.table("documents").select(
+        F.col("doc_id").alias("media_id"),
+        F.expr("encode(text, 'UTF-8')").alias("tb"),
+    )
+    # the encode fixture fans out CPU-bound JPEG-encode work per doc;
+    # a single-file scan would pin it (and everything downstream) to
+    # one core — spread the narrow (id, text) rows BEFORE the fan-out
+    # (same guard as video_frame_features; measured 28x at sf0.1)
+    sc = spark.sparkContext
+    if raw.rdd.getNumPartitions() < sc.defaultParallelism:
+        raw = raw.repartition(sc.defaultParallelism, "media_id")
+
+    def encode(batches):
+        from ..operators.jpeg import encode_jpeg
+        from ..operators.mp4 import encode_mjpeg_mp4
+
+        for pdf in batches:
+            payloads = []
+            for mid, tb in zip(pdf["media_id"], pdf["tb"]):
+                mid = int(mid)
+                b = bytes(tb) if tb is not None else b""
+                frames = []
+                for f in range(1 + mid % 3):
+                    chunk = b[64 * f : 64 * f + 64].ljust(64, b"\x00")
+                    blocks = np.frombuffer(chunk, np.uint8).reshape(8, 8)
+                    img = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
+                    if f % 3:
+                        # frame 1 is r=g=b RGB at
+                        # 4:2:2, frame 2 at 4:2:0 — bit-exact decode
+                        # for both (multimodal_jpeg_features
+                        # docstring: Y=v exactly, Cb=Cr=128 exactly,
+                        # and 2x2 luma sampling keeps each 8x8 luma
+                        # block constant), so the oracle's per-frame
+                        # chunk sums are UNCHANGED while the demux->
+                        # decode path exercises ALL THREE sampling
+                        # modes inside MJPEG under the driver hash
+                        rgb = np.repeat(img[:, :, None], 3, 2)
+                        mode = "422" if f % 3 == 1 else "420"
+                        frames.append(
+                            encode_jpeg(rgb, quant=1, subsample=mode)
+                        )
+                    else:
+                        frames.append(encode_jpeg(img, quant=1))
+                payloads.append(encode_mjpeg_mp4(64, 64, frames))
+            yield pd.DataFrame(
+                {"media_id": pdf["media_id"], "payload": payloads}
+            )
+
+    media = raw.mapInPandas(
+        encode, schema="media_id BIGINT, payload BINARY"
+    )
+    feats = video_frame_features(media)
+    return feats.select(
+        "media_id",
+        "frame_idx",
+        "codec",
+        F.expr(
+            "concat_ws('|', transform(feature,"
+            " x -> CAST(round(x * 8) AS INT)))"
+        ).alias("feature"),
+    )
+
+
+@q("multimodal_video_frames", spark=_build_video_frames)
+def _video_frames_q(d: str) -> str:
+    """HASH-GATED MJPEG frame-decode pipeline — the frame-decode slot
+    is REAL for one codec: per doc the
+    Spark side encodes 1 + doc_id%3 frames (frame f = text bytes
+    [64f, 64f+64) zero-padded, expanded to a 64x64 grayscale image of
+    uniform 8x8 blocks), each as a complete baseline JPEG
+    (operators/jpeg.py encode_jpeg, quant=1), MUXES them into a valid
+    MJPEG mp4 with real sample tables (operators/mp4.py
+    encode_mjpeg_mp4: stsz/stco/stsc/stts), then DEMUXES through those
+    tables and DECODES every frame (video_frame_features ->
+    extract_video_samples -> decode_jpeg) into 16 chunk-means. The
+    uniform-block/quant=1 construction survives the entropy->IDCT
+    path byte-exactly (the multimodal_jpeg_features derivation), so
+    the oracle mirrors every frame's chunk sums with integer
+    arithmetic over hex windows of the text — any corruption across
+    encode->mux->demux->entropy-decode->IDCT->pool breaks the hash.
+    Frame 1 is encoded as r=g=b RGB at 4:2:2
+    and frame 2 at 4:2:0 — bit-exact decode by the Y=v / Cb=Cr=128
+    construction (multimodal_jpeg_features docstring; 2x2 luma
+    sampling keeps each 8x8 luma block constant), so this oracle is
+    unchanged while the MJPEG demux->decode path exercises all three
+    sampling modes under the driver hash.
+    Inter-frame codecs (avc1/hev1/av01) remain the declared stub;
+    the codec-library boundary is per-codec, not per-operator."""
+    return """
+WITH frames AS (
+  SELECT doc_id AS media_id,
+         CAST(f AS INT) AS frame_idx,
+         rpad(substr(upper(hex(encode(text))),
+                     1 + 128 * CAST(f AS INT), 128), 128, '0') AS rh
+  FROM (SELECT doc_id, text, unnest(range(0, 1 + doc_id % 3)) AS f
+        FROM documents) t
+)
+SELECT media_id, frame_idx, 'jpeg' AS codec,
+  array_to_string(list_transform(range(0, 16), j ->
+    CAST(list_sum(list_transform(range(0, 8), i ->
+      (strpos('0123456789ABCDEF',
+              substr(rh, CAST((j // 2) * 8 + i AS INT) * 2 + 1, 1)) - 1)
+      * 16
+      + strpos('0123456789ABCDEF',
+               substr(rh, CAST((j // 2) * 8 + i AS INT) * 2 + 2, 1)) - 1
+    )) AS VARCHAR)), '|') AS feature
+FROM frames
+"""
+
+
+def _build_video_metadata(spark, sf_dir: str):
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from ..operators.mp4 import encode_mp4_skeleton, video_metadata
+
+    raw = spark.table("documents").select(
+        F.col("doc_id").alias("media_id"),
+        F.expr("substring(encode(text, 'UTF-8'), 1, 64)").alias("mdat"),
+    )
+    codecs = ["avc1", "hev1", "mp4v", "av01"]
+
+    def encode(batches):
+        for pdf in batches:
+            payloads = []
+            for mid, md in zip(pdf["media_id"], pdf["mdat"]):
+                mid = int(mid)
+                payloads.append(
+                    encode_mp4_skeleton(
+                        1 + (mid * 37) % 7_200_000,
+                        16 * (1 + mid % 120),
+                        16 * (1 + mid % 68),
+                        codec=codecs[mid % 4],
+                        with_audio=(mid % 2 == 1),
+                        mdat=bytes(md) if md is not None else b"",
+                    )
+                )
+            yield pd.DataFrame(
+                {"media_id": pdf["media_id"], "payload": payloads}
+            )
+
+    media = raw.mapInPandas(
+        encode, schema="media_id BIGINT, payload BINARY"
+    )
+    return video_metadata(media)
+
+
+@q("multimodal_video_metadata", spark=_build_video_metadata)
+def _video_metadata_q(d: str) -> str:
+    """HASH-GATED MP4 container-metadata pipeline (plumbing level):
+    per doc the Spark side builds a byte-real ISO
+    BMFF tree (operators/mp4.py encode_mp4_skeleton — ftyp + moov with
+    mvhd, tkhd, mdhd, hdlr, stsd sample entries; every doc_id-derived
+    field below becomes big-endian struct bytes) in one mapInPandas
+    stage, then walks it back with parse_mp4_metadata in a second
+    stage (video_metadata operator: payload dropped in-stage, only
+    ~60-byte metadata rows survive). All boxes are fixed-size except
+    mdat (the doc's first 64 text bytes), so the oracle mirrors every
+    output — including total byte size via the skeleton size law —
+    with integer arithmetic; any corruption in the box writer or the
+    walker breaks the hash. Frame DECODE is real for MJPEG
+    (multimodal_video_frames); inter-frame codecs stay behind
+    multimodal.py stub_decoder."""
+    from ..operators.mp4 import AUDIO_TRAK_BYTES, VIDEO_SKELETON_BYTES
+
+    return f"""
+SELECT doc_id AS media_id, 'isom' AS major_brand,
+  CAST({VIDEO_SKELETON_BYTES} + (doc_id % 2) * {AUDIO_TRAK_BYTES}
+       + least(octet_length(encode(text)), 64) AS BIGINT) AS n_bytes,
+  CAST(1 + (doc_id * 37) % 7200000 AS BIGINT) AS duration_ms,
+  CAST(1 + doc_id % 2 AS INT) AS n_tracks,
+  CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 'avc1' WHEN 1 THEN 'hev1'
+       WHEN 2 THEN 'mp4v' ELSE 'av01' END AS codec,
+  CAST(16 * (1 + doc_id % 120) AS INT) AS width,
+  CAST(16 * (1 + doc_id % 68) AS INT) AS height
+FROM documents
+"""
+
+
+def run_spark(spark, name: str, sf_dir: str):
+    """Build the Spark DataFrame for a catalog entry."""
+    e = CATALOG[name]
+    return e.spark(spark, sf_dir) if e.spark else spark.sql(e.sql(SPARK))
 
 
 def spark_sql_for(name: str) -> str:
-    return CATALOG[name](SPARK)
+    """The Spark SQL text of an entry that has no builder."""
+    e = CATALOG[name]
+    if e.spark:
+        raise ValueError(f"{name} is built by {e.spark.__name__}, not SQL")
+    return e.sql(SPARK)
 
 
 def oracle_sql_for(name: str) -> str:
-    return CATALOG[name](DUCK)
+    return CATALOG[name].sql(DUCK)

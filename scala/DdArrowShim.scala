@@ -597,7 +597,9 @@ class DdScan(
     s"dd_arrow_dsv2 PushedFilters: [${pushed.mkString(", ")}], " +
       s"PushedAggregation: $aggPushed, RemoteSql: $sql"
 
-  override def planInputPartitions(): Array[InputPartition] =
+  // Spark asks every copy of the physical scan node for its partitions,
+  // and the copies share this Scan: fetch /v1/plan once per scan.
+  private lazy val partitions: Array[InputPartition] =
     if (split) {
       // each split is the server's rewritten slice of splitPlanSql;
       // with an aggregate pushed, wrapSplit makes the
@@ -609,6 +611,8 @@ class DdScan(
     } else {
       Array(DdPartition(Array(url), sql, 0))
     }
+
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
   override def createReaderFactory(): PartitionReaderFactory =
     new DdReaderFactory(token, emptyProjection,

@@ -494,6 +494,23 @@ def test_plan_and_schema_probe_retry_5xx(registered):
         assert srv.requests == ["/v1/query"], srv.requests
 
 
+def test_split_scan_fetches_plan_once_per_action(registered):
+    """Spark asks each copy of the physical scan node for its input
+    partitions; the scan memoizes the split plan, so one action sends
+    one /v1/plan and then one /v1/query per split, raw or aggregated."""
+    with ArrowTestServer({"lineitem": LINEITEM}) as srv:
+        df = dd_read_arrow(
+            registered, srv.url, source_table="lineitem",
+            split=True, split_size=64 * 1000,
+        )
+        for frame in (df, df.groupBy("l_returnflag").count()):
+            srv.requests.clear()
+            frame.collect()
+            assert srv.requests == ["/v1/plan"] + ["/v1/query"] * 6, (
+                srv.requests
+            )
+
+
 def test_agg_pushdown_builder_server_side(registered, server):
     """dd_read_arrow_agg ships the aggregate to the server: the wire SQL
     carries the GROUP BY, and only aggregated rows come back."""

@@ -69,8 +69,11 @@ def _restore_documents(spark, tables):
 
 
 def _spark_run(spark, pdf: pd.DataFrame) -> set[tuple]:
+    import tests.conftest as C
+
     spark.createDataFrame(pdf).createOrReplaceTempView("documents")
-    rows = Q.run_spark(spark, "cross_source_contamination").collect()
+    df = Q.run_spark(spark, "cross_source_contamination", C.SF_DIR)
+    rows = df.collect()
     return {
         (r.source_a, r.source_b, r.shared_ngrams) for r in rows
     }
@@ -108,7 +111,7 @@ def test_chunked_sql_equals_mask_sql_when_both_apply(spark, tables):
     mask = {
         tuple(r)
         for r in spark.sql(
-            Q.spark_sql_for("cross_source_contamination")
+            Q._contamination(Q.SPARK)
         ).collect()
     }
     chunked = {

@@ -7,6 +7,7 @@ import random
 import pytest
 from pyspark.sql import types as T
 
+import tests.conftest as C
 from dazzleduck_sql_duckdb_spark.operators.dedup import (
     exact_dedup,
     minhash_neardup_pairs,
@@ -126,7 +127,7 @@ def test_simhash_pigeonhole_equals_bruteforce(spark, tables):
     set — recall is exactly 100% by pigeonhole (4 chunks, hamming<=3)."""
     from dazzleduck_sql_duckdb_spark.plans import queries as Q
 
-    lsh = Q.run_spark(spark, "dedup_simhash")
+    lsh = Q.run_spark(spark, "dedup_simhash", C.SF_DIR)
     got = {(r.doc_a, r.doc_b, r.hamming) for r in lsh.collect()}
     brute = spark.sql(
         """
@@ -294,15 +295,19 @@ def test_minhash_materialize_modes(spark, tmp_path):
 
 
 def test_simhash_scale_gate_picks_bounded_form(spark, tables):
-    """At gate scale (500 docs <= SIMHASH_BUCKET_CAP) the staging
-    builder's count proves every bucket fits one aggregation buffer,
-    so the branch-free r13 single-aggregation plan must be chosen."""
+    """At gate scale (500 docs <= SIMHASH_BUCKET_CAP) the builder's
+    corpus count proves every bucket fits one aggregation buffer, so
+    the branch-free single-aggregation plan must be chosen."""
     from dazzleduck_sql_duckdb_spark.plans import queries as Q
 
-    Q.run_spark(spark, "dedup_simhash")  # staging sets _SIMHASH_N_DOCS
-    assert Q._SIMHASH_N_DOCS is not None
-    assert Q._SIMHASH_N_DOCS <= Q.SIMHASH_BUCKET_CAP
-    sql = Q.spark_sql_for("dedup_simhash")
+    n_docs = spark.table("documents").count()
+    assert n_docs <= Q.SIMHASH_BUCKET_CAP
+    df = Q.run_spark(spark, "dedup_simhash", C.SF_DIR)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    assert "SortMergeJoin" not in plan and "Window" not in plan
+    sql = Q._simhash_pairs(Q.SPARK, n_docs=n_docs)
     assert "pairs_big" not in sql and "MERGE" not in sql
 
 
@@ -358,15 +363,13 @@ def test_simhash_mega_bucket_form_identical(spark, tables, monkeypatch):
         assert (7, 100, 2) in brute and (200, 201, 1) in brute
 
         monkeypatch.setattr(Q, "SIMHASH_BUCKET_CAP", 8)
-        monkeypatch.setattr(Q, "_SIMHASH_N_DOCS", 8)
-        bounded_sql = Q.spark_sql_for("dedup_simhash")
+        bounded_sql = Q._simhash_pairs(Q.SPARK, n_docs=8)
         assert "pairs_big" not in bounded_sql
-        monkeypatch.setattr(Q, "_SIMHASH_N_DOCS", len(rows))
-        routing_sql = Q.spark_sql_for("dedup_simhash")
+        routing_sql = Q._simhash_pairs(Q.SPARK, n_docs=len(rows))
         assert "pairs_big" in routing_sql and "MERGE" in routing_sql
         # unknown corpus size must choose the conservative routing form
-        monkeypatch.setattr(Q, "_SIMHASH_N_DOCS", None)
-        assert "pairs_big" in Q.spark_sql_for("dedup_simhash")
+        assert "pairs_big" in Q._simhash_pairs(Q.SPARK, n_docs=None)
+        assert "pairs_big" in Q._simhash_pairs(Q.SPARK)
 
         routing_df = spark.sql(routing_sql)
         plan = routing_df._sc._jvm.PythonSQLUtils.explainString(
@@ -385,4 +388,4 @@ def test_simhash_mega_bucket_form_identical(spark, tables, monkeypatch):
         assert routing == brute
     finally:
         # restore the real staged view for later modules
-        Q._build_simhash_stages(spark)
+        Q._stage_simhash_values(spark)

@@ -54,22 +54,30 @@ def test_prepare_pins_utc_session_timezone(spark):
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
-def test_prepare_rebinds_tables_after_scale_switch(spark):
+@pytest.mark.parametrize(
+    "name", ["lineitem_count", "bucketed_join_rollup", "dedup_simhash"]
+)
+def test_prepare_rebinds_tables_after_scale_switch(spark, name):
     """The table views are session-global: after A -> B, a query at A
-    must re-point them at A instead of reading B's data. Ends bound to
-    the suite's SF_DIR."""
+    must re-point them at A instead of reading B's data, and nothing a
+    builder wrote or staged for B (bucketed tables, the staged simhash
+    view) may be served at A. Every step is compared with the DuckDB
+    oracle. Ends bound to the suite's SF_DIR."""
     import __spark_entry__ as E
+    from check_parity import duck_connect, norm_rows
 
     other = os.path.join(
         os.path.dirname(SF_DIR),
         "sf0.001" if SF_DIR.endswith("sf0.01") else "sf0.01",
     )
-    count = E.queries()["lineitem_count"]
+    run = E.queries()[name]
     for sf_dir in (SF_DIR, other, SF_DIR):
-        want = spark.read.parquet(
-            os.path.join(sf_dir, "lineitem.parquet")
-        ).count()
-        assert count(spark, sf_dir).collect()[0][0] == want, sf_dir
+        df = run(spark, sf_dir)
+        got = norm_rows(df.columns, [tuple(r) for r in df.collect()])
+        rel = duck_connect(sf_dir).execute(E.oracle_sql()[name])
+        cols = [c[0] for c in rel.description]
+        want = norm_rows(cols, rel.fetchall())
+        assert got == want, sf_dir
 
 
 def test_decimal_export_guard_fails_decimal_probe(spark, monkeypatch):
