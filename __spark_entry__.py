@@ -33,18 +33,43 @@ from dazzleduck_sql_duckdb_spark.plans import queries as Q
 from dazzleduck_sql_duckdb_spark.session import load_tables
 
 
+_VIEW = "org.apache.spark.sql.catalyst.plans.logical.View"
+_FILE_SCAN = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_FILES = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+
+
+def _view_roots(spark: SparkSession, view: str) -> list[str] | None:
+    """Root paths of a temp view that is one file scan, read from the
+    view's own plan (no file listing); None for any other shape."""
+    opt = spark._jsparkSession.sessionState().catalog().getTempView(view)
+    if not opt.isDefined():
+        return None
+    plan = opt.get()
+    if plan.getClass().getName() != _VIEW:
+        return None
+    scan = plan.child()
+    if scan.getClass().getName() != _FILE_SCAN:
+        return None
+    rel = scan.relation()
+    if rel.getClass().getName() != _FILES:
+        return None
+    return rel.location().rootPaths().mkString("\n").split("\n")
+
+
 def _bound_to(spark: SparkSession, sf_dir: str) -> bool:
     """Whether the session's table views already read sf_dir and the
-    dd_* functions are registered, read back from the session itself."""
-    cat = spark.catalog
-    if not (cat.tableExists("lineitem") and cat.functionExists("dd_version")):
+    dd_* functions are registered, read back from the session itself.
+    Any unexpected plan shape counts as unbound, so the caller
+    re-binds."""
+    roots = _view_roots(spark, "lineitem")
+    catalog = spark._jsparkSession.sessionState().catalog()
+    dd_version = spark._jvm.org.apache.spark.sql.catalyst.FunctionIdentifier.apply(
+        "dd_version"
+    )
+    if roots is None or not catalog.isTemporaryFunction(dd_version):
         return False
     want = os.path.abspath(os.path.join(sf_dir, "lineitem.parquet"))
-    files = spark.table("lineitem").inputFiles()
-    paths = [unquote(urlparse(f).path) for f in files]
-    return bool(paths) and all(
-        p == want or p.startswith(want + "/") for p in paths
-    )
+    return [unquote(urlparse(p).path) for p in roots] == [want]
 
 
 def _prepare(spark: SparkSession, sf_dir: str) -> None:

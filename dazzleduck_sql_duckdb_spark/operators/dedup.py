@@ -5,9 +5,10 @@ Design for scale (the 100 TB contract):
 - **Exact dedup** shuffles a 128-bit content hash, never raw text.
 - **MinHash+LSH** never forms the n^2 pair space: shingle -> hash ->
   K-permutation signature -> band buckets -> bucket-equi-join ->
-  exact verify on the (tiny) candidate set. Shingling + signatures run
-  as ONE fused numpy pandas UDF (Arrow batches) — interpreted SQL
-  higher-order functions are orders of magnitude slower at K=128.
+  exact verify on the (tiny) candidate set. Shingling, signatures and
+  band keys run as ONE fused JVM kernel (scala/DdKernels.scala, a typed
+  Scala UDF) — interpreted SQL higher-order functions are orders of
+  magnitude slower at K=128, and a Python UDF pays a worker round trip.
 - **SimHash** blocks on 15-bit chunks: hamming<=3 over 60 bits across
   4 chunks always shares a chunk (pigeonhole), so recall is exactly
   100% — LSH output == brute-force output, at O(n·chunks) shuffle.
@@ -22,13 +23,10 @@ verification is exact, so the row sets coincide.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-P31 = 2_147_483_647  # minhash universe: Mersenne prime 2^31-1
+from ..jvm import kernels
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text",
@@ -43,112 +41,52 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
     )
 
 
-# two ~31-bit primes for the double polynomial rolling hash
-_RH_P1 = 2_147_483_647
-_RH_P2 = 2_147_483_629
-_RH_B1 = 1_114_117  # > max codepoint 0x10FFFF: injective per-position mixing
-_RH_B2 = 1_114_129
-
-
-def _np_shingle_set(text: str, n: int) -> np.ndarray:
-    """Distinct shingle codes of lower(trim(text)), fully vectorized.
-
-    Shingles are CHARACTER n-grams (codepoints, matching SQL substr
-    semantics, not bytes). Each window hashes to
-    (poly_p1 << 31) | poly_p2 — a 62-bit double hash; a cross-pair
-    collision needs both 31-bit polynomials to collide (~2^-62).
-    """
-    # SQL trim() strips ONLY spaces (not \t\n) — match it exactly, the
-    # DuckDB oracle computes shingles of lower(trim(text))
-    t = text.strip(" ").lower()
-    codes = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32)
-    if len(codes) < n:
-        # SQL substr returns the SHORT string as the single shingle; pad
-        # to the window width with a sentinel ABOVE the Unicode range
-        # (0x10FFFF) so 'a' and 'a\x00' stay distinct and no padded
-        # window can collide with a real n-codepoint window
-        codes = np.pad(
-            codes, (0, n - len(codes)), constant_values=0x110000
-        )
-        w = codes.reshape(1, n).astype(np.int64)
-    else:
-        w = np.lib.stride_tricks.sliding_window_view(codes, n).astype(np.int64)
-    h1 = np.zeros(len(w), dtype=np.int64)
-    h2 = np.zeros(len(w), dtype=np.int64)
-    for j in range(n):  # Horner, mod kept < 2^31 so products fit int64
-        h1 = (h1 * _RH_B1 + w[:, j]) % _RH_P1
-        h2 = (h2 * _RH_B2 + w[:, j]) % _RH_P2
-    return np.unique((h1 << 31) | h2)
-
-
 def make_shingle_sig_udf(a: list[int], b: list[int], n: int, bands: int = 0):
     """Fused kernel: text -> (distinct shingle-hash set, minhash sig
-    [, per-band bucket keys]).
+    [, per-band bucket keys]), as a function from a text Column to a
+    ``struct<sh, sig[, bkeys]>`` Column.
 
-    One Arrow round-trip instead of (JVM HOF shingle stage -> persist ->
-    pandas signature stage); the per-window hashing is numpy matland.
-    sig[k] = min over h of (a[k]*(h mod P31) + b[k]) % P31 — products
-    stay below 2^62, so int64 arithmetic is exact.
+    The kernel runs in the JVM (`DdKernels.minhash` in
+    scala/DdKernels.scala), a typed Scala UDF named ``dd_minhash`` that
+    holds the seeds and ``(n, bands)`` in its closure, so no Python
+    worker starts and no Arrow batch crosses. Shingles are CHARACTER
+    n-grams of Python's ``text.strip(" ").lower()`` (SQL ``trim()``
+    strips only spaces, as the DuckDB oracle does); each window hashes
+    to a 62-bit double polynomial, so a cross-pair collision needs both
+    31-bit polynomials to collide (~2^-62). sig[k] = min over h of
+    (a[k]*(h mod P31) + b[k]) mod P31; a null text gives an empty set
+    and an all-P31 signature.
 
     With ``bands`` > 0 the kernel also emits ``bkeys``: one int64 bucket
     key per band — a polynomial hash of that band's signature rows plus
-    the band index. Emitting keys here (numpy, once, persisted) beats
-    building them JVM-side after the band explode, where the
-    slice+cast+concat expression re-evaluates per exploded row. A
-    cross-band or cross-bucket hash collision only ADDS a candidate
-    pair, which exact verification then rejects — never a miss.
+    the band index. Emitting keys here (once, persisted) beats building
+    them after the band explode, where the slice+cast+concat expression
+    re-evaluates per exploded row. A cross-band or cross-bucket hash
+    collision only ADDS a candidate pair, which exact verification then
+    rejects — never a miss. When ``bands`` does not divide K, the
+    trailing K - bands*(K // bands) signature rows are unused.
+
+    Outputs are bit-identical to the numpy reference the tests keep
+    (tests/minhash_reference.py); persisted streaming indexes store
+    ``sh`` and ``bkeys``, so they must stay that way.
     """
-    A = np.asarray(a, dtype=np.int64).reshape(-1, 1)
-    B = np.asarray(b, dtype=np.int64).reshape(-1, 1)
-    empty_sig = np.full(len(a), P31, dtype=np.int64)
-    fields = [
-        T.StructField("sh", T.ArrayType(T.LongType())),
-        T.StructField("sig", T.ArrayType(T.LongType())),
-    ]
-    if bands:
-        fields.append(T.StructField("bkeys", T.ArrayType(T.LongType())))
-        rows_per_band = len(a) // bands
-        band_ix = np.arange(bands, dtype=np.int64)
+    seeds_a, seeds_b = [int(x) for x in a], [int(x) for x in b]
 
-    def _bkeys(sig: np.ndarray) -> np.ndarray:
-        # double 31-bit polynomial fold -> 62-bit key, seeded with the
-        # band index. acc < 2^31 and multiplier < 2^21, so products stay
-        # far below 2^63 — no int64 overflow, full mixing of every row.
-        # When bands doesn't divide K (auto_bands can pick r=7 -> b=18
-        # at K=128) the trailing K - bands*r signature rows are unused.
-        w = sig[: bands * rows_per_band].reshape(bands, rows_per_band)
-        acc1 = band_ix.copy()
-        acc2 = band_ix + np.int64(1)
-        for j in range(rows_per_band):
-            acc1 = (acc1 * 1_000_003 + w[:, j]) % _RH_P1
-            acc2 = (acc2 * 1_000_033 + w[:, j]) % _RH_P2
-        return (acc1 << 31) | acc2
-
-    out_type = T.StructType(fields)
-
-    @F.pandas_udf(out_type)
-    def kernel(texts: pd.Series) -> pd.DataFrame:
-        shs, sigs, bks = [], [], []
-        for t in texts:
-            if t is None:
-                shs.append(np.empty(0, dtype=np.int64))
-                sigs.append(empty_sig)
-            else:
-                sh = _np_shingle_set(t, n)
-                shs.append(sh)
-                if len(sh):
-                    h = np.mod(sh, P31).reshape(1, -1)
-                    sigs.append(((A * h + B) % P31).min(axis=1))
-                else:
-                    sigs.append(empty_sig)
-            if bands:
-                bks.append(_bkeys(sigs[-1]))
-        cols = {"sh": shs, "sig": sigs}
-        if bands:
-            cols["bkeys"] = bks
-        return pd.DataFrame(cols)
+    def kernel(text: Column) -> Column:
+        jk = kernels(SparkSession.active())
+        return Column(jk.minhash(text._jc, seeds_a, seeds_b, n, bands))
 
     return kernel
+
+
+def simhash_column(tokens: Column, bits: int) -> Column:
+    """Majority fold of the tokens' 60-bit md5 prefixes
+    (``int(md5(utf8(t)).hexdigest()[:15], 16)``) over ``bits`` bit
+    positions, as a bigint Column; 0 for a null or empty token array.
+    Runs in the JVM (`DdKernels.simhash`, a Scala UDF named
+    ``dd_simhash``)."""
+    jk = kernels(SparkSession.active())
+    return Column(jk.simhash(tokens._jc, bits))
 
 
 def minhash_pair_recall(rows_per_band: int, bands: int, jaccard: float) -> float:
@@ -234,7 +172,7 @@ def minhash_neardup_pairs(
 
     Pipeline (no n^2 stage anywhere):
       distinct shingle-hash int64 arrays (ONE persisted stage, reused by
-      both the signature and the verify paths) -> numpy minhash
+      both the signature and the verify paths) -> JVM minhash
       signatures -> explode bands -> self-join on (band, key, block)
       -> distinct candidates -> exact set-Jaccard verify on int arrays.
 
@@ -305,7 +243,7 @@ def minhash_neardup_pairs(
     if docs.rdd.getNumPartitions() < sc.defaultParallelism:
         docs = docs.repartition(sc.defaultParallelism, id_col)
     kernel = make_shingle_sig_udf(a, b, shingle_n, bands=bands)
-    # one fused Arrow pass: text -> (shingle set, signature, band keys);
+    # one fused JVM kernel pass: text -> (shingle set, signature, band keys);
     # persist()ed — columnar cache, the fast format for the multiple
     # scans this call performs (band self-join reads bkeys twice,
     # verify reads sh twice; a serialized-row localCheckpoint here

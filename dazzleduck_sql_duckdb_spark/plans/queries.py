@@ -1598,13 +1598,13 @@ FROM documents GROUP BY 1
 
 
 def _build_minhash_df(spark, sf_dir: str):
-    """DataFrame-API path: numpy-vectorized MinHash (operators/dedup.py).
+    """DataFrame-API path: MinHash + LSH (operators/dedup.py).
 
-    Shingle hashing is JVM-native xxhash64 (the oracle never sees the
-    hashes — only the final exact-verified Jaccard values, which match
-    the string-set Jaccard up to a ~2^-60 collision); the signature
-    kernel is numpy (~50x faster than interpreted HOF lambdas at
-    K=128)."""
+    Shingling, the 62-bit double-polynomial shingle hash, the signature
+    and the band keys run in one JVM kernel (scala/DdKernels.scala). The
+    oracle never sees the hashes — only the final exact-verified Jaccard
+    values, which match the string-set Jaccard up to a ~2^-62
+    collision."""
     from ..operators.dedup import minhash_neardup_pairs
 
     return minhash_neardup_pairs(
@@ -2063,48 +2063,15 @@ def _stage(spark, view: str, df):
 
 
 def _stage_simhash_values(spark) -> None:
-    # Tokenization stays JVM-side (codegen split/filter — exactly the
-    # oracle's token set); the per-token md5 + 60-bit majority fold runs
-    # as ONE numpy/hashlib pandas UDF. The SQL twin evaluates md5 inside
-    # an interpreted HOF lambda (~250k evals at sf0.1) — the fused
-    # kernel is ~4x faster and bit-identical: hash60(t) ==
+    # Tokenization stays codegen'd SQL (split/filter — exactly the
+    # oracle's token set); the per-token md5 + 60-bit majority fold is
+    # one JVM kernel (operators/dedup.py simhash_column). The SQL twin
+    # evaluates md5 inside an interpreted HOF lambda (~250k evals at
+    # sf0.1); the kernel is bit-identical: hash60(t) ==
     # int(md5(utf8(t)).hexdigest()[:15], 16).
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    bits = np.arange(SIMHASH_BITS, dtype=np.int64)
-
-    # NB: no type hints — local imports + postponed annotations break
-    # pandas_udf's hint evaluation; legacy SCALAR inference applies
-    @F.pandas_udf(T.LongType())
-    def _simhash_np(tok):
-        md5 = hashlib.md5
-        cache: dict[str, int] = {}  # tokens repeat heavily in prose
-        out = np.zeros(len(tok), dtype=np.int64)
-        for i, arr in enumerate(tok):
-            if arr is None or len(arr) == 0:
-                continue
-            hv = np.fromiter(
-                (
-                    cache.get(t)
-                    or cache.setdefault(
-                        t, int(md5(t.encode()).hexdigest()[:15], 16)
-                    )
-                    for t in arr
-                ),
-                dtype=np.int64,
-                count=len(arr),
-            )
-            # per bit b: sum over tokens of +1/-1 by bit value; set bit
-            # where the sum is positive (matches _simhash_from_hashes)
-            ones = ((hv[:, None] >> bits) & 1).sum(axis=0)
-            bitsum = 2 * ones - len(hv)
-            out[i] = int(((bitsum > 0).astype(np.int64) << bits).sum())
-        return pd.Series(out)
+    from ..operators.dedup import simhash_column
 
     # widen the single-row-group scan before the CPU-heavy kernel (no-op
     # on real multi-partition inputs)
@@ -2113,7 +2080,10 @@ def _stage_simhash_values(spark) -> None:
     df = spark.sql(
         f"SELECT /*+ REPARTITION({n_parts}) */ doc_id, lang, {tk} AS tok"
         " FROM documents"
-    ).select("doc_id", "lang", _simhash_np("tok").alias("simhash"))
+    ).select(
+        "doc_id", "lang",
+        simhash_column(F.col("tok"), SIMHASH_BITS).alias("simhash"),
+    )
     _stage(spark, "__sh_vals", df)
 
 

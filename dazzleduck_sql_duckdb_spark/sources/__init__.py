@@ -7,16 +7,16 @@ introspection (`dd_splits`), the in-memory Arrow IPC buffer scan
 
 Remote scans run in one reader, the JVM DSv2 source in
 `scala/DdArrowShim.scala` (`jars/dd_arrow_shim.jar`, format
-``dd_arrow_dsv2``). `register(spark)` loads the jar into the session;
-the builders call it themselves."""
+``dd_arrow_dsv2``). `register(spark)` (from `..jvm`) loads the jar into
+the session; the builders call it themselves."""
 
 from .arrow_http import (
     dd_read_arrow,
     dd_read_arrow_agg,
     dd_read_arrow_narrow,
     dd_splits,
-    register,
 )
+from ..jvm import register
 from .ipc import dd_scan_arrow_ipc, to_arrow_ipc
 
 __all__ = [

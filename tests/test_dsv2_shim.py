@@ -344,22 +344,27 @@ def _transparent_pushdown_scenarios(spark) -> dict:
 
 
 def test_jar_matches_scala_source():
-    """The committed jar must correspond to scala/DdArrowShim.scala:
-    tools/build_shim.sh records the source sha256 it compiled; a source
-    edit without a rebuild fails here (advisor finding: binary/source
-    drift was previously unchecked)."""
+    """The committed jar must correspond to every scala/*.scala file:
+    tools/build_shim.sh records the sha256 of `sha256sum` over the
+    sources in sorted name order; editing any of them (the DSv2 reader
+    or the dedup kernels) without a rebuild fails here."""
     import hashlib
 
-    src = os.path.join(REPO, "scala", "DdArrowShim.scala")
+    src_dir = os.path.join(REPO, "scala")
+    names = sorted(n for n in os.listdir(src_dir) if n.endswith(".scala"))
+    assert "DdArrowShim.scala" in names and "DdKernels.scala" in names
+    listing = ""
+    for n in names:
+        with open(os.path.join(src_dir, n), "rb") as f:
+            listing += f"{hashlib.sha256(f.read()).hexdigest()}  {n}\n"
+    want = hashlib.sha256(listing.encode()).hexdigest()
     sidecar = JAR + ".src.sha256"
     assert os.path.exists(JAR), "run tools/build_shim.sh"
     assert os.path.exists(sidecar), "rebuild: tools/build_shim.sh"
-    with open(src, "rb") as f:
-        want = hashlib.sha256(f.read()).hexdigest()
     with open(sidecar) as f:
         got = f.read().strip()
     assert got == want, (
-        "dd_arrow_shim.jar was built from a different DdArrowShim.scala"
+        "dd_arrow_shim.jar was built from different scala/*.scala sources"
         " — rebuild with tools/build_shim.sh"
     )
 

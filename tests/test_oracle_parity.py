@@ -80,6 +80,23 @@ def test_prepare_rebinds_tables_after_scale_switch(spark, name):
         assert got == want, sf_dir
 
 
+def test_bound_to_fails_closed_on_other_view_shapes(spark):
+    """The read-back takes the lineitem view's root paths from the
+    view's plan. A view of any other shape counts as unbound, so
+    _prepare re-binds it. Ends bound to the suite's SF_DIR."""
+    import __spark_entry__ as E
+
+    E._prepare(spark, SF_DIR)
+    assert E._bound_to(spark, SF_DIR)
+    assert not E._bound_to(spark, SF_DIR + "_elsewhere")
+    spark.table("lineitem").where("l_orderkey > 0").createOrReplaceTempView(
+        "lineitem"
+    )
+    assert not E._bound_to(spark, SF_DIR)
+    E._prepare(spark, SF_DIR)
+    assert E._bound_to(spark, SF_DIR)
+
+
 def test_decimal_export_guard_fails_decimal_probe(spark, monkeypatch):
     """r11 verdict directive #2: the confirmed split-dec root-cause
     class — a python Decimal crossing the driver's hasher — must be an

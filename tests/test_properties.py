@@ -109,18 +109,18 @@ def _model_shingles(t: str, n: int = 6) -> set[str]:
 def test_rolling_hash_set_size_matches_string_shingles(t):
     """|hash set| == |string shingle set| (the vectorized double hash is
     collision-free in practice; a size mismatch would break Jaccard)."""
-    from dazzleduck_sql_duckdb_spark.operators.dedup import _np_shingle_set
+    from minhash_reference import np_shingle_set
 
-    assert len(_np_shingle_set(t, 6)) == len(_model_shingles(t, 6))
+    assert len(np_shingle_set(t, 6)) == len(_model_shingles(t, 6))
 
 
 def test_shingle_set_size_matches_duckdb_trim_semantics():
-    """The numpy kernel must agree with the ORACLE's SQL semantics:
+    """The numpy reference kernel must agree with the ORACLE's SQL semantics:
     trim() strips only spaces, so tabs/newlines at the edges are part
     of the shingled text."""
     import duckdb
 
-    from dazzleduck_sql_duckdb_spark.operators.dedup import _np_shingle_set
+    from minhash_reference import np_shingle_set
     from dazzleduck_sql_duckdb_spark.plans.dialect import DUCK, shingles
 
     frag = shingles("t", 6, DUCK)
@@ -129,7 +129,7 @@ def test_shingle_set_size_matches_duckdb_trim_semantics():
         want = duckdb.sql(
             f"SELECT len({frag}) FROM (SELECT ? AS t)", params=[s]
         ).fetchone()[0]
-        assert len(_np_shingle_set(s, 6)) == want, repr(s)
+        assert len(np_shingle_set(s, 6)) == want, repr(s)
 
 
 @settings(max_examples=150, deadline=None)
@@ -137,9 +137,9 @@ def test_shingle_set_size_matches_duckdb_trim_semantics():
 def test_rolling_hash_jaccard_matches_string_jaccard(a, b):
     import numpy as np
 
-    from dazzleduck_sql_duckdb_spark.operators.dedup import _np_shingle_set
+    from minhash_reference import np_shingle_set
 
-    ha, hb = _np_shingle_set(a, 6), _np_shingle_set(b, 6)
+    ha, hb = np_shingle_set(a, 6), np_shingle_set(b, 6)
     sa, sb = _model_shingles(a), _model_shingles(b)
     assert len(np.intersect1d(ha, hb)) == len(sa & sb)
 
