@@ -4199,11 +4199,11 @@ def _remote_splits(d: str) -> str:
     split plan — per-split rewritten query text, producer id, split
     size, query checksum — and the oracle re-derives the local server's
     planning contract from first principles: n = clamp(ceil(rows*64 /
-    split_size), 1, 32) splits (local_server.py:165-175), each slicing
-    by the order-stable row-hash predicate, checksum =
-    sha256(base_sql)[:16]. Only the server-assigned endpoints[]/query
-    ids (random ports, fresh int63s) stay out of the hash — they defeat
-    any value gate by nature."""
+    split_size), 1, 32) splits (`_Handler._handle_plan` in
+    sources/local_server.py), each slicing by the order-stable row-hash
+    predicate, checksum = sha256(base_sql)[:16]. Only the
+    server-assigned endpoints[]/query ids (random ports, fresh int63s)
+    stay out of the hash — they defeat any value gate by nature."""
     return """
 WITH p AS (
   SELECT greatest(1, least(32, (count(*) * 64 + 255999) // 256000)) AS n

@@ -20,6 +20,13 @@ connection drop (the only signal a process that dies without running its
 teardown can emit, so the TCP close is the cancellation; the connection
 is the query lease).
 
+Storage: the server loads every served table once, at construction,
+into one DuckDB database (native columnar tables, not parquet views),
+and each request runs on its own cursor of that database. A hash split
+re-runs its base query over the in-memory columns, so the n requests of
+one split scan decode no parquet. Files written or deleted after
+construction are not seen.
+
 Test/demo use only — the point of the engine is that Spark executors
 fetch from *real* fleets of such servers; this one simply speaks the
 same protocol from a thread on localhost.
@@ -133,12 +140,7 @@ class _Handler(BaseHTTPRequestHandler):
         return auth == f"Bearer {self.server.token}"
 
     def _connect(self) -> duckdb.DuckDBPyConnection:
-        con = duckdb.connect()
-        for name, path in self.server.tables.items():
-            con.sql(
-                f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')"
-            )
-        return con
+        return self.server.db.cursor()
 
     # ---------------------------------------------------------- endpoints
     def do_GET(self):  # noqa: N802
@@ -173,11 +175,13 @@ class _Handler(BaseHTTPRequestHandler):
             return self._deny(400, "missing q")
         query_id = int(qs.get("id", ["0"])[0])
         self.server.queries.append(sql)
-        con = self._connect()  # must outlive the lazy relation
-        try:
-            tbl = con.sql(sql).arrow()
-        except Exception as e:
-            return self._deny(400, f"query error: {e}")
+        # the result is materialized, so the cursor closes before the
+        # (possibly throttled) stream instead of pinning a connection
+        with self._connect() as con:
+            try:
+                tbl = con.sql(sql).arrow()
+            except Exception as e:
+                return self._deny(400, f"query error: {e}")
         self.send_response(200)
         self.send_header("Content-Type", "application/vnd.apache.arrow.stream")
         self.send_header("Transfer-Encoding", "chunked")
@@ -287,10 +291,9 @@ class _Handler(BaseHTTPRequestHandler):
         split_size = int(
             self.headers.get("x-dd-split-size", DEFAULT_SPLIT_SIZE)
         )
-        con = self._connect()
         try:
             # Size the plan from the optimizer's cardinality estimate
-            # (EXPLAIN reads parquet metadata — ~1ms, no execution),
+            # (EXPLAIN reads table statistics — ~1ms, no execution),
             # NOT count(*) over the base query: re-executing the base
             # just to plan splits is the reference's own double-fetch
             # flaw (SURVEY §3.1), and a test server that full-scans at
@@ -299,10 +302,11 @@ class _Handler(BaseHTTPRequestHandler):
             # split-count contract remote_splits_plan's oracle pins)
             # and a selectivity estimate under filters — fine for a
             # byte-size heuristic.
-            txt = "\n".join(
-                t for _, t in con.sql(f"EXPLAIN SELECT * FROM ({sql})"
-                                      " AS _q").fetchall()
-            )
+            with self._connect() as con:
+                txt = "\n".join(
+                    t for _, t in con.sql(f"EXPLAIN SELECT * FROM ({sql})"
+                                          " AS _q").fetchall()
+                )
             # Classify EC-less plans STRUCTURALLY: operator names are
             # the header line of each rendered plan box (the line
             # directly under a '┌───┐' border), never projection
@@ -330,12 +334,17 @@ class _Handler(BaseHTTPRequestHandler):
             # (the analogue of the reference server's per-split rewritten
             # SQL carried in statementHandle.query). The slice predicate
             # hashes the whole row struct (hash(_b)), NOT row_number()
-            # OVER () — each split re-executes the base query in a fresh
-            # connection, and without a total order a positional slice
+            # OVER () — each split re-executes the base query on its own
+            # cursor, and without a total order a positional slice
             # can overlap or drop rows when the scan order varies.
             # Row-hash slicing is order-independent: every row lands in
             # exactly one split regardless of execution order (identical
             # duplicate rows land together, preserving multiplicity).
+            # The base runs over the tables loaded at construction, so n
+            # splits cost n scans of in-memory columns, not n parquet
+            # decodes. Disjoint rowid ranges would not scan less: DuckDB
+            # 1.0 keeps a rowid predicate as a FILTER above a full
+            # SEQ_SCAN, so no row group is pruned.
             split_sql = (
                 f"SELECT * FROM ({sql}) AS _b WHERE hash(_b) % {n} = {i}"
             )
@@ -403,8 +412,16 @@ class ArrowTestServer(ThreadingHTTPServer):
         fail_first: int = 0,
         fail_status: int = 503,
     ):
+        # every table is loaded once, before the socket is bound (a
+        # missing file then fails construction without leaking a port);
+        # each request runs on its own cursor of this one database
+        self.db = duckdb.connect()
+        for name, path in tables.items():
+            quoted = path.replace("'", "''")
+            self.db.execute(
+                f"CREATE TABLE {name} AS SELECT * FROM read_parquet('{quoted}')"
+            )
         super().__init__(("127.0.0.1", port), _Handler)
-        self.tables = dict(tables)
         self.token = token
         self.credentials = credentials
         self.throttle_s = throttle_s
@@ -446,6 +463,7 @@ class ArrowTestServer(ThreadingHTTPServer):
         if self._thread:
             self._thread.join(timeout=5)
         self.server_close()
+        self.db.close()
 
     def __enter__(self) -> "ArrowTestServer":
         return self.start()

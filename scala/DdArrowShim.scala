@@ -45,10 +45,13 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.{ArrowUtils, CaseInsensitiveStringMap}
 import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnarBatch, ColumnVector}
+import org.slf4j.LoggerFactory
 
 // ----------------------------------------------------------- wire client
 
 object DdWire {
+  private val log = LoggerFactory.getLogger("org.apache.spark.sql.dazzleduck.DdWire")
+
   /** Attempts per request on a transient failure (HTTP 5xx or a failed
    *  connection). 4xx is a client error and never retried — the
    *  reference's InvalidInput vs IOException split,
@@ -118,11 +121,14 @@ object DdWire {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Best-effort GET /v1/cancel (cancel_monitor.cpp semantics:
-   *  failures are swallowed — the connection drop is the backstop
-   *  lease-based cancel channel). A killed task reaches this with its
-   *  thread's interrupt flag set, which makes the request fail at once,
-   *  so the flag is cleared for the request and restored after. */
+  /** Best-effort GET /v1/cancel (cancel_monitor.cpp semantics: a
+   *  failure does not fail the task — the connection drop is the
+   *  backstop lease-based cancel channel — but it is logged as a WARN
+   *  with the endpoint and query id, so a cancel that never reached the
+   *  server can be told apart from one the server lost). A killed task
+   *  reaches this with its thread's interrupt flag set, which makes the
+   *  request fail at once, so the flag is cleared for the request and
+   *  restored after. */
   def cancelQuiet(base: String, qid: Long, token: String): Unit = {
     val interrupted = Thread.interrupted()
     try {
@@ -134,10 +140,14 @@ object DdWire {
       if (token != null && token.nonEmpty) {
         conn.setRequestProperty("Authorization", "Bearer " + token)
       }
-      conn.getResponseCode
+      val code = conn.getResponseCode
       conn.disconnect()
+      if (code / 100 != 2) {
+        log.warn(s"cancel of query $qid at $base answered HTTP $code")
+      }
     } catch {
-      case _: Exception => ()
+      case e: Exception =>
+        log.warn(s"cancel of query $qid at $base failed: $e")
     } finally {
       if (interrupted) Thread.currentThread().interrupt()
     }

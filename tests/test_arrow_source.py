@@ -404,21 +404,18 @@ def test_cancel_fired_when_job_killed_mid_stream(registered):
         assert not finished
 
 
-def test_like_pushdown_escapes_wildcards(registered):
+def test_like_pushdown_escapes_wildcards(registered, tmp_path):
     """startswith/contains/endswith filters are CONSUMED by pushFilters,
     so a value containing % or _ must be escaped in the remote LIKE or
     extra rows come back with no local re-filter to catch them."""
     import pandas as pd
 
-    with ArrowTestServer({"lineitem": LINEITEM}) as srv:
-        # build a tiny table where the distinction matters
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="dd_like_")
-        path = os.path.join(d, "t.parquet")
-        pd.DataFrame({"s": ["user_1", "userX1", "100%", "100x", "a_b", "axb"]}
-                     ).to_parquet(path)
-        srv.tables["t"] = path
+    # a tiny table where the distinction matters, written before the
+    # server starts (it loads its tables at construction)
+    path = str(tmp_path / "t.parquet")
+    pd.DataFrame({"s": ["user_1", "userX1", "100%", "100x", "a_b", "axb"]}
+                 ).to_parquet(path)
+    with ArrowTestServer({"t": path}) as srv:
         df = dd_read_arrow(registered, srv.url, source_table="t")
         got = sorted(r.s for r in df.where(df.s.startswith("user_")).collect())
         assert got == ["user_1"], got
@@ -426,6 +423,40 @@ def test_like_pushdown_escapes_wildcards(registered):
         assert got == ["100%"], got
         got = sorted(r.s for r in df.where(df.s.contains("_")).collect())
         assert got == ["a_b", "user_1"], got
+
+
+def test_server_serves_tables_loaded_at_construction(registered, tmp_path):
+    """The server reads each parquet file once, when it is built: with
+    the file deleted afterwards, a plain scan and a split aggregate
+    still answer what DuckDB computes over the original rows."""
+    import shutil
+
+    import duckdb
+
+    from dazzleduck_sql_duckdb_spark.sources import dd_read_arrow_agg
+
+    copy = str(tmp_path / "orders.parquet")
+    shutil.copy(ORDERS, copy)
+    with ArrowTestServer({"orders": copy}) as srv:
+        os.remove(copy)
+        rows = dd_read_arrow(registered, srv.url, source_table="orders")
+        want = duckdb.sql(f"SELECT * FROM '{ORDERS}'").fetchall()
+        assert sorted(map(tuple, rows.collect())) == sorted(want)
+
+        srv.queries.clear()
+        agg = dd_read_arrow_agg(
+            registered, srv.url, source_table="orders",
+            group_by=["o_orderstatus"],
+            aggs={"n": "count(*)", "hi": "max(o_orderkey)"},
+            split=True, split_size=64 * 300,
+        )
+        got = sorted(map(tuple, agg.collect()))
+        want = duckdb.sql(
+            "SELECT o_orderstatus, count(*), max(o_orderkey)"
+            f" FROM '{ORDERS}' GROUP BY o_orderstatus"
+        ).fetchall()
+        assert got == sorted(want)
+        assert sum("hash(_b)" in q for q in srv.queries) > 1, srv.queries
 
 
 def test_select_sugar_prunes_remote_projection(registered, server):
