@@ -5,9 +5,10 @@ A driver runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value hash).
 
-Every catalog entry is ONE ``Entry`` record in
-``dazzleduck_sql_duckdb_spark/plans/queries.py``: a dual-dialect SQL
-emitter, whose DuckDB emission is the oracle, plus an optional
+Every catalog entry is ONE ``Entry`` record in the registry
+``dazzleduck_sql_duckdb_spark/plans/queries.py``, defined in a family
+module next to it: a dual-dialect SQL emitter, whose DuckDB emission
+is the oracle, plus an optional
 ``(spark, sf_dir)`` DataFrame builder for the Spark side. The Spark
 query and the DuckDB oracle are the same computation by construction
 (see plans/dialect.py for the float/decimal discipline that makes the

@@ -62,18 +62,18 @@ def connected_components(
     if not edges_distinct:
         sym = sym.distinct()
     sym = sym.persist()
-    # Round 0 fused (optimization r13, guide §2.4): the initial labels
-    # are the identity, so round 0's neighbor join degenerates to
-    # min(self, min(neighbor)) — ONE aggregation over sym, no join, and
-    # no separate identity-labels checkpoint job. Identical values to
-    # the unfused (identity-labels + join) round 0; one shuffle + one
-    # action instead of three. sym is materialized into its cache by
-    # this same first action. The node count rides the checkpoint job
-    # as an observed metric (no extra action): it is only needed to
-    # short-circuit the edgeless-input case, where every later round
-    # would be a no-op. A changed-count at round 0 would be pointless —
-    # with any edge at all, the max endpoint of the min node's first
-    # edge always takes a smaller label, so round 0 always changes.
+    # Round 0 fused: the initial labels are the identity, so round 0's
+    # neighbor join degenerates to min(self, min(neighbor)) — ONE
+    # aggregation over sym, no join, and no separate identity-labels
+    # checkpoint job. Identical values to the unfused (identity-labels +
+    # join) round 0; one shuffle + one action instead of three. sym is
+    # materialized into its cache by this same first action. The node
+    # count rides the checkpoint job as an observed metric (no extra
+    # action): it is only needed to short-circuit the edgeless-input case,
+    # where every later round would be a no-op. A changed-count at round 0
+    # would be pointless — with any edge at all, the max endpoint of the
+    # min node's first edge always takes a smaller label, so round 0
+    # always changes.
     obs0 = Observation()
     labels = (
         sym.groupBy(F.col("a"))
@@ -92,9 +92,9 @@ def connected_components(
         # observed metric on the checkpointed result instead of an
         # extra action per round
         cur = labels.select("node", "label", F.col("label").alias("old"))
-        # Neighbor flood + pointer doubling FUSED into one join
-        # (optimization r13, guide §2.4): both probe `labels` on their
-        # second column and emit (first_col, labels.label) —
+        # Neighbor flood + pointer doubling FUSED into one join: both
+        # probe `labels` on their second column and emit (first_col,
+        # labels.label) —
         #   nbr : sym(a, b)            ⋈ labels.node = b  -> label(b)
         #   jump: labels(node, label)  ⋈ labels.node = label
         #         -> label(label(node))   (the doubling step; every
@@ -107,10 +107,10 @@ def connected_components(
         probe = sym.unionByName(
             labels.select(F.col("node").alias("a"), F.col("label").alias("b"))
         )
-        # alias the build side explicitly (advisor r13): `probe`
-        # contains `labels`, so bare column refs are the classic
-        # ambiguous-self-join shape — they resolve correctly today
-        # only because the union exposes sym's attributes
+        # alias the build side explicitly: `probe` contains `labels`, so
+        # bare column refs are the classic ambiguous-self-join shape —
+        # they resolve correctly today only because the union exposes
+        # sym's attributes
         rhs = labels.alias("rhs")
         hop = probe.join(rhs, probe["b"] == F.col("rhs.node")).select(
             F.col("a").alias("node"),

@@ -15,7 +15,7 @@ Design for scale (the 100 TB contract):
 - Signature/shingle stages are persisted (on a cluster: checkpointed
   tables) so expensive per-row arrays are computed exactly once.
 
-The DuckDB oracle (plans/queries.py) brute-forces the same pair
+The DuckDB oracle (plans/dedup.py) brute-forces the same pair
 predicate over string shingle sets; hash-set Jaccard equals string-set
 Jaccard up to the documented ~2^-62 per-pair collision bound, and
 verification is exact, so the row sets coincide.
@@ -140,9 +140,9 @@ def auto_bands(n_docs: int, k: int = 128) -> int:
     If the pipeline's contract is >=99% recall AT the threshold, grow
     the signature with r instead of holding K=128: K = r *
     bands_for_recall(r) (r=10 -> K=220, r=12 -> K=372; signature cost
-    is linear in K and the kernel is vectorized over K), or OR together
-    multiple independent K=128 band sets. Returns the BANDS count to
-    pass to minhash_neardup_pairs (which derives r = k // bands).
+    is linear in K), or OR together multiple independent K=128 band
+    sets. Returns the BANDS count to pass to minhash_neardup_pairs
+    (which derives r = k // bands).
     Examples: 5k docs -> r=7/b=18, 50k -> r=8/b=16, 500k -> r=10/b=12,
     50M -> r=12/b=10 (capped; past that, the max_bucket_docs guard
     bounds residual hot buckets)."""
@@ -274,9 +274,8 @@ def minhash_neardup_pairs(
     # The doc count the verify path needs for its plan-picking rides
     # the first materializing action (cand.count) as an observed
     # metric instead of a dedicated staged.count() job — one fewer
-    # job per call (optimization r13, guide §1.2 "don't compute
-    # things you throw away": the count job re-scanned the cache for
-    # a number the cand job already knows).
+    # job per call: the count job re-scanned the cache for a number
+    # the cand job already knows.
     from pyspark.sql import Observation
 
     n_docs_obs = Observation()
@@ -307,9 +306,9 @@ def _materialize_pairs(verified: DataFrame, materialize: str) -> DataFrame:
     after the call loses blocks unrecoverably (see the
     minhash_neardup_pairs docstring).
 
-    Cleanup contract (advisor finding r7): unlike localCheckpoint
-    blocks, which the ContextCleaner frees when the DataFrame is
-    GC'd, reliable checkpoint FILES are NOT deleted on release by
+    Cleanup contract: unlike localCheckpoint blocks, which the
+    ContextCleaner frees when the DataFrame is GC'd, reliable
+    checkpoint FILES are NOT deleted on release by
     default — repeated calls in a long-lived session accumulate
     unbounded data under the checkpoint dir. Long-lived sessions
     using "reliable"/"auto"-with-a-dir should either set
@@ -352,8 +351,7 @@ def _minhash_verify(
         F.explode("bkeys").alias("bkey"),
     )
     # Pair generation via ONE bucket aggregation instead of a bkey
-    # self-join (optimization r13, guide §2.4 "remove shuffles
-    # outright"): the self-join exchanged the exploded band table
+    # self-join: the self-join exchanged the exploded band table
     # TWICE and — because it is the pipeline's first job, planned
     # before any cache statistics exist — Catalyst sort-merge-joined
     # it; grouping by (blk, bkey) exchanges the 160k-row band table

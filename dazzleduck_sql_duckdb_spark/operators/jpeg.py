@@ -10,7 +10,7 @@ any library. Written against the public JPEG spec (ITU-T T.81 / JFIF);
 the reference engine has no media surface at all (SURVEY.md §2 —
 engine-added training-pipeline operator).
 
-Exactness note for the oracle gate (plans/queries.py
+Exactness note for the oracle gate (plans/multimodal.py
 multimodal_jpeg_features): with an all-ones quantization table, an 8x8
 block of ONE constant value v encodes to a DC-only coefficient
 8*(v-128) (the AC terms of a constant block are mathematical zeros;
@@ -117,10 +117,10 @@ _STD_AC_CHROMA = (
 class _HuffTable:
     """Table-driven Huffman decoder: one 2^16-entry lookup per symbol
     (the flat-LUT form of T.81 F.2.2.3 — every 16-bit window whose
-    prefix is a code maps to (length << 8) | symbol). r9 rewrite: the
-    previous per-bit MINCODE/MAXCODE walk dominated realistic-frame
-    decode (~90% of wall in decode/read_bit/receive, cProfile 256x256
-    q8); the LUT does one list index + one bit-skip per symbol. The
+    prefix is a code maps to (length << 8) | symbol). A per-bit
+    MINCODE/MAXCODE walk dominated realistic-frame decode (~90% of
+    wall in decode/read_bit/receive, cProfile 256x256 q8); the LUT
+    does one list index + one bit-skip per symbol. The
     LUT is built lazily on first decode (one numpy slice-fill pass,
     shared across every block of the image) and decoded symbols are
     bit-identical by construction."""
@@ -235,13 +235,6 @@ class _BitReader:
             self.skip(8 - rem)
 
 
-def _extend(v: int, n: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map an n-bit magnitude to its signed value."""
-    if n == 0:
-        return 0
-    return v if v >= (1 << (n - 1)) else v - (1 << n) + 1
-
-
 def _unstuff(scan: bytes) -> tuple[bytes, list[int]]:
     """Remove 0xFF00 byte stuffing; split at RSTn markers. Returns the
     concatenated entropy bytes and the segment start offsets."""
@@ -266,7 +259,7 @@ def _unstuff(scan: bytes) -> tuple[bytes, list[int]]:
     return bytes(out), starts
 
 
-# Frame-size cap for decode (r10 advice #1): 16M pixels (4096x4096).
+# Frame-size cap for decode: 16M pixels (4096x4096).
 # Tunable by corpora with known-larger frames; the point is that the
 # bound is checked from the ~10-byte SOF header before any allocation.
 _MAX_DECODE_PIXELS = 16_000_000
@@ -286,7 +279,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     stray struct.error/IndexError/KeyError and never as garbage
     pixels of the wrong shape. A malformed web corpus must fail the
     row, not poison the batch. MemoryError/OverflowError are in the
-    caught tuple as a last line of defense (r10 advice #1): the
+    caught tuple as a last line of defense: the
     _MAX_DECODE_PIXELS cap below rejects oversized frames before any
     allocation, but an allocation that still fails must surface as
     the typed row error, not OOM-kill the executor's batch."""
@@ -364,8 +357,8 @@ def _decode_jpeg_impl(payload: bytes) -> np.ndarray:
                         f"{sh}x{sv} (1..2 per axis)"
                     )
                 comps.append({"id": cid, "h": sh, "v": sv, "tq": tq})
-            # Bound the decode footprint BEFORE any allocation (r10
-            # advice #1): a <100-byte crafted header (65535x65535, 3
+            # Bound the decode footprint BEFORE any allocation: a
+            # <100-byte crafted header (65535x65535, 3
             # components) would otherwise request ~100+ GB across
             # zz_all + the per-component planes — np.zeros can raise
             # MemoryError or the cgroup can OOM-kill the executor on
@@ -410,7 +403,7 @@ def _decode_scan(frame, qt, huff, scan_tabs, scan, restart_interval):
     mcuy = -(-h // (8 * vmax))
     data, seg_starts = _unstuff(scan)
 
-    # ---- inlined entropy decode (r9): the bit/huffman layer is the
+    # ---- inlined entropy decode: the bit/huffman layer is the
     # wall-clock of realistic-frame decode and it is CALL-BOUND in
     # pure Python (cProfile: ~640k function calls per 256x256 frame
     # through decode/peek/skip/receive). The LUT tables (_HuffTable)
@@ -436,8 +429,8 @@ def _decode_scan(frame, qt, huff, scan_tabs, scan, restart_interval):
     # phase-1 outputs: all zigzag coefficient vectors (one row per
     # block, decode order) + per-component block placement, so the
     # dequant + 2D IDCT runs ONCE as a batched (B, 8, 8) matmul in
-    # phase 2 instead of 2 tiny matmuls per block (r9: the per-block
-    # numpy was ~half the decode wall after the entropy inlining)
+    # phase 2 instead of 2 tiny matmuls per block (per-block numpy
+    # was ~half the decode wall after the entropy inlining)
     blocks_per_mcu = sum(c["h"] * c["v"] for c in comps)
     # int64: the DC predictor accumulates diffs across blocks, and on
     # corrupt-but-decodable streams the running value can exceed int32
@@ -726,7 +719,7 @@ def encode_jpeg(
     array. RGB is 4:4:4 by default; `subsample=True` (or "420")
     encodes 4:2:0 (2x2 luma sampling, chroma block-mean downsampled),
     `subsample="422"` encodes 4:2:2 (2x1 luma sampling, horizontal
-    chroma pair-mean — the r10 verdict #7 fixture path). A nonzero
+    chroma pair-mean). A nonzero
     `restart_interval` emits DRI + RSTn markers every that many MCUs.
     Standard T.81 Annex K luma/chroma Huffman tables throughout."""
     a = np.asarray(img, dtype=np.float64)

@@ -381,8 +381,7 @@ def _parse_stbl_tables(buf: bytes, start: int, end: int):
         elif typ == b"co64":
             # 64-bit chunk offsets — what large/foreign files (>4 GiB
             # mdat, or muxers that always emit co64) carry instead of
-            # stco (advisor finding r7: these demuxed as 'no video
-            # track' before)
+            # stco (without this they demux as 'no video track')
             (n,) = struct.unpack_from(">I", buf, p)
             chunk_offsets = list(struct.unpack_from(f">{n}Q", buf, p + 4))
         elif typ == b"stsc":

@@ -78,8 +78,9 @@ def stub_decoder(payload: bytes) -> np.ndarray:
 # these are REAL decoders (golden-pixel tested), not stubs. They cover
 # the raw interchange formats a training pipeline's pre-decoded shards
 # actually use. PNG is also real — its DEFLATE stream decodes with
-# stdlib zlib (decode_png below); only formats whose entropy coders
-# live in external libraries (jpeg/h264) remain behind stub_decoder.
+# stdlib zlib (decode_png below), and baseline JPEG decodes in
+# operators/jpeg.py; only inter-frame video codecs (h264 and kin)
+# remain behind stub_decoder.
 
 
 def _pnm_header(payload: bytes) -> tuple[bytes, list[int], int]:

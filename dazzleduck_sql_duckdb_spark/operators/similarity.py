@@ -178,10 +178,9 @@ def _make_topk_scorer(
 def _collect_query_matrix(
     queries: DataFrame, id_col: str, vec_col: str
 ) -> tuple[np.ndarray, np.ndarray]:
-    # the cap guard rides the collect itself (optimization r13, guide
-    # §1.2 one action instead of two): limit(cap+1) bounds what can
-    # ever reach the driver — the r9 advisor contract (never collect
-    # unbounded) holds with cap+1 as the hard ceiling — and a full
+    # the cap guard rides the collect itself (one action instead of
+    # two): limit(cap+1) bounds what can ever reach the driver (never
+    # collect unbounded, with cap+1 as the hard ceiling) and a full
     # batch of cap+1 rows proves the query set exceeds the cap without
     # a dedicated count job per call
     rows = queries.select(id_col, vec_col).limit(
@@ -231,7 +230,7 @@ def cosine_topk(
     exact top-k — so per partition only n_queries * k rows exist, and
     the corpus is never shuffled nor materialized as per-pair rows.
     The only exchange is the final per-query top-k window (tiny).
-    Matches the SQL twin in plans/queries.py (embed_knn_bruteforce)
+    Matches the SQL twin in plans/similarity.py (embed_knn_bruteforce)
     bit-for-bit.
 
     `exclude_self` drops id == qid pairs (queries drawn from the corpus
@@ -281,7 +280,7 @@ def train_centroids(
     n_rows*dim scalars, never the vectors to the driver).
 
     ``max_train_rows`` bounds the LLOYD PASSES to a deterministic
-    hash-ordered sample (r9): each iteration assigns the training set
+    hash-ordered sample: each iteration assigns the training set
     to K centroids — n x K work, and when the caller sizes K
     proportionally to n (the SemDeDup constant-cell schedule) full-
     corpus training is QUADRATIC. Measured at 250k vectors / K=244:
@@ -373,24 +372,6 @@ def make_multi_assign_udf(centroids: np.ndarray, spill: int):
         return pd.Series(list(idx))
 
     return multi_assign
-
-
-def make_probe_udf(centroids: np.ndarray, n_probe: int):
-    """query vector -> its n_probe nearest cell ids."""
-    C = _normalize(np.asarray(centroids, dtype=np.float64))
-    dim = C.shape[1]
-    n_probe = min(n_probe, C.shape[0])
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probe(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype="object")
-        M = _normalize(_as_matrix(vecs, dim))
-        sims = M @ C.T
-        idx = np.argsort(-sims, axis=1)[:, :n_probe].astype("int32")
-        return pd.Series(list(idx))
-
-    return probe
 
 
 def ann_ivf_topk(
@@ -776,7 +757,7 @@ def ann_ivfpq_topk(
     `id_col` is NOT an index knob — it also keys `corpus` and
     `queries` here — so it must MATCH the index's: the ADC scan reads
     the index's encoded table by this name, and a mismatch is rejected
-    up front (advisor finding r7) instead of failing with a KeyError
+    up front instead of failing with a KeyError
     inside the scorer."""
     if index is not None and index.id_col != id_col:
         raise ValueError(
@@ -910,7 +891,7 @@ def ann_ivfpq_topk(
     # corpus, so the full vectors are scanned once and never shuffled.
     # key by the RAW id value: query ids are any orderable type here
     # (cosine_topk / ann_ivf_topk accept string ids; an int() cast
-    # raised on them in the rerank stage — advisor finding r6)
+    # raised on them in the rerank stage)
     qindex = {q: i for i, q in enumerate(qids)}
     rr_schema = T.StructType(
         [
@@ -999,7 +980,7 @@ def embed_neardup_pairs_lsh(
     """Candidate pairs from banded sign-bits, exact cosine verify.
 
     Approximate-recall scale path of `embed_cosine_neardup` (the exact
-    SQL twin in plans/queries.py is the oracle-checked baseline); at
+    SQL twin in plans/similarity.py is the oracle-checked baseline); at
     cos >= 0.99 a band of 8 bits all-matches with p ~ 0.69, so >= 1 of 8
     bands collides with p ~ 1 - 8.5e-5.
     """
@@ -1093,8 +1074,8 @@ def semantic_dedup_pairs(
     `n_clusters=1` disables pruning and recovers exact brute force —
     the anchor configuration. The anchor scores ONE cell
     quadratically, so it is an evaluation-scale configuration: past
-    ``max_cluster_rows`` it raises loudly (r9 advisor fix — it used to
-    hit the oversize skip and silently return ZERO pairs) rather than
+    ``max_cluster_rows`` it raises loudly (the oversize skip would
+    silently return ZERO pairs) rather than
     attempt the n^2 the clustered path exists to avoid; raise
     ``max_cluster_rows`` deliberately to anchor a larger corpus.
 
@@ -1110,7 +1091,7 @@ def semantic_dedup_pairs(
     (spill=2) -> 0.97 (spill=3) -> 1.0 (spill=4).
 
     The oversize skip is decided on PRE-SPILL (primary-assignment)
-    cell population (r9 advisor fix): spill replication inflates cell
+    cell population: spill replication inflates cell
     rows ~x spill, so a post-spill bound would let RAISING spill tip a
     cell over the cap and lose its pairs — an anti-monotone recall
     knob. Primary membership is spill-invariant, so spill is now
@@ -1132,7 +1113,7 @@ def semantic_dedup_pairs(
     cells keep compute linear in the corpus where sqrt sizing gives
     n^1.5 (IVF sizes by sqrt(N) because ITS scale knob is probe
     count per query; pair scoring has no probe side). This schedule
-    is now the DEFAULT (:func:`default_n_clusters`, r9): sqrt sizing
+    is the DEFAULT (:func:`default_n_clusters`): sqrt sizing
     below the crossover where sqrt cells outgrow 1024 rows (n = 1M),
     constant-1024-row cells past it — i.e. K = max(sqrt(n), n/1024),
     capped at 65_536 centroids (the driver-memory bound; past n ~ 67M
@@ -1150,12 +1131,12 @@ def semantic_dedup_pairs(
         n = corpus.count()
         if n_clusters is None:
             n_clusters = default_n_clusters(n)
-        # bound the Lloyd passes to a sample PAST max_train_rows (r9):
+        # bound the Lloyd passes to a sample PAST max_train_rows:
         # with the constant-cell schedule K ~ n/1024, full-corpus
         # training is n*K = quadratic — measured 170s of the 204s
         # pipeline at 250k vectors. Below the bound the sampling path
         # is bypassed entirely, so evaluation-scale runs (and the
-        # driver's gate corpora) are bit-identical to r8.
+        # driver's gate corpora) train on the full corpus, bit-identically.
         centroids = train_centroids(
             corpus, n_clusters, vec_col=vec_col, id_col=id_col,
             iterations=train_iterations, seed=seed,
@@ -1169,9 +1150,9 @@ def semantic_dedup_pairs(
     nonnull = corpus.where(F.col(vec_col).isNotNull())
     if C.shape[0] == 1:
         # anchor configuration: ONE quadratic cell. Probe the bound
-        # BEFORE doing any work — the oversize skip below used to
-        # swallow this case and silently return zero pairs (r9
-        # advisor fix). limit(cap+1) bounds the probe itself.
+        # BEFORE doing any work — the oversize skip below would
+        # swallow this case and silently return zero pairs.
+        # limit(cap+1) bounds the probe itself.
         over = nonnull.limit(max_cluster_rows + 1).count()
         if over > max_cluster_rows:
             raise ValueError(
@@ -1256,7 +1237,7 @@ def semantic_dedup_pairs(
     )
 
 
-# ------------------------------------------------- index persistence (r9)
+# ------------------------------------------------------ index persistence
 
 
 def extend_ivfpq_index(
@@ -1305,38 +1286,33 @@ def save_ivfpq_index(index: IvfPqIndex, path: str) -> None:
     <path>/meta.json. Ingest writes this once; every later query
     session loads it and never re-encodes (or rescans the float
     vectors outside the bounded exact rerank)."""
-    import json
-    import os
+    from .storage import _save_index_dir
 
-    index.encoded.write.mode("overwrite").parquet(
-        os.path.join(path, "encoded")
+    _save_index_dir(
+        path, "ivfpq-v1",
+        {"encoded": index.encoded},
+        {
+            "centroids": np.asarray(index.centroids, np.float64).tolist(),
+            "codebooks": np.asarray(index.codebooks, np.float64).tolist(),
+            "spill": int(index.spill),
+            "id_col": index.id_col,
+        },
     )
-    meta = {
-        "format": "ivfpq-v1",
-        "centroids": np.asarray(index.centroids, np.float64).tolist(),
-        "codebooks": np.asarray(index.codebooks, np.float64).tolist(),
-        "spill": int(index.spill),
-        "id_col": index.id_col,
-    }
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(meta, f)
 
 
 def load_ivfpq_index(spark, path: str) -> IvfPqIndex:
     """Rebuild a saved IVF-PQ index; queries against the loaded index
     are bit-identical to the in-memory one (the codebooks round-trip
     as exact float64 JSON repr, tests/test_similarity.py)."""
-    import json
-    import os
+    from .storage import _load_index_dir
 
-    with open(os.path.join(path, "meta.json")) as f:
-        meta = json.load(f)
-    if meta.get("format") != "ivfpq-v1":
-        raise ValueError(f"not an ivfpq-v1 index dir: {path}")
+    meta, table = _load_index_dir(
+        spark, path, "ivfpq-v1", "an ivfpq-v1 index dir"
+    )
     return IvfPqIndex(
         centroids=np.asarray(meta["centroids"], np.float64),
         codebooks=np.asarray(meta["codebooks"], np.float64),
-        encoded=spark.read.parquet(os.path.join(path, "encoded")),
+        encoded=table("encoded"),
         spill=int(meta["spill"]),
         id_col=meta["id_col"],
     )

@@ -194,3 +194,40 @@ def compact_parquet(
         "files_after": after,
         "bytes_before": total,
     }
+
+
+def _save_index_dir(path: str, fmt: str, tables: dict, meta: dict,
+                    query_only: bool = False) -> None:
+    """Write a persisted index: each table that is not None as parquet
+    at <path>/<name>, then its model state as <path>/meta.json, tagged
+    with `"format": fmt`. A query-only (legacy-loaded) index is refused:
+    re-saving would write meta WITHOUT the legacy marker and launder
+    the unknown cap policy into an "uncapped" modern index, the exact
+    hazard query-only load exists to contain."""
+    import json
+    import os
+
+    if query_only:
+        raise ValueError(
+            "refusing to save a query-only (legacy-loaded) index — "
+            "rebuild it to make it persistable"
+        )
+    for name, df in tables.items():
+        if df is not None:
+            df.write.mode("overwrite").parquet(os.path.join(path, name))
+    with open(os.path.join(path, "meta.json"), "w") as f:
+        json.dump({"format": fmt, **meta}, f)
+
+
+def _load_index_dir(spark, path: str, fmt: str, what: str):
+    """Read back a _save_index_dir directory: its meta dict and a reader
+    of its tables by name. Raises "not <what>: <path>" unless meta.json
+    carries the format tag `fmt`."""
+    import json
+    import os
+
+    with open(os.path.join(path, "meta.json")) as f:
+        meta = json.load(f)
+    if meta.get("format") != fmt:
+        raise ValueError(f"not {what}: {path}")
+    return meta, lambda name: spark.read.parquet(os.path.join(path, name))

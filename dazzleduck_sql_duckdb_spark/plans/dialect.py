@@ -246,3 +246,53 @@ def approx_quantile(e: str, frac: str, dialect: str) -> str:
     if dialect == SPARK:
         return f"approx_percentile({e}, {frac}, 10000)"
     return f"approx_quantile({e}, {frac})"
+
+
+# ------------------------------------------ helpers shared by the families
+
+
+def _sarr(vals, dialect: str) -> str:
+    inner = ", ".join(f"'{v}'" for v in vals)
+    return f"array({inner})" if dialect == SPARK else f"[{inner}]"
+
+
+def _idiv(a: str, b: str, dialect: str) -> str:
+    return f"({a} DIV {b})" if dialect == SPARK else f"({a} // {b})"
+
+
+def _event_us(dialect: str) -> str:
+    """events.ts is TIMESTAMP(MICROS) parquet: Spark reads it as
+    TIMESTAMP_NTZ, DuckDB as naive TIMESTAMP. Normalize both to BIGINT
+    epoch-microseconds (session timezone is UTC, so the NTZ->TZ cast is
+    identity on the instant)."""
+    if dialect == SPARK:
+        return "unix_micros(CAST(ts AS TIMESTAMP))"
+    return "epoch_us(ts)"
+
+
+def _roundk(x: str, k: int) -> str:
+    """Branchless sign-symmetric 1e-k rounding bridge for DOUBLEs —
+    sign(x)*floor(abs(x)*1ek + 0.5)/1ek, dialect-identical IEEE ops
+    only (abs/*/+/floor/sign), so both engines round the TRUE binary
+    value HALF_UP. Replaces round(DOUBLE, k), whose semantics diverge
+    at shortest-decimal-repr half boundaries (Spark rounds the
+    shortest repr via BigDecimal.valueOf(Double.toString(x)); DuckDB
+    rounds the binary value — pinned in
+    tests/test_dialect_boundaries.py). Any scale k, so sites such as
+    q9's 1e-4 rounding use the same bridge as the 1e-6 _round6."""
+    return f"sign({x}) * floor(abs({x}) * 1e{k} + 0.5) / 1e{k}"
+
+
+def _round6(x: str) -> str:
+    """1e-6 instance of the _roundk bridge (the common scale)."""
+    return _roundk(x, 6)
+
+
+def _wide_docs(d: str) -> str:
+    """documents scan widened before CPU-heavy per-row token work: the
+    single-row-group test parquet scans as ONE Spark task, so
+    interpreted-HOF stages explicitly repartition first (a no-op on real
+    multi-partition inputs)."""
+    if d == SPARK:
+        return "(SELECT /*+ REPARTITION(64) */ * FROM documents)"
+    return "documents"

@@ -6,7 +6,7 @@ order-insensitive value hash at sf0.01) compares genuinely identical
 computations. Coverage maps to SURVEY.md §2:
 
 - §2.9 host-SQL surface: lineitem suite (the reference's 8 benchmark
-  queries, /root/reference/test/nodejs/arrow_test.js:502-511), TPC-H
+  queries, test/nodejs/arrow_test.js:502-511), TPC-H
   Q1/Q6 shapes, aggregate laws (NULL/empty-set,
   test/sql/dd_read_arrow_aggregation_pushdown.test_slow:326-390),
   GROUP BY, ORDER BY/LIMIT, DISTINCT, CTE/scalar subqueries, UNION ALL,
@@ -22,144 +22,25 @@ computations. Coverage maps to SURVEY.md §2:
 Scale notes are attached per query: the LSH paths are the 100 TB
 designs; brute-force forms exist only as oracles or explicitly-sampled
 baselines.
+
+The entries live in one module per family next to this one
+(relational, tpch, functions, dedup, similarity, text, remote,
+pipeline, joins, multimodal); this module is only the registry. It
+imports the families in catalog order, so a family may import an
+earlier family at module level but a later one only inside a function:
+importing a later family early would register its entries first.
 """
 
 from __future__ import annotations
 
-import atexit
-import functools
-import os
-import random
 from collections.abc import Callable
 from typing import TYPE_CHECKING, NamedTuple
 
-from . import dialect as D
 from .dialect import DUCK, SPARK
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
 
-# ---------------------------------------------------------------- constants
-
-P31 = 2_147_483_647  # Mersenne prime 2^31-1: minhash universe
-MINHASH_K = 128
-BANDS = 32
-ROWS_PER_BAND = 4
-SHINGLE_N = 6
-JACCARD_PCT = 85  # threshold as integer percent (exact int math)
-# 60 bits: hash60 is a 60-bit hash, and staying under bit 62 keeps every
-# partial sum inside signed-64 range in both engines (no ANSI overflow).
-SIMHASH_BITS = 60
-SIMHASH_CHUNK_BITS = 15
-SIMHASH_CHUNKS = 4  # 15-bit chunks; hamming<=3 recall is exact by pigeonhole
-# dedup_simhash mega-bucket guard:
-# buckets up to this size expand pairs via collect_list (one in-memory
-# buffer of <= CAP structs); larger buckets take the spill-safe
-# sort-merge self-join branch instead, so a template-spam bucket where
-# millions of docs share one 15-bit chunk value can never pin a whole
-# bucket in a single aggregation buffer. Identical output either way —
-# the branches partition buckets by size, and corpora with n_docs <=
-# CAP provably have no oversized bucket at all (bucket size <= corpus
-# size) so they keep the branch-free single-aggregation plan. 65536
-# structs x 16
-# bytes = 1 MB ceiling per aggregation buffer.
-SIMHASH_BUCKET_CAP = 65536
-HAMMING_MAX = 3
-
-_rng = random.Random(20260813)
-MINHASH_A = [_rng.randrange(1, P31) for _ in range(MINHASH_K)]
-MINHASH_B = [_rng.randrange(0, P31) for _ in range(MINHASH_K)]
-# Wider seed pool for the RECALL-HELD schedule (K = r *
-# bands_for_recall(r) grows past 128 as r grows with corpus size; 512
-# covers r=12/b=31=372 with headroom). Seeded AFTER the K=128 lists so
-# their values — and every hash-gated entry built on them — are
-# byte-identical to prior rounds.
-MINHASH_KMAX = 512
-MINHASH_A_WIDE = [_rng.randrange(1, P31) for _ in range(MINHASH_KMAX)]
-MINHASH_B_WIDE = [_rng.randrange(0, P31) for _ in range(MINHASH_KMAX)]
-
-
-def _arr(vals, dialect: str) -> str:
-    """Literal array constructor."""
-    inner = ", ".join(str(v) for v in vals)
-    return f"array({inner})" if dialect == SPARK else f"[{inner}]"
-
-
-def _sarr(vals, dialect: str) -> str:
-    inner = ", ".join(f"'{v}'" for v in vals)
-    return f"array({inner})" if dialect == SPARK else f"[{inner}]"
-
-
-def _idx(arr: str, i: str, dialect: str) -> str:
-    """1-based array element access, NULL out of bounds."""
-    if dialect == SPARK:
-        return f"try_element_at({arr}, {i})"
-    return f"list_extract({arr}, {i})"
-
-
-def _idiv(a: str, b: str, dialect: str) -> str:
-    return f"({a} DIV {b})" if dialect == SPARK else f"({a} // {b})"
-
-
-def _event_us(dialect: str) -> str:
-    """events.ts is TIMESTAMP(MICROS) parquet: Spark reads it as
-    TIMESTAMP_NTZ, DuckDB as naive TIMESTAMP. Normalize both to BIGINT
-    epoch-microseconds (session timezone is UTC, so the NTZ->TZ cast is
-    identity on the instant)."""
-    if dialect == SPARK:
-        return "unix_micros(CAST(ts AS TIMESTAMP))"
-    return "epoch_us(ts)"
-
-
-def _fold_sum(arr: str, dialect: str, zero: str = "0D") -> str:
-    """Deterministic left-fold sum over an array of doubles."""
-    if dialect == SPARK:
-        return f"aggregate({arr}, {zero}, (acc, x) -> acc + x)"
-    dz = "0.0::DOUBLE" if zero == "0D" else f"{zero}::BIGINT"
-    return f"list_reduce(list_prepend({dz}, {arr}), (acc, x) -> acc + x)"
-
-
-def _roundk(x: str, k: int) -> str:
-    """Branchless sign-symmetric 1e-k rounding bridge for DOUBLEs —
-    sign(x)*floor(abs(x)*1ek + 0.5)/1ek, dialect-identical IEEE ops
-    only (abs/*/+/floor/sign), so both engines round the TRUE binary
-    value HALF_UP. Replaces round(DOUBLE, k), whose semantics diverge
-    at shortest-decimal-repr half boundaries (Spark rounds the
-    shortest repr via BigDecimal.valueOf(Double.toString(x)); DuckDB
-    rounds the binary value — pinned in
-    tests/test_dialect_boundaries.py). Any scale k, so sites such as
-    q9's 1e-4 rounding use the same bridge as the 1e-6 _round6."""
-    return f"sign({x}) * floor(abs({x}) * 1e{k} + 0.5) / 1e{k}"
-
-
-def _round6(x: str) -> str:
-    """1e-6 instance of the _roundk bridge (the common scale)."""
-    return _roundk(x, 6)
-
-
-def _dot(a: str, b: str, dialect: str) -> str:
-    """Deterministic dot product of two float arrays (exact double fold)."""
-    if dialect == SPARK:
-        prods = f"zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE))"
-    else:
-        prods = (
-            f"list_transform(range(1, len({a}) + 1),"
-            f" i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)"
-        )
-    return _fold_sum(prods, dialect)
-
-
-def _wide_docs(d: str) -> str:
-    """documents scan widened before CPU-heavy per-row token work: the
-    single-row-group test parquet scans as ONE Spark task, so
-    interpreted-HOF stages explicitly repartition first (a no-op on real
-    multi-partition inputs)."""
-    if d == SPARK:
-        return "(SELECT /*+ REPARTITION(64) */ * FROM documents)"
-    return "documents"
-
-
-# ---------------------------------------------------------------- catalog
 
 class Entry(NamedTuple):
     """One catalog entry. `sql(dialect)` emits the query for either
@@ -178,4756 +59,16 @@ CATALOG: dict[str, Entry] = {}
 
 def q(name: str, spark=None):
     """Register the decorated emitter as entry `name`, built on the
-    Spark side by `spark` when given."""
+    Spark side by `spark` when given. A name registers once: a second
+    registration would silently drop the first entry."""
 
     def deco(fn):
+        if name in CATALOG:
+            raise ValueError(f"catalog entry {name!r} is already registered")
         CATALOG[name] = Entry(name, fn, spark)
         return fn
 
     return deco
-
-
-# ======================================================= reference SQL surface
-# The 8-query lineitem benchmark suite of the reference
-# (/root/reference/test/nodejs/arrow_test.js:499-554) + TPC-H Q1/Q6 shapes.
-
-
-@q("lineitem_count")
-def _lineitem_count(d: str) -> str:
-    return "SELECT CAST(count(*) AS BIGINT) AS n FROM lineitem"
-
-
-@q("lineitem_sum_orderkey")
-def _lineitem_sum(d: str) -> str:
-    return (
-        "SELECT CAST(sum(l_orderkey) AS BIGINT) AS sum_orderkey FROM lineitem"
-    )
-
-
-@q("lineitem_full_scan")
-def _lineitem_full(d: str) -> str:
-    # full-width scan; timestamp normalized to epoch-us for cross-engine hash
-    return (
-        "SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity,"
-        " l_extendedprice, l_discount, l_tax, l_returnflag, l_linestatus,"
-        f" {'unix_micros(CAST(l_shipdate AS TIMESTAMP))' if d == SPARK else 'epoch_us(l_shipdate)'}"
-        " AS ship_us FROM lineitem"
-    )
-
-
-@q("lineitem_point_filter")
-def _lineitem_point(d: str) -> str:
-    return (
-        "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem"
-        " WHERE l_orderkey = (SELECT min(l_orderkey) FROM lineitem)"
-    )
-
-
-@q("lineitem_projection")
-def _lineitem_proj(d: str) -> str:
-    return "SELECT l_orderkey FROM lineitem"
-
-
-@q("lineitem_range_filter")
-def _lineitem_range(d: str) -> str:
-    return (
-        "SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem"
-        " WHERE l_extendedprice BETWEEN 30000 AND 40000"
-    )
-
-
-@q("lineitem_date_filter_count")
-def _lineitem_datec(d: str) -> str:
-    return (
-        "SELECT CAST(count(l_orderkey) AS BIGINT) AS n FROM lineitem"
-        " WHERE l_shipdate > TIMESTAMP '1996-10-28 00:00:00'"
-    )
-
-
-@q("q6_revenue")
-def _q6(d: str) -> str:
-    # TPC-H Q6 shape (reference golden at arrow_test.js:423-424). Decimal
-    # discipline: cast inputs before multiply/sum -> engine-independent.
-    return (
-        "SELECT CAST(CAST(round(sum(CAST(l_extendedprice AS DECIMAL(18,4))"
-        " * CAST(l_discount AS DECIMAL(8,4))), 4) AS DECIMAL(38,4)) AS DOUBLE) AS revenue"
-        " FROM lineitem"
-        " WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'"
-        " AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'"
-        " AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24"
-    )
-
-
-@q("q1_pricing_summary")
-def _q1(d: str) -> str:
-    """Decimal widths are the narrowest that hold the column domain
-    (quantity <= 50 -> DECIMAL(8,4); discount/tax <= 0.1 ->
-    DECIMAL(5,4); extendedprice < 1e9 -> DECIMAL(13,4)): a Spark sum
-    buffer at precision <= 18 stays long-backed in the UnsafeRow
-    aggregation hash map, while wider buffers serialize a BigDecimal
-    per update. Measured at sf0.1: 0.74s vs 0.94s median with uniform
-    DECIMAL(18,4) inputs — identical values (DECIMAL(27,4) accumulation
-    alone measured 0.88s: the width only matters when it crosses the
-    18-digit long-backed boundary). Overflow headroom at the narrow
-    widths: qty buffer DECIMAL(18,4) caps ~1e14 (~sf600k), price
-    buffer DECIMAL(23,4) ~1e19 — far past any real scale, and Spark
-    NULLs (not wraps) on decimal overflow."""
-    return f"""
-SELECT l_returnflag, l_linestatus,
-  CAST(CAST(round(sum(CAST(l_quantity AS DECIMAL(8,4))), 4) AS DECIMAL(38,4)) AS DOUBLE) AS sum_qty,
-  CAST(CAST(round(sum(CAST(l_extendedprice AS DECIMAL(13,4))), 4) AS DECIMAL(38,4)) AS DOUBLE) AS sum_base_price,
-  CAST(CAST(round(sum(CAST(l_extendedprice AS DECIMAL(13,4)) * (CAST(1 AS DECIMAL(5,4)) - CAST(l_discount AS DECIMAL(5,4)))), 4) AS DECIMAL(38,4)) AS DOUBLE) AS sum_disc_price,
-  CAST(CAST(round(sum(CAST(l_extendedprice AS DECIMAL(13,4)) * (CAST(1 AS DECIMAL(5,4)) - CAST(l_discount AS DECIMAL(5,4))) * (CAST(1 AS DECIMAL(5,4)) + CAST(l_tax AS DECIMAL(5,4)))), 4) AS DECIMAL(38,4)) AS DOUBLE) AS sum_charge,
-  {D.decavg('l_quantity', 'avg_qty', d, prec=8)},
-  {D.decavg('l_extendedprice', 'avg_price', d, prec=13)},
-  {D.decavg('l_discount', 'avg_disc', d, prec=8)},
-  CAST(count(*) AS BIGINT) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-
-# ------------------------------------------------ aggregate laws & relational
-
-
-@q("orders_global_aggs")
-def _orders_global(d: str) -> str:
-    return f"""
-SELECT CAST(count(*) AS BIGINT) AS n,
-  {D.decsum('o_totalprice', 'sum_price', d)},
-  min(o_totalprice) AS min_price, max(o_totalprice) AS max_price,
-  {D.decavg('o_totalprice', 'avg_price', d)},
-  CAST(count(DISTINCT o_orderstatus) AS BIGINT) AS n_status
-FROM orders
-"""
-
-
-@q("orders_group_agg")
-def _orders_group(d: str) -> str:
-    return f"""
-SELECT o_orderstatus, o_orderpriority,
-  CAST(count(*) AS BIGINT) AS n,
-  {D.decsum('o_totalprice', 'sum_price', d)},
-  min(o_totalprice) AS min_price, max(o_totalprice) AS max_price
-FROM orders GROUP BY o_orderstatus, o_orderpriority
-"""
-
-
-@q("events_count_distinct")
-def _events_cd(d: str) -> str:
-    return (
-        "SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,"
-        " CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,"
-        " CAST(count(*) AS BIGINT) AS n FROM events"
-    )
-
-
-@q("null_laws")
-def _null_laws(d: str) -> str:
-    # NULL-handling laws (reference matrix ..._pushdown.test_slow:326-390):
-    # count(*) includes NULLs, count(v) excludes, sum/min/max ignore.
-    return """
-SELECT CAST(count(*) AS BIGINT) AS n_rows, CAST(count(v) AS BIGINT) AS n_v,
-  CAST(sum(v) AS BIGINT) AS sum_v, min(v) AS min_v, max(v) AS max_v
-FROM (SELECT CASE WHEN event_type <> 'error' THEN user_id END AS v FROM events) t
-"""
-
-
-@q("empty_set_laws")
-def _empty_laws(d: str) -> str:
-    # empty input: count -> 0, sum/min/max -> NULL
-    return """
-SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(user_id) AS BIGINT) AS s,
-  min(user_id) AS mn, max(user_id) AS mx
-FROM events WHERE user_id < -1
-"""
-
-
-@q("order_by_limit")
-def _topn(d: str) -> str:
-    # deterministic top-k: unique tiebreak column (TakeOrderedAndProject)
-    return (
-        "SELECT o_orderkey, o_totalprice FROM orders"
-        " ORDER BY o_totalprice DESC, o_orderkey LIMIT 10"
-    )
-
-
-@q("distinct_rows")
-def _distinct(d: str) -> str:
-    return "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders"
-
-
-@q("cte_union_all")
-def _cte_union(d: str) -> str:
-    return """
-WITH hi AS (SELECT o_orderkey, o_totalprice FROM orders WHERE o_totalprice > 50000),
-     lo AS (SELECT o_orderkey, o_totalprice FROM orders WHERE o_totalprice <= 10000)
-SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(o_orderkey) AS BIGINT) AS s
-FROM (SELECT * FROM hi UNION ALL SELECT * FROM lo) u
-"""
-
-
-@q("scalar_subquery_filter")
-def _scalar_subq(d: str) -> str:
-    return (
-        "SELECT o_orderkey, o_totalprice FROM orders"
-        " WHERE o_totalprice > (SELECT max(o_totalprice) FROM orders) * 0.9"
-    )
-
-
-@q("join_region_rollup")
-def _join_rollup(d: str) -> str:
-    # 4-table star join: orders -> customer -> nation -> region.
-    # Scale: dims broadcast (Spark auto-broadcasts small sides; AQE keeps
-    # the fact-side shuffle partitions balanced).
-    return f"""
-SELECT r.r_name, n.n_name,
-  CAST(count(*) AS BIGINT) AS n_orders,
-  {D.decsum('o.o_totalprice', 'sum_price', d)}
-FROM orders o
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-GROUP BY r.r_name, n.n_name
-"""
-
-
-@q("semi_anti_join")
-def _semi_anti(d: str) -> str:
-    return """
-SELECT
-  (SELECT CAST(count(*) AS BIGINT) FROM customer c
-    WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)) AS n_with_orders,
-  (SELECT CAST(count(*) AS BIGINT) FROM customer c
-    WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)) AS n_without_orders
-"""
-
-
-@q("window_topk_per_group")
-def _window_topk(d: str) -> str:
-    return """
-SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-  SELECT o_custkey, o_orderkey, o_totalprice,
-    row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
-  FROM orders) t
-WHERE rn <= 3
-"""
-
-
-@q("events_hourly_rollup")
-def _events_hourly(d: str) -> str:
-    us = _event_us(d)
-    hour = _idiv(us, str(3_600_000_000), d)
-    return f"""
-SELECT CAST({hour} AS BIGINT) AS hour_bucket, event_type,
-  CAST(count(*) AS BIGINT) AS n,
-  {D.decsum('value', 'sum_value', d)},
-  min(value) AS min_value, max(value) AS max_value
-FROM events GROUP BY 1, 2
-"""
-
-
-@q("events_json_extract")
-def _events_json(d: str) -> str:
-    if d == SPARK:
-        k = "CAST(get_json_object(props, '$.k') AS BIGINT)"
-    else:
-        k = "CAST(json_extract_string(props, '$.k') AS BIGINT)"
-    return f"""
-SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-  CAST(sum({k}) AS BIGINT) AS sum_k, min({k}) AS min_k, max({k}) AS max_k
-FROM events GROUP BY event_type
-"""
-
-
-@q("events_sessionize")
-def _sessionize(d: str) -> str:
-    # gap-based sessionization (30 min): lag + cumulative sum of breaks.
-    # Scale: one shuffle on user_id; state bounded per user partition.
-    us = _event_us(d)
-    return f"""
-WITH e AS (SELECT user_id, event_id, {us} AS us FROM events),
-w AS (
-  SELECT user_id, event_id, us,
-    CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) IS NULL
-              OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) > 1800000000
-         THEN 1 ELSE 0 END AS brk
-  FROM e),
-s AS (
-  SELECT user_id, us,
-    sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM w)
-SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-  CAST(count(*) AS BIGINT) AS n_events,
-  CAST(min(us) AS BIGINT) AS start_us, CAST(max(us) AS BIGINT) AS end_us
-FROM s GROUP BY user_id, session_id
-"""
-
-
-@q("events_type_pivot")
-def _type_pivot(d: str) -> str:
-    """PIVOT surface: per-user event counts spread across event-type
-    columns. Spark's PIVOT and DuckDB's differ syntactically, so both
-    emit the portable conditional-aggregation form (identical plan to a
-    native pivot: one grouped pass, map-side partials)."""
-    cols = ", ".join(
-        f"CAST(count(CASE WHEN event_type = '{t}' THEN 1 END) AS BIGINT)"
-        f" AS n_{t}"
-        for t in ["view", "click", "purchase", "signup", "error"]
-    )
-    return f"""
-SELECT user_id, {cols}
-FROM events GROUP BY user_id
-"""
-
-
-@q("orders_set_ops")
-def _set_ops(d: str) -> str:
-    """INTERSECT / EXCEPT surface: customers with both high-value and
-    recent orders (INTERSECT) and high-value-only customers (EXCEPT).
-    Both engines implement these as distinct-aggregating joins."""
-    return """
-WITH high AS (SELECT o_custkey FROM orders WHERE o_totalprice > 200000),
-recent AS (SELECT o_custkey FROM orders
-           WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00')
-SELECT 'both' AS segment, CAST(count(*) AS BIGINT) AS n FROM
-  (SELECT o_custkey FROM high INTERSECT SELECT o_custkey FROM recent) t1
-UNION ALL
-SELECT 'high_only' AS segment, CAST(count(*) AS BIGINT) AS n FROM
-  (SELECT o_custkey FROM high EXCEPT SELECT o_custkey FROM recent) t2
-"""
-
-
-@q("events_funnel")
-def _funnel(d: str) -> str:
-    """Ordered-sequence funnel: users whose first view precedes a later
-    click precedes a later purchase, counted per stage.
-
-    Scale: every stage aggregates and joins on user_id — one shuffle
-    key throughout, so stages co-partition (no re-shuffle between
-    them); each stage's input shrinks monotonically.
-
-    The Spark side is the single-scan window-cascade form. A
-    REPARTITION(user_id) hint over the join form does NOT buy exchange
-    reuse: per-stage filters (event_type = ...) and column pruning push
-    BELOW the hint's exchange, so the six CTE consumer subtrees stay
-    non-identical and AQE stage reuse cannot fire (6 events scans and
-    one more exchange). This form computes the whole funnel in one
-    pass: a window cascade
-    partitioned by user_id (t0 = min view time; t1 = min click time
-    AFTER t0; t2 = min purchase time AFTER t1 — each window reads the
-    previous one's output, all three share one hash(user_id)
-    distribution and one sort), then one per-user row and three
-    global counts unpivoted with inline(). Exactly the join-form
-    semantics: a user enters stage k+1 iff it has an event of that
-    type strictly after its stage-k timestamp; `saw_view` (not t0)
-    carries stage 1 so a user whose only views have NULL timestamps
-    still counts in stage 1 and never in stage 2, matching the
-    join form's v-row / NULL-t0-join behavior. Plan: 6 scans + 7
-    exchanges -> 1 scan + 2 exchanges (one narrow user_id shuffle +
-    the single-row global agg), no joins (see
-    plans/r14/events_funnel_{{before,after}}.txt)."""
-    us = _event_us(d)
-    if d == SPARK:
-        return f"""
-WITH ev AS (SELECT user_id, event_type, {us} AS us FROM events),
-w1 AS (
-  SELECT user_id, event_type, us,
-    max(CASE WHEN event_type = 'view' THEN 1 END)
-      OVER (PARTITION BY user_id) AS saw_view,
-    min(CASE WHEN event_type = 'view' THEN us END)
-      OVER (PARTITION BY user_id) AS t0
-  FROM ev),
-w2 AS (
-  -- user_id IS NOT NULL: the join form's ON user_id = user_id never
-  -- matches NULL users, so they stop at stage 1 there; the window
-  -- partition groups NULLs together, so replicate the stop here
-  SELECT user_id, event_type, us, saw_view, t0,
-    min(CASE WHEN event_type = 'click' AND us > t0
-              AND user_id IS NOT NULL THEN us END)
-      OVER (PARTITION BY user_id) AS t1
-  FROM w1),
-w3 AS (
-  SELECT user_id, saw_view, t1,
-    min(CASE WHEN event_type = 'purchase' AND us > t1 THEN us END)
-      OVER (PARTITION BY user_id) AS t2
-  FROM w2),
-u AS (SELECT user_id, min(saw_view) AS saw_view, min(t1) AS t1,
-             min(t2) AS t2
-      FROM w3 GROUP BY user_id)
-SELECT inline(array(
-  named_struct('stage', 'stage1_view',
-               'n_users', CAST(count(saw_view) AS BIGINT)),
-  named_struct('stage', 'stage2_click',
-               'n_users', CAST(count(t1) AS BIGINT)),
-  named_struct('stage', 'stage3_purchase',
-               'n_users', CAST(count(t2) AS BIGINT))))
-FROM u
-"""
-    return f"""
-WITH ev AS (SELECT user_id, event_type, {us} AS us FROM events),
-v AS (SELECT user_id, min(us) AS t0 FROM ev
-      WHERE event_type = 'view' GROUP BY user_id),
-c AS (SELECT e.user_id, min(e.us) AS t1
-      FROM ev e JOIN v ON e.user_id = v.user_id AND e.us > v.t0
-      WHERE e.event_type = 'click' GROUP BY e.user_id),
-p AS (SELECT e.user_id, min(e.us) AS t2
-      FROM ev e JOIN c ON e.user_id = c.user_id AND e.us > c.t1
-      WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-SELECT 'stage1_view' AS stage, CAST(count(*) AS BIGINT) AS n_users FROM v
-UNION ALL
-SELECT 'stage2_click' AS stage, CAST(count(*) AS BIGINT) AS n_users FROM c
-UNION ALL
-SELECT 'stage3_purchase' AS stage, CAST(count(*) AS BIGINT) AS n_users FROM p
-"""
-
-
-def _build_view_click_attr(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..operators.joins import range_join_binned
-
-    ev = spark.table("events").select(
-        "user_id", "event_id", "event_type",
-        F.expr(_event_us(SPARK)).alias("us"),
-    )
-    views = ev.where(F.col("event_type") == "view").select(
-        "user_id",
-        F.col("event_id").alias("view_id"),
-        F.col("us").alias("v_us"),
-    )
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("us").alias("c_us"),
-    )
-    # (1, 3_600_000_000]: integer epoch-us, so "c > v" is "c >= v + 1"
-    pairs = range_join_binned(
-        views, clicks, "user_id",
-        left_time="v_us", right_time="c_us",
-        lower=1, upper=3_600_000_000,
-    )
-    return pairs.select(
-        "user_id", "view_id", "click_id",
-        (F.col("c_us") - F.col("v_us")).cast("long").alias("lag_us"),
-    )
-
-
-@q("events_view_click_attribution", spark=_build_view_click_attr)
-def _view_click_attr(d: str) -> str:
-    """Views joined to the same user's clicks within 60 min after.
-
-    The SQL below is the ORACLE formulation only (plain equi-join on
-    user_id with a time-range residual — a pathological hot user makes
-    |views|x|clicks| candidate pairs inside one key). The Spark side
-    (_build_view_click_attr) routes through operators/joins.range_join_binned:
-    time is bucketed into window-width bins, so the join key becomes
-    (user_id, bin) and candidate pairs are bounded by bin occupancy,
-    never the whole user history. The streaming twin
-    (streaming/pipeline.view_click_attribution) is differential-tested
-    against the same semantics in tests/test_streaming.py."""
-    us = _event_us(d)
-    return f"""
-WITH ev AS (SELECT user_id, event_id, event_type, {us} AS us FROM events)
-SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
-  CAST(c.us - v.us AS BIGINT) AS lag_us
-FROM ev v JOIN ev c
-  ON v.user_id = c.user_id
-  AND v.event_type = 'view' AND c.event_type = 'click'
-  AND c.us > v.us AND c.us <= v.us + 3600000000
-"""
-
-
-@q("orders_rollup")
-def _orders_rollup(d: str) -> str:
-    # ROLLUP (SURVEY §2.3 A7: absent in the reference, free in Spark).
-    # grouping() disambiguates rolled-up NULLs from data NULLs.
-    return f"""
-SELECT o_orderstatus, o_orderpriority,
-  CAST(grouping(o_orderstatus) AS INT) AS g_status,
-  CAST(grouping(o_orderpriority) AS INT) AS g_prio,
-  CAST(count(*) AS BIGINT) AS n,
-  {D.decsum('o_totalprice', 'sum_price', d)}
-FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-"""
-
-
-@q("orders_cube")
-def _orders_cube(d: str) -> str:
-    return f"""
-SELECT o_orderstatus, o_orderpriority,
-  CAST(grouping(o_orderstatus) AS INT) AS g_status,
-  CAST(grouping(o_orderpriority) AS INT) AS g_prio,
-  CAST(count(*) AS BIGINT) AS n
-FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-"""
-
-
-@q("events_grouping_sets")
-def _events_gsets(d: str) -> str:
-    return """
-SELECT event_type, CAST(user_id % 10 AS BIGINT) AS user_bucket,
-  CAST(grouping(event_type) AS INT) AS g_type,
-  CAST(count(*) AS BIGINT) AS n
-FROM events
-GROUP BY GROUPING SETS ((event_type), (user_id % 10), ())
-"""
-
-
-@q("cast_matrix")
-def _cast_matrix(d: str) -> str:
-    """CAST surface over lineitem (SURVEY §2.9: CAST + string compare):
-    numeric narrowing/widening, string<->number, date->string."""
-    ship = (
-        "CAST(l_shipdate AS DATE)" if d == SPARK else "CAST(l_shipdate AS DATE)"
-    )
-    return f"""
-SELECT l_orderkey,
-  CAST(l_quantity AS INT) AS qty_int,
-  CAST(l_quantity AS STRING) AS qty_str,
-  CAST(CAST(l_extendedprice AS DECIMAL(12,2)) AS DOUBLE) AS price_rt,
-  CAST(l_linenumber AS BIGINT) AS ln_big,
-  CAST({ship} AS STRING) AS ship_str,
-  CAST(l_returnflag = 'R' AS INT) AS flag_int
-FROM lineitem WHERE l_orderkey % 1000 = 0
-"""
-
-
-@q("try_cast_matrix")
-def _try_cast_matrix(d: str) -> str:
-    """TRY_CAST surface: overflow and non-numeric strings yield NULL in
-    both engines (values kept integral — double->int truncation vs
-    rounding differs between engines on fractional inputs, an engine
-    semantic outside the operator contract)."""
-    return """
-SELECT l_orderkey,
-  TRY_CAST(l_quantity * 1000 AS TINYINT) AS overflow_i8,
-  TRY_CAST(l_returnflag AS INT) AS bad_str_int,
-  TRY_CAST(CAST(l_orderkey AS STRING) AS BIGINT) AS roundtrip_i64,
-  TRY_CAST(l_quantity AS SMALLINT) AS ok_i16
-FROM lineitem WHERE l_orderkey % 500 = 0
-"""
-
-
-@q("string_functions")
-def _string_fns(d: str) -> str:
-    """String-function surface the reference tests exercise through host
-    SQL (length/octet_length/left/list_transform+lambda — SURVEY §2.5
-    last row)."""
-    tk = D.tokens("c_name", d)
-    upper2 = D.ltransform(
-        f"slice({tk}, 1, 2)" if d == SPARK else f"{tk}[1:2]",
-        "t -> upper(t)", d,
-    )
-    ol = ("octet_length(c_name)" if d == SPARK
-          else "octet_length(encode(c_name))")
-    # serialize the list-typed lambda result: the driver canon sorts a
-    # pandas frame and dies on unhashable list cells. coalesce on the
-    # DuckDB side: for an empty array Spark's concat_ws returns ''
-    # while DuckDB's array_to_string returns NULL
-    joined = (f"concat_ws('|', {upper2})" if d == SPARK
-              else f"coalesce(array_to_string({upper2}, '|'), '')")
-    return f"""
-SELECT c_custkey,
-  CAST(length(c_name) AS INT) AS name_len,
-  CAST({ol} AS INT) AS name_bytes,
-  left(c_name, 8) AS name_prefix,
-  upper(c_mktsegment) AS seg_upper,
-  concat(c_name, '#', c_mktsegment) AS name_seg,
-  replace(lower(c_mktsegment), 'a', '@') AS seg_repl,
-  {joined} AS first_tokens_upper
-FROM customer WHERE c_custkey % 100 = 0
-"""
-
-
-def _build_remote_agg_pushdown(spark, sf_dir: str):
-    from ..sources import dd_read_arrow, dd_read_arrow_agg
-
-    srv = _server(sf_dir)
-    remote_sql = (
-        "SELECT count(*) AS n, sum(CAST(l_quantity AS BIGINT)) AS sum_qty,"
-        " min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price"
-        " FROM (SELECT * FROM lineitem) AS _subq WHERE l_quantity < 25"
-    )
-    single = dd_read_arrow(spark, srv.url, sql=remote_sql).selectExpr(
-        "'single' AS path",
-        "CAST(n AS BIGINT) AS n",
-        "CAST(sum_qty AS BIGINT) AS sum_qty",  # HUGEINT -> DECIMAL(38,0) -> BIGINT
-        "min_price", "max_price",
-    )
-    split = dd_read_arrow_agg(
-        spark,
-        srv.url,
-        source_table="lineitem",
-        aggs={
-            "n": "count(*)",
-            "sum_qty": "sum(CAST(l_quantity AS BIGINT))",
-            "min_price": "min(l_extendedprice)",
-            "max_price": "max(l_extendedprice)",
-        },
-        where="l_quantity < 25",
-        split=True,
-        split_size=1 << 20,
-    ).selectExpr(
-        "'split' AS path",
-        "CAST(n AS BIGINT) AS n",
-        "CAST(sum_qty AS BIGINT) AS sum_qty",
-        "min_price", "max_price",
-    )
-    return single.unionByName(split)
-
-
-@q("remote_agg_pushdown", spark=_build_remote_agg_pushdown)
-def _remote_agg_pushdown(d: str) -> str:
-    """Aggregation pushdown parity (SURVEY §2.3 A1-A3): ONE gated row
-    pair hard-verifies BOTH server-side aggregation paths against the
-    oracle — 'single' = the whole aggregate computed by the server in
-    one stream (the reference's non-split optimizer rewrite,
-    'SELECT <aggs> FROM (<orig>) AS _subq WHERE ...'), 'split' = the
-    aggregate computed PER SPLIT on the server with Spark merging the
-    partials (the reference's split-mode pushdown, IsSplitSafe set).
-    Both must hash-match the oracle computing the same aggregate
-    locally; HUGEINT sums arrive as DECIMAL(38,0) and are CAST to
-    BIGINT (the §7.4 type-reconciliation rule)."""
-    return (
-        "WITH r AS (SELECT count(*) AS n,"
-        " sum(CAST(l_quantity AS BIGINT)) AS sum_qty,"
-        " min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price"
-        " FROM lineitem WHERE l_quantity < 25)"
-        " SELECT 'single' AS path, CAST(n AS BIGINT) AS n,"
-        " CAST(sum_qty AS BIGINT) AS sum_qty, min_price, max_price FROM r"
-        " UNION ALL"
-        " SELECT 'split' AS path, CAST(n AS BIGINT) AS n,"
-        " CAST(sum_qty AS BIGINT) AS sum_qty, min_price, max_price FROM r"
-    )
-
-
-@q("part_brand_stats")
-def _part_brand(d: str) -> str:
-    return f"""
-SELECT p_brand, p_type,
-  CAST(count(*) AS BIGINT) AS n_parts,
-  min(p_size) AS min_size, max(p_size) AS max_size,
-  CAST(count(DISTINCT p_name) AS BIGINT) AS n_names
-FROM part GROUP BY p_brand, p_type
-"""
-
-
-@q("supplier_nation_join")
-def _supplier_nation(d: str) -> str:
-    return f"""
-SELECT n.n_name,
-  CAST(count(*) AS BIGINT) AS n_suppliers,
-  {D.decsum('s.s_acctbal', 'sum_bal', d)}
-FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
-GROUP BY n.n_name
-"""
-
-
-@q("customer_orders_left_join")
-def _left_join(d: str) -> str:
-    """LEFT OUTER join surface: every customer kept, zero-order
-    customers get COALESCEd zeros.
-
-    Scale: orders pre-aggregates to one row per custkey BEFORE the
-    join, so the outer join's right side is |customers|-sized, not
-    |orders|-sized — aggregate-then-join, the shape that survives a
-    fact-table scale-up."""
-    return """
-SELECT c.c_custkey, c.c_mktsegment,
-  CAST(coalesce(o.n, 0) AS BIGINT) AS n_orders,
-  CAST(CAST(coalesce(o.spend, CAST(0 AS DECIMAL(38,4))) AS DECIMAL(38,4)) AS DOUBLE) AS total_spend
-FROM customer c
-LEFT JOIN (SELECT o_custkey, count(*) AS n,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DECIMAL(38,4)) AS spend
-           FROM orders GROUP BY o_custkey) o
-  ON c.c_custkey = o.o_custkey
-"""
-
-
-@q("nation_presence_full_join")
-def _full_join(d: str) -> str:
-    """FULL OUTER join surface: per-nation supplier counts vs customer
-    counts, keeping nations present on either side only."""
-    return """
-SELECT coalesce(s.nk, c.nk) AS nationkey,
-  CAST(coalesce(s.n_suppliers, 0) AS BIGINT) AS n_suppliers,
-  CAST(coalesce(c.n_customers, 0) AS BIGINT) AS n_customers
-FROM (SELECT s_nationkey AS nk, count(*) AS n_suppliers
-      FROM supplier GROUP BY s_nationkey) s
-FULL JOIN (SELECT c_nationkey AS nk, count(*) AS n_customers
-           FROM customer GROUP BY c_nationkey) c
-  ON s.nk = c.nk
-"""
-
-
-@q("orders_running_totals")
-def _running_totals(d: str) -> str:
-    """Window-frame surface: per-customer cumulative spend (ROWS
-    unbounded-preceding) and a sliding 3-order sum. Frames are explicit
-    ROWS (not RANGE) and the ordering key (o_orderdate, o_orderkey) is
-    unique, so both engines window identical row sequences.
-
-    Scale: one shuffle on o_custkey; frames evaluate in one sorted pass
-    per partition — no self-joins."""
-    return """
-SELECT o_orderkey, o_custkey,
-  CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4)))
-       OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-       AS DECIMAL(38,4)) AS DOUBLE) AS running_spend,
-  CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4)))
-       OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-       AS DECIMAL(38,4)) AS DOUBLE) AS sliding3_spend,
-  CAST(row_number()
-       OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-       AS BIGINT) AS order_seq
-FROM orders
-"""
-
-
-# ------------------------------------------------ TPC-H multi-join shapes
-# Adapted to the driver's reduced schema (no shipmode/commitdate/partsupp;
-# Q3 drops o_shippriority, Q4 uses shipdate>orderdate as the "late" test).
-# All money math follows the dialect.py decimal discipline so both
-# engines hash identically. Scale notes: the dim sides (customer 1.5M,
-# supplier 100k, nation/region tiny at SF100) broadcast or shuffle on
-# their join key; the fact-side shuffle is on the join key only, with
-# partial aggregation before the exchange — the plans a 1000-executor
-# cluster wants.
-
-_REV = (
-    "CAST(l_extendedprice AS DECIMAL(18,4))"
-    " * (CAST(1 AS DECIMAL(8,4)) - CAST(l_discount AS DECIMAL(8,4)))"
-)
-
-
-@q("q3_shipping_priority")
-def _q3(d: str) -> str:
-    """TPC-H Q3: top-10 unshipped orders by revenue for one segment."""
-    od = D.epoch_us("CAST(o_orderdate AS TIMESTAMP)", d)
-    return f"""
-SELECT l_orderkey,
-  CAST(CAST(round(sum({_REV}), 4) AS DECIMAL(38,4)) AS DOUBLE) AS revenue,
-  CAST({od} AS BIGINT) AS order_us, o_orderpriority
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-WHERE c.c_mktsegment = 'BUILDING'
-  AND o.o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
-  AND l.l_shipdate > TIMESTAMP '1998-06-01 00:00:00'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey LIMIT 10
-"""
-
-
-@q("q4_order_priority")
-def _q4(d: str) -> str:
-    """TPC-H Q4 shape: correlated EXISTS with an inequality (late-ship
-    orders per priority). Spark decorrelates to a left-semi join."""
-    return """
-SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-FROM orders o
-WHERE o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-  AND EXISTS (SELECT 1 FROM lineitem l
-              WHERE l.l_orderkey = o.o_orderkey
-                AND l.l_shipdate > o.o_orderdate)
-GROUP BY o_orderpriority
-"""
-
-
-@q("q5_regional_volume")
-def _q5(d: str) -> str:
-    """TPC-H Q5: 6-table join, local-supplier constraint
-    (c_nationkey = s_nationkey), revenue by nation."""
-    return f"""
-SELECT n.n_name, CAST(CAST(round(sum({_REV}), 4) AS DECIMAL(38,4)) AS DOUBLE) AS revenue
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-               AND c.c_nationkey = s.s_nationkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-WHERE r.r_name = 'ASIA'
-  AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY n.n_name
-"""
-
-
-@q("q7_volume_shipping")
-def _q7(d: str) -> str:
-    """TPC-H Q7 (volume shipping): bidirectional trade volume between
-    two nation groups by ship year — a 6-table join with TWO nation
-    dimension roles (supplier's and customer's) and the classic
-    disjunctive cross-group predicate. Nation groups rather than the
-    kit's single pair because the test corpus assigns nations
-    uniformly (a single pair selects zero rows at sf0.001)."""
-    ga = "('NATION_1','NATION_2','NATION_3')"
-    gb = "('NATION_4','NATION_5','NATION_6')"
-    return f"""
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-  CAST(EXTRACT(YEAR FROM l.l_shipdate) AS INT) AS l_year,
-  CAST(count(*) AS BIGINT) AS n_lines,
-  CAST(CAST(round(sum({_REV}), 4) AS DECIMAL(38,4)) AS DOUBLE) AS revenue
-FROM supplier s
-JOIN lineitem l ON s.s_suppkey = l.l_suppkey
-JOIN orders o ON o.o_orderkey = l.l_orderkey
-JOIN customer c ON c.c_custkey = o.o_custkey
-JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-WHERE ((n1.n_name IN {ga} AND n2.n_name IN {gb})
-    OR (n1.n_name IN {gb} AND n2.n_name IN {ga}))
-  AND l.l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
-  AND l.l_shipdate < TIMESTAMP '1999-01-01 00:00:00'
-GROUP BY n1.n_name, n2.n_name, EXTRACT(YEAR FROM l.l_shipdate)
-"""
-
-
-@q("q8_market_share")
-def _q8(d: str) -> str:
-    """TPC-H Q8 (national market share): the widest join in the suite
-    — 8 tables, nation playing TWO roles (customer's region gate,
-    supplier's share group) — with a conditional-aggregate share
-    ratio. Both sums are EXACT decimal arithmetic (_REV discipline),
-    so the double ratio is bit-identical across engines; snapped to
-    1e-6 via the branchless bridge (_round6 — round(DOUBLE, k)
-    diverges at shortest-repr half boundaries). Share
-    group = a nation set (the kit's single nation under-selects the
-    uniform test corpus)."""
-    ga = "('NATION_1','NATION_2','NATION_3')"
-    ratio = (
-        f"(CAST(sum(CASE WHEN n2.n_name IN {ga} THEN {_REV}"
-        f" ELSE CAST(0 AS DECIMAL(18,4)) END) AS DOUBLE)"
-        f" / CAST(sum({_REV}) AS DOUBLE))"
-    )
-    return f"""
-SELECT CAST(EXTRACT(YEAR FROM o.o_orderdate) AS INT) AS o_year,
-  CAST(count(*) AS BIGINT) AS n_lines,
-  CAST({_round6(ratio)} AS DOUBLE) AS mkt_share
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey
-JOIN supplier s ON s.s_suppkey = l.l_suppkey
-JOIN orders o ON o.o_orderkey = l.l_orderkey
-JOIN customer c ON c.c_custkey = o.o_custkey
-JOIN nation n1 ON c.c_nationkey = n1.n_nationkey
-JOIN region r ON n1.n_regionkey = r.r_regionkey
-JOIN nation n2 ON s.s_nationkey = n2.n_nationkey
-WHERE r.r_name = 'AMERICA' AND p.p_type = 'ECONOMY'
-  AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY EXTRACT(YEAR FROM o.o_orderdate)
-"""
-
-
-@q("q10_returned_items")
-def _q10(d: str) -> str:
-    """TPC-H Q10: top-20 customers by revenue lost to returns."""
-    return f"""
-SELECT c.c_custkey, c.c_name,
-  CAST(CAST(round(sum({_REV}), 4) AS DECIMAL(38,4)) AS DOUBLE) AS revenue,
-  n.n_name
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-WHERE l.l_returnflag = 'R'
-  AND o.o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY c.c_custkey, c.c_name, n.n_name
-ORDER BY revenue DESC, c_custkey LIMIT 20
-"""
-
-
-@q("q14_promo_effect")
-def _q14(d: str) -> str:
-    """TPC-H Q14: conditional aggregation ratio (promo revenue share).
-    Exact decimal sums; the ratio is ONE double division (IEEE-exact,
-    identical in both engines given identical decimal operands)."""
-    return f"""
-SELECT
-  CAST(CAST(round(sum(CASE WHEN p.p_type = 'PROMO' THEN {_REV} END), 4) AS DECIMAL(38,4)) AS DOUBLE) AS promo_revenue,
-  CAST(CAST(round(sum({_REV}), 4) AS DECIMAL(38,4)) AS DOUBLE) AS total_revenue,
-  CAST(100 * CAST(CAST(round(sum(CASE WHEN p.p_type = 'PROMO' THEN {_REV} END), 4) AS DECIMAL(38,4)) AS DOUBLE)
-       / CAST(CAST(round(sum({_REV}), 4) AS DECIMAL(38,4)) AS DOUBLE) AS DOUBLE) AS promo_pct
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-WHERE l.l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
-  AND l.l_shipdate < TIMESTAMP '1997-10-01 00:00:00'
-"""
-
-
-@q("q18_large_volume")
-def _q18(d: str) -> str:
-    """TPC-H Q18: large-volume orders — ONE lineitem aggregation total.
-
-    The textbook IN-subquery form makes Spark infer the semi-join filter
-    onto BOTH orders and lineitem, running the heavy per-orderkey
-    aggregation twice; even the aggregated-inner-join form re-aggregates
-    the joined lineitem rows. But the HAVING predicate and the output
-    column are the SAME per-orderkey sum, so one grouped pass produces
-    both: aggregate lineitem by orderkey once, filter > 220, then join
-    the (small) surviving keys to orders and customer. At scale this is
-    one full lineitem shuffle instead of two, and the post-filter join
-    input shrinks from |lineitem| to |big orders|.
-
-    Sum domain: l_quantity is INTEGRAL by TPC-H construction (1..50;
-    asserted against the test data in tests/test_properties.py), so
-    summing CAST(l_quantity AS BIGINT) is EXACT and order-independent
-    — the same result the decimal-domain sum produces, without its
-    cost: Spark widens a DECIMAL(18,4) sum accumulator to
-    DECIMAL(28,4), which no longer fits a long, so every group update
-    leaves the primitive fast path (measured at sf0.1: 0.80s decimal
-    vs 0.36s long-backed for the identical grouped HAVING sum). The
-    decimal discipline stays where values are genuinely fractional
-    (q1/q3/q5 money sums); exactness here comes from integrality, not
-    from giving up the HUGEINT->DECIMAL contract."""
-    od = D.epoch_us("CAST(o_orderdate AS TIMESTAMP)", d)
-    return f"""
-WITH okq AS (
-  SELECT l_orderkey, sum(CAST(l_quantity AS BIGINT)) AS qty
-  FROM lineitem GROUP BY l_orderkey
-  HAVING sum(CAST(l_quantity AS BIGINT)) > 220
-)
-SELECT c.c_name, c.c_custkey, o.o_orderkey,
-  CAST({od} AS BIGINT) AS order_us,
-  CAST(okq.qty AS DOUBLE) AS total_qty
-FROM okq
-JOIN orders o ON o.o_orderkey = okq.l_orderkey
-JOIN customer c ON c.c_custkey = o.o_custkey
-"""
-
-
-@q("q19_disjunctive_join")
-def _q19(d: str) -> str:
-    """TPC-H Q19 shape: join with disjunctive multi-attribute predicates
-    (brand x size x quantity bands). The equi-join key is still
-    extractable, so Spark plans a hash join + residual OR filter, not a
-    cartesian product."""
-    return f"""
-SELECT CAST(CAST(round(sum({_REV}), 4) AS DECIMAL(38,4)) AS DOUBLE) AS revenue,
-  CAST(count(*) AS BIGINT) AS n
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 15
-       AND l.l_quantity >= 1 AND l.l_quantity <= 21)
-   OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 25
-       AND l.l_quantity >= 10 AND l.l_quantity <= 30)
-   OR (p.p_brand = 'Brand#34' AND p.p_size BETWEEN 1 AND 35
-       AND l.l_quantity >= 20 AND l.l_quantity <= 40)
-"""
-
-
-@q("q9_product_profit")
-def _q9(d: str) -> str:
-    """TPC-H Q9 shape (product-type profit measure): 5-table join,
-    LIKE-filtered part dimension, profit grouped by nation and year.
-    Adaptation for this corpus' schema (no partsupp table — see
-    TESTDATA.md): supply cost is the part's catalog price times
-    quantity, so profit = revenue - catalog cost; the join/aggregate
-    SHAPE (fact x 4 broadcast dims, computed measure, two-level
-    group) is the point of the query. Both measures are exact-decimal
-    summed and rounded separately BEFORE the double subtraction, so
-    the result hash never sees engine-specific decimal-multiply
-    precision rules."""
-    cost = (
-        "CAST(p.p_retailprice AS DECIMAL(18,4))"
-        " * CAST(l.l_quantity AS DECIMAL(18,4))"
-    )
-    profit = (
-        f"(CAST(CAST(round(sum({_REV}), 4) AS DECIMAL(38,4)) AS DOUBLE)"
-        f" - CAST(CAST(round(sum({cost}), 4) AS DECIMAL(38,4))"
-        " AS DOUBLE))"
-    )
-    return f"""
-SELECT n.n_name AS nation,
-  CAST(EXTRACT(YEAR FROM o.o_orderdate) AS INT) AS o_year,
-  CAST({_roundk(profit, 4)} AS DOUBLE) AS profit
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey
-JOIN supplier s ON s.s_suppkey = l.l_suppkey
-JOIN orders o ON o.o_orderkey = l.l_orderkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-WHERE p.p_name LIKE '%widget%'
-GROUP BY n.n_name, EXTRACT(YEAR FROM o.o_orderdate)
-"""
-
-
-@q("q12_priority_shipping")
-def _q12(d: str) -> str:
-    """TPC-H Q12 shape (shipping-mode priority classes): lineitem x
-    orders with conditional-aggregate CASE counts of high- vs
-    low-priority orders per class, over a one-year window.
-    Adaptation: the class column is l_linestatus (the corpus has no
-    l_shipmode) and the window predicate is on l_shipdate (no
-    commit/receipt dates); the high-priority set is the kit's."""
-    return """
-SELECT l.l_linestatus,
-  CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-  CAST(sum(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-FROM orders o
-JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-WHERE l.l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND l.l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY l.l_linestatus
-"""
-
-
-@q("q13_customer_distribution")
-def _q13(d: str) -> str:
-    """TPC-H Q13 (customer order-count distribution): LEFT OUTER join
-    so zero-order customers survive into the c_count=0 bucket, then a
-    second aggregation histograms customers per order count — the
-    double-aggregation-over-outer-join shape. Adaptation: the
-    excluded-orders predicate is an o_orderpriority class (the corpus
-    has no o_comment)."""
-    return """
-WITH c_orders AS (
-  SELECT c.c_custkey, CAST(count(o.o_orderkey) AS BIGINT) AS c_count
-  FROM customer c
-  LEFT OUTER JOIN orders o
-    ON c.c_custkey = o.o_custkey
-   AND o.o_orderpriority <> '4-NOT SPECIFIED'
-  GROUP BY c.c_custkey
-)
-SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-FROM c_orders
-GROUP BY c_count
-"""
-
-
-@q("q15_top_supplier")
-def _q15(d: str) -> str:
-    """TPC-H Q15 (top supplier): quarterly per-supplier revenue with a
-    scalar-subquery max and an equality join back — the
-    view-plus-argmax shape. The revenue compare happens in the EXACT
-    rounded DECIMAL(38,4) domain (tie-safe and engine-independent);
-    only the output column degrades to DOUBLE."""
-    return f"""
-WITH revenue AS (
-  SELECT l_suppkey AS supplier_no,
-    CAST(round(sum({_REV}), 4) AS DECIMAL(38,4)) AS total_revenue
-  FROM lineitem l
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-    AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
-  GROUP BY l_suppkey
-)
-SELECT s.s_suppkey, s.s_name,
-  CAST(r.total_revenue AS DOUBLE) AS total_revenue
-FROM supplier s
-JOIN revenue r ON s.s_suppkey = r.supplier_no
-WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
-"""
-
-
-@q("q16_supplier_cnt")
-def _q16(d: str) -> str:
-    """TPC-H Q16 shape (parts/supplier relationship): count DISTINCT
-    suppliers per (brand, type, size) bucket, excluding a
-    subquery-derived supplier blacklist via NOT IN — the
-    anti-join-into-count-distinct shape. Adaptation: supplier-part
-    pairs come from lineitem (no partsupp table) and the blacklist
-    predicate is an s_acctbal threshold (no s_comment)."""
-    return """
-SELECT p.p_brand, p.p_type, p.p_size,
-  CAST(count(DISTINCT l.l_suppkey) AS BIGINT) AS supplier_cnt
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey
-WHERE p.p_brand <> 'Brand#45'
-  AND p.p_type NOT LIKE 'PROMO%'
-  AND p.p_size IN (1, 4, 7, 10, 13, 16, 19, 22)
-  AND l.l_suppkey NOT IN (
-    SELECT s_suppkey FROM supplier WHERE s_acctbal < 500.0
-  )
-GROUP BY p.p_brand, p.p_type, p.p_size
-"""
-
-
-@q("q17_small_quantity")
-def _q17(d: str) -> str:
-    """TPC-H Q17 (small-quantity-order revenue): revenue lost to
-    orders below 20% of a part's average quantity — the
-    correlated-average shape, decorrelated into a per-part aggregate
-    join (what both planners do to the kit's subquery anyway). The
-    threshold compare 'qty < 0.2 * avg' is algebraized to the EXACT
-    integer-decimal form 5 * qty * cnt < total (quantities are
-    integral, summed as DECIMAL), so no engine's double avg sits on
-    the boundary."""
-    yearly = (
-        "(CAST(CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))),"
-        " 2) AS DECIMAL(38,2)) AS DOUBLE) / 7.0)"
-    )
-    # Spark side pre-filters the per-part aggregate's input with the
-    # selective part predicate (shuffle fewer bytes): only partkeys that
-    # survive the brand/type filter can ever join the main block, and
-    # per-group (cnt, total) are unaffected by dropping whole groups, so the
-    # result is identical (parity-proved). The filtered part list broadcasts
-    # into the agg's scan side, shrinking the agg exchange from all parts to
-    # one brand's parts (~1/1000 at TPC-H selectivity). Measured at sf0.1:
-    # 0.731s -> 0.445s median. Oracle keeps the unfiltered decorrelated form
-    # so equivalence stays externally checked.
-    pq_src = (
-        "lineitem JOIN bp ON bp.p_partkey = lineitem.l_partkey"
-        if d == SPARK else "lineitem"
-    )
-    # BROADCAST(bp) / BROADCAST(pq): both are small by construction at
-    # every scale — bp is one brand+type's part list and pq is the
-    # per-part aggregate over exactly those parts (~1/1000 of parts at
-    # TPC-H selectivity) — but the static planner's post-join aggregate
-    # size estimate costed pq as sort-merge-worthy at gate scale
-    # (audit_plans flagged the SMJ; AQE would demote it at runtime, the
-    # hint pins the designed build side in the static plan too).
-    pq_hint = "/*+ BROADCAST(bp) */ " if d == SPARK else ""
-    main_hint = "/*+ BROADCAST(pq) */ " if d == SPARK else ""
-    bp_cte = (
-        """bp AS (
-  SELECT p_partkey FROM part
-  WHERE p_brand = 'Brand#23' AND p_type = 'MEDIUM'
-),
-"""
-        if d == SPARK else ""
-    )
-    return f"""
-WITH {bp_cte}pq AS (
-  SELECT {pq_hint}l_partkey,
-    CAST(count(*) AS DECIMAL(18,0)) AS cnt,
-    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(38,2))
-      AS total
-  FROM {pq_src} GROUP BY l_partkey
-)
-SELECT {main_hint}CAST({_round6(yearly)} AS DOUBLE)
-  AS avg_yearly
-FROM lineitem l
-JOIN part p ON p.p_partkey = l.l_partkey
-JOIN pq ON pq.l_partkey = l.l_partkey
-WHERE p.p_brand = 'Brand#23' AND p.p_type = 'MEDIUM'
-  AND CAST(l.l_quantity AS DECIMAL(18,2)) * pq.cnt * 5 < pq.total
-"""
-
-
-@q("q22_sales_opportunity")
-def _q22(d: str) -> str:
-    """TPC-H Q22 (global sales opportunity): positive-balance
-    customers above the average balance with no recent orders,
-    bucketed — the anti-join + scalar-average shape. Adaptations: the
-    bucket is the customer's nation (no c_phone to prefix) and
-    'never ordered' is 'no orders since 1999' (every corpus customer
-    has old orders). The average-balance threshold compares in the
-    EXACT decimal domain (bal * cnt > total), never through a double
-    average."""
-    return """
-WITH pos AS (
-  SELECT CAST(c_acctbal AS DECIMAL(18,2)) AS bal, c_custkey, c_nationkey
-  FROM customer WHERE c_acctbal > 0.0
-),
-thr AS (
-  SELECT CAST(count(*) AS DECIMAL(18,0)) AS cnt,
-    CAST(sum(bal) AS DECIMAL(38,2)) AS total
-  FROM pos
-)
-SELECT n.n_name AS cntrycode,
-  CAST(count(*) AS BIGINT) AS numcust,
-  CAST(CAST(sum(p.bal) AS DECIMAL(38,2)) AS DOUBLE) AS totacctbal
-FROM pos p CROSS JOIN thr t
-JOIN nation n ON n.n_nationkey = p.c_nationkey
-WHERE p.bal * t.cnt > t.total
-  AND NOT EXISTS (
-    SELECT 1 FROM orders o
-    WHERE o.o_custkey = p.c_custkey
-      AND o.o_orderdate >= TIMESTAMP '1999-01-01 00:00:00'
-  )
-GROUP BY n.n_name
-"""
-
-
-@q("q21_suppliers_waiting")
-def _q21(d: str) -> str:
-    """TPC-H Q21 (suppliers who kept orders waiting): the hardest
-    join shape in the kit — an EXISTS and a NOT EXISTS, both
-    correlated SELF-joins of the fact table with an inequality on the
-    correlated column (another supplier's line exists; no OTHER
-    supplier's line is also late). Spark decorrelates to a left-semi
-    + left-anti pair on l_orderkey with the `l_suppkey <>` residual
-    as the join condition — at scale both sides shuffle on the SAME
-    key (l_orderkey), so the pair costs one co-partitioned exchange,
-    not two. Adaptations for the corpus schema (no commit/receipt
-    dates — the q12 precedent): the 'kept waiting' line marker is
-    l_returnflag = 'R', and the nation gate is a group (q7/q8
-    precedent: single-nation under-selects the uniform corpus).
-    Completes the TPC-H suite over this schema: q2/q11/q20 need the
-    nonexistent partsupp table; all other 19 are in the catalog."""
-    return """
-SELECT s.s_name, CAST(count(*) AS BIGINT) AS numwait
-FROM supplier s
-JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-JOIN orders o ON o.o_orderkey = l1.l_orderkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-WHERE o.o_orderstatus = 'F'
-  AND l1.l_returnflag = 'R'
-  AND EXISTS (SELECT 1 FROM lineitem l2
-              WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                  WHERE l3.l_orderkey = l1.l_orderkey
-                    AND l3.l_suppkey <> l1.l_suppkey
-                    AND l3.l_returnflag = 'R')
-  AND n.n_name IN ('NATION_1','NATION_2','NATION_3','NATION_4','NATION_5')
-GROUP BY s.s_name
-ORDER BY numwait DESC, s.s_name
-LIMIT 100
-"""
-
-
-# ------------------------------------------------ sketch contracts
-# At 100 TB, exact count(DISTINCT) and exact percentiles are the
-# queries that fall over first: both need every distinct value (or
-# every value) through a shuffle. The production answer is mergeable
-# sketches — HyperLogLog for cardinality, GK/t-digest for quantiles —
-# whose partials combine associatively, so they aggregate map-side
-# and ship O(sketch) bytes per partition instead of O(data).
-# Spark and DuckDB implement DIFFERENT sketches (HLL++ vs HLL,
-# GK vs t-digest), so the estimates cannot be hash-compared across
-# engines. These entries gate what IS portable: the accuracy
-# CONTRACT. Each emits the exact answer (hashable) plus booleans
-# asserting the engine's own sketch landed within the documented
-# error bound — the same exactness-anchor discipline as the ANN
-# recall-floor twins.
-
-
-@q("sketch_distinct_bounds")
-def _sketch_distinct(d: str) -> str:
-    """HLL cardinality contract: per-event-type exact distinct users
-    (the anchor values) + a boolean pinning the engine's HLL estimate
-    within 5% relative + 5 absolute (the absolute slack covers tiny
-    groups, where both engines' sparse HLL modes are exact anyway).
-    Spark side runs rsd=0.02 (dialect.approx_distinct — the measured
-    sweet spot: 0.4% actual error at sf0.1, exact below; 0.05 would
-    BREAK this gate, see the dialect docstring). HLL estimates are
-    merge-order invariant, so the verified booleans are stable.
-
-    Plan shape (A/B-measured at sf0.1, see BENCH_NOTES.md): dedup
-    FIRST — GROUP BY (type, user) partial-aggregates map-side, one
-    shuffle of distinct pairs, then count(*) = the exact cardinality
-    and the HLL runs over the already-distinct stream (HLL is
-    duplicate-insensitive, so the estimate is identical to the
-    fused form by construction). 1.9s fused-Expand -> 0.40s: the
-    fused plan Expands the raw stream and drags HLL partials through
-    it; the exact anchor forces the distinct shuffle either way, so
-    dedup-first is strictly better here AND at 100 TB. (Sketch-ONLY
-    production queries skip the anchor and the shuffle entirely —
-    that single-scan map-side-merge path is what approx_distinct
-    exists for.)"""
-    ad = D.approx_distinct("user_id", d)
-    return f"""
-WITH d AS (SELECT DISTINCT event_type, user_id FROM events)
-SELECT event_type,
-  CAST(count(*) AS BIGINT) AS exact_users,
-  CAST(abs(CAST({ad} AS DOUBLE) - count(*))
-       <= 0.05 * count(*) + 5 AS BOOLEAN) AS hll_within_5pct
-FROM d
-GROUP BY event_type
-"""
-
-
-@q("sketch_quantile_bounds")
-def _sketch_quantile(d: str) -> str:
-    """Quantile-sketch contract: per-language p50/p95 of document
-    length from the engine's mergeable sketch, gated by the RANK
-    definition of an eps-approximate quantile (Greenwald-Khanna):
-    q_hat is a valid phi-quantile at rank error eps iff
-    count(v < q_hat) <= (phi+eps)*n and count(v <= q_hat) >= (phi-eps)*n.
-    The two-sided <=/< split makes the bound tie-safe, and it holds
-    for interpolating sketches (t-digest) too; +-1 row of absolute
-    slack covers integer rank rounding on small groups. eps = 0.02,
-    vastly above Spark's 1/10000 accuracy and t-digest's tail error.
-    The exact n per group anchors the hash."""
-    p50 = D.approx_quantile("n_chars", "0.5", d)
-    p95 = D.approx_quantile("n_chars", "0.95", d)
-    return f"""
-WITH s AS (
-  SELECT lang, {p50} AS am, {p95} AS a95, count(*) AS n
-  FROM documents GROUP BY lang
-)
-SELECT d.lang,
-  CAST(max(s.n) AS BIGINT) AS n_docs,
-  CAST(sum(CASE WHEN d.n_chars <  s.am THEN 1 ELSE 0 END)
-       <= 0.52 * max(s.n) + 1 AS BOOLEAN) AS p50_upper_ok,
-  CAST(sum(CASE WHEN d.n_chars <= s.am THEN 1 ELSE 0 END)
-       >= 0.48 * max(s.n) - 1 AS BOOLEAN) AS p50_lower_ok,
-  CAST(sum(CASE WHEN d.n_chars <  s.a95 THEN 1 ELSE 0 END)
-       <= 0.97 * max(s.n) + 1 AS BOOLEAN) AS p95_upper_ok,
-  CAST(sum(CASE WHEN d.n_chars <= s.a95 THEN 1 ELSE 0 END)
-       >= 0.93 * max(s.n) - 1 AS BOOLEAN) AS p95_lower_ok
-FROM documents d JOIN s ON d.lang = s.lang
-GROUP BY d.lang
-"""
-
-
-def _build_sessionize_native(spark, sf_dir: str):
-    from ..streaming import sessionize
-
-    return sessionize(spark.table("events")).select(
-        "user_id", "n_events", "start_us", "end_us"
-    )
-
-
-@q("events_sessionize_native", spark=_build_sessionize_native)
-def _sessionize_native(d: str) -> str:
-    """Oracle for the native session_window operator (streaming/pipeline
-    .py): same lag+cumsum sessionization as events_sessionize, minus the
-    session ordinal (session_window identifies sessions by time range,
-    not rank)."""
-    us = _event_us(d)
-    return f"""
-WITH e AS (SELECT user_id, event_id, {us} AS us FROM events),
-w AS (
-  SELECT user_id, event_id, us,
-    CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) IS NULL
-              OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) > 1800000000
-         THEN 1 ELSE 0 END AS brk
-  FROM e),
-s AS (
-  SELECT user_id, us,
-    sum(brk) OVER (PARTITION BY user_id ORDER BY us, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM w)
-SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-  CAST(min(us) AS BIGINT) AS start_us, CAST(max(us) AS BIGINT) AS end_us
-FROM s GROUP BY user_id, session_id
-"""
-
-
-# ======================================================= dd_* function surface
-
-
-@q("dd_array_contains_all")
-def _dd_aca(d: str) -> str:
-    tk = D.distinct_tokens("text", d)
-    needle = _sarr(["data", "query"], d)
-    if d == SPARK:
-        pred = f"size(array_except({needle}, tk)) = 0"
-    else:
-        pred = f"len(list_filter({needle}, x -> NOT list_contains(tk, x))) = 0"
-    return f"""
-SELECT doc_id, {pred} AS has_all
-FROM (SELECT doc_id, {tk} AS tk FROM documents) t
-"""
-
-
-@q("dd_array_contains_all_fn")
-def _dd_aca_fn(d: str) -> str:
-    """The registered SQL-function surface, all three reference overloads
-    (array_contains_all.cpp:430-469): the 2-arg form, the execution-hint
-    form (hint accepted & ignored), and the bloom-accelerated form must
-    each equal the plain containment predicate — the bloom path never
-    false-negatives and exact-verifies every bloom hit, so its result is
-    bit-equal to the unaccelerated one by construction."""
-    tk = D.distinct_tokens("text", d)
-    needle = _sarr(["data", "query"], d)
-    if d == SPARK:
-        return f"""
-SELECT doc_id,
-  dd_array_contains_all(tk, {needle}) AS has_all,
-  dd_array_contains_all_hint(tk, {needle}, false) AS has_all_hint,
-  dd_array_contains_all_bloom(tk, {needle}, dd_bloom_filter_create(tk)) AS has_all_bloom
-FROM (SELECT doc_id, {tk} AS tk FROM {_wide_docs(d)} w) t
-"""
-    pred = f"len(list_filter({needle}, x -> NOT list_contains(tk, x))) = 0"
-    return f"""
-SELECT doc_id, {pred} AS has_all, {pred} AS has_all_hint, {pred} AS has_all_bloom
-FROM (SELECT doc_id, {tk} AS tk FROM documents) t
-"""
-
-
-@q("dd_search_marker")
-def _dd_search(d: str) -> str:
-    if d == SPARK:
-        return (
-            "SELECT event_id, dd_search(event_type, array('purchase')) AS hit"
-            " FROM events"
-        )
-    return "SELECT event_id, TRUE AS hit FROM events"
-
-
-@q("dd_version")
-def _dd_version(d: str) -> str:
-    from ..version import ENGINE_VERSION
-
-    if d == SPARK:
-        return "SELECT dd_version() AS v"
-    return f"SELECT '{ENGINE_VERSION}' AS v"
-
-
-@q("bloom_no_false_negatives")
-def _bloom_nfn(d: str) -> str:
-    # create a bloom from each doc's tokens and probe a known-present
-    # element: must be TRUE for every row (bloom_filter.cpp:116-151 law).
-    tk = D.distinct_tokens("text", d)
-    if d == SPARK:
-        return f"""
-SELECT doc_id,
-  dd_bloom_filter_contains(dd_bloom_filter_create(tk), try_element_at(tk, 1)) AS present,
-  dd_bloom_filter_contains_all(dd_bloom_filter_create(tk), slice(tk, 1, 3)) AS present_all
-FROM (SELECT doc_id, {tk} AS tk FROM documents) t
-"""
-    return f"""
-SELECT doc_id,
-  CASE WHEN len(tk) > 0 THEN TRUE END AS present,
-  TRUE AS present_all
-FROM (SELECT doc_id, {tk} AS tk FROM documents) t
-"""
-
-
-# ======================================================= dedup operators
-
-
-@q("dedup_exact")
-def _dedup_exact(d: str) -> str:
-    # Exact dedup by content hash. Scale: one shuffle on a 128-bit hash —
-    # the canonical 100 TB exact-dedup plan (hash, not raw text, as key).
-    return """
-SELECT md5(text) AS content_hash, CAST(count(*) AS BIGINT) AS n_copies,
-  CAST(min(doc_id) AS BIGINT) AS keeper_doc_id
-FROM documents GROUP BY 1
-"""
-
-
-def _build_minhash_df(spark, sf_dir: str):
-    """DataFrame-API path: MinHash + LSH (operators/dedup.py).
-
-    Shingling, the 62-bit double-polynomial shingle hash, the signature
-    and the band keys run in one JVM kernel (scala/DdKernels.scala). The
-    oracle never sees the hashes — only the final exact-verified Jaccard
-    values, which match the string-set Jaccard up to a ~2^-62
-    collision."""
-    from ..operators.dedup import minhash_neardup_pairs
-
-    return minhash_neardup_pairs(
-        spark.table("documents"),
-        shingle_n=SHINGLE_N,
-        a=MINHASH_A,
-        b=MINHASH_B,
-        bands=BANDS,
-        threshold_pct=JACCARD_PCT,
-    )
-
-
-@q("dedup_minhash_lsh", spark=_build_minhash_df)
-def _minhash_lsh(d: str) -> str:
-    """Near-dup pairs at shingle-Jaccard >= 0.85 within language.
-
-    Spark path = MinHash(128) -> 32 LSH bands -> bucket join -> exact
-    verify (never n^2; the 100 TB design). Oracle = brute-force pairs.
-    Miss probability per true pair at j=0.85 is (1-0.85^4)^32 ~ 5e-11,
-    and verification is exact, so the two row sets coincide.
-    """
-    sh = D.shingles("text", SHINGLE_N, d)
-    inter = D.lsize(D.lintersect("a.sh", "b.sh", d), d)
-    la, lb = D.lsize("a.sh", d), D.lsize("b.sh", d)
-    jac = (
-        f"CAST({inter} AS DOUBLE) / CAST({la} + {lb} - {inter} AS DOUBLE)"
-    )
-    verify = (
-        f"100 * {inter} >= {JACCARD_PCT} * ({la} + {lb} - {inter})"
-        f" AND 100 * least({la}, {lb}) >= {JACCARD_PCT} * greatest({la}, {lb})"
-    )
-    # NB: the entry's builder runs the Spark side (operators/dedup.py
-    # fused kernel); this SQL text is the brute-force formulation used
-    # as the DuckDB oracle.
-    return f"""
-WITH docs AS (SELECT doc_id, lang, {sh} AS sh FROM documents)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, {jac} AS jaccard
-FROM docs a JOIN docs b
-  ON a.lang = b.lang AND a.doc_id < b.doc_id
-WHERE {verify}
-"""
-
-
-def _build_stream_screen(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..streaming.dedup import (
-        build_minhash_index, neardup_screen_stream,
-    )
-
-    docs = spark.table("documents")
-    index = build_minhash_index(
-        docs, shingle_n=SHINGLE_N, a=MINHASH_A, b=MINHASH_B,
-        bands=32, max_bucket_docs=None,
-    )
-    out = neardup_screen_stream(
-        docs, index, threshold_pct=JACCARD_PCT
-    )
-    return out.where(F.col("doc_id") < F.col("corpus_id")).select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("corpus_id").alias("doc_b"),
-        "jaccard",
-    )
-
-
-@q("dedup_stream_screen", spark=_build_stream_screen)
-def _dedup_stream_screen(d: str) -> str:
-    """The streaming near-dup SCREEN's values under the hash gate
-    (streaming/dedup.py neardup_screen_stream): incoming docs are
-    screened against a static MinHash index — the
-    dedupe-new-data-against-the-existing-training-set ingest shape.
-    STATELESS by construction (stream-static joins + the
-    first-shared-band pair dedup predicate), so it runs append-mode
-    with no state store; the stream lifecycle (stream==batch,
-    multi-batch arrival independence) is pinned in
-    tests/test_streaming_neardup.py, and this entry pins the VALUES:
-    self-screening the corpus (kept at in_id < corpus_id) must equal
-    the brute-force pair set. Unlike dedup_minhash_lsh the screen has
-    NO language blocking — an ingest screen must catch cross-lang
-    copies (this corpus has 20 such pairs at sf0.001) — so the oracle
-    is the unblocked brute force."""
-    sh = D.shingles("text", SHINGLE_N, d)
-    inter = D.lsize(D.lintersect("a.sh", "b.sh", d), d)
-    la, lb = D.lsize("a.sh", d), D.lsize("b.sh", d)
-    jac = (
-        f"CAST({inter} AS DOUBLE) / CAST({la} + {lb} - {inter} AS DOUBLE)"
-    )
-    verify = (
-        f"100 * {inter} >= {JACCARD_PCT} * ({la} + {lb} - {inter})"
-        f" AND 100 * least({la}, {lb}) >= {JACCARD_PCT} * greatest({la}, {lb})"
-    )
-    return f"""
-WITH docs AS (SELECT doc_id, {sh} AS sh FROM documents)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, {jac} AS jaccard
-FROM docs a JOIN docs b ON a.doc_id < b.doc_id
-WHERE {verify}
-"""
-
-
-def _build_substring_screen(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..streaming.dedup import (
-        build_substring_index, substring_screen_stream,
-    )
-
-    docs = spark.table("documents")
-    index = build_substring_index(docs)
-    out = substring_screen_stream(docs, index)
-    return out.where(F.col("doc_id") < F.col("corpus_id")).select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("corpus_id").alias("doc_b"),
-        "shared_windows",
-    )
-
-
-@q("dedup_substring_screen", spark=_build_substring_screen)
-def _dedup_substring_screen(d: str) -> str:
-    """The streaming exact-substring SCREEN's values under the hash
-    gate (streaming/dedup.py substring_screen_stream): incoming docs
-    screened against a static window index — the passage-dedup twin
-    of dedup_stream_screen (does this new doc share a >=12-token
-    passage with the training set?). STATELESS: the incoming doc's
-    distinct window-hash array is a per-row expression, candidates
-    are stream-static equi-joins on the 8-byte window hash, and the
-    first-shared-window anchor (wh == array_min(array_intersect(
-    in_whs, whs)) — a pure per-row predicate) emits each pair exactly
-    once with the FULL intersection size as its count. Self-screening
-    the corpus (kept at in_id < corpus_id) must equal the batch
-    dedup_exact_substring pipeline exactly — pairs, counts, and the
-    64-doc boilerplate-cap semantics — so the oracle IS that entry's
-    DuckDB formulation. Stream lifecycle (stream==batch, arrival
-    independence, min_shared) pinned in
-    tests/test_streaming_substring.py."""
-    return _exact_substring(d)
-
-
-def _build_semantic_screen(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..streaming.dedup import (
-        build_semantic_index, semantic_screen_stream,
-    )
-
-    emb = spark.table("embeddings")
-    index = build_semantic_index(emb, n_clusters=1, spill=1)
-    out = semantic_screen_stream(emb, index, threshold=_SEMDEDUP_T)
-    return out.where(F.col("vec_id") < F.col("corpus_id")).select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("corpus_id").alias("vec_b"),
-        "sim",
-    )
-
-
-@q("embed_semantic_screen", spark=_build_semantic_screen)
-def _embed_semantic_screen(d: str) -> str:
-    """The streaming SEMANTIC screen's values under the hash gate
-    (streaming/dedup.py semantic_screen_stream): incoming embeddings
-    screened against a static SemDeDup-style cell index — the third
-    member of the screen family (MinHash near-dup, exact-substring
-    passage, semantic redundancy), all sharing the stateless
-    first-shared-anchor construction. This entry gates the EXACTNESS
-    anchor (single-cell index == brute force, the
-    embed_semantic_dedup_exact discipline) through the screen's
-    join-based per-row fold scoring — a genuinely different physical
-    path from the batch applyInPandas blocked scorer, against the
-    same brute-force oracle. Production configs (clustered, spilled,
-    capped) are pinned bit-exact vs semantic_dedup_pairs in
-    tests/test_streaming_semantic.py."""
-    dot = _dot("a.embedding", "b.embedding", d)
-    return f"""
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {dot} AS sim
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE {dot} >= {_SEMDEDUP_T}
-"""
-
-
-def _build_minhash_auto_df(spark, sf_dir: str):
-    """Production-default MinHash path: banding derived from the corpus
-    size via auto_bands(n) and the max_bucket_docs hot-bucket guard ON
-    (the knobs the 500k-doc scale proof runs with), facing the same
-    DuckDB brute-force oracle as dedup_minhash_lsh. The cap (256) is
-    far above any bucket the gate corpora produce, so no pair is
-    dropped at gate sf; at production scale the same cap is what
-    bounds boilerplate mega-clusters."""
-    from ..operators.dedup import auto_bands, minhash_neardup_pairs
-
-    docs = spark.table("documents")
-    n = docs.count()
-    return minhash_neardup_pairs(
-        docs,
-        shingle_n=SHINGLE_N,
-        a=MINHASH_A,
-        b=MINHASH_B,
-        bands=auto_bands(n, k=MINHASH_K),
-        threshold_pct=JACCARD_PCT,
-        max_bucket_docs=256,
-    )
-
-
-@q("dedup_minhash_auto", spark=_build_minhash_auto_df)
-def _minhash_auto(d: str) -> str:
-    """dedup_minhash_lsh's contract under the PRODUCTION knobs: the
-    Spark side (_build_minhash_auto_df) runs bands = auto_bands(n_docs) and a
-    non-None max_bucket_docs hot-bucket cap — the exact defaults
-    tools/scale_proof.py measures at 500k docs — against the same
-    brute-force DuckDB oracle.
-
-    Gate determinism: MinHash signatures are fixed functions of
-    (text, MINHASH_A/B), so the result set is deterministic, not a
-    recall sample — it either equals the oracle at a given sf or it
-    never does. At the gate sizes (sf0.001/sf0.01 -> r=5..7 per
-    auto_bands) the per-pair miss probability at the J=0.85 boundary
-    is <=1e-3 and the corpus' planted dups sit near J~1 (miss ~1e-11),
-    and the equality IS verified exactly by this entry. At 500k+ docs
-    (r>=10) the schedule's at-threshold recall drops to 92.8% — the
-    explicit contract documented at auto_bands/minhash_pair_recall."""
-    return _minhash_lsh(d)
-
-
-def _build_minhash_recall_held_df(spark, sf_dir: str):
-    """Recall-held schedule: r from auto-banding, b = bands_for_recall
-    (r) so per-pair recall at J=0.85 stays >=99%, K = r*b seeds from
-    the wide pool. See _minhash_recall_held docstring."""
-    import math
-
-    from ..operators.dedup import bands_for_recall, minhash_neardup_pairs
-
-    docs = spark.table("documents")
-    n = docs.count()
-    r = min(12, max(4, math.ceil(math.log2(max(n, 2)) / 2)))
-    b = bands_for_recall(r, threshold=JACCARD_PCT / 100, min_recall=0.99)
-    k = r * b
-    assert k <= MINHASH_KMAX, (r, b, k)
-    return minhash_neardup_pairs(
-        docs,
-        shingle_n=SHINGLE_N,
-        a=MINHASH_A_WIDE[:k],
-        b=MINHASH_B_WIDE[:k],
-        bands=b,
-        threshold_pct=JACCARD_PCT,
-        max_bucket_docs=256,
-    )
-
-
-@q("dedup_minhash_recall_held", spark=_build_minhash_recall_held_df)
-def _minhash_recall_held(d: str) -> str:
-    """The RECALL-HELD production schedule under the oracle gate: r
-    still grows with log2(n) (auto-banding keeps the false-candidate
-    term ~linear), but instead of holding K=128 and letting at-
-    threshold recall decay (92.8% at r=10, 78.4% at r=12 — the
-    explicit contract in auto_bands), the signature WIDENS with r:
-    b = bands_for_recall(r) so 1-(1-0.85^r)^b >= 99%, K = r*b (up to
-    372 at the r=12 cap; signature cost is linear in K and the numpy
-    kernel is vectorized over K). Same brute-force DuckDB oracle as
-    dedup_minhash_lsh — at gate sizes BOTH schedules must equal it
-    exactly; at 500k+ docs this one keeps >=99% of threshold-grade
-    pairs where the fixed-K schedule trades them for speed."""
-    return _minhash_lsh(d)
-
-
-def _build_dedup_components(spark, sf_dir: str):
-    from ..operators.components import connected_components
-
-    pairs = _build_minhash_df(spark, sf_dir)
-    # minhash pairs are distinct with doc_a < doc_b by construction ->
-    # skip the defensive symmetrize-distinct exchange
-    return connected_components(
-        pairs, "doc_a", "doc_b", edges_distinct=True
-    )
-
-
-@q("dedup_components", spark=_build_dedup_components)
-def _dedup_components(d: str) -> str:
-    """Near-dup clusters: connected components over the minhash pair
-    graph (component = min reachable doc_id). Spark runs iterative
-    min-label propagation (operators/components.py); the oracle walks
-    the same graph with a recursive CTE over the brute-force pairs."""
-    pairs = _minhash_lsh(DUCK)
-    return f"""
-WITH RECURSIVE pairs AS ({pairs}),
-edges AS (
-  SELECT doc_a AS s, doc_b AS t FROM pairs
-  UNION
-  SELECT doc_b AS s, doc_a AS t FROM pairs),
-reach(node, r) AS (
-  SELECT s AS node, s AS r FROM edges
-  UNION
-  SELECT e.t AS node, reach.r FROM reach JOIN edges e ON e.s = reach.node)
-SELECT CAST(node AS BIGINT) AS doc_id, CAST(min(r) AS BIGINT) AS component
-FROM reach GROUP BY node
-"""
-
-
-# shared tail: given a (doc_id, component) relation `{comp}` covering the
-# clustered docs, label every document (unclustered docs are their own
-# component) and keep ONE representative per component — longest text,
-# doc_id tie-break. Identical SQL in both dialects.
-_CANON_TAIL = """
-WITH lab AS (
-  SELECT d.doc_id, coalesce(c.component, d.doc_id) AS component, d.n_chars
-  FROM documents d LEFT JOIN {comp} c ON c.doc_id = d.doc_id),
-ranked AS (
-  SELECT lab.*,
-    row_number() OVER (PARTITION BY component
-                       ORDER BY n_chars DESC, doc_id) AS rk,
-    count(*) OVER (PARTITION BY component) AS n_docs
-  FROM lab)
-SELECT CAST(component AS BIGINT) AS component,
-  CAST(doc_id AS BIGINT) AS kept_doc,
-  CAST(n_chars AS BIGINT) AS kept_chars,
-  CAST(n_docs AS BIGINT) AS n_docs
-FROM ranked WHERE rk = 1
-"""
-
-
-def _build_dedup_canonical(spark, sf_dir: str):
-    """Spark path: aggregation-based representative selection instead of
-    the oracle's window. row_number() OVER (PARTITION BY component ...)
-    sorts each component inside ONE partition — a pathological
-    mega-cluster (template spam) becomes a single hot sort at 100 TB.
-
-    Selection is ONE partial-aggregatable pass:
-    max(struct(n_chars, -doc_id)) picks the longest text with the
-    LOWEST doc_id on ties (struct ordering is lexicographic, so
-    negating doc_id turns the min tie-break into the max). A two-pass
-    form (max(n_chars) + min(doc_id among maxima) over a persisted
-    `lab` + join-back) picks the same row at the cost of a cache write,
-    a second aggregation and a join; map-side combine makes the single
-    max/count skew-immune at 100 TB.
-
-    NULL n_chars (no such rows exist in any test corpus): a join-back
-    on n_chars == kept_chars would DROP a component whose rows all had
-    NULL n_chars; the struct max emits it with NULL kept_chars and the
-    min doc_id, which matches the DuckDB oracle's window formulation
-    (row_number orders NULLs like any value; the component keeps a row
-    either way)."""
-    from pyspark.sql import functions as F
-
-    from ..operators.components import connected_components
-
-    pairs = _build_minhash_df(spark, sf_dir)
-    comps = connected_components(
-        pairs, "doc_a", "doc_b", edges_distinct=True
-    )
-    docs = spark.table("documents").select("doc_id", "n_chars")
-    lab = docs.join(comps, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("component", "doc_id").alias("component"),
-        "n_chars",
-    )
-    best = lab.groupBy("component").agg(
-        F.max(
-            F.struct(
-                F.col("n_chars"), (-F.col("doc_id")).alias("neg_doc")
-            )
-        ).alias("best"),
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-    )
-    return best.select(
-        F.col("component").cast("long"),
-        (-F.col("best.neg_doc")).cast("long").alias("kept_doc"),
-        F.col("best.n_chars").cast("long").alias("kept_chars"),
-        F.col("n_docs").cast("long"),
-    )
-
-
-@q("dedup_canonical_corpus", spark=_build_dedup_canonical)
-def _dedup_canonical(d: str) -> str:
-    """The dedup pipeline's end product: the deduplicated corpus. Every
-    near-dup cluster (connected components over the MinHash pair graph)
-    keeps one canonical representative — longest text, lowest doc_id on
-    ties — and unclustered documents keep themselves.
-
-    Scale: components via iterative min-label propagation (bounded
-    rounds, no driver graph state); the labeling join is |docs| x
-    |clustered docs| hash join; representative selection is one window
-    over component. The oracle walks the same graph with a recursive
-    CTE over the brute-force pairs and applies the identical selection
-    SQL."""
-    pairs = _minhash_lsh(DUCK)
-    comp = f"""(
-WITH RECURSIVE pairs AS ({pairs}),
-edges AS (
-  SELECT doc_a AS s, doc_b AS t FROM pairs
-  UNION
-  SELECT doc_b AS s, doc_a AS t FROM pairs),
-reach(node, r) AS (
-  SELECT s AS node, s AS r FROM edges
-  UNION
-  SELECT e.t AS node, reach.r FROM reach JOIN edges e ON e.s = reach.node)
-SELECT node AS doc_id, min(r) AS component FROM reach GROUP BY node
-)"""
-    return _CANON_TAIL.format(comp=comp)
-
-
-def _simhash_from_hashes(hs_col: str, d: str) -> str:
-    """60-bit SimHash from a column holding the per-token hash array."""
-    hs = hs_col
-    if d == SPARK:
-        bitsum = (
-            "aggregate(transform(__HS__, v -> CASE WHEN ((v >> b) & 1) = 1"
-            " THEN 1 ELSE -1 END), 0, (a, x) -> a + x)"
-        )
-        expr = (
-            f"aggregate(sequence(0, {SIMHASH_BITS - 1}), 0L, (acc, b) ->"
-            f" acc + (CASE WHEN {bitsum} > 0 THEN shiftleft(1L, b) ELSE 0L END))"
-        )
-    else:
-        bitsum = (
-            "list_reduce(list_prepend(0, list_transform(__HS__, v -> CASE WHEN"
-            " ((v >> b) & 1) = 1 THEN 1 ELSE -1 END)), (a, x) -> a + x)"
-        )
-        expr = (
-            f"list_reduce(list_prepend(0::BIGINT, list_transform("
-            f"range(0, {SIMHASH_BITS}), b -> CASE WHEN {bitsum} > 0"
-            f" THEN (1::BIGINT << b) ELSE 0::BIGINT END)), (acc, x) -> acc + x)"
-        )
-    return expr.replace("__HS__", hs)
-
-
-def _simhash64(d: str) -> str:
-    """60-bit SimHash over whitespace tokens via the portable hash
-    (inline form — used by the DuckDB oracle; the Spark path stages
-    token hashes first, see _stage_simhash_values)."""
-    tk = D.tokens("text", d)
-    h = D.hash60("t", d)
-    hs = D.ltransform(tk, f"t -> {h}", d)
-    return _simhash_from_hashes(hs, d)
-
-
-# ======================================================= staged Spark plans
-#
-# Expression-level sharing: Spark's optimizer inlines CTEs/projections,
-# so an expensive per-row array (md5 shingle hashes) referenced inside a
-# higher-order-function lambda would be recomputed per lambda iteration
-# (128 permutations x 32 bands = 4096x). The scale-correct plan stages
-# the heavy projection and persists it, cutting the lineage — on a real
-# cluster this is a cached/checkpointed intermediate dataset. The DuckDB
-# oracles keep their single-statement brute-force form.
-
-
-def _stage(spark, view: str, df):
-    """Persist `df` and register it as temp view `view`.
-
-    Deliberately re-built on every call: `df` reads session temp views
-    (documents etc.) that load_tables re-points at a different sf_dir
-    between gate runs, so reusing an earlier staging could serve stale
-    data. The view's previous plan is uncached first, because
-    createOrReplaceTempView alone leaves it in the cache manager."""
-    if spark.catalog.tableExists(view):
-        spark.catalog.uncacheTable(view)
-    df = df.persist()
-    df.createOrReplaceTempView(view)
-    return df
-
-
-def _stage_simhash_values(spark) -> None:
-    # Tokenization stays codegen'd SQL (split/filter — exactly the
-    # oracle's token set); the per-token md5 + 60-bit majority fold is
-    # one JVM kernel (operators/dedup.py simhash_column). The SQL twin
-    # evaluates md5 inside an interpreted HOF lambda (~250k evals at
-    # sf0.1); the kernel is bit-identical: hash60(t) ==
-    # int(md5(utf8(t)).hexdigest()[:15], 16).
-    from pyspark.sql import functions as F
-
-    from ..operators.dedup import simhash_column
-
-    # widen the single-row-group scan before the CPU-heavy kernel (no-op
-    # on real multi-partition inputs)
-    n_parts = spark.sparkContext.defaultParallelism
-    tk = D.tokens("text", SPARK)
-    df = spark.sql(
-        f"SELECT /*+ REPARTITION({n_parts}) */ doc_id, lang, {tk} AS tok"
-        " FROM documents"
-    ).select(
-        "doc_id", "lang",
-        simhash_column(F.col("tok"), SIMHASH_BITS).alias("simhash"),
-    )
-    _stage(spark, "__sh_vals", df)
-
-
-def _build_simhash_values(spark, sf_dir: str):
-    _stage_simhash_values(spark)
-    return spark.sql("SELECT doc_id, simhash FROM __sh_vals")
-
-
-def _build_dedup_simhash(spark, sf_dir: str):
-    # the corpus size picks the plan form (one metadata-cheap count(*)
-    # job over the parquet view; the bucket-size bound it proves is
-    # what keeps small corpora on the single-aggregation plan)
-    n_docs = spark.table("documents").count()
-    _stage_simhash_values(spark)
-    return spark.sql(_simhash_pairs(SPARK, n_docs=n_docs))
-
-
-@q("simhash_values", spark=_build_simhash_values)
-def _simhash_vals(d: str) -> str:
-    return f"SELECT doc_id, {_simhash64(d)} AS simhash FROM documents"
-
-
-@q("dedup_simhash", spark=_build_dedup_simhash)
-def _simhash_pairs(d: str, n_docs: int | None = None) -> str:
-    """SimHash near-dup pairs (hamming <= 3) within language.
-
-    Spark path blocks on {SIMHASH_CHUNKS} 16-bit chunks: 3 flipped bits
-    can dirty at most 3 chunks, so one chunk always matches — recall is
-    EXACTLY 100% (pigeonhole), which makes LSH == brute-force oracle.
-
-    One bucket aggregation on (lang, chunk, ck) replaces a chunk
-    self-join (2 exchanges + SMJ sort) + DISTINCT exchange + two
-    broadcast join-backs. Simhashes ride the bucket structs, so
-    hamming is computed in-bucket; the DISTINCT is replaced by an
-    equivalent emit-at-first-matching-chunk predicate (a pair's
-    matching chunks are exactly the zero 15-bit chunks of ha^hb, so
-    "chunk == first zero chunk" keeps exactly one copy). NB
-    shiftright(): after a LATERAL VIEW the Spark 4.1 lexer stops
-    accepting the '>>' operator (probed — parse error), so the
-    post-explode arms use the function form.
-
-    Bounding the mega-bucket: an uncapped collect_list lands one
-    template-spam bucket (every doc sharing a 15-bit chunk value in
-    one lang) in a single unspillable aggregation buffer — an executor
-    OOM at 100 TB. The plan choice is therefore SCALE-GATED on a
-    provable bound: a bucket can never hold more members than the
-    corpus has docs, so when n_docs <= SIMHASH_BUCKET_CAP the
-    single-aggregation plan is already buffer-bounded and is kept
-    verbatim; only larger corpora (or an unknown n_docs) pay the
-    spill-safe routing plan, where a window count over the bucket key
-    sends <=CAP buckets through the collect_list expansion (buffer
-    <= CAP structs = 1 MB) and oversized buckets through a sort-merge
-    self-join (spill-safe, and only for the rows that need it;
-    WindowExec buffers spill via ExternalAppendOnlyUnsafeRowArray, SMJ
-    sorts spill). The two forms
-    emit IDENTICAL pairs for any corpus — the branches partition
-    buckets by size (pinned on a synthetic mega-bucket corpus by
-    tests/test_dedup.py::test_simhash_mega_bucket_form_identical).
-    Measured at sf0.1 (interleaved A/B, median of 9): the routing
-    form costs 2.4x the single-agg form (three window exchanges — AQE
-    stage reuse over the textually identical subtrees does not fire,
-    see the in-SQL notes — plus the window sort), which is exactly
-    why it is gated to the corpora that need it; the n_docs count the
-    gate needs is one metadata-cheap job in the entry's builder.
-    """
-    ham = "bit_count(a.simhash ^ b.simhash)" if d == SPARK else (
-        "bit_count(xor(a.simhash, b.simhash))"
-    )
-    if d == SPARK:
-        mask = (1 << SIMHASH_CHUNK_BITS) - 1
-        first_chunk = "CASE " + " ".join(
-            f"WHEN ({'(ha ^ hb)' if c == 0 else f'shiftright(ha ^ hb, {c * SIMHASH_CHUNK_BITS})'}"
-            f" & {mask}) = 0 THEN {c}"
-            for c in range(SIMHASH_CHUNKS - 1)
-        ) + f" ELSE {SIMHASH_CHUNKS - 1} END"
-        tail = f"""
-SELECT da AS doc_a, db AS doc_b, CAST(bit_count(ha ^ hb) AS INT) AS hamming
-FROM pairs
-WHERE bit_count(ha ^ hb) <= {HAMMING_MAX}
-  AND chunk = {first_chunk}
-"""
-        if n_docs is not None and n_docs <= SIMHASH_BUCKET_CAP:
-            # n_docs <= CAP proves every (lang, chunk, ck) bucket is
-            # <= CAP members: the single-aggregation plan is
-            # buffer-bounded as-is
-            return f"""
-WITH s AS (SELECT doc_id, lang, simhash FROM __sh_vals),
-chunks AS (
-  SELECT lang, chunk,
-    (simhash >> (chunk * {SIMHASH_CHUNK_BITS})) & {mask} AS ck,
-    struct(doc_id, simhash) AS m
-  FROM s LATERAL VIEW explode(sequence(0, {SIMHASH_CHUNKS - 1})) t AS chunk
-  WHERE lang IS NOT NULL AND simhash IS NOT NULL AND doc_id IS NOT NULL),
-buckets AS (
-  SELECT chunk, collect_list(m) AS ms
-  FROM chunks GROUP BY lang, chunk, ck
-  HAVING size(collect_list(m)) >= 2),
-pairs AS (
-  SELECT chunk, a.doc_id AS da, a.simhash AS ha,
-         b.doc_id AS db, b.simhash AS hb
-  FROM buckets
-  LATERAL VIEW explode(ms) ta AS a
-  LATERAL VIEW explode(ms) tb AS b
-  WHERE a.doc_id < b.doc_id)
-{tail}"""
-        # spill-safe routing form for corpora where a bucket COULD
-        # exceed the cap. In-SQL plan notes:
-        # - the notnull predicates in `chunks` are no-ops on this data
-        #   and align the NULL-lang case with the oracle's plain
-        #   equi-join; stated in the shared subtree (with ck's in `w`)
-        #   so the pairs_big join's inferred isnotnull constraints add
-        #   nothing new below the window, keeping the three window
-        #   consumers textually identical;
-        # - chunk comes from a 4-row range() cross join, NOT
-        #   explode(sequence(0,3)): the folded array literal
-        #   canonicalizes by object identity (probed: two textually
-        #   identical Generate subtrees never stage-reuse);
-        # - even so, AQE materialized three separate (identical)
-        #   exchanges of the chunk table in the probe runs — the
-        #   remaining canonicalization mismatch is undiagnosed, so the
-        #   subtree-identity work above is best-effort, not load-
-        #   bearing; the plan is correct and spill-safe either way.
-        return f"""
-WITH s AS (SELECT doc_id, lang, simhash FROM __sh_vals),
-chunks AS (
-  SELECT lang, chunk,
-    (simhash >> (chunk * {SIMHASH_CHUNK_BITS})) & {mask} AS ck,
-    struct(doc_id, simhash) AS m
-  FROM s CROSS JOIN (
-    SELECT CAST(id AS INT) AS chunk FROM range({SIMHASH_CHUNKS})) t
-  WHERE lang IS NOT NULL AND simhash IS NOT NULL AND doc_id IS NOT NULL),
-w AS (
-  SELECT lang, chunk, ck, m,
-    count(*) OVER (PARTITION BY lang, chunk, ck) AS n
-  FROM chunks WHERE ck IS NOT NULL),
-buckets AS (
-  SELECT chunk, collect_list(m) AS ms
-  FROM w WHERE n BETWEEN 2 AND {SIMHASH_BUCKET_CAP}
-  GROUP BY lang, chunk, ck),
-pairs_small AS (
-  SELECT chunk, a.doc_id AS da, a.simhash AS ha,
-         b.doc_id AS db, b.simhash AS hb
-  FROM buckets
-  LATERAL VIEW explode(ms) ta AS a
-  LATERAL VIEW explode(ms) tb AS b
-  WHERE a.doc_id < b.doc_id),
-pairs_big AS (
-  -- MERGE pins the spill-safe sort-merge plan (a broadcast build of
-  -- the oversized-bucket side is exactly the blow-up this branch
-  -- exists to avoid); the window's sort already satisfies the SMJ's
-  -- ordering, so this branch adds no exchange of its own.
-  SELECT /*+ MERGE(x) */
-         x.chunk, x.m.doc_id AS da, x.m.simhash AS ha,
-         y.m.doc_id AS db, y.m.simhash AS hb
-  FROM w x JOIN w y
-    ON x.lang = y.lang AND x.chunk = y.chunk AND x.ck = y.ck
-    AND x.m.doc_id < y.m.doc_id
-  WHERE x.n > {SIMHASH_BUCKET_CAP} AND y.n > {SIMHASH_BUCKET_CAP}),
-pairs AS (
-  SELECT * FROM pairs_small UNION ALL SELECT * FROM pairs_big)
-{tail}"""
-    return f"""
-WITH s AS (SELECT doc_id, lang, {_simhash64(d)} AS simhash FROM documents)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST({ham} AS INT) AS hamming
-FROM s a JOIN s b ON a.lang = b.lang AND a.doc_id < b.doc_id
-WHERE {ham} <= {HAMMING_MAX}
-"""
-
-
-@q("ngram_jaccard_sampled")
-def _ngram_jaccard(d: str) -> str:
-    # exact n-gram Jaccard for a FIXED-SIZE probe panel (doc_id % 10 =
-    # 0 AND doc_id < 1000 — at most 100 probe docs regardless of
-    # corpus size) against the whole corpus: the explicit brute-force
-    # baseline, both engines running the same plan shape. The absolute
-    # probe bound is the scale story — audit cost is O(panel * corpus)
-    # with a CONSTANT panel, never O(corpus^2/10) (measured: the
-    # unbounded 10% probe cost 65s at sf0.1; the panel 13s, and gate-
-    # scale results are identical since every gate-corpus doc_id <
-    # 1000). Threshold J >= 1/5 uses exact integer arithmetic (no
-    # float boundary) and the panel is sized so the gated result is
-    # NON-EMPTY at every gate scale: sf0.001 -> 3 pairs, sf0.01 -> 8
-    # pairs (a 2%-sample/J>=1/3 form returns 0 rows on both sides,
-    # which proves nothing).
-    sh = D.shingles("text", SHINGLE_N, d)
-    inter = D.lsize(D.lintersect("a.sh", "b.sh", d), d)
-    la, lb = D.lsize("a.sh", d), D.lsize("b.sh", d)
-    jac = f"CAST({inter} AS DOUBLE) / CAST({la} + {lb} - {inter} AS DOUBLE)"
-    return f"""
-WITH docs AS (SELECT doc_id, lang, {sh} AS sh FROM documents)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, {jac} AS jaccard
-FROM docs a JOIN docs b ON a.lang = b.lang AND a.doc_id < b.doc_id
-WHERE a.doc_id % 10 = 0 AND a.doc_id < 1000
-  AND 5 * {inter} >= ({la} + {lb} - {inter})
-"""
-
-
-# ======================================================= embeddings / ANN
-
-
-@q("embed_knn_bruteforce")
-def _knn(d: str) -> str:
-    # exact top-5 cosine neighbors for a query sample. Embeddings are
-    # unit-norm so dot == cosine; the fold is deterministic in both
-    # engines. Scale path: see operators/similarity.py (IVF probe).
-    dot = _dot("q.qe", "e.embedding", d)
-    return f"""
-WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id % 100 = 0),
-pairs AS (
-  SELECT q.qid, e.vec_id, {dot} AS sim
-  FROM q JOIN embeddings e ON e.vec_id <> q.qid)
-SELECT qid, vec_id, sim FROM (
-  SELECT qid, vec_id, sim,
-    row_number() OVER (PARTITION BY qid ORDER BY sim DESC, vec_id) AS rn
-  FROM pairs) t
-WHERE rn <= 5
-"""
-
-
-def _build_ann_ivf(n_probe: int, spill: int = 1):
-    def build(spark, sf_dir: str):
-        from ..operators.similarity import ann_ivf_topk
-
-        emb = spark.table("embeddings")
-        queries = emb.where("vec_id % 100 = 0")
-        return ann_ivf_topk(
-            emb, queries, k=5, n_centroids=8, n_probe=n_probe,
-            query_id_col="qid", spill=spill,
-        )
-
-    return build
-
-
-@q("embed_ann_ivf_fullprobe", spark=_build_ann_ivf(n_probe=8))
-def _ann_ivf_fullprobe(d: str) -> str:
-    """IVF ANN with n_probe == n_centroids: probing every cell makes IVF
-    exactly equal to brute force REGARDLESS of centroid quality, so the
-    entire IVF pipeline (sample -> Lloyd -> assign -> probe -> rerank)
-    is verified by the brute-force oracle. The n_probe < n_centroids
-    scale path is embed_ann_ivf_probed (hash-gated per-query
-    differential)."""
-    return _knn(d)  # identical result contract -> identical oracle
-
-
-# Per-query recall floor for the production probed configs (IVF and
-# IVF-PQ). Stricter in grain than ANN_RECALL_FLOOR (which bounds the
-# aggregate): EVERY query must recover >= this fraction of its exact
-# top-k. Measured per-query minima for both production configs
-# (n_centroids=8, n_probe=4, spill=2; PQ adds m=32/n_codes=64/
-# refine=8): 5/5 at sf0.001 and sf0.01, 4/5 at sf0.1 — floor 0.6
-# (>= 3 of 5) leaves 2 hits of margin at gate scales and 1 at sf0.1,
-# while a broken probe/assign/rerank stage (hits collapse toward
-# corpus-random ~0.05 per query) trips every row.
-ANN_PER_QUERY_FLOOR = 0.6
-
-
-def _build_ann_ivf_probed_diff(spark, sf_dir: str):
-    from ..operators.similarity import ann_ivf_topk
-
-    k, n_probe = 5, 4
-    emb = spark.table("embeddings")
-    queries = emb.where("vec_id % 100 = 0")
-    probed = ann_ivf_topk(
-        emb, queries, k=k, n_centroids=8, n_probe=n_probe,
-        query_id_col="qid", spill=2,
-    ).select("qid", "vec_id")
-    exact = spark.sql(spark_sql_for("embed_knn_bruteforce")).select(
-        "qid", "vec_id"
-    )
-    return _build_ann_per_query_diff(probed, exact, k, n_probe)
-
-
-@q("embed_ann_ivf_probed", spark=_build_ann_ivf_probed_diff)
-def _ann_ivf_probed(d: str) -> str:
-    """Hash-gated per-query differential for the production probed
-    config (n_probe=4 of 8 cells, spill=2 boundary replication). The
-    gated output is the per-query contract the oracle CAN predict: the
-    probed path returns exactly k rows per query (n_found hashes as
-    5), the exact top-k has exactly k rows per query (n_exact grounded
-    in the brute-force SQL), and every query clears the per-query
-    recall floor (Spark computes |probed ∩ exact| / |exact| for real;
-    the oracle asserts TRUE). Stronger than the aggregate
-    embed_ann_recall twin: a single collapsed query flips its own row.
-    """
-    exact = _knn(d)
-    return f"""
-SELECT CAST(qid AS BIGINT) AS qid,
-  CAST(5 AS BIGINT) AS n_found,
-  CAST(count(*) AS BIGINT) AS n_exact,
-  CAST(5 AS INT) AS k, CAST(4 AS INT) AS n_probe,
-  TRUE AS recall_floor_met
-FROM ({exact}) exact_topk
-GROUP BY qid
-"""
-
-
-# the probed path must recover at least this fraction of the exact
-# top-k over all queries. Measured for (n_centroids=8, n_probe=4,
-# spill=2): 1.0 / 1.0 / 0.93 at sf0.001 / 0.01 / 0.1; without spill the
-# same probe fraction measured 0.74-0.84 — boundary replication is what
-# buys the margin. The floor sits low enough to survive a testdata
-# regeneration, high enough that a broken probe/assign/rerank stage
-# (recall collapses toward 0) trips it.
-ANN_RECALL_FLOOR = 0.85
-
-
-def _build_ann_recall(spark, sf_dir: str):
-    from ..operators.similarity import ann_ivf_topk
-
-    from pyspark.sql import functions as F
-
-    k, n_probe = 5, 4
-    emb = spark.table("embeddings")
-    queries = emb.where("vec_id % 100 = 0")
-    # the exact config embed_ann_ivf_probed ships
-    probed = ann_ivf_topk(
-        emb, queries, k=k, n_centroids=8, n_probe=n_probe,
-        query_id_col="qid", spill=2,
-    ).select("qid", "vec_id")
-    exact = spark.sql(spark_sql_for("embed_knn_bruteforce")).select(
-        "qid", "vec_id"
-    )
-    stats = exact.agg(
-        F.count_distinct("qid").alias("nq"), F.count(F.lit(1)).alias("n_exact")
-    )
-    hits = probed.join(exact, ["qid", "vec_id"]).agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    return stats.crossJoin(hits).select(
-        F.col("nq").cast("long").alias("n_queries"),
-        F.col("n_exact").cast("long").alias("n_exact"),
-        F.lit(k).cast("int").alias("k"),
-        F.lit(n_probe).cast("int").alias("n_probe"),
-        (
-            (F.col("n_hits") / F.col("n_exact")) >= F.lit(ANN_RECALL_FLOOR)
-        ).alias("recall_ge_floor"),
-    )
-
-
-@q("embed_ann_recall", spark=_build_ann_recall)
-def _ann_recall(d: str) -> str:
-    """Hash-gated recall floor for the approximate (n_probe < n_cells)
-    ANN path — the aggregate companion to `embed_ann_ivf_probed`'s
-    per-query differential. Spark computes recall = |probed top-k
-    INTERSECT exact top-k| / |exact top-k| for real (the builder runs
-    BOTH pipelines); the oracle grounds n_queries/n_exact in the same
-    data via the brute-force SQL and asserts the floor holds, so a
-    probe/assign/rerank regression flips `recall_ge_floor` and breaks
-    the hash. Differential-vs-exact pattern after the reference's split
-    test (test/sql/dd_read_arrow_split.test_slow:40-62)."""
-    exact = _knn(d)
-    return f"""
-SELECT CAST(nq AS BIGINT) AS n_queries,
-  CAST(n_exact AS BIGINT) AS n_exact,
-  CAST(5 AS INT) AS k, CAST(4 AS INT) AS n_probe,
-  n_exact > 0 AS recall_ge_floor
-FROM (
-  SELECT count(DISTINCT qid) AS nq, count(*) AS n_exact
-  FROM ({exact}) exact_topk)
-"""
-
-
-def _build_ann_per_query_diff(probed, exact, k: int, n_probe: int,
-                              extra_cols=()):
-    """Shared per-query differential plan for the production ANN
-    entries (embed_ann_ivf_probed / embed_ann_ivfpq): per-query found
-    count, exact count, and the per-query recall-floor boolean, all
-    computed in-plan (broadcast-sized aggregates over the 5-25 query
-    keys — no driver-side collect)."""
-    from pyspark.sql import functions as F
-
-    found = probed.groupBy("qid").agg(F.count(F.lit(1)).alias("n_found"))
-    ex = exact.groupBy("qid").agg(F.count(F.lit(1)).alias("n_exact"))
-    hits = probed.join(exact, ["qid", "vec_id"]).groupBy("qid").agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    cols = [
-        F.col("qid").cast("long").alias("qid"),
-        F.coalesce(F.col("n_found"), F.lit(0)).cast("long")
-        .alias("n_found"),
-        F.col("n_exact").cast("long").alias("n_exact"),
-        F.lit(k).cast("int").alias("k"),
-        F.lit(n_probe).cast("int").alias("n_probe"),
-        *extra_cols,
-        (
-            F.coalesce(F.col("n_hits"), F.lit(0)) / F.col("n_exact")
-            >= F.lit(ANN_PER_QUERY_FLOOR)
-        ).alias("recall_floor_met"),
-    ]
-    return (
-        ex.join(found, "qid", "left").join(hits, "qid", "left").select(*cols)
-    )
-
-
-def _build_ann_ivfpq_diff(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    k, n_probe = 5, 4
-    pq = _ann_ivfpq_probed(spark).select("qid", "vec_id")
-    exact = spark.sql(spark_sql_for("embed_knn_bruteforce")).select(
-        "qid", "vec_id"
-    )
-    return _build_ann_per_query_diff(
-        pq, exact, k, n_probe,
-        extra_cols=(
-            F.lit(32).cast("int").alias("m_subspaces"),
-            F.lit(64).cast("int").alias("n_codes"),
-        ),
-    )
-
-
-def _build_semdedup_diff(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..operators.similarity import semantic_dedup_pairs
-
-    emb = spark.table("embeddings")
-    truth = semantic_dedup_pairs(
-        emb, n_clusters=1, threshold=_SEMDEDUP_T
-    ).select("vec_a", "vec_b")
-    found = semantic_dedup_pairs(
-        emb, n_clusters=_SEMDEDUP_K, threshold=_SEMDEDUP_T,
-        spill=_SEMDEDUP_SPILL,
-    ).select("vec_a", "vec_b")
-    n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
-    fp = found.join(truth, ["vec_a", "vec_b"], "left_anti").agg(
-        F.count(F.lit(1)).alias("n_false_positives")
-    )
-    hits = found.join(truth, ["vec_a", "vec_b"]).agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    return n_truth.crossJoin(fp).crossJoin(hits).select(
-        F.col("n_truth").cast("long").alias("n_truth"),
-        F.col("n_false_positives").cast("long").alias("n_false_positives"),
-        F.lit(_SEMDEDUP_K).cast("int").alias("n_clusters"),
-        F.lit(_SEMDEDUP_SPILL).cast("int").alias("spill"),
-        F.lit(_SEMDEDUP_T).cast("double").alias("threshold"),
-        (F.col("n_hits") / F.col("n_truth") >= F.lit(0.5))
-        .alias("recall_ge_floor"),
-    )
-
-
-@q("embed_ann_ivfpq", spark=_build_ann_ivfpq_diff)
-def _ann_ivfpq(d: str) -> str:
-    """Hash-gated per-query differential for the production IVF-PQ
-    config (ADC scan over residual-PQ codes, exact rerank of the
-    bounded candidate set — operators/similarity.py ann_ivfpq_topk;
-    n_probe=4, m=32, n_codes=64, refine=8, spill=2). Same shape as
-    embed_ann_ivf_probed: gates per-query n_found == k, n_exact grounded in
-    the brute-force oracle, and the per-query recall floor. The
-    fullprobe-covering-refine equality law stays pinned in
-    tests/test_similarity.py."""
-    exact = _knn(d)
-    return f"""
-SELECT CAST(qid AS BIGINT) AS qid,
-  CAST(5 AS BIGINT) AS n_found,
-  CAST(count(*) AS BIGINT) AS n_exact,
-  CAST(5 AS INT) AS k, CAST(4 AS INT) AS n_probe,
-  CAST(32 AS INT) AS m_subspaces, CAST(64 AS INT) AS n_codes,
-  TRUE AS recall_floor_met
-FROM ({exact}) exact_topk
-GROUP BY qid
-"""
-
-
-def _build_ann_ivfpq_fullprobe(spark, sf_dir: str):
-    from ..operators.similarity import ann_ivfpq_topk
-
-    emb = spark.table("embeddings")
-    queries = emb.where("vec_id % 100 = 0")
-    return ann_ivfpq_topk(
-        emb, queries, k=5, n_centroids=8, n_probe=8,
-        m_subspaces=32, n_codes=64, refine=1000,
-        query_id_col="qid",
-    )
-
-
-@q("embed_ann_ivfpq_fullprobe", spark=_build_ann_ivfpq_fullprobe)
-def _ann_ivfpq_fullprobe(d: str) -> str:
-    """IVF-PQ with n_probe == n_centroids and a refine window covering
-    the corpus (k*refine >= n_vectors at every gate SF): the ADC stage
-    then only reorders scanning and the exact rerank (raw vectors,
-    dimension-major fold) decides everything, so the result is EXACTLY
-    the brute-force top-k — the degradation law that anchors the
-    uncompressed path (embed_ann_ivf_fullprobe), here hash-gating the
-    full PQ encode -> ADC -> rerank pipeline against the brute-force
-    oracle. The law is also pinned in tests/test_similarity.py
-    (test_ivfpq_fullprobe_covering_refine_equals_exact)."""
-    return _knn(d)  # identical result contract -> identical oracle
-
-
-# the IVF-PQ production config must recover at least this fraction of
-# the exact top-k over all queries. Measured for (n_centroids=8,
-# n_probe=4, spill=2, m=32, n_codes=64, refine=8): 1.0 / 1.0 / 0.93 at
-# sf0.001 / 0.01 / 0.1 — identical to the uncompressed probed path
-# (ANN_RECALL_FLOOR comment): at these knobs the quantization loss is
-# fully recovered by the refine rerank and the residual error term is
-# cell probing, exactly as designed. Floor shares the IVF margin
-# rationale: survives testdata regeneration, trips on a broken
-# encode/ADC/rerank stage.
-IVFPQ_RECALL_FLOOR = 0.85
-
-
-def _build_ann_ivfpq_recall(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    k, n_probe = 5, 4
-    pq = _ann_ivfpq_probed(spark).select("qid", "vec_id")
-    exact = spark.sql(spark_sql_for("embed_knn_bruteforce")).select(
-        "qid", "vec_id"
-    )
-    stats = exact.agg(
-        F.count_distinct("qid").alias("nq"), F.count(F.lit(1)).alias("n_exact")
-    )
-    hits = pq.join(exact, ["qid", "vec_id"]).agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    return stats.crossJoin(hits).select(
-        F.col("nq").cast("long").alias("n_queries"),
-        F.col("n_exact").cast("long").alias("n_exact"),
-        F.lit(k).cast("int").alias("k"),
-        F.lit(n_probe).cast("int").alias("n_probe"),
-        F.lit(32).cast("int").alias("m_subspaces"),
-        F.lit(64).cast("int").alias("n_codes"),
-        (
-            (F.col("n_hits") / F.col("n_exact")) >= F.lit(IVFPQ_RECALL_FLOOR)
-        ).alias("recall_ge_floor"),
-    )
-
-
-@q("embed_ann_ivfpq_recall", spark=_build_ann_ivfpq_recall)
-def _ann_ivfpq_recall(d: str) -> str:
-    """Hash-gated recall floor for the IVF-PQ path — the quality metric
-    for `embed_ann_ivfpq` (aggregate companion to its per-query
-    differential). Same
-    differential-vs-exact shape as embed_ann_recall: Spark runs BOTH
-    pipelines for real; the oracle grounds n_queries/n_exact in the
-    same data via the brute-force SQL and asserts the floor."""
-    exact = _knn(d)
-    return f"""
-SELECT CAST(nq AS BIGINT) AS n_queries,
-  CAST(n_exact AS BIGINT) AS n_exact,
-  CAST(5 AS INT) AS k, CAST(4 AS INT) AS n_probe,
-  CAST(32 AS INT) AS m_subspaces, CAST(64 AS INT) AS n_codes,
-  n_exact > 0 AS recall_ge_floor
-FROM (
-  SELECT count(DISTINCT qid) AS nq, count(*) AS n_exact
-  FROM ({exact}) exact_topk)
-"""
-
-
-def _ann_ivfpq_probed(spark):
-    from ..operators.similarity import ann_ivfpq_topk
-
-    emb = spark.table("embeddings")
-    queries = emb.where("vec_id % 100 = 0")
-    return ann_ivfpq_topk(
-        emb, queries, k=5, n_centroids=8, n_probe=4,
-        m_subspaces=32, n_codes=64, refine=8, spill=2,
-        query_id_col="qid",
-    )
-
-
-# Near-dup cosine threshold for the GATED embedding entries. The
-# production default stays 0.99 (operators/similarity.py, pytest-
-# verified with planted pairs); the corpus however contains no pair
-# above cos ~0.51 (max same-label cos: 0.475 at sf0.01, 0.449 at
-# sf0.001), so a 0.99 gate returns 0 rows on both sides — vacuous.
-# 0.402 sits in the
-# corpus's top-pair band (sf0.01: 5 pairs, nearest excluded 0.3983;
-# sf0.001: 4 pairs, nearest excluded 0.40104) with both engines
-# computing bit-identical double sims (same fold order), so the
-# threshold comparison is deterministic.
-_EMBED_NEARDUP_T = 0.402
-
-
-@q("embed_cosine_neardup")
-def _embed_neardup(d: str) -> str:
-    dot = _dot("a.embedding", "b.embedding", d)
-    return f"""
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {dot} AS sim
-FROM embeddings a JOIN embeddings b
-  ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE {dot} >= {_EMBED_NEARDUP_T}
-"""
-
-
-_SEMDEDUP_T = 0.4      # semantic-similarity threshold (sub-near-dup:
-                       # the corpus' max pairwise cosine is ~0.51, so
-                       # 0.4 selects the genuinely-related tail the
-                       # way SemDeDup prunes semantic redundancy)
-_SEMDEDUP_K = 8        # production cluster count at gate scale
-_SEMDEDUP_SPILL = 3    # boundary replication (recall 0.97 measured)
-
-
-@q("embed_semantic_dedup", spark=_build_semdedup_diff)
-def _semdedup(d: str) -> str:
-    """Hash-gated precision+recall contract for the production
-    SemDeDup config (Abbas et al. 2023: k-means cells, then similar
-    pairs WITHIN each cell only — operators/similarity.py
-    semantic_dedup_pairs). The gated output is the differential the
-    oracle CAN predict. Precision arm: within-cell cosines are exact, so
-    found ⊆ truth by construction — n_false_positives hashes as
-    EXACTLY 0 and any emitted non-truth pair breaks the hash (an arm
-    the recall twin lacks). Recall arm: floor 0.5 (measured 0.970 /
-    1.0 / 0.954 at sf0.001/0.01/0.1 with spill=3). n_truth is
-    grounded in the brute-force pair SQL. embed_semantic_dedup_exact
-    still hash-gates the n_clusters=1 pipeline pair-for-pair."""
-    dot = _dot("a.embedding", "b.embedding", d)
-    return f"""
-SELECT CAST(n_truth AS BIGINT) AS n_truth,
-  CAST(0 AS BIGINT) AS n_false_positives,
-  CAST({_SEMDEDUP_K} AS INT) AS n_clusters,
-  CAST({_SEMDEDUP_SPILL} AS INT) AS spill,
-  CAST({_SEMDEDUP_T} AS DOUBLE) AS threshold,
-  n_truth > 0 AS recall_ge_floor
-FROM (
-  SELECT count(*) AS n_truth
-  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-  WHERE {dot} >= {_SEMDEDUP_T}) t
-"""
-
-
-def _build_semdedup_exact(spark, sf_dir: str):
-    from ..operators.similarity import semantic_dedup_pairs
-
-    return semantic_dedup_pairs(
-        spark.table("embeddings"), n_clusters=1, threshold=_SEMDEDUP_T,
-    )
-
-
-@q("embed_semantic_dedup_exact", spark=_build_semdedup_exact)
-def _semdedup_exact(d: str) -> str:
-    """Exactness anchor for SemDeDup: n_clusters=1 disables the
-    cluster pruning, so the operator's full pipeline (assignment UDF,
-    per-cell blocked fold scoring, triangular pair emission) must
-    reproduce the FULL brute-force pair set BIT-EXACTLY (the fold-dot
-    discipline); the 500-row gate table keeps the oracle's n^2
-    affordable."""
-    dot = _dot("a.embedding", "b.embedding", d)
-    return f"""
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, {dot} AS sim
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE {dot} >= {_SEMDEDUP_T}
-"""
-
-
-def _build_semdedup_recall(spark, sf_dir: str):
-    from ..operators.similarity import semantic_dedup_pairs
-
-    emb = spark.table("embeddings")
-    truth = semantic_dedup_pairs(
-        emb, n_clusters=1, threshold=_SEMDEDUP_T
-    ).count()
-    found = semantic_dedup_pairs(
-        emb, n_clusters=_SEMDEDUP_K, threshold=_SEMDEDUP_T,
-        spill=_SEMDEDUP_SPILL,
-    ).count()
-    recall = found / truth if truth else 1.0
-    assert recall >= 0.5, (
-        f"semantic dedup recall {recall:.3f} under the 0.5 floor"
-    )
-    return spark.createDataFrame(
-        [(truth, _SEMDEDUP_K, _SEMDEDUP_SPILL, _SEMDEDUP_T, truth > 0)],
-        "n_truth BIGINT, n_clusters INT, spill INT, threshold DOUBLE,"
-        " recall_ge_floor BOOLEAN",
-    )
-
-
-@q("embed_semantic_dedup_recall", spark=_build_semdedup_recall)
-def _semdedup_recall(d: str) -> str:
-    """Hash-gated recall floor for the production SemDeDup config —
-    the aggregate companion to `embed_semantic_dedup`, which gates
-    its own precision+recall contract (this twin keeps the
-    explicit floor assert). Same shape as embed_ann_ivfpq_recall: Spark
-    runs BOTH the clustered and the exact pipelines for real; the
-    oracle grounds n_truth in the same data via the brute-force SQL
-    and asserts the floor. The floor is 0.5: SemDeDup trades recall
-    for tractability by construction (cross-cluster pairs are missed),
-    and the paper's useful operating range keeps a majority of the
-    similarity mass; the production spill=3 config measures 0.97 at
-    the gate scale (spill=1 would sit at 0.33 — the boundary
-    replication IS the recall)."""
-    dot = _dot("a.embedding", "b.embedding", d)
-    return f"""
-SELECT CAST(n_truth AS BIGINT) AS n_truth,
-  CAST({_SEMDEDUP_K} AS INT) AS n_clusters,
-  CAST({_SEMDEDUP_SPILL} AS INT) AS spill,
-  CAST({_SEMDEDUP_T} AS DOUBLE) AS threshold,
-  n_truth > 0 AS recall_ge_floor
-FROM (
-  SELECT count(*) AS n_truth
-  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-  WHERE {dot} >= {_SEMDEDUP_T}) t
-"""
-
-
-# ======================================================= text analysis
-
-_STOPWORDS = {
-    "en": ["the", "and", "of", "to", "in", "is", "a", "for"],
-    "de": ["der", "die", "das", "und", "ist", "ein", "zu", "mit"],
-    "es": ["el", "la", "de", "que", "y", "los", "en", "un"],
-    "fr": ["le", "la", "les", "et", "est", "un", "une", "des"],
-}
-
-
-@q("text_langid")
-def _langid(d: str) -> str:
-    tk = D.distinct_tokens("text", d)
-    cnt = {
-        lang: D.lsize(D.lintersect("tk", _sarr(words, d), d), d)
-        for lang, words in _STOPWORDS.items()
-    }
-    # CJK script detection first (stopword lists don't apply to zh):
-    # count chars in the CJK Unified Ideographs block
-    if d == SPARK:
-        cjk = "length(regexp_replace(text, '[^\\\\u4e00-\\\\u9fff]', ''))"
-    else:
-        cjk = "length(regexp_replace(text, '[^\\x{4e00}-\\x{9fff}]', '', 'g'))"
-    return f"""
-SELECT doc_id,
-  CASE WHEN {cjk} >= 3 THEN 'zh'
-       WHEN greatest({cnt['en']}, {cnt['de']}, {cnt['es']}, {cnt['fr']}) = 0 THEN 'und'
-       WHEN {cnt['en']} >= greatest({cnt['de']}, {cnt['es']}, {cnt['fr']}) THEN 'en'
-       WHEN {cnt['de']} >= greatest({cnt['es']}, {cnt['fr']}) THEN 'de'
-       WHEN {cnt['es']} >= {cnt['fr']} THEN 'es'
-       ELSE 'fr' END AS lang_pred
-FROM (SELECT doc_id, text, {tk} AS tk FROM documents) t
-"""
-
-
-@q("text_quality")
-def _quality(d: str) -> str:
-    tk = D.tokens("text", d)
-    tok_lens = D.ltransform("tk", "t -> length(t)", d)
-    sum_len = (
-        f"aggregate({tok_lens}, 0, (a, x) -> a + x)"
-        if d == SPARK
-        else f"list_reduce(list_prepend(0, {tok_lens}), (a, x) -> a + x)"
-    )
-    n_tok = D.lsize("tk", d)
-    alpha = (
-        "length(regexp_replace(lower(text), '[^a-z]', ''))"
-        if d == SPARK
-        else "length(regexp_replace(lower(text), '[^a-z]', '', 'g'))"
-    )
-    sw = _sarr(_STOPWORDS["en"], d)
-    n_sw = D.lsize(D.lfilter("tk", f"t -> {D.lcontains(sw, 't', d)}", d), d)
-    return f"""
-SELECT doc_id,
-  CAST({n_tok} AS BIGINT) AS n_tokens,
-  CAST({sum_len} AS DOUBLE) / {n_tok} AS avg_token_len,
-  CAST({alpha} AS DOUBLE) / length(text) AS alpha_ratio,
-  CAST({n_sw} AS DOUBLE) / {n_tok} AS stopword_ratio
-FROM (SELECT doc_id, text, {tk} AS tk FROM documents) t
-WHERE {n_tok} > 0
-"""
-
-
-@q("text_token_stats")
-def _token_stats(d: str) -> str:
-    tk = D.tokens("text", d)
-    bpe = "regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\\\s]', 0)" \
-        if d == SPARK else (
-            "regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]', 0)"
-        )
-    return f"""
-SELECT doc_id,
-  CAST({D.lsize(tk, d)} AS BIGINT) AS ws_tokens,
-  CAST({D.lsize(bpe, d)} AS BIGINT) AS regex_tokens,
-  CAST(ceil(length(text) / 4.0) AS BIGINT) AS byte_pair_estimate
-FROM documents
-"""
-
-
-@q("text_perplexity")
-def _perplexity(d: str) -> str:
-    """CCNet-style quality scoring: per-document average negative
-    log-likelihood under an add-one-smoothed corpus UNIGRAM language
-    model — the standard perplexity filter of LLM training-data
-    pipelines (perplexity = exp(avg_nll); the gate keeps LOG space so
-    the value hash is robust: cross-engine ln last-ulp differences and
-    float-summation order diverge avg_nll by ~1e-13 worst-case, far
-    inside the 1e-6 rounding).
-
-    Scale: the token explode feeds the count aggregation and the
-    scoring join (n/v derive from the small counts table, not a third
-    explode); counts partial-aggregate map-side, and the (token,
-    count) table stays << corpus (Heaps' law) so Spark broadcasts it
-    into the scoring join — the big token stream shuffles only for
-    the per-doc GROUP BY; past broadcast size the join degrades to a
-    shuffle on tok automatically."""
-    tk = D.tokens("text", d)
-    # NB no _wide_docs repartition here: split+explode is cheap JVM
-    # codegen, not interpreted-HOF work, and the widening exchange
-    # measured ~2x the whole query (0.97s -> 0.56s without it).
-    # REPARTITION(doc_id) is a different animal
-    # from that widening: it shuffles whole documents ONCE and lets
-    # AQE runtime stage reuse serve every CTE consumer from the same
-    # exchange — the tfidf trick (see _tfidf). Without it Spark
-    # inlines `toks` into its three consumers and the scan+tokenize
-    # runs three times; with it the tokenize runs once AND the final
-    # per-doc GROUP BY reuses the hash(doc_id) clustering with no
-    # further exchange. Measured at sf0.1 (interleaved A/B, median of
-    # 7): 0.705s -> 0.559s, identical values.
-    if d == SPARK:
-        toks = (
-            "SELECT doc_id, tok FROM"
-            f" (SELECT /*+ REPARTITION(doc_id) */ doc_id, {tk} AS tks"
-            f" FROM documents) t"
-            " LATERAL VIEW explode(tks) x AS tok"
-        )
-    else:
-        toks = (
-            f"SELECT doc_id, unnest(tks) AS tok"
-            f" FROM (SELECT doc_id, {tk} AS tks FROM documents) t"
-        )
-    # NB a (doc_id, tok, tf) pre-aggregation before the scoring join
-    # was built and measured SLIGHTLY SLOWER at sf0.1 (1.1-1.9s vs
-    # 1.0-1.3s): the extra exchange costs more than the join-input
-    # shrink buys on short documents, and Spark inlines the CTE so
-    # nothing is reused. On a corpus with heavy per-doc repetition the
-    # dtf form is the right rewrite — it is one GROUP BY away.
-    return f"""
-WITH toks AS ({toks}),
-cnt AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY tok),
-tot AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-               CAST(count(*) AS BIGINT) AS v FROM cnt)
-SELECT t.doc_id,
-  CAST(count(*) AS BIGINT) AS n_tokens,
-  {_round6('avg(-ln((c.c + 1.0) / (tot.n + tot.v)))')} AS avg_nll
-FROM toks t JOIN cnt c ON t.tok = c.tok CROSS JOIN tot
-GROUP BY t.doc_id
-"""
-
-
-@q("text_perplexity_bigram")
-def _perplexity_bigram(d: str) -> str:
-    """Bigram-LM perplexity filter with a real TRAIN/SCORE split —
-    one rung up the CCNet ladder from the unigram entry: the
-    reference half (even doc_ids) trains add-one-smoothed transition
-    probabilities P(t2|t1) = (c(t1,t2)+1) / (c(t1)+V); the held-out
-    half (odd doc_ids) is scored by average transition NLL. Catches
-    scrambled/unnatural token ORDER that any unigram model is blind
-    to, which is exactly why production pipelines use n-gram LMs.
-    Log space + the 1e-6 branchless bridge (_round6) absorbs
-    cross-engine ln/summation last-ulp drift (the text_perplexity
-    determinism argument) without round(DOUBLE, k)'s shortest-repr
-    boundary divergence.
-
-    Scale: bigram production is codegen (posexplode + one array
-    index, no interpreted lambda); the transition-count and
-    context-count tables stay << corpus (Heaps' law on bigrams) so
-    both scoring joins broadcast; the big transition stream shuffles
-    ONCE for the per-doc GROUP BY. Unseen bigrams/contexts coalesce
-    to 0 — the add-one floor prices them, no join loss."""
-    tk = D.tokens("text", d)
-    # REPARTITION(doc_id) on the tokenized scan:
-    # `big` has three CTE consumers and `toks` one, and Spark inlines
-    # all four into separate scan+tokenize subtrees; the hint makes
-    # the subtrees share one exchange via AQE runtime stage reuse
-    # (the _tfidf/_perplexity trick), so the corpus is scanned and
-    # tokenized ONCE, and the final per-doc GROUP BY inherits the
-    # hash(doc_id) clustering. Measured at sf0.1 (interleaved A/B,
-    # median of 7): 0.61s -> 0.52s, identical values.
-    if d == SPARK:
-        big = f"""
-SELECT doc_id, tok AS t1, tks[pos + 1] AS t2
-FROM (SELECT /*+ REPARTITION(doc_id) */ doc_id, {tk} AS tks FROM documents) t
-LATERAL VIEW posexplode(tks) x AS pos, tok
-WHERE pos + 2 <= size(tks)"""
-        toks = (
-            "SELECT doc_id, tok FROM"
-            f" (SELECT /*+ REPARTITION(doc_id) */ doc_id, {tk} AS tks"
-            " FROM documents) t LATERAL VIEW explode(tks) x AS tok"
-        )
-    else:
-        big = f"""
-SELECT doc_id, g.t1 AS t1, g.t2 AS t2
-FROM (SELECT doc_id,
-        unnest(list_transform(range(1, len(tks)),
-               i -> {{'t1': tks[i], 't2': tks[i + 1]}})) AS g
-      FROM (SELECT doc_id, {tk} AS tks FROM documents) t
-      WHERE len(tks) >= 2) b"""
-        toks = (
-            f"SELECT doc_id, unnest(tks) AS tok"
-            f" FROM (SELECT doc_id, {tk} AS tks FROM documents) t"
-        )
-    return f"""
-WITH big AS ({big}),
-toks AS ({toks}),
-bcnt AS (SELECT t1, t2, CAST(count(*) AS BIGINT) AS c
-         FROM big WHERE doc_id % 2 = 0 GROUP BY t1, t2),
-ucnt AS (SELECT t1, CAST(count(*) AS BIGINT) AS cu
-         FROM big WHERE doc_id % 2 = 0 GROUP BY t1),
-voc AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS v
-        FROM toks WHERE doc_id % 2 = 0)
-SELECT s.doc_id,
-  CAST(count(*) AS BIGINT) AS n_transitions,
-  {_round6("avg(-ln((coalesce(b.c, 0) + 1.0) / (coalesce(u.cu, 0) + voc.v)))")} AS avg_nll
-FROM (SELECT * FROM big WHERE doc_id % 2 = 1) s
-LEFT JOIN bcnt b ON s.t1 = b.t1 AND s.t2 = b.t2
-LEFT JOIN ucnt u ON s.t1 = u.t1
-CROSS JOIN voc
-GROUP BY s.doc_id
-"""
-
-
-def _build_perplexity_static(spark, sf_dir: str):
-    from ..streaming.quality import build_unigram_lm, perplexity_scores
-
-    docs = spark.table("documents")
-    return perplexity_scores(docs, build_unigram_lm(docs))
-
-
-@q("text_perplexity_static_lm", spark=_build_perplexity_static)
-def _perplexity_static(d: str) -> str:
-    """The STREAMING formulation of the perplexity filter under the
-    hash gate (streaming/quality.py): scores are computed per row by a
-    higher-order fold over the token array against a literal
-    vocabulary map — the stateless train-once/score-many shape a
-    document stream needs (no stream-side aggregate, no watermark),
-    with the LM trained on the same corpus so the DuckDB oracle is the
-    batch formulation itself. The stream==batch lifecycle (multi-batch
-    arrival independence, filter semantics) is pinned in
-    tests/test_streaming_quality.py; this entry pins the VALUES of the
-    shared expressions cross-engine."""
-    return _perplexity(d)
-
-
-def _build_text_normalize(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    def _nfc_series(col):
-        import unicodedata
-
-        return col.map(
-            lambda x: None if x is None
-            else unicodedata.normalize("NFC", x)
-        )
-
-    # lambda form: queries.py uses `from __future__ import annotations`,
-    # which stringifies type hints and breaks pandas_udf's
-    # annotation-based signature inference
-    nfc = F.pandas_udf(_nfc_series, T.StringType())
-
-    # NO _wide_docs repartition here, measured: NFC over the 5k-doc
-    # fixture is light enough that the shuffle + 64 tiny Python-worker
-    # batches cost MORE than the single task (0.40s -> 1.02s at sf0.1);
-    # real corpora arrive multi-partition from the scan anyway
-    docs = spark.table("documents")
-
-    # DECOMPOSED prefix ('e' + combining acute U+0301), matching the
-    # oracle's 'Cafe' || chr(769) — NFC composes it to one U+00E9
-    # Constructed EXPLICITLY via chr(0x301): as a
-    # source literal the decomposition is invisible ('Cafe'+U+0301
-    # renders identically to composed U+00E9), so any editor or
-    # formatter that NFC-normalizes source files would silently
-    # flip it and turn the gate red with a confusing count mismatch.
-    aug = F.concat(F.lit("Cafe" + chr(0x301) + " "), F.col("text"))
-    cleaned = F.regexp_replace(
-        F.regexp_replace(aug, "[\\x00-\\x1f\\x7f]", " "), "\\s+", " "
-    )
-    return docs.select(
-        "doc_id",
-        nfc(cleaned).alias("norm_text"),
-        F.length(nfc(aug)).cast("long").alias("nfc_chars"),
-        F.length(aug).cast("long").alias("raw_chars"),
-    )
-
-
-@q("text_normalize", spark=_build_text_normalize)
-def _text_normalize(d: str) -> str:
-    """Unicode NFC + control-strip + whitespace-collapse text
-    normalization — the pre-hash step every dedup/fingerprint pipeline
-    runs first (CCNet normalizes before hashing; two byte-different
-    encodings of the same rendered text must dedup together). The
-    synthetic corpus is ASCII, so the entry prepends a DECOMPOSED
-    'Cafe'+U+0301 prefix to every doc — NFC composes it to U+00E9,
-    shrinking the codepoint count, which makes the nfc_chars/raw_chars
-    columns (and the full normalized text under the hash) an actual
-    NFC test rather than an identity pass.
-
-    Spark has no unicode-normalization builtin, so the Spark side is
-    a vectorized pandas UDF over Python's unicodedata (the documented
-    use-Python-only-where-builtins-can't rule); control-strip and
-    whitespace-collapse stay JVM-side regexp_replace. Oracle: DuckDB's
-    utf8proc-backed nfc_normalize — the hash gate therefore pins that
-    CPython's and utf8proc's NFC agree on the exercised text. Order of
-    ops (strip controls -> collapse ws -> NFC) is identical in both
-    dialects."""
-    return """
-SELECT doc_id,
-  nfc_normalize(regexp_replace(regexp_replace(
-      'Cafe' || chr(769) || ' ' || text,
-      '[\\x00-\\x1f\\x7f]', ' ', 'g'), '\\s+', ' ', 'g')) AS norm_text,
-  CAST(length(nfc_normalize('Cafe' || chr(769) || ' ' || text))
-       AS BIGINT) AS nfc_chars,
-  CAST(length('Cafe' || chr(769) || ' ' || text) AS BIGINT) AS raw_chars
-FROM documents
-"""
-
-
-@q("text_fingerprint")
-def _fingerprint(d: str) -> str:
-    norm = "regexp_replace(lower(trim(text)), '\\\\s+', ' ')" if d == SPARK \
-        else "regexp_replace(lower(trim(text, ' ')), '\\s+', ' ', 'g')"
-    sh = D.shingles("text", SHINGLE_N, d)
-    minsh = D.lmin(D.ltransform(sh, f"s -> {D.hash60('s', d)}", d), d)
-    # Spark: widen the single-task parquet scan before the per-shingle
-    # md5 work (interpreted HOF lambdas — CPU-bound)
-    src = (
-        "(SELECT /*+ REPARTITION(64) */ doc_id, text FROM documents)"
-        if d == SPARK else "documents"
-    )
-    return f"""
-SELECT doc_id, {D.hash60(norm, d)} AS content_fp, {minsh} AS min_shingle_fp
-FROM {src} t
-"""
-
-
-@q("text_repetition")
-def _repetition(d: str) -> str:
-    """Gopher-style repetition quality signals per document: fraction of
-    tokens that are repeats, and the share of word-bigram occurrences
-    taken by the single most frequent bigram.
-
-    All outputs are integer/integer divisions (IEEE-exact on identical
-    operands), so the hashes match without any rounding discipline.
-
-    Scale: every output is a function of ONE document's own token
-    array, so the Spark plan is fully per-row — one scan, zero joins,
-    zero aggregations, NOTHING shuffled (the only exchange is the
-    narrow-input repartition hint, a no-op on real inputs). The most
-    frequent bigram's count equals the longest run in the SORTED
-    per-row bigram array, computed by an O(n_tok) aggregate() fold.
-    The HOF lambdas evaluate interpreted, but each token is touched a
-    constant number of times; an explode + GROUP BY (doc_id,
-    bigram) form shuffles one row per bigram OCCURRENCE — at 100 TB,
-    the entire corpus through two exchanges. Measured at sf0.1: 0.37s
-    warm vs 0.83s, values identical (exceptAll-verified both ways)."""
-    tk = D.tokens("text", d)
-    if d == SPARK:
-        return f"""
-WITH b AS (
-  SELECT doc_id, n_tok, n_distinct,
-    array_sort(transform(sequence(0, n_tok - 2),
-      i -> concat(element_at(tks, i + 1), ' ', element_at(tks, i + 2)))) AS sbgs
-  FROM (SELECT doc_id, tks, size(tks) AS n_tok,
-               size(array_distinct(tks)) AS n_distinct
-        FROM (SELECT doc_id, {tk} AS tks FROM {_wide_docs(d)} w) i
-        WHERE size(tks) >= 2) t
-),
-r AS (
-  SELECT doc_id, n_tok, n_distinct, size(sbgs) AS n_bg,
-    aggregate(sbgs,
-      named_struct('prev', CAST(NULL AS STRING), 'run', 0, 'best', 0),
-      (a, x) -> IF(a.prev IS NOT NULL AND x = a.prev,
-        named_struct('prev', x, 'run', a.run + 1,
-                     'best', greatest(a.best, a.run + 1)),
-        named_struct('prev', x, 'run', 1, 'best', greatest(a.best, 1))),
-      a -> a.best) AS top_c
-  FROM b
-)
-SELECT doc_id,
-  CAST(n_tok AS BIGINT) AS n_tok,
-  CAST(1.0 - CAST(n_distinct AS DOUBLE) / n_tok AS DOUBLE)
-    AS dup_word_frac,
-  CAST(CAST(top_c AS DOUBLE) / n_bg AS DOUBLE) AS top_bigram_frac
-FROM r
-"""
-    # DuckDB oracle keeps the two-branch join form (single-statement,
-    # no CTE-inlining hazard there)
-    elem = lambda i: _idx("tks", i, d)  # noqa: E731
-    bigram = f"i -> concat({elem('i')}, ' ', {elem('i + 1')})"
-    bigrams = D.ltransform(
-        D.seq("1", f"{D.lsize('tks', d)} - 1", d), bigram, d
-    )
-    exploded = f"""
-SELECT doc_id, unnest(bgs) AS bg
-FROM (SELECT doc_id, {bigrams} AS bgs
-      FROM (SELECT doc_id, {tk} AS tks FROM documents) i
-      WHERE {D.lsize('tks', d)} >= 2) b"""
-    return f"""
-WITH bg_top AS (
-  SELECT doc_id,
-    CAST(max(c) AS DOUBLE) / sum(c) AS top_bigram_frac
-  FROM (SELECT doc_id, bg, count(*) AS c FROM ({exploded}) e
-        GROUP BY doc_id, bg) bc
-  GROUP BY doc_id
-),
-tok_stats AS (
-  SELECT doc_id, {D.lsize('tks', d)} AS n_tok,
-    {D.lsize(D.ldistinct('tks', d), d)} AS n_distinct
-  FROM (SELECT doc_id, {tk} AS tks FROM {_wide_docs(d)} w) t
-  WHERE {D.lsize('tks', d)} >= 2
-)
-SELECT s.doc_id,
-  CAST(s.n_tok AS BIGINT) AS n_tok,
-  CAST(1.0 - CAST(s.n_distinct AS DOUBLE) / s.n_tok AS DOUBLE) AS dup_word_frac,
-  CAST(b.top_bigram_frac AS DOUBLE) AS top_bigram_frac
-FROM tok_stats s JOIN bg_top b ON s.doc_id = b.doc_id
-"""
-
-
-@q("docs_length_quantiles")
-def _length_quantiles(d: str) -> str:
-    """Per-source exact length quantiles (p25/p50/p75) + min/max/avg.
-
-    p in {.25,.5,.75} keeps the interpolation fraction an exact power-of-
-    two multiple, so Spark's percentile() and DuckDB's quantile_cont()
-    produce bit-identical doubles; p95/p99 would not (0.95*(n-1) rounds,
-    and the two engines' interpolation formulas differ in the last ulp).
-
-    Scale: exact per-group quantiles sort within the source partition —
-    fine while each source fits an executor; the 100 TB path swaps in
-    approx_percentile (t-digest, mergeable) with everything else equal."""
-    if d == SPARK:
-        qexp = "percentile(n_chars, array(0.25D, 0.5D, 0.75D))"
-    else:
-        qexp = "quantile_cont(n_chars, [0.25, 0.5, 0.75])"
-    el = lambda i: _idx("qs", str(i), d)  # noqa: E731
-    return f"""
-SELECT source, n_docs, min_chars, max_chars, avg_chars,
-  CAST({el(1)} AS DOUBLE) AS p25,
-  CAST({el(2)} AS DOUBLE) AS p50,
-  CAST({el(3)} AS DOUBLE) AS p75
-FROM (
-  SELECT source,
-    CAST(count(*) AS BIGINT) AS n_docs,
-    CAST(min(n_chars) AS BIGINT) AS min_chars,
-    CAST(max(n_chars) AS BIGINT) AS max_chars,
-    CAST(avg(n_chars) AS DOUBLE) AS avg_chars,
-    {qexp} AS qs
-  FROM documents GROUP BY source
-) t
-"""
-
-
-@q("pipeline_clean_corpus")
-def _clean_corpus(d: str) -> str:
-    """End-to-end corpus cleaning in ONE query: length gate -> quality
-    gate (alpha ratio) -> exact dedup (keep min doc_id per normalized
-    fingerprint) — the composed filter chain a real training-data run
-    executes, with survivor counts per source.
-
-    Scale: gates are scan-side filters (no shuffle); the dedup is one
-    exchange on the 60-bit fingerprint; the per-source rollup re-
-    aggregates on source. Nothing carries `text` past the scan stage —
-    the exchanges move (fp, doc_id, source) triples only."""
-    norm = "regexp_replace(lower(trim(text)), '\\\\s+', ' ')" if d == SPARK \
-        else "regexp_replace(lower(trim(text, ' ')), '\\s+', ' ', 'g')"
-    alpha = (
-        "length(regexp_replace(lower(text), '[^a-z]', ''))"
-        if d == SPARK
-        else "length(regexp_replace(lower(text), '[^a-z]', '', 'g'))"
-    )
-    tk = D.tokens("text", d)
-    return f"""
-WITH gated AS (
-  SELECT doc_id, source, {D.hash60(norm, d)} AS fp
-  FROM documents
-  WHERE n_chars BETWEEN 64 AND 100000
-    AND {D.lsize(tk, d)} >= 8
-    AND CAST({alpha} AS DOUBLE) / length(text) >= 0.6
-),
-kept AS (
-  SELECT fp, min(doc_id) AS keeper_doc_id, count(*) AS n_copies
-  FROM gated GROUP BY fp
-)
-SELECT g.source,
-  CAST(count(*) AS BIGINT) AS n_survivors,
-  CAST(sum(k.n_copies - 1) AS BIGINT) AS n_dropped_dups
-FROM kept k JOIN gated g ON g.doc_id = k.keeper_doc_id
-GROUP BY g.source
-"""
-
-
-@q("docs_shard_assignment")
-def _shard_assignment(d: str) -> str:
-    """Deterministic training-shard assignment: shard = hash(doc_id) mod
-    16, position within shard by hash order. This is the write-side of
-    'shuffle the corpus and shard it for the trainer' — reproducible
-    across runs and engines (no rand()), resumable, and stable under
-    re-execution of failed tasks.
-
-    Scale: one exchange keyed by shard; the within-shard ordering is a
-    per-partition sort (each shard is one write task). 16 here; a real
-    run sets shards ≈ cluster write parallelism."""
-    h = D.hash60("CAST(doc_id AS STRING)", d)
-    return f"""
-SELECT doc_id,
-  CAST(h % 16 AS BIGINT) AS shard,
-  CAST(row_number() OVER (PARTITION BY h % 16 ORDER BY h, doc_id) AS BIGINT) AS pos
-FROM (SELECT doc_id, {h} AS h FROM documents) t
-"""
-
-
-def _contam_exploded(d: str, docs: str | None = None) -> tuple[str, str]:
-    """(per-source 8-gram subquery, gram-hash expr) shared by the
-    one-mask and chunked-mask contamination forms. `docs` overrides
-    the documents relation (any subquery exposing source + text) —
-    the chunked catalog entry derives a fine-grained source column to
-    exceed the 62-source one-mask bound on the small test corpus."""
-    tk = D.tokens("text", d)
-    n = 8
-    # Same Generate pitfall as text_repetition: posexplode the raw
-    # tokens; each output row builds its gram with one slice+join.
-    if d == SPARK:
-        rel = docs if docs is not None else _wide_docs(d)
-        exploded = f"""
-SELECT source, array_join(slice(tks, pos + 1, {n}), ' ') AS g
-FROM (SELECT source, {tk} AS tks FROM {rel} w) t
-LATERAL VIEW posexplode(tks) x AS pos, tok
-WHERE pos + {n} <= size(tks)"""
-    else:
-        rel = docs if docs is not None else "documents"
-        gram = f"i -> array_to_string(list_slice(tks, i, i + {n - 1}), ' ')"
-        grams = D.ltransform(
-            D.seq("1", f"{D.lsize('tks', d)} - {n - 1}", d), gram, d
-        )
-        exploded = f"""
-SELECT source, unnest(gs) AS g
-FROM (SELECT source, {grams} AS gs
-      FROM (SELECT source, {tk} AS tks FROM {rel} i2) i
-      WHERE {D.lsize('tks', d)} >= {n}) b"""
-    return exploded, D.hash60("g", d)
-
-
-def _build_contamination(spark, sf_dir: str):
-    """Route cross_source_contamination by provenance-label count:
-    the one-BIGINT-mask fast path when every source fits one mask,
-    the chunked-mask path past 62 (where the fast path's assert_true
-    would raise). The count probe is a ~|sources|-row aggregate."""
-    n = spark.sql(
-        "SELECT count(DISTINCT source) AS n FROM documents"
-    ).collect()[0][0]
-    if n <= 62:
-        return spark.sql(_contamination(SPARK))
-    return spark.sql(_contamination_chunked_sql())
-
-
-@q("cross_source_contamination", spark=_build_contamination)
-def _contamination(d: str) -> str:
-    """Train/test decontamination check: count distinct token 8-grams
-    shared between each pair of sources. The standard n-gram-overlap
-    contamination test, expressed as a self-join on hashed grams.
-
-    Scale: grams are deduped per (source, gram) BEFORE the join, and the
-    join key is the 60-bit gram hash (8-byte exchange rows, never gram
-    text). The output is |sources|² rows at most. At 100 TB the gram
-    dedup is the big shuffle; it partial-aggregates map-side.
-
-    The Spark side is builder-dispatched (_build_contamination): ≤62
-    distinct sources run this one-BIGINT-mask form; more run the
-    chunked-mask generalization (_contamination_chunked_sql)."""
-    exploded, gh = _contam_exploded(d)
-    if d == SPARK:
-        # Spark plans a CTE self-join as TWO full explode+distinct
-        # subtrees (no exchange reuse once one side broadcasts), so
-        # compute grams ONCE. Source sets are encoded as a 64-bit
-        # BITMASK per gram (source -> dense bit via a broadcast dim):
-        # bit_or is a plain long-buffer codegen aggregate, so the big
-        # per-gram groupBy never allocates set objects (a
-        # collect_set formulation spent 0.6s of its 1.2s in
-        # ObjectHashAggregate at sf0.1; the mask path runs the same
-        # stage in ~0.2s). Pair counts then come from the TINY
-        # (mask -> gram count) table joined twice against the source
-        # dim on bit tests — at most 2^|sources| rows, in practice a
-        # few hundred.
-        #
-        # Scale: provenance labels are few — ≤62 sources fits one
-        # BIGINT mask (assert_true raises loudly past that; the >62
-        # path is chunked masks: group by (gh, sid DIV 62) and count
-        # cross-chunk pairs per chunk-pair). The gram shuffle carries
-        # 8-byte keys + 8-byte partial masks, never gram text.
-        #
-        # The unpartitioned row_number() window below runs over SELECT
-        # DISTINCT source — bounded ≤62 rows by the adjacent assert —
-        # so its single-partition WindowExec (and Spark's warning
-        # about it) is a one-reducer pass over a dim table, not a
-        # scale hazard. Both warning-free rewrites measured SLOWER at
-        # sf0.1 (same session, interleaved A/B): a triangular self-join rank
-        # CTE-inlined into 3 evaluations (3x the documents scans,
-        # 2-6x wall); a stage-collected LocalRelation sid dim turned
-        # the bit-test joins into CartesianProduct (18s) and its
-        # explode+equi repair still ran 1.25-1.5s vs 0.5-0.6s for
-        # this form (BENCH_NOTES.md). The warning is cosmetic; the
-        # window stays.
-        return f"""
-WITH sid AS (
-  SELECT source, sid FROM (
-    SELECT source,
-      CAST(row_number() OVER (ORDER BY source) AS INT) - 1 AS sid
-    FROM (SELECT DISTINCT source FROM documents) s) t
-  WHERE assert_true(sid <= 61,
-    'cross_source_contamination: >62 sources — chunk the mask') IS NULL
-),
-gm AS (
-  SELECT gh, bit_or(shiftleft(CAST(1 AS BIGINT), sid.sid)) AS mask
-  FROM (SELECT source, {gh} AS gh FROM ({exploded}) e) g
-  JOIN sid ON g.source = sid.source
-  GROUP BY gh
-),
-mc AS (SELECT mask, CAST(count(*) AS BIGINT) AS c FROM gm GROUP BY mask)
-SELECT sa.source AS source_a, sb.source AS source_b,
-  CAST(sum(mc.c) AS BIGINT) AS shared_ngrams
-FROM mc
-JOIN sid sa ON ((mc.mask >> sa.sid) & 1) = 1
-JOIN sid sb ON ((mc.mask >> sb.sid) & 1) = 1 AND sa.source < sb.source
-GROUP BY sa.source, sb.source
-"""
-    return f"""
-WITH grams AS (
-  SELECT DISTINCT source, {gh} AS gh FROM ({exploded}) e
-)
-SELECT a.source AS source_a, b.source AS source_b,
-  CAST(count(*) AS BIGINT) AS shared_ngrams
-FROM grams a JOIN grams b ON a.gh = b.gh AND a.source < b.source
-GROUP BY a.source, b.source
-"""
-
-
-def _contamination_chunked_sql(docs: str | None = None) -> str:
-    """The >62-source generalization the one-mask form's assert points
-    at: sources are densely numbered as
-    before, then split into 62-bit CHUNKS (chunk = sid DIV 62, bit =
-    sid % 62); the per-gram aggregate groups by (gh, chunk) so each
-    gram carries one bounded-width mask row PER CHUNK it touches.
-    Pair counts need cross-chunk pairs, so the tiny-table trick
-    changes shape: gm self-joins on gh with chunk_a <= chunk_b
-    (<= ceil(S/62)^2 rows per gram — 4 rows at 124 sources), the
-    (chunk, mask, chunk, mask) combos collapse into a bounded mp
-    table, and the bit-test joins against the sid dim run per chunk.
-    Same-chunk pairs come from a row paired with itself; cross-chunk
-    source order is implied by chunk order (sid order == source
-    order) but the sa.source < sb.source predicate is kept explicit.
-
-    Trade vs the one-mask form, and why BOTH exist: the self-join on
-    gh re-shuffles the per-gram mask table once more than the one-mask
-    form's plain GROUP BY mask — measured ~2x wall at sf0.1 — so the
-    builder only takes this path when the mask genuinely can't fit
-    one BIGINT. Shuffles still carry 8-byte hashes + masks, never
-    gram text.
-
-    Why the self-join stays (interleaved A/B): a collect_list(struct(chunk,
-    mask)) + in-row double-explode rewrite removes one gm-sized gh
-    shuffle (plan: 19 -> 13 exchanges, BHJx5 -> BHJx3) but measured
-    25-30% SLOWER at 5k/50k synthetic docs (1.33/7.99s -> 1.66/10.59s
-    median-of-3): the ObjectHashAggregate collect + double Generate
-    struct expansion costs more CPU than the saved shuffle returns
-    locally, and the exponent is unchanged (0.78 vs 0.80). On a
-    network-bound cluster the trade could flip; the measurement, not
-    the exchange count, decides here. (That rewrite also surfaced a
-    Spark 4 lexer quirk worth recording: once an `array(`/`struct(`
-    call appears anywhere earlier in a statement, a later `>>`
-    operator fails to parse — the lexer reserves `>>` for closing
-    nested type brackets; minimal repro:
-      WITH g AS (SELECT struct(1 AS x) AS s), t AS (SELECT 4 AS m)
-      SELECT 1 FROM t JOIN g ON ((t.m >> 1) & 1) = 1  -- PARSE ERROR
-    `shiftright(m, 1)` is the spelling that always parses. This form
-    keeps `>>` legally: its statement has no array(/struct( calls.)"""
-    exploded, gh = _contam_exploded(SPARK, docs=docs)
-    rel = docs if docs is not None else "documents"
-    return f"""
-WITH sid AS (
-  SELECT source, sid, CAST(sid DIV 62 AS INT) AS chunk,
-         CAST(sid % 62 AS INT) AS bit
-  FROM (
-    SELECT source,
-      CAST(row_number() OVER (ORDER BY source) AS INT) - 1 AS sid
-    FROM (SELECT DISTINCT source FROM {rel} dsrc) s) t
-),
-gm AS (
-  SELECT gh, sid.chunk AS chunk,
-         bit_or(shiftleft(CAST(1 AS BIGINT), sid.bit)) AS mask
-  FROM (SELECT source, {gh} AS gh FROM ({exploded}) e) g
-  JOIN sid ON g.source = sid.source
-  GROUP BY gh, sid.chunk
-),
-mp AS (
-  SELECT a.chunk AS ca, a.mask AS ma, b.chunk AS cb, b.mask AS mb,
-         CAST(count(*) AS BIGINT) AS c
-  FROM gm a JOIN gm b ON a.gh = b.gh AND a.chunk <= b.chunk
-  GROUP BY a.chunk, a.mask, b.chunk, b.mask
-)
-SELECT sa.source AS source_a, sb.source AS source_b,
-  CAST(sum(mp.c) AS BIGINT) AS shared_ngrams
-FROM mp
-JOIN sid sa ON sa.chunk = mp.ca AND ((mp.ma >> sa.bit) & 1) = 1
-JOIN sid sb ON sb.chunk = mp.cb AND ((mp.mb >> sb.bit) & 1) = 1
-  AND sa.source < sb.source
-GROUP BY sa.source, sb.source
-"""
-
-
-_CONTAM_FINE_SPARK = (
-    "(SELECT /*+ REPARTITION(64) */"
-    " concat(source, '_', CAST(doc_id % 100 AS STRING)) AS source,"
-    " text FROM documents)"
-)
-_CONTAM_FINE_DUCK = (
-    "(SELECT source || '_' || CAST(doc_id % 100 AS VARCHAR) AS source,"
-    " text FROM documents)"
-)
-
-
-@q("cross_source_contamination_chunked")
-def _contamination_chunked_entry(d: str) -> str:
-    """The >62-source chunked-mask contamination path under the DRIVER
-    gate, not only under pytest.
-    The test corpus has 20 provenance labels, so the entry derives a
-    fine-grained source (source + doc_id % 100 -> 100 labels, 2 mask
-    chunks) and runs the REAL chunked implementation
-    (_contamination_chunked_sql — the exact SQL _build_contamination
-    routes to past 62 sources) on the Spark side. The oracle is the
-    brute-force distinct-gram pair join over the same derived corpus:
-    semantics, not implementation, is what the gate pins — the same
-    relationship the one-mask entry has to its oracle."""
-    if d == SPARK:
-        return _contamination_chunked_sql(docs=_CONTAM_FINE_SPARK)
-    exploded, gh = _contam_exploded(d, docs=_CONTAM_FINE_DUCK)
-    return f"""
-WITH grams AS (
-  SELECT DISTINCT source, {gh} AS gh FROM ({exploded}) e
-)
-SELECT a.source AS source_a, b.source AS source_b,
-  CAST(count(*) AS BIGINT) AS shared_ngrams
-FROM grams a JOIN grams b ON a.gh = b.gh AND a.source < b.source
-GROUP BY a.source, b.source
-"""
-
-
-@q("dedup_exact_substring")
-def _exact_substring(d: str) -> str:
-    """Exact-substring dedup (Lee et al. 2021, 'Deduplicating Training
-    Data Makes Language Models Better'): doc pairs sharing >=1 exact
-    12-token window, scored by how many windows they share — catches
-    copied PASSAGES that whole-doc MinHash misses (a long doc quoting
-    a paragraph of another sits far below any Jaccard threshold).
-
-    Spark-native formulation: hash each 12-token window
-    directly with a multi-argument xxhash64 over the 12 array elements
-    -> ONE shuffle groups windows with collect_set(doc_id) under the
-    2..64-doc bucket bound -> pairs generated INSIDE each bounded
-    bucket (sort_array + double explode) -> pair counts. The
-    suffix-array construction of the paper is replaced by the
-    hashed-window equi-bucket — same pair semantics at fixed window
-    length, and it shuffles 8-byte hashes, never text.
-
-    Why the Spark window hash differs from the oracle's: bucketing is
-    EQUALITY-based, so the two dialects don't need hash identity —
-    only that each hash is injective-in-practice on window content
-    (the driver compares pair results, never hashes). That freed the
-    Spark side from the portable md5+conv string hash (profiled: the
-    dominant per-row cost was building the 70-char window string and
-    then md5 -> substr -> conv base-16 parsing, all interpreted) for
-    codegen'd xxhash64 over the 12 strings with NO intermediate
-    string, and lets the bucket aggregation do the DISTINCT(doc_id,
-    wh) (collect_set dedups inside the set): two shuffles -> one.
-    Measured at sf0.1: 1.090s -> 0.86s median (1.78x -> 1.40x of the
-    DuckDB oracle), identical pair results
-    (.scale/probe_substring.py).
-
-    Scale: the bucket bound is load-bearing twice — buckets of 1
-    produce nothing and are dropped by the HAVING before any pair
-    expansion, and buckets >64 docs are boilerplate (licence headers,
-    templated banners) whose pair expansion would go quadratic;
-    production treats those as cluster-level boilerplate exactly like
-    the MinHash hot-bucket cap. Buffer note (true of any
-    collect-based form): the HAVING drops
-    oversize buckets after aggregation, so a pathological window
-    shared by M docs transiently holds an M-element set in the
-    aggregation buffer; a corpus with boilerplate at that scale wants
-    the MinHash-style count-prefilter pass first."""
-    tk = D.tokens("text", d)
-    n = 12
-    if d == SPARK:
-        elems = ", ".join(f"tks[pos + {k}]" for k in range(n))
-        exploded = f"""
-SELECT doc_id, xxhash64({elems}) AS wh
-FROM (SELECT doc_id, {tk} AS tks FROM documents) t
-LATERAL VIEW posexplode(tks) x AS pos, tok
-WHERE pos + {n} <= size(tks)"""
-    else:
-        gram = f"i -> array_to_string(list_slice(tks, i, i + {n - 1}), ' ')"
-        grams = D.ltransform(
-            D.seq("1", f"{D.lsize('tks', d)} - {n - 1}", d), gram, d
-        )
-        exploded = f"""
-SELECT doc_id, unnest(gs) AS g
-FROM (SELECT doc_id, {grams} AS gs
-      FROM (SELECT doc_id, {tk} AS tks FROM documents) i
-      WHERE {D.lsize('tks', d)} >= {n}) b"""
-    if d == SPARK:
-        return f"""
-WITH b AS (
-  SELECT wh, sort_array(collect_set(doc_id)) AS ds
-  FROM ({exploded}) w GROUP BY wh
-  HAVING size(ds) BETWEEN 2 AND 64
-)
-SELECT da AS doc_a, db AS doc_b,
-  CAST(count(*) AS BIGINT) AS shared_windows
-FROM b
-LATERAL VIEW explode(ds) xa AS da
-LATERAL VIEW explode(ds) xb AS db
-WHERE da < db
-GROUP BY da, db
-"""
-    wh = D.hash60("g", d)
-    return f"""
-WITH w AS (
-  SELECT DISTINCT doc_id, {wh} AS wh FROM ({exploded}) e
-),
-f AS (SELECT wh FROM w GROUP BY wh HAVING count(*) BETWEEN 2 AND 64)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-  CAST(count(*) AS BIGINT) AS shared_windows
-FROM w a
-JOIN f ON f.wh = a.wh
-JOIN w b ON a.wh = b.wh AND a.doc_id < b.doc_id
-GROUP BY 1, 2
-"""
-
-
-@q("corpus_top_terms")
-def _top_terms(d: str) -> str:
-    """Corpus heavy hitters: top-50 terms by exact global frequency.
-
-    Scale: explode -> GROUP BY term runs with map-side partial counts,
-    so the exchange carries one row per (map partition, term), not one
-    per token; the final top-k is TakeOrderedAndProject (per-partition
-    heap + driver merge), never a global sort. A skewed head term is
-    still a single reducer row because counts merge associatively."""
-    tk = D.tokens("text", d)
-    if d == SPARK:
-        src = (
-            f"(SELECT tok FROM (SELECT {tk} AS tks FROM documents) t"
-            " LATERAL VIEW explode(tks) x AS tok)"
-        )
-    else:
-        src = f"(SELECT unnest({tk}) AS tok FROM documents)"
-    return f"""
-SELECT tok AS term, CAST(count(*) AS BIGINT) AS term_count
-FROM {src} e
-GROUP BY tok
-ORDER BY term_count DESC, term LIMIT 50
-"""
-
-
-@q("text_tfidf_topk")
-def _tfidf(d: str) -> str:
-    """Per-document top-5 terms by TF-IDF.
-
-    Determinism: idf = ln((1+N)/(1+df)) is rounded to 6 decimals before
-    the tf multiply — the two engines' libm ln() can differ in the last
-    ulp, and rounding collapses that so the double ranking (and the
-    driver's value hash) is identical. tf*idf and the window ranking are
-    then exact IEEE ops on identical operands.
-
-    Scale: REPARTITION(doc_id) BEFORE the explode shuffles whole
-    documents once (one row per doc — orders of magnitude less
-    exchange volume than exploded tokens); after it, hash(doc_id)
-    satisfies BOTH the tf aggregation's ClusteredDistribution
-    (doc_id, tok) (subset rule) and the ranking window's clustering,
-    so tf aggregates with NO further exchange and the per-doc top-5
-    runs with NO window exchange — Spark's WindowGroupLimit keeps the
-    rk<=5 heap partition-local (plan-asserted in
-    tests/test_plan_quality.py). df stays a grouped aggregation
-    (map-side partials — skew-safe for hot terms, unlike a count()
-    OVER (PARTITION BY term) window, whose hottest term would land
-    n_docs rows on one reducer) and broadcasts into the tf join; the
-    1-row doc-count side is a broadcast cross join. Spark inlines the
-    tf CTE into both consumers, but AQE's runtime stage reuse deduces
-    the two REPARTITION(doc_id) exchanges are identical and the df
-    branch reads the tf branch's shuffle output via ReusedExchange
-    (verified in the final adaptive plan) — so the scan+tokenize runs
-    ONCE and only the cheap explode+aggregate runs per branch. This
-    beats a persisted-view staging (~0.95s vs ~1.6s at sf0.1, A/B)
-    precisely because the "recompute" the persist avoids is already
-    shared at the exchange.
-
-    Run-to-run drift on this entry is JIT lifecycle, not plan change: a
-    15-run series decays monotonically 1.0s -> 0.55s as C2 compiles
-    the tokenizer; the lambda-free dialect.tokens() form removes the
-    interpreted higher-order filter that dominated that warmup
-    (BENCH_NOTES.md)."""
-    tk = D.tokens("text", d)
-    if d == SPARK:
-        exploded = (
-            "SELECT doc_id, tok FROM"
-            f" (SELECT /*+ REPARTITION(doc_id) */ doc_id, {tk} AS tks"
-            " FROM documents) t LATERAL VIEW explode(tks) x AS tok"
-        )
-    else:
-        exploded = f"SELECT doc_id, unnest({tk}) AS tok FROM documents"
-    return f"""
-WITH tf AS (
-  SELECT doc_id, tok AS term, CAST(count(*) AS BIGINT) AS tf
-  FROM ({exploded}) e GROUP BY doc_id, tok
-),
-df AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-),
-n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents),
-scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf, df.df,
-    CAST(tf.tf AS DOUBLE)
-      * {_round6('ln((1.0 + n.n_docs) / (1.0 + CAST(df.df AS DOUBLE)))')}
-      AS tfidf
-  FROM tf JOIN df ON tf.term = df.term CROSS JOIN n
-)
-SELECT doc_id, term, tf, df, tfidf
-FROM (SELECT scored.*, row_number()
-        OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rk
-      FROM scored) r
-WHERE rk <= 5
-"""
-
-
-# ======================================================= remote-source queries
-#
-# dd_read_arrow exercised under the driver's hash gate: a lazy local
-# wire-protocol server (sources/local_server.py) serves the same parquet
-# the oracle reads directly, so "remote Arrow-IPC scan == direct scan"
-# becomes a checked invariant (the reference's own core differential
-# test, dd_read_arrow_split.test_slow:40-62).
-
-@functools.cache
-def _server(sf_dir: str, kind: str = "plain"):
-    """The local wire-protocol server of one kind over sf_dir's parquet,
-    started on first use and stopped at interpreter exit.
-
-    - plain: lineitem, orders, customer and events;
-    - failover: lineitem, with a DEAD replica (port 9 / discard refuses
-      immediately) advertised FIRST in every split's endpoints[]. Split
-      i starts at replica i % 2, so every even split must fail over to
-      the live server — the reference's replica-rotation contract
-      (split_info.hpp endpoints[]) under the driver's value gate;
-    - auth: lineitem behind /v1/login credentials and a bearer token."""
-    from ..sources.local_server import ArrowTestServer
-
-    lineitem = {"lineitem": os.path.join(sf_dir, "lineitem.parquet")}
-    if kind == "failover":
-        srv = ArrowTestServer(
-            lineitem, extra_endpoints=["http://127.0.0.1:9"]
-        )
-    elif kind == "auth":
-        srv = ArrowTestServer(
-            lineitem,
-            token="tok-remote-login-scan",
-            credentials=("sparky", "hunter2"),
-        )
-    else:
-        paths = {
-            n: os.path.join(sf_dir, f"{n}.parquet")
-            for n in ("lineitem", "orders", "customer", "events")
-        }
-        srv = ArrowTestServer(
-            {n: p for n, p in paths.items() if os.path.exists(p)}
-        )
-    srv.start()
-    atexit.register(srv.stop)
-    return srv
-
-
-_REMOTE_AGG = (
-    "SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,"
-    " CAST(sum(l_orderkey) AS BIGINT) AS sum_okey"
-    " FROM {src} GROUP BY l_returnflag"
-)
-
-
-def _build_remote_scan_split_agg(spark, sf_dir: str):
-    from ..sources import dd_read_arrow
-
-    srv = _server(sf_dir)
-    split_scan = dd_read_arrow(
-        spark, srv.url, source_table="lineitem", split=True,
-        split_size=64 * 4000,
-    )
-    plain_scan = dd_read_arrow(spark, srv.url, source_table="lineitem")
-    split_scan.createOrReplaceTempView("__remote_lineitem_split")
-    plain_scan.createOrReplaceTempView("__remote_lineitem_plain")
-    agg_split = spark.sql(_REMOTE_AGG.format(src="__remote_lineitem_split"))
-    agg_plain = spark.sql(_REMOTE_AGG.format(src="__remote_lineitem_plain"))
-    return _label_paths({"split": agg_split, "plain": agg_plain})
-
-
-@q("remote_scan_split_agg", spark=_build_remote_scan_split_agg)
-def _remote_scan_split_agg(d: str) -> str:
-    """Split==non-split differential under the hash gate (the reference's
-    core invariant, test/python/dd_read_arrow_split.test_slow:40-62): the
-    Spark side runs the SAME aggregation through a split remote scan AND
-    a non-split remote scan, labeled by path; the oracle is the direct
-    parquet answer duplicated for both labels. Either path diverging
-    from ground truth fails the hash."""
-    one = _REMOTE_AGG.format(src="lineitem")
-    return (
-        f"SELECT 'split' AS path, * FROM ({one}) AS s"
-        f" UNION ALL SELECT 'plain' AS path, * FROM ({one}) AS p"
-    )
-
-
-def _label_paths(paths: dict):
-    """Union of differential paths, each row tagged with its path name —
-    the oracle repeats the direct-parquet answer once per label, so any
-    one path diverging fails the gate."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    labelled = [
-        df.select(F.lit(name).alias("path"), "*")
-        for name, df in paths.items()
-    ]
-    return reduce(lambda a, b: a.unionByName(b), labelled)
-
-
-def _build_remote_scan_failover(spark, sf_dir: str):
-    from ..sources import dd_read_arrow
-
-    srv = _server(sf_dir, "failover")
-    scan = dd_read_arrow(
-        spark, srv.url, source_table="lineitem", split=True,
-        split_size=64 * 4000,
-    )
-    scan.createOrReplaceTempView("__remote_lineitem_failover")
-    return spark.sql(_REMOTE_AGG.format(src="__remote_lineitem_failover"))
-
-
-@q("remote_scan_failover", spark=_build_remote_scan_failover)
-def _remote_scan_failover(d: str) -> str:
-    """Replica failover under the HASH gate (test_arrow_source.py
-    covers the dead-then-live case under pytest): every split of
-    a split-mode remote scan advertises a dead endpoint first, so
-    half the splits exercise the rotate-with-fresh-query-id path
-    (scala/DdArrowShim.scala DdColumnarReader; abandoned ids
-    best-effort cancelled). The gate pins that failover yields the COMPLETE
-    answer — a dropped or double-read split changes the counts/sums.
-    Reference: read_arrow_dd.cpp endpoints rotation."""
-    return _REMOTE_AGG.format(src="lineitem")
-
-
-_REMOTE_FILTER = (
-    "SELECT o_orderkey, o_totalprice FROM {src}"
-    " WHERE o_totalprice > 50000 AND o_orderstatus = 'F'"
-)
-
-
-def _build_remote_scan_filter(spark, sf_dir: str):
-    from ..sources import dd_read_arrow
-
-    srv = _server(sf_dir)
-    scan = dd_read_arrow(spark, srv.url, source_table="orders")
-    scan.createOrReplaceTempView("__remote_orders")
-    return spark.sql(_REMOTE_FILTER.format(src="__remote_orders"))
-
-
-@q("remote_scan_filter_pushdown", spark=_build_remote_scan_filter)
-def _remote_scan_filter(d: str) -> str:
-    return _REMOTE_FILTER.format(src="orders")
-
-
-def _build_remote_scan_dsv2(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..sources import register
-
-    register(spark)
-    srv = _server(sf_dir)
-
-    def scan(**extra):
-        rd = (
-            spark.read.format("dd_arrow_dsv2")
-            .option("url", srv.url)
-            .option("path", "orders")
-        )
-        for k, v in extra.items():
-            rd = rd.option(k, v)
-        return rd.load()
-
-    def agg(df):
-        return (
-            df.filter(
-                (F.col("o_totalprice") > 50000)
-                & (F.col("o_orderstatus") == "F")
-            )
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n"),
-                F.sum("o_custkey").cast("long").alias("sum_ckey"),
-                F.expr(_round6("avg(o_custkey)")).alias("avg_ckey"),
-            )
-        )
-
-    plain = agg(scan())
-    plan = plain._jdf.queryExecution().executedPlan().toString()
-    # the contracts this entry exists to prove: the server computes the
-    # FINAL aggregate (avg included — no partial agg above the scan)
-    # over the pushed WHERE
-    assert "PushedAggregation: true" in plan, plan
-    assert "avg(" in plan and "RemoteSql" in plan, plan
-    assert "HashAggregate" not in plan, plan
-    split = agg(scan(split="true", split_size=str(64 * 4000)))
-    plan2 = split._jdf.queryExecution().executedPlan().toString()
-    assert "RemoteSql" in plan2 and "o_totalprice" in plan2, plan2
-    # split mode pushes PARTIAL aggregates (per-split server-side
-    # slices, Spark merges) — avg rides along as decomposed sum+count
-    assert "PushedAggregation: true" in plan2, plan2
-
-    return _label_paths({"complete_agg": plain, "split": split})
-
-
-@q("remote_scan_dsv2", spark=_build_remote_scan_dsv2)
-def _remote_scan_dsv2(d: str) -> str:
-    """The DSv2 shim (scala/DdArrowShim.scala) under the driver's hash
-    gate: a PLAIN .filter().groupBy().agg() over format("dd_arrow_dsv2")
-    must prune/filter/aggregate server-side (transparent pushdown — the
-    reference's optimizer-level rewrites,
-    src/scanner/read_arrow_dd.cpp:246-296 and
-    src/optimizer/aggregation_pushdown.cpp:247-418) and still match the
-    direct-parquet oracle. Two labeled paths: 'complete_agg' is the
-    server-computed final aggregate (count/sum/avg COMPLETE pushdown,
-    plan-asserted in the builder), 'split' runs the same aggregation in
-    Spark above a /v1/plan split scan of the pruned+filtered relation."""
-    base = (
-        "SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n,"
-        " CAST(sum(o_custkey) AS BIGINT) AS sum_ckey,"
-        f" {_round6('avg(o_custkey)')} AS avg_ckey"
-        " FROM orders"
-        " WHERE o_totalprice > 50000 AND o_orderstatus = 'F'"
-        " GROUP BY o_orderpriority"
-    )
-    return (
-        f"SELECT 'complete_agg' AS path, * FROM ({base}) a"
-        f" UNION ALL SELECT 'split' AS path, * FROM ({base}) s"
-    )
-
-
-def _build_remote_scan_dsv2_split_dec(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..sources import register
-
-    register(spark)
-    srv = _server(sf_dir)
-
-    def scan(split: bool):
-        rd = (
-            spark.read.format("dd_arrow_dsv2")
-            .option("url", srv.url)
-            .option("query", _SPLIT_DEC_QUERY)
-        )
-        if split:
-            rd = rd.option("split", "true").option(
-                "split_size", str(_SPLIT_DEC_SIZE)
-            )
-        return rd.load()
-
-    def agg(df, qd_col):
-        return df.groupBy("l_returnflag").agg(
-            F.sum(qd_col).cast("decimal(38,2)").alias("sum_qty"),
-            F.count(F.lit(1)).cast("long").alias("n"),
-        )
-
-    complete = agg(scan(split=False), F.col("qd"))
-    plan_c = complete._jdf.queryExecution().executedPlan().toString()
-    # non-split: the server computes the FINAL aggregate
-    assert "PushedAggregation: true" in plan_c, plan_c
-    assert "HashAggregate" not in plan_c, plan_c
-    split = agg(scan(split=True), F.col("qd"))
-    plan_s = split._jdf.queryExecution().executedPlan().toString()
-    # split: decimal partials pushed per split, merged in a Spark
-    # final HashAggregate (never a COMPLETE server agg in split mode)
-    assert "PushedAggregation: true" in plan_s, plan_s
-    assert "HashAggregate" in plan_s, plan_s
-    assert "RemoteSql" in plan_s, plan_s
-    # raw: sum over a computed expression is not pushable, so the
-    # splits stream raw (l_returnflag, qd) rows and Spark aggregates
-    raw = agg(
-        scan(split=True),
-        F.col("qd") + F.lit("0.00").cast("decimal(12,2)"),
-    )
-    plan_r = raw._jdf.queryExecution().executedPlan().toString()
-    assert "PushedAggregation: false" in plan_r, plan_r
-    assert "HashAggregate" in plan_r, plan_r
-
-    # sum_qty leaves the plan as its canonical string: the decimal work
-    # (TRY_CAST partials, Spark decimal merge) stays in-plan
-    paths = {"complete": complete, "split": split, "raw": raw}
-    return _label_paths({
-        name: df.withColumn("sum_qty", F.col("sum_qty").cast("string"))
-        for name, df in paths.items()
-    })
-
-
-@q("remote_scan_dsv2_split_dec", spark=_build_remote_scan_dsv2_split_dec)
-def _remote_scan_dsv2_split_dec(d: str) -> str:
-    """Second shim entry family under the driver's hash gate: the
-    split-mode DECIMAL partial-aggregate
-    path end to end. A `query`-option scan exposes
-    CAST(l_quantity AS DECIMAL(12,2)); Spark's groupBy/sum over the
-    split scan pushes PARTIAL decimal sums per split — the shim emits
-    them as TRY_CAST to Spark's widened DECIMAL(p+10, s) result type
-    (scala/DdArrowShim.scala:359-402: TRY_CAST mirrors Spark's
-    non-ANSI null-on-overflow), Spark merges partials.
-
-    Three labelled routes to the same aggregate: `complete` (non-split
-    scan, the server computes the final aggregate), `split` (per-split
-    decimal partials merged by Spark) and `raw` (split scan streaming
-    raw rows, Spark aggregates with no pushdown). sum_qty leaves the
-    plan as its canonical string ('506627.00') in both dialects, so no
-    python Decimal reaches a result hasher. Reference contract:
-    pushed == local, src/optimizer/aggregation_pushdown.cpp:247-418."""
-    base = (
-        "SELECT l_returnflag,"
-        " CAST(CAST(sum(CAST(l_quantity AS DECIMAL(12,2)))"
-        "   AS DECIMAL(38,2)) AS VARCHAR) AS sum_qty,"
-        " CAST(count(*) AS BIGINT) AS n"
-        " FROM lineitem"
-        " GROUP BY l_returnflag"
-    )
-    return (
-        f"SELECT 'complete' AS path, * FROM ({base}) c"
-        f" UNION ALL SELECT 'split' AS path, * FROM ({base}) s"
-        f" UNION ALL SELECT 'raw' AS path, * FROM ({base}) r"
-    )
-
-
-_SPLIT_DEC_QUERY = (
-    "SELECT l_returnflag,"
-    " CAST(l_quantity AS DECIMAL(12,2)) AS qd FROM lineitem"
-)
-_SPLIT_DEC_SIZE = 64 * 4000
-
-
-def _zorder_sql(d: str, cols_ranges, bits: int) -> str:
-    """Morton key as portable SQL (operators/storage.py zorder_value
-    mirrored in both dialects): quantize each column over a FIXED
-    [lo, hi] range, interleave bits. Pure integer/floor arithmetic on
-    identical doubles, so both engines compute identical keys."""
-    n = len(cols_ranges)
-    levels = (1 << bits) - 1
-    terms = []
-    for ci, (col, lo, hi) in enumerate(cols_ranges):
-        span = float(hi) - float(lo)
-        q = (
-            f"coalesce(least(CAST({levels} AS BIGINT), greatest("
-            f"CAST(0 AS BIGINT), CAST(floor((CAST({col} AS DOUBLE)"
-            f" - {float(lo)!r}) / {span!r} * {levels}) AS BIGINT))),"
-            f" CAST(0 AS BIGINT))"
-        )
-        for b in range(bits):
-            pos = b * n + (n - 1 - ci)
-            if d == SPARK:
-                terms.append(
-                    f"shiftleft(shiftright({q}, {b}) & 1, {pos})"
-                )
-            else:
-                terms.append(f"((({q} >> {b}) & 1) << {pos})")
-    return " + ".join(terms)
-
-
-@q("layout_zorder")
-def _layout_zorder(d: str) -> str:
-    """Z-order (Morton) layout key over (l_quantity, l_extendedprice)
-    — the multi-column clustering move for 100 TB fact tables: sort/
-    range-partition by this key and parquet row-group min/max stats
-    prune predicates on ANY of the z-columns (a single-column sort
-    only skips on its leading column). Engine-added (the reference is
-    a read-only scanner); operators/storage.py write_zordered is the
-    sink, tests/test_storage.py measures the actual row-group skip
-    rate vs arrival order. This entry hash-gates the KEY ARITHMETIC
-    itself: per-z-bucket row counts + orderkey sums cover every row's
-    interleaved key in both engines."""
-    z = _zorder_sql(
-        d, [("l_quantity", 1.0, 50.0), ("l_extendedprice", 900.0, 105000.0)],
-        bits=8,
-    )
-    return f"""
-SELECT CAST(zv DIV 16 AS BIGINT) AS z_bucket,
-  CAST(count(*) AS BIGINT) AS n,
-  CAST(sum(l_orderkey) AS BIGINT) AS sum_okey
-FROM (SELECT ({z}) AS zv, l_orderkey FROM lineitem) t
-GROUP BY 1
-""" if d == SPARK else f"""
-SELECT CAST(zv // 16 AS BIGINT) AS z_bucket,
-  CAST(count(*) AS BIGINT) AS n,
-  CAST(sum(l_orderkey) AS BIGINT) AS sum_okey
-FROM (SELECT ({z}) AS zv, l_orderkey FROM lineitem) t
-GROUP BY 1
-"""
-
-
-@functools.cache
-def _bucketed_dir() -> str:
-    """The process's directory for the co-bucketed tables, removed at
-    interpreter exit."""
-    import shutil
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="dd_bucketed_")
-    atexit.register(shutil.rmtree, path, True)
-    return path
-
-
-def _build_bucketed_join_rollup(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..operators.storage import write_bucketed
-
-    # re-written on every call: the table names are fixed, so tables
-    # kept from an earlier call may hold another sf_dir's rows
-    base = _bucketed_dir()
-    for src, tbl, col in [
-        ("orders", "orders_bkt", "o_custkey"),
-        ("customer", "customer_bkt", "c_custkey"),
-    ]:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        write_bucketed(
-            spark.table(src), tbl, bucket_cols=col, n_buckets=8,
-            sort_cols=col, path=f"{base}/{tbl}",
-        )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = (
-            spark.table("orders_bkt")
-            .join(
-                spark.table("customer_bkt"),
-                F.col("o_custkey") == F.col("c_custkey"),
-            )
-            .groupBy("c_mktsegment")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_orders"),
-                F.sum(F.col("o_totalprice").cast("decimal(18,4)"))
-                .cast("decimal(38,4)")
-                .cast("double")
-                .alias("total_spend"),
-            )
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        # the scale contract this entry exists to prove: bucket-aligned
-        # join reads both sides without a shuffle
-        assert "Exchange hashpartitioning(o_custkey" not in plan
-        return j
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-@q("bucketed_join_rollup", spark=_build_bucketed_join_rollup)
-def _bucketed_join_rollup(d: str) -> str:
-    """S5 sink surface under the hash gate: orders and customer are
-    written as co-bucketed tables (8 buckets on the join key), then
-    joined WITHOUT any exchange (the builder asserts it) and rolled up.
-    The oracle runs the same join over the original parquet — storage
-    layout must not change values."""
-    return """
-SELECT c.c_mktsegment,
-  CAST(count(*) AS BIGINT) AS n_orders,
-  CAST(CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(18,4))), 4) AS DECIMAL(38,4)) AS DOUBLE) AS total_spend
-FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-GROUP BY c.c_mktsegment
-"""
-
-
-def _build_remote_login_scan(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..functions.misc import login
-    from ..sources import dd_read_arrow
-
-    srv = _server(sf_dir, "auth")
-    token = login(srv.url, "sparky", "hunter2")
-    scan = dd_read_arrow(
-        spark, srv.url, source_table="lineitem", auth_token=token
-    )
-    return scan.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("l_orderkey").cast("long").alias("sum_okey"),
-    )
-
-
-@q("remote_login_scan", spark=_build_remote_login_scan)
-def _remote_login_scan(d: str) -> str:
-    """dd_login (F8, dd_login.cpp:19-218) end-to-end under the hash
-    gate: POST /v1/login for a token, thread it into an authed
-    dd_read_arrow scan (every split request carries the Bearer header),
-    aggregate in Spark. The oracle reads the same parquet directly, so
-    'login + authed remote scan == direct scan' is value-checked."""
-    return """
-SELECT l_returnflag,
-  CAST(count(*) AS BIGINT) AS n,
-  CAST(sum(l_orderkey) AS BIGINT) AS sum_okey
-FROM lineitem GROUP BY l_returnflag
-"""
-
-
-def _build_remote_splits(spark, sf_dir: str):
-    from ..sources import dd_splits
-
-    srv = _server(sf_dir)
-    return dd_splits(
-        spark, srv.url, source_table="lineitem", split_size=64 * 4000
-    ).select("query", "producer_id", "split_size", "query_checksum")
-
-
-@q("remote_splits_plan", spark=_build_remote_splits)
-def _remote_splits(d: str) -> str:
-    """HASH-GATED: the gate projects the DETERMINISTIC columns of the
-    split plan — per-split rewritten query text, producer id, split
-    size, query checksum — and the oracle re-derives the local server's
-    planning contract from first principles: n = clamp(ceil(rows*64 /
-    split_size), 1, 32) splits (`_Handler._handle_plan` in
-    sources/local_server.py), each slicing by the order-stable row-hash
-    predicate, checksum = sha256(base_sql)[:16]. Only the
-    server-assigned endpoints[]/query ids (random ports, fresh int63s)
-    stay out of the hash — they defeat any value gate by nature."""
-    return """
-WITH p AS (
-  SELECT greatest(1, least(32, (count(*) * 64 + 255999) // 256000)) AS n
-  FROM lineitem
-)
-SELECT 'SELECT * FROM (SELECT * FROM lineitem) AS _b WHERE hash(_b) % '
-         || n || ' = ' || i AS query,
-  'local-duckdb' AS producer_id, CAST(256000 AS BIGINT) AS split_size,
-  substr(sha256('SELECT * FROM lineitem'), 1, 16) AS query_checksum
-FROM p, unnest(range(0, CAST(n AS BIGINT))) AS u(i)
-"""
-
-
-def _build_embed_neardup_lsh(spark, sf_dir: str):
-    from ..operators.similarity import embed_neardup_pairs_lsh
-
-    # Gate-scale parameterization (non-vacuous): the
-    # gate threshold is the corpus's top-pair band (_EMBED_NEARDUP_T
-    # comment above), and at cos=0.402 the hyperplane collision
-    # probability per bit is p = 1 - acos(0.402)/pi ~ 0.632, so 2-bit
-    # bands x 32 give a per-pair candidate-miss bound of
-    # (1 - p^2)^32 ~ 8e-8 — recall is certain for the seeded planes
-    # (verified below equal to brute force at sf0.001 and sf0.01).
-    # Wider bands trade candidate volume for recall; the production
-    # default (threshold 0.99, 8x8-bit bands) keeps the selective
-    # banding and is pytest-verified with planted pairs
-    # (tests/test_similarity.py).
-    return embed_neardup_pairs_lsh(
-        spark.table("embeddings"), threshold=_EMBED_NEARDUP_T, bands=32
-    )
-
-
-@q("embed_neardup_lsh", spark=_build_embed_neardup_lsh)
-def _embed_neardup_lsh_q(d: str) -> str:
-    """Sign-LSH near-dup scale path. Oracle = the brute-force pair SQL:
-    the LSH result is exact-verified, so it can only MISS pairs (never
-    add); the gate-scale banding makes a miss ~8e-8 per pair and the
-    seeded planes are deterministic, so LSH == brute force exactly."""
-    return _embed_neardup(d)
-
-
-# ==================================================== pipeline utilities
-# Deterministic sampling / packing / scrubbing — the data-mixing side of
-# a training pipeline. All pure SQL in both dialects (no builders): the
-# portable hash makes sampling reproducible across engines, task
-# retries, and cluster sizes (never rand()).
-
-
-@q("docs_stratified_sample")
-def _stratified_sample(d: str) -> str:
-    """Per-source quota sampling with a deterministic hash: exact,
-    reproducible rates without rand() (retry-safe, partition-count
-    independent) and no shuffle — a stateless filter the optimizer can
-    push into the scan."""
-    h = D.hash60_salted("source", "doc_id", d)
-    return f"""
-SELECT doc_id, source, lang FROM documents
-WHERE {h} % 100 < CASE WHEN source IN ('src0', 'src1', 'src2') THEN 10
-                       WHEN source IN ('src3', 'src4') THEN 50
-                       ELSE 25 END
-"""
-
-
-@q("pack_sequences")
-def _pack_sequences(d: str) -> str:
-    """Streaming sequence packing: greedy next-fit binning of docs into
-    2048-token budgets per source (window cumsum, one shuffle by
-    source). bin_id = cumulative-tokens-before DIV budget — the
-    standard single-pass packing approximation for pretraining batches;
-    deterministic given the (source, doc_id) order."""
-    div = _idiv("cum_before", "2048", d)
-    return f"""
-WITH t AS (
-  SELECT doc_id, source, CAST(ceil(length(text) / 4.0) AS BIGINT) AS tokens
-  FROM documents),
-c AS (
-  SELECT doc_id, source, tokens,
-    sum(tokens) OVER (PARTITION BY source ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      - tokens AS cum_before
-  FROM t)
-SELECT doc_id, source, tokens, CAST({div} AS BIGINT) AS bin_id FROM c
-"""
-
-
-# identical RE2/Java regexes; Spark literals need doubled backslashes,
-# and DuckDB's regexp_replace is first-match-only without the 'g' flag
-_PII_EMAIL = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+[.][A-Za-z]{2,}"
-_PII_URL = "https?://[^ ]+"
-_PII_NUM = "[0-9]{6,}"
-
-
-def redact_sql(col: str, d: str) -> str:
-    """Nested regexp_replace chain: emails -> <EMAIL>, URLs -> <URL>,
-    long digit runs -> <NUM>. Same automaton in both engines."""
-    e = col
-    for pat, rep in ((_PII_EMAIL, "<EMAIL>"), (_PII_URL, "<URL>"),
-                     (_PII_NUM, "<NUM>")):
-        if d == SPARK:
-            e = f"regexp_replace({e}, '{pat}', '{rep}')"
-        else:
-            e = f"regexp_replace({e}, '{pat}', '{rep}', 'g')"
-    return e
-
-
-@q("text_redact_pii")
-def _text_redact(d: str) -> str:
-    """PII scrub (emails/URLs/long numbers). Narrow, codegen'd, no
-    shuffle; the synthetic corpus contains no PII, so the oracle pins
-    the identity result — tests/test_redact.py pushes real PII through
-    both engines."""
-    return f"""
-SELECT doc_id, {redact_sql('text', d)} AS clean_text FROM documents
-"""
-
-
-# ==================================================== temporal joins
-# Engine-added as-of / interval joins (operators/joins.py). The oracle
-# runs a genuinely different algorithm (DuckDB's native ASOF JOIN /
-# IEJoin inequality join) against the Spark union-window / bin-bucket
-# plans — an algorithmic differential, not a reimplementation check.
-
-
-def _build_asof_join(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..operators.joins import asof_join
-
-    ev = spark.table("events").select(
-        "event_id", "user_id", F.expr(_event_us(SPARK)).alias("ts_us")
-    )
-    ord_ = (
-        spark.table("orders")
-        .groupBy(
-            F.col("o_custkey").alias("user_id"),
-            F.expr("unix_micros(CAST(o_orderdate AS TIMESTAMP))").alias("o_us"),
-        )
-        .agg(F.max("o_orderkey").alias("last_orderkey"))
-    )
-    return asof_join(
-        ev, ord_, "user_id", left_time="ts_us", right_time="o_us"
-    ).select("event_id", "user_id", "last_orderkey")
-
-
-@q("events_orders_asof_join", spark=_build_asof_join)
-def _asof_join_q(d: str) -> str:
-    """Point-in-time: each event picks up the customer's most recent
-    order at-or-before the event (orders pre-deduped to one row per
-    (custkey, date) so the as-of match is deterministic)."""
-    return """
-WITH ord AS (
-  SELECT o_custkey, o_orderdate, max(o_orderkey) AS last_orderkey
-  FROM orders GROUP BY 1, 2)
-SELECT e.event_id, e.user_id, o.last_orderkey
-FROM events e ASOF LEFT JOIN ord o
-  ON e.user_id = o.o_custkey
- AND epoch_us(e.ts) >= epoch_us(o.o_orderdate)
-"""
-
-
-def _build_activity_range(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..operators.joins import range_join_binned
-
-    ev = spark.table("events").select(
-        "event_id", "user_id", F.expr(_event_us(SPARK)).alias("ts_us")
-    )
-    prior = ev.select(
-        "user_id",
-        F.col("ts_us").alias("p_us"),
-        F.col("event_id").alias("p_id"),
-    )
-    pairs = range_join_binned(
-        ev, prior, "user_id",
-        left_time="ts_us", right_time="p_us",
-        lower=-300_000_000, upper=-1,
-    )
-    counts = pairs.groupBy("event_id").agg(F.count("*").alias("__n"))
-    return ev.join(counts, "event_id", "left").select(
-        "event_id",
-        "user_id",
-        F.coalesce(F.col("__n"), F.lit(0)).cast("long").alias("n_prior"),
-    )
-
-
-@q("events_activity_range_join", spark=_build_activity_range)
-def _activity_range_q(d: str) -> str:
-    """Bounded-window self correlation: per event, how many events the
-    same user produced in the strictly-preceding 5 minutes."""
-    return """
-SELECT e.event_id, e.user_id, CAST(count(p.event_id) AS BIGINT) AS n_prior
-FROM events e LEFT JOIN events p
-  ON p.user_id = e.user_id
- AND epoch_us(p.ts) >= epoch_us(e.ts) - 300000000
- AND epoch_us(p.ts) <= epoch_us(e.ts) - 1
-GROUP BY e.event_id, e.user_id
-"""
-
-
-def _build_skew_salted(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..operators.skew import salted_join
-
-    li = spark.table("lineitem").select(
-        F.col("l_suppkey").alias("suppkey"), "l_quantity"
-    )
-    sup = spark.table("supplier").select(
-        F.col("s_suppkey").alias("suppkey"), "s_nationkey"
-    )
-    return (
-        salted_join(li, sup, "suppkey", salt=8)
-        .groupBy("s_nationkey")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_items"),
-            F.sum(F.col("l_quantity").cast("decimal(18,4)"))
-            .cast("decimal(38,4)")
-            .cast("double")
-            .alias("sum_qty"),
-        )
-    )
-
-
-@q("skew_salted_join_agg", spark=_build_skew_salted)
-def _skew_salted_q(d: str) -> str:
-    """Fact-dim join + agg; Spark side runs it through the salted-join
-    operator (operators/skew.py) so the driver gate pins salting to the
-    plain-join answer."""
-    return """
-SELECT s_nationkey, CAST(count(*) AS BIGINT) AS n_items,
-       CAST(CAST(round(sum(CAST(l_quantity AS DECIMAL(18,4))), 4) AS DECIMAL(38,4)) AS DOUBLE) AS sum_qty
-FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-GROUP BY s_nationkey
-"""
-
-
-# ==================================================== multimodal plumbing
-# Media-as-binary columns (operators/multimodal.py) exercised on real
-# bytes: documents.text encoded as the opaque payload. The dedup-key
-# stage is JVM-side (sha2/octet_length — oracle-checked); the feature
-# stages synthesize valid images per document and run the REAL
-# pure-numpy/stdlib decoders through mapInPandas — and because the
-# payloads are deterministic byte arithmetic over documents.text, the
-# decode+pool output has a closed form a DuckDB oracle can mirror, so
-# the end-to-end pipelines are HASH-GATED, not rows-only.
-# Entropy-coded formats needing external codec libs (jpeg/mp4) stay
-# stubbed — the package depends on no codec library; PNG decodes for
-# real via stdlib zlib.
-
-
-def _build_media_keys(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..operators.multimodal import media_dedup_keys
-
-    media = spark.table("documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode("text", "UTF-8").alias("payload"),
-    )
-    return media_dedup_keys(media)
-
-
-@q("multimodal_media_keys", spark=_build_media_keys)
-def _media_keys_q(d: str) -> str:
-    return """
-SELECT doc_id AS media_id, sha256(text) AS content_sha256,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes
-FROM documents
-"""
-
-
-# hex("P6\n8 8\n255\n") — the 11-byte PPM header every synthesized
-# payload starts with; total payload = 11 + 192 raster bytes = 203
-_PPM_HDR_HEX = "P6\n8 8\n255\n".encode().hex().upper()
-
-# DuckDB mirror of extract_features' pooling over an 8x8x3 raster whose
-# bytes are `rh` (384 uppercase hex chars = 192 bytes): for each of the
-# 16 chunks, the EXACT integer sum of its 12 bytes, '|'-joined. The
-# Spark side rescales each float32 chunk-mean m to round(m*12), which
-# provably recovers the integer sum for sums <= 3060.
-_CHUNK_SUMS_ORACLE = """array_to_string(list_transform(
-    list_transform(range(0, 16), j ->
-      list_sum(list_transform(range(0, 12), i ->
-        (strpos('0123456789ABCDEF',
-                substr(rh, CAST(j*12+i AS INT)*2 + 1, 1)) - 1) * 16
-        + strpos('0123456789ABCDEF',
-                 substr(rh, CAST(j*12+i AS INT)*2 + 2, 1)) - 1
-      ))), s -> CAST(s AS VARCHAR)), '|')"""
-
-# Spark twin: float32 chunk-mean -> exact integer byte sum
-_CHUNK_SUMS_SPARK = (
-    "concat_ws('|', transform(feature, x -> CAST(round(x * 12) AS INT)))"
-)
-
-
-def _build_media_features(spark, sf_dir: str):
-    from pyspark.sql import functions as F
-
-    from ..operators.multimodal import decode_ppm, extract_features
-
-    media = _synth_ppm_media(spark)
-    # payload_sha is computed on the synthesized payload pre-decode and
-    # broadcast-joined back onto the (payload-free) feature rows
-    shas = media.select(
-        "media_id",
-        F.sha2(F.lower(F.hex("payload")), 256).alias("payload_sha"),
-    )
-    feats = extract_features(media, decoder=decode_ppm)
-    return (
-        feats.join(F.broadcast(shas), "media_id")
-        .select(
-            "media_id",
-            "kind",
-            "n_bytes",
-            "payload_sha",
-            # float32 chunk-mean -> exact integer byte sum (see oracle)
-            F.expr(_CHUNK_SUMS_SPARK).alias("feature"),
-        )
-    )
-
-
-@q("multimodal_features", spark=_build_media_features)
-def _media_features_q(d: str) -> str:
-    """HASH-GATED oracle for the real-decode feature pipeline. The
-    Spark side synthesizes
-    a valid 8x8 P6 payload per doc (header + first 192 text bytes,
-    zero-padded), runs the REAL pure-numpy PPM decoder through
-    mapInPandas, and pools 16 chunk-means; deterministic pixel math
-    means every output is a computable constant per doc, so DuckDB can
-    mirror it with blob/hex byte arithmetic:
-
-    - `payload_sha`: sha256 over the LOWERCASE HEX of the payload
-      (DuckDB 1.0's sha256 is VARCHAR-only, so raw-byte sha256 is not
-      oracle-computable; hex is injective, so hashing the hex pins the
-      exact payload bytes just as hard). The raw-byte sha256 that
-      extract_features itself emits stays pinned by pytest
-      (tests/test_multimodal.py).
-    - `feature`: each float32 chunk-mean m rescaled to the EXACT integer
-      byte sum round(m*12) — float32(s/12)*12 rounds back to s for all
-      s <= 3060 (error <= s*2^-24 < 0.5), so both engines compare
-      exact integers instead of decimal-formatted floats.
-
-    Reference-spirit anchor: the differential pattern of
-    test/sql/dd_read_arrow_split.test_slow:40-62 (pipeline vs direct
-    recomputation over identical inputs)."""
-    return f"""
-WITH hexed AS (
-  SELECT doc_id AS media_id,
-         rpad(substr(upper(hex(encode(text))), 1, 384), 384, '0') AS rh
-  FROM documents
-)
-SELECT media_id, 'image' AS kind, CAST(203 AS BIGINT) AS n_bytes,
-  sha256(lower('{_PPM_HDR_HEX}' || rh)) AS payload_sha,
-  {_CHUNK_SUMS_ORACLE} AS feature
-FROM hexed
-"""
-
-
-def _synth_ppm_media(spark):
-    """(media_id, kind, payload) with a VALID 8x8 P6 payload per doc:
-    header + the doc's first 192 text bytes as RGB raster (zero-padded,
-    truncated at 192 — Spark's binary rpad does both)."""
-    from pyspark.sql import functions as F
-
-    return spark.table("documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.expr(
-            f"concat(X'{_PPM_HDR_HEX}',"
-            " rpad(encode(text, 'UTF-8'), 192, X'00'))"
-        ).alias("payload"),
-    )
-
-
-def _build_png_features(spark, sf_dir: str):
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ..operators.multimodal import (
-        decode_png, encode_png, extract_features,
-    )
-
-    raw = spark.table("documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.expr("rpad(encode(text, 'UTF-8'), 192, X'00')").alias("raster"),
-    )
-
-    def encode(batches):
-        for pdf in batches:
-            payloads = [
-                encode_png(
-                    np.frombuffer(bytes(r), np.uint8).reshape(8, 8, 3)
-                )
-                for r in pdf["raster"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "payload": payloads,
-                }
-            )
-
-    media = raw.mapInPandas(
-        encode, schema="media_id BIGINT, kind STRING, payload BINARY"
-    )
-    feats = extract_features(media, decoder=decode_png)
-    return feats.select(
-        "media_id", "kind", F.expr(_CHUNK_SUMS_SPARK).alias("feature")
-    )
-
-
-@q("multimodal_png_features", spark=_build_png_features)
-def _png_features_q(d: str) -> str:
-    """HASH-GATED end-to-end PNG pipeline: per doc the
-    Spark side packs the first 192 text bytes (zero-padded) into an
-    8x8x3 raster, ENCODES it as a real PNG (stdlib zlib DEFLATE) in one
-    mapInPandas stage, DECODES it with decode_png (chunk walk, inflate,
-    row unfiltering) in the feature stage, and pools chunk sums. The
-    zlib-compressed payload bytes themselves are codec-dependent, so
-    n_bytes/sha stay out of this gate (the PPM twin pins payload
-    bytes); the DECODED pixels are deterministic byte arithmetic the
-    oracle mirrors exactly — any corruption across encode->deflate->
-    inflate->unfilter->pool breaks the hash."""
-    return f"""
-WITH hexed AS (
-  SELECT doc_id AS media_id,
-         rpad(substr(upper(hex(encode(text))), 1, 384), 384, '0') AS rh
-  FROM documents
-)
-SELECT media_id, 'image' AS kind,
-  {_CHUNK_SUMS_ORACLE} AS feature
-FROM hexed
-"""
-
-
-def _build_jpeg_features(spark, sf_dir: str):
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ..operators.jpeg import decode_jpeg, encode_jpeg
-    from ..operators.multimodal import extract_features
-
-    raw = spark.table("documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.expr("rpad(encode(text, 'UTF-8'), 64, X'00')").alias("vals"),
-    )
-
-    def encode(batches):
-        for pdf in batches:
-            ids, kinds, payloads = [], [], []
-            for mid, r in zip(pdf["media_id"], pdf["vals"]):
-                blocks = np.frombuffer(bytes(r), np.uint8).reshape(8, 8)
-                img = np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1)
-                ids.append(mid)
-                kinds.append("gray")
-                payloads.append(encode_jpeg(img, quant=1))
-                # r=g=b 4:2:2 twin: Y=v / Cb=Cr=128 exactly, so the
-                # decoded RGB is bit-exact and the oracle derivation
-                # is shared (entry docstring)
-                rgb = np.repeat(img[:, :, None], 3, axis=2)
-                ids.append(mid)
-                kinds.append("rgb422")
-                payloads.append(encode_jpeg(rgb, quant=1, subsample="422"))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "kind": kinds,
-                    "payload": payloads,
-                }
-            )
-
-    media = raw.mapInPandas(
-        encode, schema="media_id BIGINT, kind STRING, payload BINARY"
-    )
-    feats = extract_features(media, decoder=decode_jpeg)
-    return feats.select(
-        "media_id",
-        "kind",
-        F.expr(
-            "concat_ws('|', transform(feature,"
-            " x -> CAST(round(x * 8) AS INT)))"
-        ).alias("feature"),
-    )
-
-
-@q("multimodal_jpeg_features", spark=_build_jpeg_features)
-def _jpeg_features_q(d: str) -> str:
-    """HASH-GATED end-to-end baseline-JPEG pipeline: per doc the
-    Spark side expands the first 64 text bytes
-    (zero-padded) into a 64x64 grayscale image of UNIFORM 8x8 blocks
-    (block (i,j) = byte 8i+j), ENCODES it as a real baseline JPEG
-    (FDCT, all-ones quant, T.81 Huffman, byte stuffing) in one
-    mapInPandas stage, DECODES it with decode_jpeg (marker walk,
-    canonical Huffman, dequant, IDCT) in the feature stage, and pools
-    16 chunk-means. A constant 8x8 block at quant=1 is DC-only and
-    survives the full entropy->IDCT path byte-exactly (operators/
-    jpeg.py docstring derivation), so the decoded pixels are integer
-    arithmetic the oracle mirrors: chunk c covers 4 image rows inside
-    block-row b = c//2, so its mean is sum(bytes[8b:8b+8]) / 8 — and
-    float32(S/8) is exact (S * 2^-3), so round(m*8) recovers S with no
-    rounding slack at all. The Huffman byte stream itself is
-    codec-shaped, so n_bytes/sha stay out of this gate (the PPM twin
-    pins payload bytes); any corruption across encode->huffman->
-    decode->IDCT->pool breaks the hash.
-
-    TWO rows per doc, to cover chroma subsampling end to end:
-    kind='gray' is the single-component path above;
-    kind='rgb422' encodes the SAME blocks as an RGB image with r=g=b
-    at 4:2:2 (2x1 luma sampling). With r=g=b the BT.601 conversion
-    gives Y=v exactly and Cb=Cr=128 exactly (float residue ~1e-13,
-    crushed by DC rounding), so the decoded RGB is bit-exact (v,v,v)
-    — the oracle derivation is IDENTICAL per kind (each chunk's 768
-    interleaved channel values triplicate the 256 gray pixels, so the
-    chunk mean is unchanged) while the Spark path exercises
-    3-component SOF, chroma Huffman tables, 2x1 MCU geometry, chroma
-    upsampling and YCbCr->RGB reconstruction under the driver hash."""
-    return """
-WITH hexed AS (
-  SELECT doc_id AS media_id,
-         rpad(substr(upper(hex(encode(text))), 1, 128), 128, '0') AS rh
-  FROM documents
-)
-SELECT media_id, k.kind,
-  array_to_string(list_transform(range(0, 16), j ->
-    CAST(list_sum(list_transform(range(0, 8), i ->
-      (strpos('0123456789ABCDEF',
-              substr(rh, CAST((j // 2) * 8 + i AS INT) * 2 + 1, 1)) - 1)
-      * 16
-      + strpos('0123456789ABCDEF',
-               substr(rh, CAST((j // 2) * 8 + i AS INT) * 2 + 2, 1)) - 1
-    )) AS VARCHAR)), '|') AS feature
-FROM hexed, (VALUES ('gray'), ('rgb422')) AS k(kind)
-"""
-
-
-def _build_video_frames(spark, sf_dir: str):
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ..operators.multimodal import video_frame_features
-
-    raw = spark.table("documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.expr("encode(text, 'UTF-8')").alias("tb"),
-    )
-    # the encode fixture fans out CPU-bound JPEG-encode work per doc;
-    # a single-file scan would pin it (and everything downstream) to
-    # one core — spread the narrow (id, text) rows BEFORE the fan-out
-    # (same guard as video_frame_features; measured 28x at sf0.1)
-    sc = spark.sparkContext
-    if raw.rdd.getNumPartitions() < sc.defaultParallelism:
-        raw = raw.repartition(sc.defaultParallelism, "media_id")
-
-    def encode(batches):
-        from ..operators.jpeg import encode_jpeg
-        from ..operators.mp4 import encode_mjpeg_mp4
-
-        for pdf in batches:
-            payloads = []
-            for mid, tb in zip(pdf["media_id"], pdf["tb"]):
-                mid = int(mid)
-                b = bytes(tb) if tb is not None else b""
-                frames = []
-                for f in range(1 + mid % 3):
-                    chunk = b[64 * f : 64 * f + 64].ljust(64, b"\x00")
-                    blocks = np.frombuffer(chunk, np.uint8).reshape(8, 8)
-                    img = np.repeat(np.repeat(blocks, 8, 0), 8, 1)
-                    if f % 3:
-                        # frame 1 is r=g=b RGB at
-                        # 4:2:2, frame 2 at 4:2:0 — bit-exact decode
-                        # for both (multimodal_jpeg_features
-                        # docstring: Y=v exactly, Cb=Cr=128 exactly,
-                        # and 2x2 luma sampling keeps each 8x8 luma
-                        # block constant), so the oracle's per-frame
-                        # chunk sums are UNCHANGED while the demux->
-                        # decode path exercises ALL THREE sampling
-                        # modes inside MJPEG under the driver hash
-                        rgb = np.repeat(img[:, :, None], 3, 2)
-                        mode = "422" if f % 3 == 1 else "420"
-                        frames.append(
-                            encode_jpeg(rgb, quant=1, subsample=mode)
-                        )
-                    else:
-                        frames.append(encode_jpeg(img, quant=1))
-                payloads.append(encode_mjpeg_mp4(64, 64, frames))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    media = raw.mapInPandas(
-        encode, schema="media_id BIGINT, payload BINARY"
-    )
-    feats = video_frame_features(media)
-    return feats.select(
-        "media_id",
-        "frame_idx",
-        "codec",
-        F.expr(
-            "concat_ws('|', transform(feature,"
-            " x -> CAST(round(x * 8) AS INT)))"
-        ).alias("feature"),
-    )
-
-
-@q("multimodal_video_frames", spark=_build_video_frames)
-def _video_frames_q(d: str) -> str:
-    """HASH-GATED MJPEG frame-decode pipeline — the frame-decode slot
-    is REAL for one codec: per doc the
-    Spark side encodes 1 + doc_id%3 frames (frame f = text bytes
-    [64f, 64f+64) zero-padded, expanded to a 64x64 grayscale image of
-    uniform 8x8 blocks), each as a complete baseline JPEG
-    (operators/jpeg.py encode_jpeg, quant=1), MUXES them into a valid
-    MJPEG mp4 with real sample tables (operators/mp4.py
-    encode_mjpeg_mp4: stsz/stco/stsc/stts), then DEMUXES through those
-    tables and DECODES every frame (video_frame_features ->
-    extract_video_samples -> decode_jpeg) into 16 chunk-means. The
-    uniform-block/quant=1 construction survives the entropy->IDCT
-    path byte-exactly (the multimodal_jpeg_features derivation), so
-    the oracle mirrors every frame's chunk sums with integer
-    arithmetic over hex windows of the text — any corruption across
-    encode->mux->demux->entropy-decode->IDCT->pool breaks the hash.
-    Frame 1 is encoded as r=g=b RGB at 4:2:2
-    and frame 2 at 4:2:0 — bit-exact decode by the Y=v / Cb=Cr=128
-    construction (multimodal_jpeg_features docstring; 2x2 luma
-    sampling keeps each 8x8 luma block constant), so this oracle is
-    unchanged while the MJPEG demux->decode path exercises all three
-    sampling modes under the driver hash.
-    Inter-frame codecs (avc1/hev1/av01) remain the declared stub;
-    the codec-library boundary is per-codec, not per-operator."""
-    return """
-WITH frames AS (
-  SELECT doc_id AS media_id,
-         CAST(f AS INT) AS frame_idx,
-         rpad(substr(upper(hex(encode(text))),
-                     1 + 128 * CAST(f AS INT), 128), 128, '0') AS rh
-  FROM (SELECT doc_id, text, unnest(range(0, 1 + doc_id % 3)) AS f
-        FROM documents) t
-)
-SELECT media_id, frame_idx, 'jpeg' AS codec,
-  array_to_string(list_transform(range(0, 16), j ->
-    CAST(list_sum(list_transform(range(0, 8), i ->
-      (strpos('0123456789ABCDEF',
-              substr(rh, CAST((j // 2) * 8 + i AS INT) * 2 + 1, 1)) - 1)
-      * 16
-      + strpos('0123456789ABCDEF',
-               substr(rh, CAST((j // 2) * 8 + i AS INT) * 2 + 2, 1)) - 1
-    )) AS VARCHAR)), '|') AS feature
-FROM frames
-"""
-
-
-def _build_video_metadata(spark, sf_dir: str):
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ..operators.mp4 import encode_mp4_skeleton, video_metadata
-
-    raw = spark.table("documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.expr("substring(encode(text, 'UTF-8'), 1, 64)").alias("mdat"),
-    )
-    codecs = ["avc1", "hev1", "mp4v", "av01"]
-
-    def encode(batches):
-        for pdf in batches:
-            payloads = []
-            for mid, md in zip(pdf["media_id"], pdf["mdat"]):
-                mid = int(mid)
-                payloads.append(
-                    encode_mp4_skeleton(
-                        1 + (mid * 37) % 7_200_000,
-                        16 * (1 + mid % 120),
-                        16 * (1 + mid % 68),
-                        codec=codecs[mid % 4],
-                        with_audio=(mid % 2 == 1),
-                        mdat=bytes(md) if md is not None else b"",
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    media = raw.mapInPandas(
-        encode, schema="media_id BIGINT, payload BINARY"
-    )
-    return video_metadata(media)
-
-
-@q("multimodal_video_metadata", spark=_build_video_metadata)
-def _video_metadata_q(d: str) -> str:
-    """HASH-GATED MP4 container-metadata pipeline (plumbing level):
-    per doc the Spark side builds a byte-real ISO
-    BMFF tree (operators/mp4.py encode_mp4_skeleton — ftyp + moov with
-    mvhd, tkhd, mdhd, hdlr, stsd sample entries; every doc_id-derived
-    field below becomes big-endian struct bytes) in one mapInPandas
-    stage, then walks it back with parse_mp4_metadata in a second
-    stage (video_metadata operator: payload dropped in-stage, only
-    ~60-byte metadata rows survive). All boxes are fixed-size except
-    mdat (the doc's first 64 text bytes), so the oracle mirrors every
-    output — including total byte size via the skeleton size law —
-    with integer arithmetic; any corruption in the box writer or the
-    walker breaks the hash. Frame DECODE is real for MJPEG
-    (multimodal_video_frames); inter-frame codecs stay behind
-    multimodal.py stub_decoder."""
-    from ..operators.mp4 import AUDIO_TRAK_BYTES, VIDEO_SKELETON_BYTES
-
-    return f"""
-SELECT doc_id AS media_id, 'isom' AS major_brand,
-  CAST({VIDEO_SKELETON_BYTES} + (doc_id % 2) * {AUDIO_TRAK_BYTES}
-       + least(octet_length(encode(text)), 64) AS BIGINT) AS n_bytes,
-  CAST(1 + (doc_id * 37) % 7200000 AS BIGINT) AS duration_ms,
-  CAST(1 + doc_id % 2 AS INT) AS n_tracks,
-  CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 'avc1' WHEN 1 THEN 'hev1'
-       WHEN 2 THEN 'mp4v' ELSE 'av01' END AS codec,
-  CAST(16 * (1 + doc_id % 120) AS INT) AS width,
-  CAST(16 * (1 + doc_id % 68) AS INT) AS height
-FROM documents
-"""
 
 
 def run_spark(spark, name: str, sf_dir: str):
@@ -4946,3 +87,17 @@ def spark_sql_for(name: str) -> str:
 
 def oracle_sql_for(name: str) -> str:
     return CATALOG[name].sql(DUCK)
+
+
+from . import (  # noqa: E402,F401  - registers the entries, in this order
+    relational,
+    tpch,
+    functions,
+    dedup,
+    similarity,
+    text,
+    remote,
+    pipeline,
+    joins,
+    multimodal,
+)

@@ -1,7 +1,7 @@
 """Local DuckDB-backed emulation of the reference server's wire protocol.
 
 Implements the four endpoints the extension's HTTP client speaks
-(/root/reference/src/http/arrow_http_client.cpp and
+(the reference's src/http/arrow_http_client.cpp and
 src/scalar_function/dd_login.cpp), so `dd_read_arrow` / `dd_splits` /
 `login` can be exercised end-to-end with no external dependencies:
 
@@ -47,7 +47,7 @@ import pyarrow.ipc
 DEFAULT_SPLIT_SIZE = 1 << 20  # bytes, used when no x-dd-split-size header
 MAX_SPLITS = 32
 
-# /v1/plan EC-less classification (r12 advice #1). Operators that READ
+# /v1/plan EC-less classification. Operators that READ
 # stored data: an EC-less plan containing one means the EXPLAIN
 # rendering drifted — hard-fail, never a one-split collapse.
 DATA_READ_OPS = frozenset({
@@ -69,9 +69,8 @@ def _plan_operator_names(explain_txt: str) -> list[str]:
     """Operator names parsed STRUCTURALLY from DuckDB's rendered
     EXPLAIN boxes: each operator's name is the single uppercase token
     on a line directly below a top border ('┌───┐'). Two renderer
-    facts the parse must honor (caught adversarially in r13): sibling
-    subtrees render SIDE BY SIDE, so one line can hold SEVERAL box
-    headers ('│ A ││ B │' — findall, not a single anchored match: an
+    facts the parse must honor: sibling subtrees render SIDE BY SIDE,
+    so one line can hold SEVERAL box headers ('│ A ││ B │' — findall, not a single anchored match: an
     EC-less data-read op hidden in a right-hand column must not be
     invisible), and a box with a right-sibling connector closes its
     header with '├', not '│' ('│ UNION ├───┐'). Content lines
@@ -92,8 +91,8 @@ def _plan_operator_names(explain_txt: str) -> list[str]:
 
 def _plan_rows_estimate(explain_txt: str) -> int:
     """Cardinality estimate for split planning from a rendered EXPLAIN
-    (r12 advice #1 — pure and unit-testable so every branch, including
-    the unknown-operator hard-fail, is pinned without forcing DuckDB
+    (pure and unit-testable so every branch, including the
+    unknown-operator hard-fail, is pinned without forcing DuckDB
     to render exotic plans). Returns the topmost EC when present, 0
     for known estimate-free constant plans; raises ValueError (the
     handler 400s) when a data-reading operator carries no EC or when
@@ -154,6 +153,8 @@ class _Handler(BaseHTTPRequestHandler):
         if parsed.path == "/v1/plan":
             return self._handle_plan(qs)
         if parsed.path == "/v1/cancel":
+            if not self._authed():
+                return self._deny(401, "unauthorized")
             qid = qs.get("id", ["0"])[0]
             self.server.cancelled.append(int(qid))
             return self._deny(200, "cancelled")
@@ -227,14 +228,13 @@ class _Handler(BaseHTTPRequestHandler):
             # results) are written whole so only data fetches tear
             do_trunc = trunc is not None and len(batches) > trunc
             if do_trunc:
-                # Serialize the torn prefix to MEMORY, close the
-                # writer there, and copy the bytes minus the trailing
-                # 8-byte EOS marker into the response (r10 advice #4:
-                # the old path left an unclosed writer on the socket
-                # sink — a GC finalizer that flushed anything would
-                # emit bytes outside the chunked framing). The wire
-                # bytes are identical: schema message + kept batch
-                # messages, no EOS, then the terminal HTTP chunk.
+                # Serialize the torn prefix to MEMORY, close the writer
+                # there, and copy the bytes minus the trailing 8-byte EOS
+                # marker into the response (a writer left unclosed on the
+                # socket sink would emit bytes outside the chunked framing
+                # if a GC finalizer flushed it). The wire bytes are
+                # identical: schema message + kept batch messages, no EOS,
+                # then the terminal HTTP chunk.
                 buf = pa.BufferOutputStream()
                 writer = pa.ipc.new_stream(buf, tbl.schema, options=opts)
                 for batch in batches[:trunc]:
@@ -245,14 +245,13 @@ class _Handler(BaseHTTPRequestHandler):
                 # (0xFFFFFFFF continuation + zero length); if pyarrow
                 # ever switches the stream format the torn-stream
                 # simulation must fail loudly, not emit a malformed
-                # prefix (r11 advice #3)
+                # prefix
                 eos = b"\xff\xff\xff\xff\x00\x00\x00\x00"
                 if body[-8:] != eos:
                     # explicit raise, not assert: the guard must
                     # survive python -O, which strips asserts and
                     # would silently revert to blind [:-8] slicing —
                     # the exact failure mode this check makes loud
-                    # (r12 advice #3)
                     raise RuntimeError(
                         f"IPC stream tail {body[-8:]!r} != expected"
                         " EOS marker — stream format drifted; fix"
@@ -314,9 +313,8 @@ class _Handler(BaseHTTPRequestHandler):
             # inside a DUMMY_SCAN projection cannot trip the
             # data-read hard-fail, and an operator the allowlists
             # don't know 400s loudly instead of silently collapsing
-            # to one split (r12 advice #1; supersedes the r11
-            # whole-text substring match, which had both failure
-            # modes; no-EC-on-data-read hard-fail per r10 advice #3).
+            # to one split (a whole-text substring match has both
+            # failure modes).
             try:
                 nrows = _plan_rows_estimate(txt)
             except ValueError as ve:

@@ -133,7 +133,7 @@ class MinHashIndex:
         self.max_bucket_docs = max_bucket_docs
         self.capped = capped
         # legacy persisted indexes (pre-cap-record meta.json) load in
-        # a QUERY-ONLY state (r10 advice #2): screening against them
+        # a QUERY-ONLY state: screening against them
         # is safe — the resurrect-dropped-buckets hazard exists only
         # on the extend path — but extend/save refuse, because the
         # cap policy they were built under is unknowable.
@@ -353,9 +353,9 @@ def neardup_screen_stream(
     index's detail array has CAPPED bands nulled, so the anchor is the
     first shared SURVIVING band — candidate rows only exist for
     surviving buckets, and anchoring on a capped band would silently
-    drop pairs that also share a later surviving band (r9 advisor
-    fix; under a cap the screen now loses a pair only if EVERY shared
-    band is capped, exactly the batch pipeline's law).
+    drop pairs that also share a later surviving band (under a cap
+    the screen loses a pair only if EVERY shared band is capped,
+    exactly the batch pipeline's law).
     (A pair is per-(incoming doc) — re-arrivals of the same doc_id in
     later micro-batches re-emit, exactly like every stateless filter.)
 
@@ -450,70 +450,48 @@ def save_minhash_index(index: MinHashIndex, path: str) -> None:
     """Persist the screening index across sessions: buckets + detail
     as parquet, the kernel params (seeds, shingle width, band count —
     a screen MUST hash with the index's own params) as meta.json."""
-    import json
-    import os
+    from ..operators.storage import _save_index_dir
 
-    if index.query_only:
-        # re-saving would write meta WITHOUT the legacy marker and
-        # launder the unknown cap policy into an "uncapped" modern
-        # index — the exact hazard query-only load exists to contain
-        raise ValueError(
-            "refusing to save a query-only (legacy-loaded) index — "
-            "rebuild it to make it persistable"
-        )
-
-    index.buckets.write.mode("overwrite").parquet(
-        os.path.join(path, "buckets")
+    _save_index_dir(
+        path, "minhash-index-v1",
+        {"buckets": index.buckets, "detail": index.detail,
+         "capped": index.capped},
+        {
+            "a": list(index.a),
+            "b": list(index.b),
+            "shingle_n": index.shingle_n,
+            "bands": index.bands,
+            "max_bucket_docs": index.max_bucket_docs,
+            "has_capped": index.capped is not None,
+        },
+        query_only=index.query_only,
     )
-    index.detail.write.mode("overwrite").parquet(
-        os.path.join(path, "detail")
-    )
-    if index.capped is not None:
-        index.capped.write.mode("overwrite").parquet(
-            os.path.join(path, "capped")
-        )
-    meta = {
-        "format": "minhash-index-v1",
-        "a": list(index.a),
-        "b": list(index.b),
-        "shingle_n": index.shingle_n,
-        "bands": index.bands,
-        "max_bucket_docs": index.max_bucket_docs,
-        "has_capped": index.capped is not None,
-    }
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(meta, f)
 
 
 def load_minhash_index(spark, path: str) -> MinHashIndex:
-    import json
-    import os
+    from ..operators.storage import _load_index_dir
 
-    with open(os.path.join(path, "meta.json")) as f:
-        meta = json.load(f)
-    if meta.get("format") != "minhash-index-v1":
-        raise ValueError(f"not a minhash-index-v1 dir: {path}")
+    meta, table = _load_index_dir(
+        spark, path, "minhash-index-v1", "a minhash-index-v1 dir"
+    )
     # Pre-capped-record indexes lack the max_bucket_docs key; the
     # build default back then was a cap of 1024, so treating the
     # missing key as "uncapped" would silently extend a capped index
     # and resurrect dropped buckets with partial membership. QUERY-
-    # ONLY load (r10 advice #2): screening against the index is safe
-    # — the hazard exists only on the extend path — so read-only
-    # consumers keep working; extend_minhash_index and
-    # save_minhash_index refuse on the query_only flag.
+    # ONLY load: screening against the index is safe — the hazard
+    # exists only on the extend path — so read-only consumers keep
+    # working; extend_minhash_index and save_minhash_index refuse on
+    # the query_only flag.
     legacy = "max_bucket_docs" not in meta
-    capped = None
-    if meta.get("has_capped"):
-        capped = spark.read.parquet(os.path.join(path, "capped"))
     return MinHashIndex(
-        buckets=spark.read.parquet(os.path.join(path, "buckets")),
-        detail=spark.read.parquet(os.path.join(path, "detail")),
+        buckets=table("buckets"),
+        detail=table("detail"),
         a=meta["a"],
         b=meta["b"],
         shingle_n=meta["shingle_n"],
         bands=meta["bands"],
         max_bucket_docs=meta.get("max_bucket_docs"),
-        capped=capped,
+        capped=table("capped") if meta.get("has_capped") else None,
         query_only=legacy,
     )
 
@@ -523,56 +501,37 @@ def save_substring_index(index: "SubstringIndex", path: str) -> None:
     layout discipline as save_minhash_index (tables as parquet, kernel
     params + cap policy as meta.json, the capped record included so a
     loaded index stays extendable)."""
-    import json
-    import os
+    from ..operators.storage import _save_index_dir
 
-    if index.query_only:
-        raise ValueError(
-            "refusing to save a query-only (legacy-loaded) index — "
-            "rebuild it to make it persistable"
-        )
-
-    index.buckets.write.mode("overwrite").parquet(
-        os.path.join(path, "buckets")
+    _save_index_dir(
+        path, "substring-index-v1",
+        {"buckets": index.buckets, "detail": index.detail,
+         "capped": index.capped},
+        {
+            "window_tokens": index.window_tokens,
+            "max_bucket_docs": index.max_bucket_docs,
+            "has_capped": index.capped is not None,
+        },
+        query_only=index.query_only,
     )
-    index.detail.write.mode("overwrite").parquet(
-        os.path.join(path, "detail")
-    )
-    if index.capped is not None:
-        index.capped.write.mode("overwrite").parquet(
-            os.path.join(path, "capped")
-        )
-    meta = {
-        "format": "substring-index-v1",
-        "window_tokens": index.window_tokens,
-        "max_bucket_docs": index.max_bucket_docs,
-        "has_capped": index.capped is not None,
-    }
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(meta, f)
 
 
 def load_substring_index(spark, path: str) -> "SubstringIndex":
-    import json
-    import os
+    from ..operators.storage import _load_index_dir
 
-    with open(os.path.join(path, "meta.json")) as f:
-        meta = json.load(f)
-    if meta.get("format") != "substring-index-v1":
-        raise ValueError(f"not a substring-index-v1 dir: {path}")
+    meta, table = _load_index_dir(
+        spark, path, "substring-index-v1", "a substring-index-v1 dir"
+    )
     # Same legacy-meta hazard as load_minhash_index: a missing cap
     # key means the cap policy is unknowable, not "uncapped" — load
     # query-only (screens work, extend/save refuse).
     legacy = "max_bucket_docs" not in meta
-    capped = None
-    if meta.get("has_capped"):
-        capped = spark.read.parquet(os.path.join(path, "capped"))
     return SubstringIndex(
-        buckets=spark.read.parquet(os.path.join(path, "buckets")),
-        detail=spark.read.parquet(os.path.join(path, "detail")),
+        buckets=table("buckets"),
+        detail=table("detail"),
         window_tokens=meta["window_tokens"],
         max_bucket_docs=meta.get("max_bucket_docs"),
-        capped=capped,
+        capped=table("capped") if meta.get("has_capped") else None,
         query_only=legacy,
     )
 
@@ -584,45 +543,40 @@ def save_semantic_index(index: "SemanticIndex", path: str) -> None:
     JSON. Centroids round-trip as exact float64 JSON repr, the
     save_ivfpq_index discipline, so screens against the loaded index
     are bit-identical."""
-    import json
-    import os
-
     import numpy as np
 
-    index.members.write.mode("overwrite").parquet(
-        os.path.join(path, "members")
+    from ..operators.storage import _save_index_dir
+
+    _save_index_dir(
+        path, "semantic-index-v1",
+        {"members": index.members},
+        {
+            "centroids": np.asarray(index.centroids, np.float64).tolist(),
+            "spill": int(index.spill),
+            "vec_col": index.vec_col,
+            "max_cell_rows": index.max_cell_rows,
+            "primary_counts": (
+                {str(k): v for k, v in index.primary_counts.items()}
+                if index.primary_counts is not None
+                else None
+            ),
+            "capped_cells": list(index.capped_cells),
+        },
     )
-    meta = {
-        "format": "semantic-index-v1",
-        "centroids": np.asarray(index.centroids, np.float64).tolist(),
-        "spill": int(index.spill),
-        "vec_col": index.vec_col,
-        "max_cell_rows": index.max_cell_rows,
-        "primary_counts": (
-            {str(k): v for k, v in index.primary_counts.items()}
-            if index.primary_counts is not None
-            else None
-        ),
-        "capped_cells": list(index.capped_cells),
-    }
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        json.dump(meta, f)
 
 
 def load_semantic_index(spark, path: str) -> "SemanticIndex":
-    import json
-    import os
-
     import numpy as np
 
-    with open(os.path.join(path, "meta.json")) as f:
-        meta = json.load(f)
-    if meta.get("format") != "semantic-index-v1":
-        raise ValueError(f"not a semantic-index-v1 dir: {path}")
+    from ..operators.storage import _load_index_dir
+
+    meta, table = _load_index_dir(
+        spark, path, "semantic-index-v1", "a semantic-index-v1 dir"
+    )
     counts = meta.get("primary_counts")
     return SemanticIndex(
         centroids=np.asarray(meta["centroids"], np.float64),
-        members=spark.read.parquet(os.path.join(path, "members")),
+        members=table("members"),
         spill=int(meta["spill"]),
         vec_col=meta["vec_col"],
         max_cell_rows=meta.get("max_cell_rows"),
@@ -681,7 +635,7 @@ def build_substring_index(
 ) -> SubstringIndex:
     """Index with the SAME window hashing as the batch
     `dedup_exact_substring` entry (multi-arg xxhash64 over the
-    window's tokens — equality-based bucketing, plans/queries.py), so
+    window's tokens — equality-based bucketing, plans/text.py), so
     a SELF-screen of the corpus finds exactly the batch pipeline's
     pairs (pinned in tests/test_streaming_neardup.py)."""
     from pyspark.sql import functions as F
@@ -897,7 +851,7 @@ def build_semantic_index(
     whose PRE-SPILL (primary) population exceeds it are dropped WHOLE
     at build — and their ids nulled from every kept-cells array, so
     the screen's first-shared-cell anchor ranges over surviving cells
-    only (the same law the MinHash screen learned in r9)."""
+    only (the same law as the MinHash screen)."""
     import numpy as np
     from pyspark.sql import functions as F
 

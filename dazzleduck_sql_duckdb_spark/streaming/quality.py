@@ -2,7 +2,7 @@
 document stream against a STATIC unigram LM.
 
 This is the deployment shape of the CCNet-style filter (the batch twin
-is the `text_perplexity` catalog entry, plans/queries.py): the LM is
+is the `text_perplexity` catalog entry, plans/text.py): the LM is
 trained ONCE on a reference corpus and then every incoming document is
 scored against it — so the streaming operator must be STATELESS per
 row. The batch formulation's explode -> join -> per-doc GROUP BY would
@@ -34,11 +34,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # sized to what the create_map-literal scoring expression actually
-# supports (r9 advisor fix: ~2 child expressions per vocab entry; the
-# plan/codegen degrades long before 1M entries, so a 1M cap could
-# never fire usefully). Realistic reference LMs sit well under this;
-# past it the right implementation is a broadcast join, not a bigger
-# literal.
+# supports (~2 child expressions per vocab entry; the plan/codegen
+# degrades long before 1M entries, so a 1M cap could never fire
+# usefully). Realistic reference LMs sit well under this; past it the
+# right implementation is a broadcast join, not a bigger literal.
 MAX_LM_VOCAB = 100_000
 
 
@@ -63,11 +62,11 @@ def build_unigram_lm(docs: DataFrame, text_col: str = "text") -> UnigramLM:
         F.array_remove(F.split(F.lower(F.col(text_col)), r"\s+"), "")
     ).alias("tok")
     agg = docs.select(tok).groupBy("tok").count()
-    # probe the cap BEFORE collecting (r9 advisor fix): on an
-    # unbounded vocabulary (URLs, numbers at corpus scale) a
-    # post-collect guard OOMs the driver before it fires. The probe
-    # re-runs the aggregation once — acceptable for a train-once
-    # reference-corpus path, and limit(cap+1) bounds the probe.
+    # probe the cap BEFORE collecting: on an unbounded vocabulary (URLs,
+    # numbers at corpus scale) a post-collect guard OOMs the driver
+    # before it fires. The probe re-runs the aggregation once —
+    # acceptable for a train-once reference-corpus path, and
+    # limit(cap+1) bounds the probe.
     over = agg.limit(MAX_LM_VOCAB + 1).count()
     if over > MAX_LM_VOCAB:
         raise ValueError(

@@ -308,6 +308,31 @@ def test_auth_token_roundtrip(registered):
             login(srv.url, "user", "wrong")
 
 
+def test_cancel_requires_the_bearer_token():
+    """/v1/cancel checks the token the way /v1/query and /v1/plan do: a
+    wrong token gets 401 and records nothing, so no caller without the
+    token can cancel another's query."""
+    import urllib.error
+    import urllib.request
+
+    def cancel(srv, qid, token):
+        req = urllib.request.Request(
+            f"{srv.url}/v1/cancel?id={qid}",
+            headers={"Authorization": f"Bearer {token}"},
+        )
+        try:
+            with urllib.request.urlopen(req, timeout=5) as resp:
+                return resp.status
+        except urllib.error.HTTPError as e:
+            return e.code
+
+    with ArrowTestServer({"lineitem": LINEITEM}, token="sekrit") as srv:
+        assert cancel(srv, 43, "wrong") == 401
+        assert srv.cancelled == []
+        assert cancel(srv, 44, "sekrit") == 200
+        assert srv.cancelled == [44]
+
+
 def test_projection_pushdown_via_columns_option(registered, server):
     server.queries.clear()
     df = dd_read_arrow(

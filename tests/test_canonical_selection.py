@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import pytest
 
-from dazzleduck_sql_duckdb_spark.plans import queries as Q
+from dazzleduck_sql_duckdb_spark.plans import dedup as Q
 
 
 @pytest.fixture(autouse=True)

@@ -18,6 +18,10 @@ import pandas as pd
 import pytest
 
 from dazzleduck_sql_duckdb_spark.plans import queries as Q
+from dazzleduck_sql_duckdb_spark.plans.text import (
+    _contamination,
+    _contamination_chunked_sql,
+)
 
 
 def _mk_docs(n_sources: int, seed: int = 11) -> pd.DataFrame:
@@ -111,11 +115,11 @@ def test_chunked_sql_equals_mask_sql_when_both_apply(spark, tables):
     mask = {
         tuple(r)
         for r in spark.sql(
-            Q._contamination(Q.SPARK)
+            _contamination(Q.SPARK)
         ).collect()
     }
     chunked = {
         tuple(r)
-        for r in spark.sql(Q._contamination_chunked_sql()).collect()
+        for r in spark.sql(_contamination_chunked_sql()).collect()
     }
     assert chunked == mask and len(mask) > 0

@@ -21,7 +21,7 @@ from dazzleduck_sql_duckdb_spark.operators.dedup import (
     make_shingle_sig_udf,
     simhash_column,
 )
-from dazzleduck_sql_duckdb_spark.plans.queries import MINHASH_A, MINHASH_B
+from dazzleduck_sql_duckdb_spark.plans.dedup import MINHASH_A, MINHASH_B
 
 # characters whose handling differs between engines or needs care:
 # dotted capital I (lowers to two codepoints), capital sigma (final form

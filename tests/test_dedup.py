@@ -298,11 +298,12 @@ def test_simhash_scale_gate_picks_bounded_form(spark, tables):
     """At gate scale (500 docs <= SIMHASH_BUCKET_CAP) the builder's
     corpus count proves every bucket fits one aggregation buffer, so
     the branch-free single-aggregation plan must be chosen."""
-    from dazzleduck_sql_duckdb_spark.plans import queries as Q
+    from dazzleduck_sql_duckdb_spark.plans import dedup as Q
+    from dazzleduck_sql_duckdb_spark.plans.queries import run_spark
 
     n_docs = spark.table("documents").count()
     assert n_docs <= Q.SIMHASH_BUCKET_CAP
-    df = Q.run_spark(spark, "dedup_simhash", C.SF_DIR)
+    df = run_spark(spark, "dedup_simhash", C.SF_DIR)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
@@ -317,7 +318,7 @@ def test_simhash_mega_bucket_form_identical(spark, tables, monkeypatch):
     EXACTLY the pairs of the single-aggregation form on a corpus with
     a genuine mega-bucket, with the oversized bucket's pairs coming
     through the sort-merge branch (bounded per-group buffers)."""
-    from dazzleduck_sql_duckdb_spark.plans import queries as Q
+    from dazzleduck_sql_duckdb_spark.plans import dedup as Q
 
     V0 = 0x1234  # shared chunk-0 value for the mega bucket
     rows = []

@@ -206,9 +206,9 @@ def test_branchless_round_bridge_agrees_on_divergent_boundary(sview, duck):
     IEEE ops, so both engines round the TRUE binary value HALF_UP —
     including at the exact boundary where native round() diverges
     (1.005 at k=2: Spark 1.01, DuckDB 1.0, pinned above; the bridge
-    gives 1.0 in BOTH). plans/queries.py::_round6 is this bridge at
+    gives 1.0 in BOTH). plans/dialect.py::_round6 is this bridge at
     k=6."""
-    from dazzleduck_sql_duckdb_spark.plans.queries import _round6
+    from dazzleduck_sql_duckdb_spark.plans.dialect import _round6
 
     for lit in ("1.005", "-1.005", "0.1234565", "2.5e-7", "NULL"):
         x = f"CAST({lit} AS DOUBLE)"

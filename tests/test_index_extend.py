@@ -17,7 +17,7 @@ import pytest
 from dazzleduck_sql_duckdb_spark.operators.similarity import (
     train_centroids,
 )
-from dazzleduck_sql_duckdb_spark.plans import queries as Q
+from dazzleduck_sql_duckdb_spark.plans import dedup as Q
 from dazzleduck_sql_duckdb_spark.streaming.dedup import (
     build_minhash_index,
     build_semantic_index,

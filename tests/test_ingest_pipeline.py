@@ -25,7 +25,7 @@ import random
 
 import pytest
 
-from dazzleduck_sql_duckdb_spark.plans import queries as Q
+from dazzleduck_sql_duckdb_spark.plans import dedup as Q
 from dazzleduck_sql_duckdb_spark.streaming.dedup import (
     build_minhash_index,
     extend_minhash_index,

@@ -35,6 +35,17 @@ def test_every_query_has_oracle_or_documented_skip(spark):
     assert set(E.queries()) == set(E.oracle_sql())
 
 
+def test_catalog_refuses_a_name_registered_twice():
+    """A repeated name must fail at import instead of silently dropping
+    the first entry (which the parity gate could not notice)."""
+    from dazzleduck_sql_duckdb_spark.plans import queries as Q
+
+    before = dict(Q.CATALOG)
+    with pytest.raises(ValueError, match="lineitem_count"):
+        Q.q("lineitem_count")(lambda d: "SELECT 1 AS n")
+    assert Q.CATALOG == before
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as E
 

@@ -202,7 +202,7 @@ def test_wav_roundtrip_any_pcm(frames, channels, seed):
 
 
 def test_lineitem_quantity_is_integral():
-    """q18's long-domain sum (plans/queries.py _q18) is exact ONLY
+    """q18's long-domain sum (plans/tpch.py _q18) is exact ONLY
     because l_quantity is integral (TPC-H: integers 1..50) — pin that
     precondition against every generated test scale."""
     import glob

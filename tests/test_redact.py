@@ -9,7 +9,7 @@ import duckdb
 import pytest
 
 from dazzleduck_sql_duckdb_spark.plans.dialect import DUCK, SPARK
-from dazzleduck_sql_duckdb_spark.plans.queries import redact_sql
+from dazzleduck_sql_duckdb_spark.plans.pipeline import redact_sql
 
 CASES = [
     "contact me at jane.doe+spam@example.co.uk please",

@@ -250,8 +250,8 @@ def test_ivfpq_production_config_recall(spark, emb):
     from dazzleduck_sql_duckdb_spark.operators.similarity import (
         ann_ivfpq_topk,
     )
-    from dazzleduck_sql_duckdb_spark.plans.queries import (
-        IVFPQ_RECALL_FLOOR,
+    from dazzleduck_sql_duckdb_spark.plans.similarity import (
+        ANN_RECALL_FLOOR as IVFPQ_RECALL_FLOOR,
     )
 
     queries = emb.where("vec_id % 100 = 0")
@@ -708,7 +708,7 @@ def test_per_query_differential_trips_on_broken_probe(spark, tables):
     driver hash breaks loudly instead of the entry sitting rows-only."""
     from pyspark.sql import functions as F
 
-    from dazzleduck_sql_duckdb_spark.plans.queries import (
+    from dazzleduck_sql_duckdb_spark.plans.similarity import (
         _build_ann_ivf_probed_diff,
         _build_ann_per_query_diff,
     )

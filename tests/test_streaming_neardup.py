@@ -21,7 +21,7 @@ import os
 
 import pytest
 
-from dazzleduck_sql_duckdb_spark.plans import queries as Q
+from dazzleduck_sql_duckdb_spark.plans import dedup as Q
 from dazzleduck_sql_duckdb_spark.streaming import run_stream_to_memory
 from dazzleduck_sql_duckdb_spark.streaming.dedup import (
     build_minhash_index,

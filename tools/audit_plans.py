@@ -24,9 +24,8 @@ JOIN_RE = re.compile(
     r"BroadcastNestedLoopJoin|CartesianProduct)"
 )
 
-# SortMergeJoin-by-design allowlist (r11 verdict "what's wrong" #2:
-# "0 SMJ" was false as written — SMJ on compact keys is exactly what
-# survives 100x; the executable claim is "0 SMJ REGRESSIONS": any SMJ
+# SortMergeJoin-by-design allowlist (SMJ on compact keys is exactly
+# what survives 100x; the executable claim is "0 SMJ REGRESSIONS": any SMJ
 # appearing OUTSIDE this list fails the audit, so a planner or code
 # change that silently demotes a broadcast join to a shuffle join is
 # loud). entry -> why SMJ is the scale-correct strategy there.
@@ -59,20 +58,20 @@ SMJ_BY_DESIGN = {
         " on 8-byte (doc_id, rank) keys"
     ),
     "embed_ann_ivf_probed": (
-        "r13 per-query differential: probed-vs-exact rankings join"
+        "per-query differential: probed-vs-exact rankings join"
         " on 16-byte (qid, vec_id) keys — corpus-sized on both"
         " sides at production query volume, same class as"
         " embed_ann_ivfpq_recall"
     ),
     "embed_ann_ivfpq": (
-        "r13 per-query differential: same probed-vs-exact ranking"
+        "per-query differential: same probed-vs-exact ranking"
         " join class as embed_ann_ivf_probed (plus the PQ rerank"
         " fetch join inside ann_ivfpq_topk)"
     ),
 }
 
 
-# r12 verdict #6b: an allowlist entry that never fires can mask a
+# An allowlist entry that never fires can mask a
 # future regression elsewhere in that plan. Entries here are
 # SMJ-by-design ONLY at production scale; at audit scale their
 # RETURNED plan must contain no SortMergeJoin (dedup_components'

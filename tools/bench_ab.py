@@ -1,10 +1,9 @@
 """Interleaved Spark/DuckDB A/B — the load-invariance proof for the
-bench ratio (r11 verdict directive #3).
+bench ratio.
 
-The driver-observed r11 bench drifted +24% round-on-round across
-queries whose code did not change, while a fresh local run improved —
-the uniform multiplicative pattern of MACHINE-STATE drift, not a code
-regression. A sequential bench cannot distinguish the two: if the
+A bench can drift +24% between runs across queries whose code did
+not change — the uniform multiplicative pattern of MACHINE-STATE
+drift, not a code regression. A sequential bench cannot distinguish the two: if the
 machine is slow during the Spark pass and fast during the DuckDB pass
 (or vice versa), the RATIO absorbs the drift. This harness interleaves
 the engines at QUERY granularity — every Spark timing is immediately

@@ -62,10 +62,9 @@ def _decimal_columns(schema) -> list[str]:
 
 def _contains_decimal(v) -> bool:
     """True if a decimal.Decimal hides anywhere in a cell value —
-    recursing into list/map/struct containers (r12 advice #2: the
-    previous top-level isinstance scan missed a Decimal nested inside
-    a list/map cell, leaving only the schema-string check to catch
-    it; now both arms cover nested shapes). pyspark Rows are tuple
+    recursing into list/map/struct containers (a top-level isinstance
+    scan misses a Decimal nested inside a list/map cell, leaving only
+    the schema-string check to catch it). pyspark Rows are tuple
     subclasses, so the sequence arm covers structs."""
     if isinstance(v, _Decimal):
         return True
@@ -110,12 +109,9 @@ def run_parity(spark, sf_dir: str, only: set[str] | None = None,
         if dec_cols or any(
             _contains_decimal(v) for r in srows for v in r
         ):
-            # Decimal-export guard (r11 verdict directive #2): the
-            # split_dec two-round red's confirmed root-cause class is
-            # a python Decimal crossing the DRIVER's hasher (it
-            # normalizes Decimal differently than repr), which would
-            # silently re-red ANY future entry gating a decimal
-            # column. Decimal work stays in-plan; gated values leave
+            # Decimal-export guard: a python Decimal crossing the
+            # DRIVER's hasher (it normalizes Decimal differently than
+            # repr) fails ANY entry gating a decimal column. Decimal work stays in-plan; gated values leave
             # the plan as canonical strings (the split-dec
             # discipline) or doubles.
             log(f"FAIL {name}: DECIMAL EXPORT (cols {dec_cols or '-'})"

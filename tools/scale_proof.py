@@ -93,8 +93,7 @@ def gen_embeddings_structured(
     n: int, out: str, dim: int = 64, seed: int = 7,
     n_concepts: int = 256, alpha: float = 0.5,
 ) -> None:
-    """Embeddings with REAL-CORPUS structure (r8 verdict directive #4:
-    the unstructured random corpus makes threshold pair mass itself
+    """Embeddings with REAL-CORPUS structure (the unstructured random corpus makes threshold pair mass itself
     quadratic — the adversarial case; this generator is the
     bounded-duplicate-density case the semdedup docstring claims is
     assignment-bound). Discipline mirrors gen_documents: vectors live
@@ -189,8 +188,7 @@ PIPELINES = [
     "embed_ann_ivf_fullprobe",
     "embed_ann_ivf_probed",
     "embed_ann_ivfpq",
-    # round-8 additions (r7 verdict directive #4): the two r7 text
-    # operators shipped with design arguments only — measure them.
+    # the two text operators with only a design argument for scaling:
     # text_perplexity: broadcast vocab join, expect ~linear.
     # dedup_exact_substring: bounded 2..64-doc window buckets; the
     # synthetic corpus plants exact/near dups at fixed density over a
@@ -198,12 +196,12 @@ PIPELINES = [
     # bucket sizes stay bounded — expect ~linear, NOT quadratic.
     "text_perplexity",
     "dedup_exact_substring",
-    # round-11: the de-vacuumed brute-force Jaccard baseline is
+    # the brute-force Jaccard baseline is
     # bounded to a FIXED 100-doc probe panel (doc_id % 10 = 0 AND
     # doc_id < 1000), so cost is O(panel x corpus) — expect e ~ 1
     # (the unbounded 10% probe measured 65s at sf0.1; the panel 18s).
     "ngram_jaccard_sampled",
-    # round-10 addition: the >62-source chunked-mask contamination
+    # the >62-source chunked-mask contamination
     # path. The synthetic corpus's derived fine source (source +
     # doc_id % 100) yields up to 1000 labels -> ~17 mask chunks; the
     # gm self-join on gh is bounded per gram by chunk-pair count, so
@@ -223,7 +221,7 @@ SEMDEDUP_STRUCTURED = "embed_semantic_dedup (structured)"
 
 
 def _proof_semdedup_structured(spark, sf_dir: str):
-    """The structured-corpus twin (r8 directive #4): constant-cell
+    """The structured-corpus twin: constant-cell
     K = n/1024, spill=3, threshold at the SemDeDup screening regime
     (0.9) over the concept-manifold corpus with planted duplicate
     density — the linear-pair-mass case the semdedup docstring argues
@@ -275,7 +273,7 @@ def _proof_dedup(name: str):
             auto_bands,
             minhash_neardup_pairs,
         )
-        from dazzleduck_sql_duckdb_spark.plans import queries as Q
+        from dazzleduck_sql_duckdb_spark.plans import dedup as Q
 
         docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         n_docs = docs.count()
@@ -481,7 +479,7 @@ def _measure_io(spark, action) -> tuple[int, int]:
 
 def main_io(n: int = 250_000, dim: int = 64) -> int:
     """--io: measure the IVF-PQ bandwidth claim with Spark's own
-    bytes-read / shuffle-write metrics (r6 verdict #5). The claim is a
+    bytes-read / shuffle-write metrics. The claim is a
     STORAGE claim: in the deployed shape, vectors are encoded once at
     ingest and the per-query scoring scan reads (id, cell, codes)
     instead of (id, cell, vector). Wall-clock at local page-cached
