@@ -166,7 +166,6 @@ def minhash_neardup_pairs(
     max_bucket_docs: int | None = None,
     broadcast_verify_max: int = 5_000_000,
     broadcast_verify_docs: int = 100_000,
-    materialize: str = "auto",
 ) -> DataFrame:
     """Near-duplicate pairs at shingle-Jaccard >= threshold within block.
 
@@ -197,39 +196,21 @@ def minhash_neardup_pairs(
     below these counts take the narrowed zero-shuffle verify path —
     see the plan comment at the verify join.
 
-    ``materialize`` — how the verified-pairs result is pinned:
-
-    - ``"auto"`` (default): EAGER — the whole pipeline (kernel, band
-      self-join, verify) runs at call time and the returned DataFrame
-      is the MATERIALIZED result, so iterative consumers (connected
-      components' label propagation) re-read cheap ~24-byte pair rows
-      instead of re-running the verify join per pass. Uses a RELIABLE
-      ``checkpoint()`` when the SparkContext has a checkpoint dir
-      configured, else ``localCheckpoint()``. FAILURE MODE of the
-      localCheckpoint fallback: its blocks are executor-local and
-      unreplicated and the lineage is truncated, so on a real cluster
-      losing any executor after this call permanently loses pair
-      blocks with NO recompute path — production deployments must
-      ``sc.setCheckpointDir(...)`` (or pass ``"reliable"``).
-    - ``"reliable"``: force ``checkpoint(eager=True)`` (requires a
-      checkpoint dir; survives executor loss). NOTE: reliable
-      checkpoint files are not auto-deleted when the DataFrame goes
-      out of scope — long-lived sessions calling this repeatedly
-      should set spark.cleaner.referenceTracking.cleanCheckpoints=true
-      or use a per-job checkpoint dir (see _materialize_pairs).
-    - ``"local"``: force the eager ``localCheckpoint`` (single-node /
-      ephemeral sessions where the trade is understood).
-    - ``"none"``: fully LAZY — no persists, no plan-picking counts, no
-      checkpoint; the caller owns caching and every action re-executes
-      the pipeline. The declarative opt-out.
+    The call is EAGER: the whole pipeline (kernel, band self-join,
+    verify) runs at call time and the returned DataFrame is the
+    MATERIALIZED result, so iterative consumers (connected components'
+    label propagation) re-read cheap ~24-byte pair rows instead of
+    re-running the verify join per pass (a lazy variant measured ~2x
+    slower end to end). The pairs are pinned with a reliable
+    ``checkpoint()`` when the SparkContext has a checkpoint dir, else
+    with ``localCheckpoint()`` — see :func:`_materialize_pairs` for the
+    failure mode of the latter and the cleanup contract of the former.
 
     Intermediates are persist()ed columnar caches for the multiple
     reads WITHIN this call — signatures feed both the band join and
     the verify — and are explicitly unpersisted before returning, so
     no cache handles leak into the caller's session.
     """
-    if materialize not in ("auto", "reliable", "local", "none"):
-        raise ValueError(f"materialize: {materialize!r}")
     # Widen narrow inputs before the per-row shingle/signature compute:
     # a small parquet file scans as few tasks (one per row group), which
     # under-fills the cores for the whole CPU-heavy stage AND pins the
@@ -263,14 +244,6 @@ def minhash_neardup_pairs(
         "doc_id", "blk",
         F.col("k.sh").alias("sh"), F.col("k.bkeys").alias("bkeys"),
     )
-    if materialize == "none":
-        return _minhash_verify(
-            staged, bands=bands, threshold_pct=threshold_pct,
-            max_bucket_docs=max_bucket_docs,
-            broadcast_verify_max=broadcast_verify_max,
-            broadcast_verify_docs=broadcast_verify_docs,
-            materialize="none",
-        )
     # The doc count the verify path needs for its plan-picking rides
     # the first materializing action (cand.count) as an observed
     # metric instead of a dedicated staged.count() job — one fewer
@@ -288,38 +261,34 @@ def minhash_neardup_pairs(
             max_bucket_docs=max_bucket_docs,
             broadcast_verify_max=broadcast_verify_max,
             broadcast_verify_docs=broadcast_verify_docs,
-            materialize=materialize,
             n_docs_obs=n_docs_obs,
         )
     finally:
         staged.unpersist()
 
 
-def _materialize_pairs(verified: DataFrame, materialize: str) -> DataFrame:
+def _materialize_pairs(verified: DataFrame) -> DataFrame:
     """Pin the bounded verified-pairs result (~24 bytes/row) so (a) the
     caller's unpersists leave nothing lazy over the call-scoped caches
     and (b) iterative/multi-pass consumers re-read cheap blocks instead
-    of re-running the verify join. "reliable" = checkpoint() to the
-    context's checkpoint dir — replicated, survives executor loss, the
-    100 TB default whenever a dir is configured. The localCheckpoint
-    fallback is executor-local and lineage-truncated: executor loss
-    after the call loses blocks unrecoverably (see the
-    minhash_neardup_pairs docstring).
+    of re-running the verify join. One rule: ``checkpoint(eager=True)``
+    to the context's checkpoint dir when one is set — replicated,
+    survives executor loss, the 100 TB deployment — else
+    ``localCheckpoint(eager=True)``, whose blocks are executor-local
+    and lineage-truncated: on a real cluster, losing an executor after
+    the call loses pair blocks with NO recompute path, so production
+    deployments must ``sc.setCheckpointDir(...)``.
 
     Cleanup contract: unlike localCheckpoint blocks, which the
     ContextCleaner frees when the DataFrame is GC'd, reliable
-    checkpoint FILES are NOT deleted on release by
-    default — repeated calls in a long-lived session accumulate
-    unbounded data under the checkpoint dir. Long-lived sessions
-    using "reliable"/"auto"-with-a-dir should either set
+    checkpoint FILES are NOT deleted on release by default — repeated
+    calls in a long-lived session accumulate unbounded data under the
+    checkpoint dir. Such sessions should either set
     spark.cleaner.referenceTracking.cleanCheckpoints=true (files of
     out-of-scope checkpoints are then GC-swept) or manage the
     checkpoint dir's lifetime themselves (per-job dir, deleted after
     the pipeline lands its output)."""
-    sc = verified.sparkSession.sparkContext
-    if materialize == "reliable" or (
-        materialize == "auto" and sc.getCheckpointDir() is not None
-    ):
+    if verified.sparkSession.sparkContext.getCheckpointDir() is not None:
         return verified.checkpoint(eager=True)
     return verified.localCheckpoint(eager=True)
 
@@ -332,8 +301,7 @@ def _minhash_verify(
     max_bucket_docs: int | None,
     broadcast_verify_max: int,
     broadcast_verify_docs: int,
-    materialize: str = "auto",
-    n_docs_obs=None,
+    n_docs_obs,
 ) -> DataFrame:
     sh = staged.select("doc_id", "blk", "sh")
 
@@ -432,10 +400,6 @@ def _minhash_verify(
             )
         )
 
-    if materialize == "none":
-        # declarative opt-out: no persists, no plan-picking counts, no
-        # hints — Catalyst/AQE own the strategy, the caller owns reuse
-        return _verify_join(cand, sh.alias("a"), sh.alias("b"))
     # NOTE a "skip the plan-picking counts below a row threshold" fast
     # path was built and MEASURED SLOWER at sf0.1/5k docs (A/B medians:
     # 3.5-3.8s vs 2.5-2.9s for the counted path): the counts double as
@@ -453,13 +417,8 @@ def _minhash_verify(
         narrowed = False
         if n_cand <= broadcast_verify_max:
             # n_docs: observed metric delivered by the cand.count()
-            # materialization above (zero extra jobs); the
-            # staged.count() fallback covers direct _minhash_verify
-            # callers that did not attach an Observation
-            n_docs = (
-                n_docs_obs.get["n"] if n_docs_obs is not None
-                else staged.count()
-            )
+            # materialization above (zero extra jobs)
+            n_docs = n_docs_obs.get["n"]
             ids = (
                 cand.select(F.col("doc_a").alias("doc_id"))
                 .union(cand.select(F.col("doc_b").alias("doc_id")))
@@ -506,7 +465,7 @@ def _minhash_verify(
                 cand = F.broadcast(cand)
             pa, pb = sh.alias("a"), sh.alias("b")
         verified = _verify_join(cand, pa, pb)
-        return _materialize_pairs(verified, materialize)
+        return _materialize_pairs(verified)
     finally:
         for h in handles:
             h.unpersist()

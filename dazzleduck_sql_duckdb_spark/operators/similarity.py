@@ -74,28 +74,40 @@ def _fold_scores(V: np.ndarray, Q: np.ndarray) -> np.ndarray:
     return S
 
 
-def _make_topk_scorer(
+def _make_topk_kernel(
     qids: np.ndarray,
-    Q: np.ndarray,
     k: int,
+    make_score,
     *,
+    payload: str,
+    dtype,
     id_col: str,
     query_id_col: str,
     exclude_self: bool,
     cell_to_q: dict | None = None,
+    score_col: str = "sim",
 ):
-    """mapInPandas kernel: score a corpus partition against the closure
-    query matrix and emit the partition-local exact top-k per query.
+    """mapInPandas kernel of exact, IVF and IVF-PQ search: score a
+    corpus partition against the closure query set and emit the
+    partition-local top-k per query.
 
-    Per batch: block-fold scores, per-query k-th-value cut via
-    np.partition (ties at the boundary are kept and resolved exactly in
-    the pandas compaction, which sorts by (sim desc, id asc) — the
-    final window's total order), then the bounded carry is compacted.
-    With `cell_to_q`, each corpus row is scored only against the
-    queries probing its cell (the IVF candidate structure) — the rows
-    arrive pre-exploded by cell, so a spilled vector scores once per
-    indexed cell and duplicates are dropped in the compaction. Output
-    is at most n_queries * k rows (+ boundary ties pre-compaction) per
+    ``make_score()`` runs once per task and returns
+    ``score(X, qsel, cell)``: the (rows x queries) scores of the
+    ``payload`` rows X (decoded as ``dtype``) against the queries
+    ``qsel`` — the sequential fold for exact and IVF search, ADC
+    lookups for IVF-PQ. Building it in the task keeps derived per-query
+    tables (the ADC lookup tables, n_queries * m * n_codes doubles) out
+    of the pickled closure.
+
+    Per batch: score, per-query k-th-value cut via np.partition (ties
+    at the boundary are kept and resolved exactly in the pandas
+    compaction, which sorts by (score desc, id asc) — the final
+    window's total order), then the bounded carry is compacted. With
+    `cell_to_q`, each corpus row is scored only against the queries
+    probing its cell (the IVF candidate structure) — the rows arrive
+    pre-exploded by cell, so a spilled vector scores once per indexed
+    cell and the compaction keeps its best (query, id) row. Output is
+    at most n_queries * k rows (+ boundary ties pre-compaction) per
     partition: the global top-k window sorts thousands of rows, not
     the candidate stream (625M candidates at 250k x 2500 full probe
     previously funneled into one straggler sort task)."""
@@ -113,48 +125,39 @@ def _make_topk_scorer(
             {
                 query_id_col: qid_sel[cols],
                 id_col: ids[rows],
-                "sim": S[rows, cols],
+                score_col: S[rows, cols],
             }
         )
 
     def run(batches):
-        if Q.shape[0] == 0:
+        if len(qids) == 0:
             return  # no queries -> no candidates
+        score = make_score()
         carry = None
         for pdf in batches:
-            if not len(pdf):
-                continue
             # a NULL corpus vector has no defined similarity: drop it
             # (the SQL twin's fold likewise yields NULL sims, which the
             # top-k ordering never selects)
-            keep = pdf["__vec"].notna()
-            if not keep.all():
-                pdf = pdf[keep]
-                if not len(pdf):
-                    continue
+            pdf = pdf[pdf[payload].notna()]
+            if not len(pdf):
+                continue
             ids = pdf[id_col].to_numpy()
-            V = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__vec"]]
-            )
-            parts = []
+            X = np.vstack([np.asarray(v, dtype=dtype) for v in pdf[payload]])
             if cell_to_q is None:
-                S = _fold_scores(V, Q)
-                if exclude_self:
-                    S[ids[:, None] == qids[None, :]] = -np.inf
-                parts.append(_cut(S, ids, qids))
+                groups = [(slice(None), slice(None), None)]
             else:
                 cells = pdf["cell"].to_numpy()
-                for cell in np.unique(cells):
-                    qsel = cell_to_q.get(int(cell))
-                    if qsel is None:
-                        continue
-                    vidx = np.nonzero(cells == cell)[0]
-                    S = _fold_scores(V[vidx], Q[qsel])
-                    if exclude_self:
-                        S[
-                            ids[vidx][:, None] == qids[qsel][None, :]
-                        ] = -np.inf
-                    parts.append(_cut(S, ids[vidx], qids[qsel]))
+                groups = [
+                    (np.nonzero(cells == c)[0], cell_to_q[int(c)], int(c))
+                    for c in np.unique(cells)
+                    if int(c) in cell_to_q
+                ]
+            parts = []
+            for vidx, qsel, cell in groups:
+                S = score(X[vidx], qsel, cell)
+                if exclude_self:
+                    S[ids[vidx][:, None] == qids[qsel][None, :]] = -np.inf
+                parts.append(_cut(S, ids[vidx], qids[qsel]))
             if not parts:
                 continue
             combined = pd.concat(
@@ -162,9 +165,8 @@ def _make_topk_scorer(
                 ignore_index=True,
             )
             combined = combined.sort_values(
-                ["sim", id_col], ascending=[False, True], kind="mergesort"
+                [score_col, id_col], ascending=[False, True], kind="mergesort"
             )
-            # a spilled vector scores identically via each shared cell
             combined = combined.drop_duplicates(
                 [query_id_col, id_col], keep="first"
             )
@@ -173,6 +175,54 @@ def _make_topk_scorer(
             yield carry
 
     return run
+
+
+def _fold_step(Q: np.ndarray):
+    """The scoring step of exact and IVF search for _make_topk_kernel."""
+    return lambda: lambda V, qsel, cell: _fold_scores(V, Q[qsel])
+
+
+def _probe_cells(Q: np.ndarray, C: np.ndarray, n_probe: int) -> dict:
+    """Driver-side cell probe: cell -> indices of the queries whose
+    n_probe nearest (normalized) centroids include it."""
+    cell_to_q: dict = {}
+    if Q.shape[0]:
+        probes = np.argsort(-(_normalize(Q) @ C.T), axis=1)[:, :n_probe]
+        for qi, row in enumerate(probes):
+            for cell in row:
+                cell_to_q.setdefault(int(cell), []).append(qi)
+    return {c: np.asarray(ix, dtype=np.int64) for c, ix in cell_to_q.items()}
+
+
+def _topk_merge(
+    src: DataFrame,
+    local_fn,
+    k: int,
+    key_types: tuple,
+    *,
+    id_col: str,
+    query_id_col: str,
+    score_col: str = "sim",
+) -> DataFrame:
+    """Run the partition-local step over `src` (mapInPandas,
+    emitting (query id, id, score) rows typed by `key_types`), then
+    keep the global top-k per query in (score desc, id asc) order."""
+    schema = T.StructType(
+        [
+            T.StructField(query_id_col, key_types[0]),
+            T.StructField(id_col, key_types[1]),
+            T.StructField(score_col, T.DoubleType()),
+        ]
+    )
+    local = src.mapInPandas(local_fn, schema=schema)
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.desc(score_col), F.col(id_col)
+    )
+    return (
+        local.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
+        .drop("rn")
+    )
 
 
 def _collect_query_matrix(
@@ -237,27 +287,16 @@ def cosine_topk(
     under one id namespace); with exclude_self=False ids colliding
     across namespaces are NOT dropped."""
     qids, Q = _collect_query_matrix(queries, id_col, vec_col)
-    out_schema = T.StructType(
-        [
-            T.StructField(query_id_col, queries.schema[id_col].dataType),
-            T.StructField(id_col, corpus.schema[id_col].dataType),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
-    scorer = _make_topk_scorer(
-        qids, Q, k,
+    kernel = _make_topk_kernel(
+        qids, k, _fold_step(Q), payload="__vec", dtype=np.float64,
         id_col=id_col, query_id_col=query_id_col,
         exclude_self=exclude_self,
     )
     src = corpus.select(F.col(id_col), F.col(vec_col).alias("__vec"))
-    local = src.mapInPandas(scorer, schema=out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("sim"), F.col(id_col)
-    )
-    return (
-        local.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
+    return _topk_merge(
+        src, kernel, k,
+        (queries.schema[id_col].dataType, corpus.schema[id_col].dataType),
+        id_col=id_col, query_id_col=query_id_col,
     )
 
 
@@ -408,8 +447,7 @@ def ann_ivf_topk(
     """
     if centroids is None:
         if n_centroids is None:
-            n = corpus.count()
-            n_centroids = max(4, min(65_536, int(round(n ** 0.5))))
+            n_centroids = ivf_n_centroids(corpus.count())
         centroids = train_centroids(
             corpus, n_centroids, vec_col=vec_col, id_col=id_col,
             iterations=train_iterations, seed=seed,
@@ -438,37 +476,17 @@ def ann_ivf_topk(
     # intrinsically skewed: one hot cell = one straggler task).
     qids, Q = _collect_query_matrix(queries, id_col, vec_col)
     C = _normalize(np.asarray(centroids, dtype=np.float64))
-    n_probe_eff = min(n_probe, C.shape[0])
-    cell_to_q: dict[int, np.ndarray] = {}
-    if Q.shape[0]:
-        probes = np.argsort(-(_normalize(Q) @ C.T), axis=1)[:, :n_probe_eff]
-        for qi in range(probes.shape[0]):
-            for cell in probes[qi]:
-                cell_to_q.setdefault(int(cell), []).append(qi)
-        cell_to_q = {
-            c: np.asarray(ix, dtype=np.int64)
-            for c, ix in cell_to_q.items()
-        }
-    out_schema = T.StructType(
-        [
-            T.StructField(query_id_col, queries.schema[id_col].dataType),
-            T.StructField(id_col, corpus.schema[id_col].dataType),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
-    scorer = _make_topk_scorer(
-        qids, Q, k,
-        id_col=id_col, query_id_col=query_id_col,
-        exclude_self=True, cell_to_q=cell_to_q,
-    )
     # a spilled vector's copies stay in the same input partition (the
     # explode is narrow), so the kernel's (query, id) dedup is complete
-    local = assigned.mapInPandas(scorer, schema=out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.col(id_col))
-    return (
-        local.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
+    kernel = _make_topk_kernel(
+        qids, k, _fold_step(Q), payload="__vec", dtype=np.float64,
+        id_col=id_col, query_id_col=query_id_col,
+        exclude_self=True, cell_to_q=_probe_cells(Q, C, n_probe),
+    )
+    return _topk_merge(
+        assigned, kernel, k,
+        (queries.schema[id_col].dataType, corpus.schema[id_col].dataType),
+        id_col=id_col, query_id_col=query_id_col,
     )
 
 
@@ -549,6 +567,7 @@ def make_pq_encode_udf(
     a spilled vector's residual differs in each cell). NULL vectors
     encode to NULL, which a downstream explode() drops."""
     C = _normalize(np.asarray(centroids, dtype=np.float64))
+    books = np.asarray(books, dtype=np.float64)
     dim = C.shape[1]
     spill = max(1, min(spill, C.shape[0]))
     out_type = T.ArrayType(
@@ -587,6 +606,20 @@ def make_pq_encode_udf(
         return pd.Series(out, dtype="object")
 
     return encode
+
+
+def _pq_encoded(
+    vectors: DataFrame, centroids, books, spill: int, id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The (id, cell, codes) table of an IVF-PQ index: one row per
+    assigned cell of every non-NULL vector."""
+    encode = make_pq_encode_udf(centroids, books, spill=spill)
+    return vectors.select(
+        F.col(id_col), F.explode(encode(F.col(vec_col))).alias("e")
+    ).select(
+        id_col, F.col("e.cell").alias("cell"), F.col("e.codes").alias("codes")
+    )
 
 
 class IvfPqIndex:
@@ -651,8 +684,7 @@ def build_ivfpq_index(
         )
     if centroids is None:
         if n_centroids is None:
-            n = corpus.count()
-            n_centroids = max(4, min(65_536, int(round(n ** 0.5))))
+            n_centroids = ivf_n_centroids(corpus.count())
         centroids = train_centroids(
             corpus, n_centroids, vec_col=vec_col, id_col=id_col,
             iterations=train_iterations, seed=seed,
@@ -681,12 +713,7 @@ def build_ivfpq_index(
         res = S - C[(S @ C.T).argmax(axis=1)]
         books = train_pq_codebooks(res, m_subspaces, n_codes, seed=seed + 2)
 
-    encode = make_pq_encode_udf(C, books, spill=spill)
-    encoded = corpus.select(
-        F.col(id_col), F.explode(encode(F.col(vec_col))).alias("e")
-    ).select(
-        id_col, F.col("e.cell").alias("cell"), F.col("e.codes").alias("codes")
-    )
+    encoded = _pq_encoded(corpus, C, books, spill, id_col, vec_col)
     return IvfPqIndex(C, books, encoded, spill=spill, id_col=id_col)
 
 
@@ -783,108 +810,44 @@ def ann_ivfpq_topk(
     C, books, encoded = index.centroids, index.codebooks, index.encoded
 
     qids, Q = _collect_query_matrix(queries, id_col, vec_col)
-    Qn = _normalize(Q) if Q.shape[0] else Q
-    n_probe_eff = min(n_probe, C.shape[0])
-    cell_to_q: dict[int, np.ndarray] = {}
-    if Qn.shape[0]:
-        probes = np.argsort(-(Qn @ C.T), axis=1)[:, :n_probe_eff]
-        for qi in range(probes.shape[0]):
-            for cell in probes[qi]:
-                cell_to_q.setdefault(int(cell), []).append(qi)
-        cell_to_q = {
-            c: np.asarray(ix, dtype=np.int64) for c, ix in cell_to_q.items()
-        }
     kr = k * max(1, refine)
     m, nc, sub = books.shape
     qtype = queries.schema[id_col].dataType
     itype = corpus.schema[id_col].dataType
-    adc_schema = T.StructType(
-        [
-            T.StructField(query_id_col, qtype),
-            T.StructField(id_col, itype),
-            T.StructField("adc", T.DoubleType()),
-        ]
-    )
 
-    def adc_scorer(batches):
-        if Qn.shape[0] == 0:
-            return
+    def adc_step():
         # per-query LUTs and per-(query, cell) base terms, built once
         # per task from closure state: LUT[q, s, j] = <q_s, B[s][j]>,
         # base[q, c] = <q, C[c]> — ADC(q, v in c) = base + sum_s gather
+        Qn = _normalize(Q)
         LUT = np.empty((Qn.shape[0], m, nc), dtype=np.float64)
         for s in range(m):
             LUT[:, s, :] = Qn[:, s * sub : (s + 1) * sub] @ books[s].T
         base = Qn @ C.T
-        carry = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            cells = pdf["cell"].to_numpy()
-            codes_all = np.vstack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-            )
-            parts = []
-            for cell in np.unique(cells):
-                qsel = cell_to_q.get(int(cell))
-                if qsel is None:
-                    continue
-                vidx = np.nonzero(cells == cell)[0]
-                codes = codes_all[vidx]
-                Sc = np.broadcast_to(
-                    base[qsel, int(cell)][None, :],
-                    (len(vidx), len(qsel)),
-                ).copy()
-                for s in range(m):
-                    # gather: (nqsel, b) -> accumulate transposed
-                    Sc += LUT[qsel][:, s, :][:, codes[:, s]].T
-                if exclude_self:
-                    Sc[ids[vidx][:, None] == qids[qsel][None, :]] = -np.inf
-                b = Sc.shape[0]
-                if b > kr:
-                    kth = np.partition(Sc, b - kr, axis=0)[b - kr, :]
-                    mask = Sc >= kth
-                else:
-                    mask = np.ones_like(Sc, dtype=bool)
-                mask &= np.isfinite(Sc)
-                rows, cols = np.nonzero(mask)
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            query_id_col: qids[qsel][cols],
-                            id_col: ids[vidx][rows],
-                            "adc": Sc[rows, cols],
-                        }
-                    )
-                )
-            if not parts:
-                continue
-            combined = pd.concat(
-                [c for c in ([carry] + parts) if c is not None],
-                ignore_index=True,
-            )
-            combined = combined.sort_values(
-                ["adc", id_col], ascending=[False, True], kind="mergesort"
-            )
-            # spilled copies of a vector score differently per cell
-            # (different residual base) — keep the best
-            combined = combined.drop_duplicates(
-                [query_id_col, id_col], keep="first"
-            )
-            carry = combined.groupby(query_id_col, sort=False).head(kr)
-        if carry is not None and len(carry):
-            yield carry
 
-    local = encoded.mapInPandas(adc_scorer, schema=adc_schema)
-    w_adc = Window.partitionBy(query_id_col).orderBy(
-        F.desc("adc"), F.col(id_col)
+        def score(codes, qsel, cell):
+            Sc = np.broadcast_to(
+                base[qsel, cell][None, :], (len(codes), len(qsel))
+            ).copy()
+            for s in range(m):
+                # gather: (nqsel, b) -> accumulate transposed
+                Sc += LUT[qsel][:, s, :][:, codes[:, s]].T
+            return Sc
+
+        return score
+
+    # spilled copies of a vector score differently per cell (different
+    # residual base) — the kernel's compaction keeps the best
+    kernel = _make_topk_kernel(
+        qids, kr, adc_step, payload="codes", dtype=np.int64,
+        id_col=id_col, query_id_col=query_id_col,
+        exclude_self=exclude_self, cell_to_q=_probe_cells(Q, C, n_probe),
+        score_col="adc",
     )
-    cand = (
-        local.withColumn("rn", F.row_number().over(w_adc))
-        .where(F.col("rn") <= kr)
-        .select(query_id_col, id_col)
-    )
+    cand = _topk_merge(
+        encoded, kernel, kr, (qtype, itype),
+        id_col=id_col, query_id_col=query_id_col, score_col="adc",
+    ).select(query_id_col, id_col)
 
     # Exact rerank: the candidate set is BOUNDED (<= n_queries * k *
     # refine pairs) — broadcast it into ONE hash join against the
@@ -893,13 +856,6 @@ def ann_ivfpq_topk(
     # (cosine_topk / ann_ivf_topk accept string ids; an int() cast
     # raised on them in the rerank stage)
     qindex = {q: i for i, q in enumerate(qids)}
-    rr_schema = T.StructType(
-        [
-            T.StructField(query_id_col, qtype),
-            T.StructField(id_col, itype),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
 
     def rerank(batches):
         for pdf in batches:
@@ -933,14 +889,9 @@ def ann_ivfpq_topk(
     joined = corpus.select(
         F.col(id_col), F.col(vec_col).alias("__vec")
     ).join(F.broadcast(cand), id_col)
-    reranked = joined.select(query_id_col, id_col, "__vec").mapInPandas(
-        rerank, schema=rr_schema
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.col(id_col))
-    return (
-        reranked.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
+    return _topk_merge(
+        joined.select(query_id_col, id_col, "__vec"), rerank, k,
+        (qtype, itype), id_col=id_col, query_id_col=query_id_col,
     )
 
 
@@ -1031,6 +982,13 @@ def embed_neardup_pairs_lsh(
     )
 
 
+def ivf_n_centroids(n: int) -> int:
+    """IVF's default cell count: ~sqrt(n), clamped to [4, 65_536] — the
+    classical balance point where both the coarse-quantizer scan and
+    the per-probe candidate list stay O(sqrt(n))."""
+    return max(4, min(65_536, int(round(n ** 0.5))))
+
+
 def default_n_clusters(n: int, target_cell_rows: int = 1_024) -> int:
     """SemDeDup's default cluster count: sqrt(n) while sqrt cells stay
     under ``target_cell_rows`` (n <= target^2), then CONSTANT CELL
@@ -1041,6 +999,39 @@ def default_n_clusters(n: int, target_cell_rows: int = 1_024) -> int:
     if n <= 0:
         return 1
     return max(1, min(65_536, int(round(max(n ** 0.5, n / target_cell_rows)))))
+
+
+def _semantic_centroids(
+    corpus: DataFrame,
+    n_clusters: int | None,
+    centroids: np.ndarray | None,
+    *,
+    vec_col: str,
+    id_col: str,
+    train_iterations: int,
+    seed: int,
+    max_train_rows: int,
+) -> np.ndarray:
+    """The semantic family's quantizer, shared by semantic_dedup_pairs
+    and streaming/dedup.py build_semantic_index so a self-screen finds
+    exactly the batch pairs: the given ``centroids`` normalized, else
+    ``n_clusters`` (default :func:`default_n_clusters`) trained on the
+    n NON-NULL vectors. Past ``max_train_rows`` the Lloyd passes run on
+    a sample (quadratic otherwise, see :func:`train_centroids`); below
+    it, evaluation-scale runs train on the full corpus."""
+    if centroids is None:
+        nonnull = corpus.where(F.col(vec_col).isNotNull())
+        n = nonnull.count()
+        if n_clusters is None:
+            n_clusters = default_n_clusters(n)
+        centroids = train_centroids(
+            nonnull, n_clusters, vec_col=vec_col, id_col=id_col,
+            iterations=train_iterations, seed=seed,
+            max_train_rows=(
+                max_train_rows if n > max_train_rows else None
+            ),
+        )
+    return _normalize(np.asarray(centroids, dtype=np.float64))
 
 
 def semantic_dedup_pairs(
@@ -1127,24 +1118,11 @@ def semantic_dedup_pairs(
     fraction of the corpus means the quantizer collapsed, and scoring
     it would be the n^2 the method exists to avoid); the skip is
     deterministic, so reruns hash identically."""
-    if centroids is None:
-        n = corpus.count()
-        if n_clusters is None:
-            n_clusters = default_n_clusters(n)
-        # bound the Lloyd passes to a sample PAST max_train_rows:
-        # with the constant-cell schedule K ~ n/1024, full-corpus
-        # training is n*K = quadratic — measured 170s of the 204s
-        # pipeline at 250k vectors. Below the bound the sampling path
-        # is bypassed entirely, so evaluation-scale runs (and the
-        # driver's gate corpora) train on the full corpus, bit-identically.
-        centroids = train_centroids(
-            corpus, n_clusters, vec_col=vec_col, id_col=id_col,
-            iterations=train_iterations, seed=seed,
-            max_train_rows=(
-                max_train_rows if n > max_train_rows else None
-            ),
-        )
-    C = _normalize(np.asarray(centroids, dtype=np.float64))
+    C = _semantic_centroids(
+        corpus, n_clusters, centroids, vec_col=vec_col, id_col=id_col,
+        train_iterations=train_iterations, seed=seed,
+        max_train_rows=max_train_rows,
+    )
     dim = C.shape[1]
 
     nonnull = corpus.where(F.col(vec_col).isNotNull())
@@ -1173,7 +1151,7 @@ def semantic_dedup_pairs(
         # posexplode: the multi-assign array is nearest-first, so
         # position 0 IS the primary (pre-spill) assignment — the
         # population the oversize skip is decided on
-        multi = make_multi_assign_udf(C, min(spill, C.shape[0]))
+        multi = make_multi_assign_udf(C, spill)
         assigned = nonnull.select(
             F.col(id_col), F.col(vec_col),
             F.posexplode(multi(F.col(vec_col))).alias("sp", "cell"),
@@ -1259,18 +1237,9 @@ def extend_ivfpq_index(
     degrade recall via n_probe, they are not dropped), which is why
     this extension needs no capped record, unlike the screen
     families (streaming/dedup.py)."""
-    encode = make_pq_encode_udf(
-        np.asarray(index.centroids, np.float64),
-        np.asarray(index.codebooks, np.float64),
-        spill=index.spill,
-    )
-    new_encoded = new_vectors.select(
-        F.col(index.id_col),
-        F.explode(encode(F.col(vec_col))).alias("e"),
-    ).select(
-        index.id_col,
-        F.col("e.cell").alias("cell"),
-        F.col("e.codes").alias("codes"),
+    new_encoded = _pq_encoded(
+        new_vectors, index.centroids, index.codebooks, index.spill,
+        index.id_col, vec_col,
     )
     return IvfPqIndex(
         index.centroids, index.codebooks,

@@ -830,6 +830,56 @@ class SemanticIndex:
         self.capped_cells = list(capped_cells or [])
 
 
+def _staged_cells(df: DataFrame, centroids, spill: int, id_col: str,
+                  vec_col: str,
+                  names=("corpus_id", "cvec", "ccells")) -> DataFrame:
+    """(id, vector, cells) of df's non-NULL vectors, the cells being
+    each vector's `spill` nearest, nearest (the primary) first."""
+    from pyspark.sql import functions as F
+
+    from ..operators.similarity import make_multi_assign_udf
+
+    multi = make_multi_assign_udf(centroids, spill)
+    i, v, c = names
+    return df.where(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias(i),
+        F.col(vec_col).alias(v),
+        multi(F.col(vec_col)).alias(c),
+    )
+
+
+def _primary_counts(staged: DataFrame) -> dict[int, int]:
+    """cell -> staged rows whose PRIMARY (pre-spill) cell it is."""
+    from pyspark.sql import functions as F
+
+    return {
+        int(r["cell"]): int(r["n"])
+        for r in staged.select(
+            F.element_at("ccells", 1).alias("cell")
+        ).groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+
+
+def _drop_cells(df: DataFrame, col: str, cells: list[int]) -> DataFrame:
+    """Remove the capped `cells` from every `col` cells array."""
+    from pyspark.sql import functions as F
+
+    if not cells:
+        return df
+    return df.withColumn(
+        col, F.array_except(col, F.array(*[F.lit(c) for c in cells]))
+    )
+
+
+def _members(staged: DataFrame) -> DataFrame:
+    """One members row per (kept cell, corpus vector)."""
+    from pyspark.sql import functions as F
+
+    return staged.select(
+        "corpus_id", "cvec", "ccells", F.explode("ccells").alias("cell")
+    )
+
+
 def build_semantic_index(
     corpus: DataFrame,
     *,
@@ -852,58 +902,23 @@ def build_semantic_index(
     at build — and their ids nulled from every kept-cells array, so
     the screen's first-shared-cell anchor ranges over surviving cells
     only (the same law as the MinHash screen)."""
-    import numpy as np
-    from pyspark.sql import functions as F
+    from ..operators.similarity import _semantic_centroids
 
-    from ..operators.similarity import (
-        _normalize,
-        default_n_clusters,
-        make_multi_assign_udf,
-        train_centroids,
+    C = _semantic_centroids(
+        corpus, n_clusters, centroids, vec_col=vec_col, id_col=id_col,
+        train_iterations=train_iterations, seed=seed,
+        max_train_rows=max_train_rows,
     )
-
-    nonnull = corpus.where(F.col(vec_col).isNotNull())
-    if centroids is None:
-        n = nonnull.count()
-        if n_clusters is None:
-            n_clusters = default_n_clusters(n)
-        centroids = train_centroids(
-            nonnull, n_clusters, vec_col=vec_col, id_col=id_col,
-            iterations=train_iterations, seed=seed,
-            max_train_rows=(
-                max_train_rows if n > max_train_rows else None
-            ),
-        )
-    C = _normalize(np.asarray(centroids, dtype=np.float64))
-    multi = make_multi_assign_udf(C, min(spill, C.shape[0]))
-    staged = nonnull.select(
-        F.col(id_col).alias("corpus_id"),
-        F.col(vec_col).alias("cvec"),
-        multi(F.col(vec_col)).alias("ccells"),
-    )
+    staged = _staged_cells(corpus, C, spill, id_col, vec_col)
     capped: list[int] = []
     primary_counts: dict[int, int] | None = None
     if max_cell_rows is not None:
-        primary = staged.select(
-            F.element_at("ccells", 1).alias("cell")
-        ).groupBy("cell").count()
-        primary_counts = {
-            int(r["cell"]): int(r["count"]) for r in primary.collect()
-        }
+        primary_counts = _primary_counts(staged)
         capped = sorted(
             c for c, n in primary_counts.items() if n > max_cell_rows
         )
-    if capped:
-        cap_arr = F.array(*[F.lit(c) for c in capped])
-        staged = staged.withColumn(
-            "ccells",
-            F.array_except("ccells", cap_arr),
-        )
-    members = staged.select(
-        "corpus_id", "cvec", "ccells",
-        F.explode("ccells").alias("cell"),
-    )
-    return SemanticIndex(C, members, spill, vec_col,
+    return SemanticIndex(C, _members(_drop_cells(staged, "ccells", capped)),
+                         spill, vec_col,
                          max_cell_rows=max_cell_rows,
                          primary_counts=primary_counts,
                          capped_cells=capped)
@@ -927,10 +942,7 @@ def extend_semantic_index(
     old-capped cell stays capped, and a cell pushed over the cap by
     the new arrivals is dropped whole — its member rows removed and
     its id rewritten out of every kept-cells array, old and new."""
-    import numpy as np
     from pyspark.sql import functions as F
-
-    from ..operators.similarity import make_multi_assign_udf
 
     vec_col = vec_col or index.vec_col
     if index.max_cell_rows is not None and index.primary_counts is None:
@@ -939,30 +951,15 @@ def extend_semantic_index(
             "rebuild it with this version's build_semantic_index "
             "before extending"
         )
-    C = np.asarray(index.centroids, dtype=np.float64)
-    multi = make_multi_assign_udf(C, min(index.spill, C.shape[0]))
-    staged_new = new_vectors.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("corpus_id"),
-        F.col(vec_col).alias("cvec"),
-        multi(F.col(vec_col)).alias("ccells"),
+    staged_new = _staged_cells(
+        new_vectors, index.centroids, index.spill, id_col, vec_col
     )
     if index.max_cell_rows is None:
-        members = index.members.unionByName(
-            staged_new.select(
-                "corpus_id", "cvec", "ccells",
-                F.explode("ccells").alias("cell"),
-            )
-        )
+        members = index.members.unionByName(_members(staged_new))
         return SemanticIndex(index.centroids, members, index.spill,
                              index.vec_col)
-    new_primary = {
-        int(r["cell"]): int(r["n"])
-        for r in staged_new.select(
-            F.element_at("ccells", 1).alias("cell")
-        ).groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
     counts = dict(index.primary_counts)
-    for c, n in new_primary.items():
+    for c, n in _primary_counts(staged_new).items():
         counts[c] = counts.get(c, 0) + n
     capped = sorted(
         c for c, n in counts.items() if n > index.max_cell_rows
@@ -970,21 +967,11 @@ def extend_semantic_index(
     newly = [c for c in capped if c not in set(index.capped_cells)]
     old_members = index.members
     if newly:
-        newly_arr = F.array(*[F.lit(c) for c in newly])
-        old_members = (
-            old_members.where(~F.col("cell").isin(newly))
-            .withColumn("ccells", F.array_except("ccells", newly_arr))
-        )
-    if capped:
-        cap_arr = F.array(*[F.lit(c) for c in capped])
-        staged_new = staged_new.withColumn(
-            "ccells", F.array_except("ccells", cap_arr)
+        old_members = _drop_cells(
+            old_members.where(~F.col("cell").isin(newly)), "ccells", newly
         )
     members = old_members.unionByName(
-        staged_new.select(
-            "corpus_id", "cvec", "ccells",
-            F.explode("ccells").alias("cell"),
-        )
+        _members(_drop_cells(staged_new, "ccells", capped))
     )
     return SemanticIndex(index.centroids, members, index.spill,
                          index.vec_col,
@@ -1017,26 +1004,14 @@ def semantic_screen_stream(
     semantics as the batch scorer and the SQL oracle (`zip_with` +
     left fold), so a self-screen is BIT-IDENTICAL to
     semantic_dedup_pairs (pinned in tests)."""
-    import numpy as np  # noqa: F401  (index.centroids is ndarray)
     from pyspark.sql import functions as F
 
-    from ..operators.similarity import make_multi_assign_udf
-
     vec_col = vec_col or index.vec_col
-    multi = make_multi_assign_udf(
-        index.centroids, min(index.spill, index.centroids.shape[0])
+    staged = _drop_cells(
+        _staged_cells(incoming, index.centroids, index.spill, id_col,
+                      vec_col, names=("in_id", "ivec", "in_cells")),
+        "in_cells", index.capped_cells,
     )
-    staged = incoming.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("in_id"),
-        F.col(vec_col).alias("ivec"),
-        multi(F.col(vec_col)).alias("in_cells"),
-    )
-    capped = getattr(index, "capped_cells", [])
-    if capped:
-        cap_arr = F.array(*[F.lit(c) for c in capped])
-        staged = staged.withColumn(
-            "in_cells", F.array_except("in_cells", cap_arr)
-        )
     cand = staged.select(
         "in_id", "ivec", "in_cells",
         F.explode("in_cells").alias("cell"),

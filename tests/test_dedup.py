@@ -241,13 +241,12 @@ def test_minhash_verify_shuffle_fallback_matches_broadcast(spark):
 
 
 def test_minhash_materialize_modes(spark, tmp_path):
-    """Every materialize mode returns the same pair set; "reliable"
-    writes replicated checkpoint files into the configured dir (the
+    """The pairs are pinned by one rule and the pair set does not
+    depend on it: without a checkpoint dir by localCheckpoint, with one
+    by a reliable checkpoint that writes files into the dir (the
     executor-loss-safe scale path — localCheckpoint blocks are
     executor-local and lineage-truncated, so losing an executor after
-    the call would lose pairs unrecoverably); "auto" picks reliable
-    exactly when a checkpoint dir is configured; "none" stays lazy
-    (analyzed plan has no checkpointed scan)."""
+    the call would lose pairs unrecoverably)."""
     import os
 
     rng = random.Random(33)
@@ -261,27 +260,22 @@ def test_minhash_materialize_modes(spark, tmp_path):
     b = [rng.randrange(0, 2**31 - 1) for _ in range(128)]
     kw = dict(a=a, b=b, bands=32, threshold_pct=85)
 
-    def pairs(**extra):
+    def pairs():
         return {
             (p.doc_a, p.doc_b)
-            for p in minhash_neardup_pairs(df, **kw, **extra).collect()
+            for p in minhash_neardup_pairs(df, **kw).collect()
         }
 
-    want = pairs()  # auto, no checkpoint dir -> localCheckpoint
+    want = pairs()  # no checkpoint dir -> localCheckpoint
     assert want == {(1, 2)}
-    assert pairs(materialize="local") == want
-    assert pairs(materialize="none") == want
 
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None
     ckpt = str(tmp_path / "ckpt")
     sc.setCheckpointDir(ckpt)
     try:
-        assert pairs(materialize="reliable") == want
-        n_reliable = sum(len(fs) for _, _, fs in os.walk(ckpt))
-        assert n_reliable > 0  # checkpoint files actually written
-        assert pairs() == want  # auto now picks reliable too
-        assert sum(len(fs) for _, _, fs in os.walk(ckpt)) > n_reliable
+        assert pairs() == want  # a checkpoint dir -> reliable checkpoint
+        assert sum(len(fs) for _, _, fs in os.walk(ckpt)) > 0
     finally:
         # pyspark has no unsetCheckpointDir; clear via the JVM so later
         # tests in this session keep the no-dir default
@@ -289,9 +283,6 @@ def test_minhash_materialize_modes(spark, tmp_path):
             sc._jvm.scala.Option.apply(None)
         )
     assert sc.getCheckpointDir() is None
-
-    with pytest.raises(ValueError):
-        minhash_neardup_pairs(df, **kw, materialize="bogus")
 
 
 def test_simhash_scale_gate_picks_bounded_form(spark, tables):

@@ -146,3 +146,29 @@ def test_screen_cell_cap_mirrors_batch_oversize_skip(spark, emb_dir):
         ).collect()
     }
     assert got == want
+
+
+def test_batch_and_index_size_k_on_the_same_population(spark, monkeypatch):
+    """semantic_dedup_pairs and build_semantic_index size K from the
+    same population, the non-NULL vectors: 506 vectors plus one NULL
+    give K = default_n_clusters(506) = 22 on both paths (counting the
+    NULL row gives 23), so a self-screen still finds the batch pairs."""
+    import random
+
+    import numpy as np
+
+    from dazzleduck_sql_duckdb_spark.operators import similarity as S
+
+    trained = []
+
+    def record(corpus, n_centroids, **kw):
+        trained.append(n_centroids)
+        return np.random.default_rng(0).standard_normal((n_centroids, 4))
+
+    monkeypatch.setattr(S, "train_centroids", record)
+    rng = random.Random(5)
+    rows = [(i, [rng.gauss(0, 1) for _ in range(4)], 0) for i in range(506)]
+    corpus = spark.createDataFrame(rows + [(506, None, 0)], EMB_SCHEMA)
+    semantic_dedup_pairs(corpus)
+    build_semantic_index(corpus)
+    assert trained == [22, 22]

@@ -8,6 +8,9 @@ or changing operators to catch plan regressions the value-gate cannot
 see (a correct-but-cartesian plan hashes identically).
 
     python3 tools/audit_plans.py [sf_dir]          # table to stdout
+
+Exits 1 when a plan is flagged, and 2, before Spark starts, when
+sf_dir is not a directory or another argument is given.
 """
 
 from __future__ import annotations
@@ -83,6 +86,9 @@ NO_SMJ_AT_AUDIT = {"dedup_components"}
 
 
 def main() -> int:
+    from check_parity import check_args
+
+    check_args(sys.argv[1:], __doc__, names=False)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
     import __spark_entry__ as E

@@ -5,6 +5,9 @@ same parquet, normalizes (sort columns by name, sort rows), and
 compares values exactly. Usage:
 
     python tools/check_parity.py [sf_dir] [name ...]
+
+Without names every catalog entry runs. Exits 2, before Spark starts,
+when sf_dir is not a directory or a name is not in the catalog.
 """
 
 from __future__ import annotations
@@ -166,7 +169,34 @@ def run_parity(spark, sf_dir: str, only: set[str] | None = None,
     return n_pass, n_fail, failures
 
 
+def check_args(args: list[str], usage: str, names: bool = True) -> None:
+    """Validate a tool's `[sf_dir] [name ...]` arguments without
+    starting Spark: -h/--help prints `usage` and exits 0; a missing
+    sf_dir, a name not in the catalog, or any name when the tool takes
+    none (`names=False`) is reported and exits 2."""
+    if "-h" in args or "--help" in args:
+        print(usage.strip())
+        sys.exit(0)
+    tool = os.path.basename(sys.argv[0])
+    if args and not os.path.isdir(args[0]):
+        print(f"{tool}: sf_dir {args[0]!r} is not a directory",
+              file=sys.stderr)
+        sys.exit(2)
+    if not names and args[1:]:
+        print(f"{tool}: unexpected arguments: {' '.join(args[1:])}",
+              file=sys.stderr)
+        sys.exit(2)
+    from dazzleduck_sql_duckdb_spark.plans.queries import CATALOG
+
+    unknown = [n for n in args[1:] if n not in CATALOG]
+    if unknown:
+        print(f"{tool}: not in the catalog: {' '.join(unknown)}",
+              file=sys.stderr)
+        sys.exit(2)
+
+
 def main():
+    check_args(sys.argv[1:], __doc__)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
